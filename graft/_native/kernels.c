@@ -1,14 +1,14 @@
 /* Native kernels for the sequential community-detection tail.
  *
- * Exact C replicas of the Python/numpy reference implementations in
- * graft/algos/seq_tail.py and graft/algos/leiden.py (_refine_core):
+ * The only implementation of the tail's CSR build, local moving and
+ * refinement (graft/algos/seq_tail.py, graft/algos/leiden.py).  Their
+ * Python references (tests/reference_impls.py) fix the semantics:
  * identical visit schedules, identical float accumulation order
  * (ascending-neighbor per candidate community), identical tie-breaks.
  * Compiled with -ffp-contract=off so no FMA contraction can change a
  * rounding step relative to numpy's strict IEEE double arithmetic.
- * The Python callers keep the pure-Python path as a fallback and an
- * equivalence test pins both paths to identical outputs
- * (tests/test_native_kernels.py).
+ * tests/test_native_kernels.py pins the kernels to the references
+ * exactly.
  */
 
 #include <stdint.h>
@@ -21,7 +21,7 @@
  * PCG64 XSL-RR 128/64, mask-and-reject bounded draws with the 32-bit
  * buffering of pcg64_next32).  Validated at import time against
  * np.random.default_rng(seed).permutation(n) for a spread of seeds and
- * lengths; any mismatch disables the C refine path entirely.          */
+ * lengths; any mismatch fails the library load.          */
 
 #define SS_INIT_A 0x43b0d7e5u
 #define SS_MULT_A 0x931e8875u
@@ -243,7 +243,8 @@ void csr_build(int64_t n, int64_t mh, const int64_t *eu, const int64_t *ev,
 
 /* ------------------------------------------------------------------ */
 /* Greedy queue-based local moving: exact replica of
- * seq_tail._local_move (see its docstring for semantics).  comm holds
+ * tests/reference_impls.local_move_ref (semantics: the docstring of
+ * seq_tail._local_move).  comm holds
  * community SLOT indices; n_c / stot are the per-slot aggregates the
  * Python caller computed; perm is the seeded visit permutation.
  * Returns visits<<32 is avoided: counters go to out params.           */
@@ -280,7 +281,7 @@ void local_move(int64_t n, int64_t n_slots, const int64_t *indptr,
         double kv = strength[v];
         /* gather k_to per candidate community; per-community accumulation
          * runs in ascending-neighbor order (CSR rows are ascending), the
-         * order both Python branches use. */
+         * order the reference uses. */
         int64_t nt = 0;
         int64_t st = visits; /* unique per visit; stamp[] starts at 0 */
         int64_t idx;
@@ -296,7 +297,7 @@ void local_move(int64_t n, int64_t n_slots, const int64_t *indptr,
         }
         double k_own = (stamp[cv] == st) ? k_acc[cv] : 0.0;
         /* argmax with min-label tie-break, order-independent (no sort):
-         * equivalent to the Python branches' ascending iteration with a
+         * equivalent to the reference's ascending iteration with a
          * strict > test — max delta wins, ties resolve to the smallest
          * community label, nothing commits at delta <= 0. */
         int64_t best = -1;
@@ -361,10 +362,10 @@ void local_move(int64_t n, int64_t n_slots, const int64_t *indptr,
 }
 
 /* ------------------------------------------------------------------ */
-/* Batched CPM refinement: leiden._refine_core semantics for a batch of
- * communities.  Per group: members are local indices 0..k-1 in
+/* Batched CPM refinement: merge_nodes_subset semantics
+ * (tests/reference_impls.refine_subset_ref) for a batch of communities.  Per group: members are local indices 0..k-1 in
  * ascending-id order; edges carry group-local endpoint indices with
- * u <= v, sorted by (u, v) (loops skipped like the Python core, and
+ * u <= v, sorted by (u, v) (loops skipped like the reference, and
  * duplicate pairs accumulated in order).  The per-group visit order is
  * np.random.default_rng((seed*1000003 + comm_label) % 2**63)
  * .permutation(k), drawn with the validated RNG above.  Output:
@@ -428,7 +429,7 @@ void refine_batch(int64_t n_groups, const int64_t *node_start /* n_groups+1 */,
         /* group-local CSR, neighbors ascending (two-block stable fill:
          * (u,v) sorted with u < v means the v-side entries of a node
          * arrive u-ascending before its u-side entries arrive
-         * v-ascending -- the same ascending insertion order the Python
+         * v-ascending -- the same ascending insertion order the reference's
          * dict adjacency ends up with). */
         memset(deg, 0, sizeof(int64_t) * (k + 1));
         for (i = 0; i < ne; i++) {
@@ -505,7 +506,7 @@ void refine_batch(int64_t n_groups, const int64_t *node_start /* n_groups+1 */,
             int64_t c;
             for (c = 0; c < nt; c++) {
                 int64_t rc = touched[c]; /* first-touch order, like the
-                                            Python dict; the tie rule
+                                            reference's dict; the tie rule
                                             below is order-independent */
                 if (rc_cut[rc] <
                     (gamma * (double)rc_n[rc]) * (double)(stot_g - rc_n[rc]))

@@ -202,8 +202,7 @@ def _select_moves(
 
 
 def _resolve_conflicts(
-    moves: DataFrame, edges: DataFrame, it: int, seed: int,
-    broadcast_blocked: bool = False,
+    moves: DataFrame, edges: DataFrame, it: int, seed: int
 ) -> DataFrame:
     """Commit a gain-prioritized independent set of movers (P3 rewrite).
 
@@ -248,16 +247,11 @@ def _resolve_conflicts(
         (F.col("h_dst") == F.col("h_src")) & (F.col("dst") < F.col("src"))
     )
     # No distinct before the anti join (r6): LEFT ANTI ignores right-side
-    # duplicates, so the old .distinct() only added an exchange + two
-    # hash-agg passes per sweep. Under the caller's small-V gate the
-    # blocked side (mover-bounded) is broadcast-hinted, making the whole
-    # resolve exchange-free: one streamed pass over the edge table with
-    # three broadcast probes.
+    # duplicates, so a .distinct() would only add an exchange + two
+    # hash-agg passes per sweep.
     blocked = mover_edges.where(
         (F.col("c_dst") != F.col("c_src")) & beats
     ).select(F.col("src").alias("id"))
-    if broadcast_blocked:
-        blocked = F.broadcast(blocked)
     return m.join(blocked, "id", "left_anti").select(
         "id", "new_community", "delta"
     )

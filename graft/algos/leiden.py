@@ -11,9 +11,10 @@ refine_kernel csrc/src/leiden_kernel.cu:599-761) is inherently
 sequential *within* a community but embarrassingly parallel *across*
 communities — exactly the shape of a cogrouped ``applyInPandas``: each
 community's member table and induced edge table arrive as one Arrow
-batch, the per-community loop runs in numpy/dicts (communities are
-small after local moving), and no per-row Python ever touches the
-distributed path (input_hint requirement).
+batch, the per-community loop runs in the native ``refine_batch``
+kernel (graft._native; communities are small after local moving), and
+no per-row Python ever touches the distributed path (input_hint
+requirement).
 
 Semantics preserved (SURVEY.md §1.4 item 7):
 - restart from singletons inside each community S;
@@ -30,6 +31,7 @@ Semantics preserved (SURVEY.md §1.4 item 7):
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,229 +45,48 @@ from graft.algos.community import (
     move_nodes,
     superstep_conf,
 )
+from graft.algos.seq_tail import refine_groups
 from graft.graph import Graph
-
-
-def _refine_community(nodes: pd.DataFrame, edges: pd.DataFrame,
-                      gamma: float, seed: int) -> pd.DataFrame:
-    """Sequential refinement of one community S (runs inside the UDF).
-
-    Rows are sorted by id first: Spark only guarantees cogroup batches
-    are grouped by key, not intra-group ordered, so the seeded visit
-    permutation (and float accumulation order) must be anchored to a
-    canonical vertex order or results drift across parallelism levels.
-
-    Thin pandas adapter over :func:`_refine_core` (shared with the
-    sequential-tail kernel, which skips the per-community DataFrame
-    construction entirely — pandas object overhead dominated the tail's
-    refinement cost at 40k+ small communities).
-    """
-    nodes = nodes.sort_values("id")
-    if len(edges):
-        edges = edges.sort_values(["u", "v"])
-    # s_tot of the FULL community: when an oversized community is split
-    # into hash sub-buckets (scale guard), each batch still gates
-    # well-connectedness against the whole-S total the reference uses
-    # (custom_leiden.py:415-419)
-    if "s_tot_full" in nodes.columns and nodes["s_tot_full"].notna().all():
-        s_tot = int(nodes["s_tot_full"].iloc[0])
-    else:
-        s_tot = int(nodes["agg_count"].sum())
-    from graft import _native as _nk
-
-    if _nk.rng_ok() and len(nodes) > 1:
-        # native single-group _refine_core (bit-identical semantics and
-        # rng stream; pinned by tests/test_native_kernels.py)
-        import numpy as np
-
-        ids_arr = nodes["id"].to_numpy(dtype=np.int64)
-        sizes = nodes["agg_count"].to_numpy(dtype=np.int64)
-        if len(edges):
-            u = np.searchsorted(ids_arr, edges["u"].to_numpy(dtype=np.int64))
-            v = np.searchsorted(ids_arr, edges["v"].to_numpy(dtype=np.int64))
-            w = edges["weight"].to_numpy(dtype=np.float64)
-        else:
-            u = v = np.zeros(0, dtype=np.int64)
-            w = np.zeros(0, dtype=np.float64)
-        out = _nk.refine_batch(
-            np.array([0, len(ids_arr)], dtype=np.int64),
-            np.array([0, len(u)], dtype=np.int64),
-            sizes,
-            np.array([s_tot], dtype=np.int64),
-            np.array([int(nodes["community"].iloc[0])], dtype=np.int64),
-            u, v, w, gamma, seed,
-        )
-        if out is not None:
-            return pd.DataFrame({"id": ids_arr, "refined": ids_arr[out]})
-    refined = _refine_core(
-        [int(v) for v in nodes["id"]],
-        [int(x) for x in nodes["agg_count"]],
-        s_tot,
-        int(nodes["community"].iloc[0]),
-        zip(edges["u"], edges["v"], edges["weight"]) if len(edges) else (),
-        gamma,
-        seed,
-    )
-    return pd.DataFrame(
-        {"id": list(refined), "refined": [refined[v] for v in refined]}
-    )
-
-
-def _refine_core(
-    ids: list, sizes: list, s_tot: int, comm_id: int, edges_uvw,
-    gamma: float, seed: int,
-) -> dict:
-    """merge_nodes_subset semantics on plain python/numpy structures:
-    ``ids`` sorted ascending, ``edges_uvw`` an iterable of single-counted
-    (u, v, weight) pairs sorted by (u, v). Returns {id: refined_id}."""
-    if len(ids) == 1:  # singleton community: nothing to merge, no rng
-        return {ids[0]: ids[0]}
-    n_v = dict(zip(ids, sizes))
-
-    # adjacency within S (single-counted pairs, loops excluded from v_in)
-    adj: dict[int, dict[int, float]] = {v: {} for v in ids}
-    for u, v, w in edges_uvw:
-        u, v, w = int(u), int(v), float(w)
-        if u == v:
-            continue
-        adj[u][v] = adj[u].get(v, 0.0) + w
-        adj[v][u] = adj[v].get(u, 0.0) + w
-    v_in = {v: sum(adj[v].values()) for v in adj}
-
-    refined = {v: v for v in ids}
-    rc_n = {v: int(n_v[v]) for v in ids}
-    rc_size = {v: 1 for v in ids}
-    rc_cut = {v: v_in[v] for v in ids}
-
-    import numpy as np
-
-    rng = np.random.default_rng((seed * 1_000_003 + comm_id) % (2**63))
-    order = [ids[i] for i in rng.permutation(len(ids))]
-    for v in order:
-        nv = int(n_v[v])
-        if v_in[v] < gamma * nv * (s_tot - nv):
-            continue  # not well-connected
-        if rc_size[refined[v]] > 1:
-            continue  # only singleton refined communities may move
-        k_to: dict[int, float] = {}
-        for u, w in adj[v].items():
-            rc = refined[u]
-            if rc != refined[v]:
-                k_to[rc] = k_to.get(rc, 0.0) + w
-        best, best_delta = None, 0.0
-        for rc, k in k_to.items():
-            if rc_cut[rc] < gamma * rc_n[rc] * (s_tot - rc_n[rc]):
-                continue  # target not well-connected
-            delta = k - gamma * nv * rc_n[rc]
-            if delta > best_delta or (
-                delta == best_delta and best is not None and rc < best
-            ):
-                if delta > 0:
-                    best, best_delta = rc, delta
-        if best is not None:
-            old = refined[v]
-            refined[v] = best
-            rc_n[best] += nv
-            rc_size[best] += 1
-            rc_cut[best] += v_in[v] - 2.0 * k_to[best]
-            del rc_n[old], rc_size[old], rc_cut[old]
-    return refined
 
 
 def _refine_bucket_native(
     nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, gamma: float, seed: int
-) -> pd.DataFrame | None:
-    """One cogroup bucket of communities refined in a single native
-    batch call (semantics identical to the per-community Python loop in
-    ``refine_partition.fn`` — same grouping by (community, _b), members
-    sorted by id, edges by (u, v), same per-community rng stream and
-    trivial-group short-circuits).  The per-community pandas slicing the
-    Python loop pays (~0.3 ms x tens of thousands of communities per
-    level) collapses into two lexsorts plus one C call."""
-    import numpy as np
+) -> pd.DataFrame:
+    """Refine one cogroup bucket of communities in a single native
+    batch call: each ``(community, _b)`` group is refined on its own
+    (one rng stream per community).
 
-    from graft import _native as _nk
-
-    if nodes_pdf["s_tot_full"].isna().any():
-        return None
+    Spark only guarantees cogroup batches are grouped by key, not
+    ordered, so :func:`refine_groups` anchors the seeded visit
+    permutation and float accumulation to members ordered by id and
+    edges by (u, v); otherwise results would drift across parallelism
+    levels. Each group gates well-connectedness against ``s_tot_full``,
+    the WHOLE community's size, even when the scale guard split the
+    community into hash sub-buckets (custom_leiden.py:415-419)."""
     ids = nodes_pdf["id"].to_numpy(dtype=np.int64)
     comm = nodes_pdf["community"].to_numpy(dtype=np.int64)
-    bb = nodes_pdf["_b"].to_numpy(dtype=np.int64)
-    sizes = nodes_pdf["agg_count"].to_numpy(dtype=np.int64)
-    stf = nodes_pdf["s_tot_full"].to_numpy(dtype=np.int64)
-    order_n = np.lexsort((ids, bb, comm))
-    cs, bs = comm[order_n], bb[order_n]
-    ids_s, sz_s, stf_s = ids[order_n], sizes[order_n], stf[order_n]
-    gstart = np.flatnonzero(
-        np.r_[True, (cs[1:] != cs[:-1]) | (bs[1:] != bs[:-1])]
+    # ``assign`` is an inner join on the per-community sizes
+    assert not nodes_pdf["s_tot_full"].isna().any()
+    group = nodes_pdf.groupby(["community", "_b"], sort=False).ngroup()
+    edges = edges_pdf.reindex(columns=["u", "v", "weight"])
+    uu = edges["u"].to_numpy(dtype=np.int64)
+    vv = edges["v"].to_numpy(dtype=np.int64)
+    order_e = np.lexsort((vv, uu))
+    uu, vv = uu[order_e], vv[order_e]
+    # an intra edge carries its endpoints' (community, _b), which hashes
+    # to this same bucket: both endpoints are rows of ``nodes_pdf``
+    by_id = np.argsort(ids)
+    eu = by_id[np.searchsorted(ids, uu, sorter=by_id)]
+    ev = by_id[np.searchsorted(ids, vv, sorter=by_id)]
+    assert np.array_equal(ids[eu], uu) and np.array_equal(ids[ev], vv)
+    refined = refine_groups(
+        ids, group.to_numpy(dtype=np.int64),
+        nodes_pdf["agg_count"].to_numpy(dtype=np.int64),
+        nodes_pdf["s_tot_full"].to_numpy(dtype=np.int64),
+        comm, eu, ev,
+        edges["weight"].to_numpy(dtype=np.float64)[order_e], gamma, seed,
     )
-    counts = np.diff(np.append(gstart, len(cs)))
-    n_groups = len(gstart)
-    if len(edges_pdf):
-        ec = edges_pdf["community"].to_numpy(dtype=np.int64)
-        ebb = edges_pdf["_b"].to_numpy(dtype=np.int64)
-        uu = edges_pdf["u"].to_numpy(dtype=np.int64)
-        vv = edges_pdf["v"].to_numpy(dtype=np.int64)
-        ww = edges_pdf["weight"].to_numpy(dtype=np.float64)
-        order_e = np.lexsort((vv, uu, ebb, ec))
-        ec, ebb = ec[order_e], ebb[order_e]
-        uu, vv, ww = uu[order_e], vv[order_e], ww[order_e]
-        estart = np.flatnonzero(
-            np.r_[True, (ec[1:] != ec[:-1]) | (ebb[1:] != ebb[:-1])]
-        )
-        ecounts_g = np.diff(np.append(estart, len(ec)))
-    else:
-        ec = ebb = uu = vv = np.zeros(0, dtype=np.int64)
-        ww = np.zeros(0, dtype=np.float64)
-        estart = np.zeros(0, dtype=np.int64)
-        ecounts_g = np.zeros(0, dtype=np.int64)
-    # align edge groups to node groups (both key-sorted; edge keys are a
-    # subset of node keys)
-    ecount_per_node_group = np.zeros(n_groups, dtype=np.int64)
-    ei = 0
-    for gi in range(n_groups):
-        if ei < len(estart) and ec[estart[ei]] == cs[gstart[gi]] and (
-            ebb[estart[ei]] == bs[gstart[gi]]
-        ):
-            ecount_per_node_group[gi] = ecounts_g[ei]
-            ei += 1
-    if ei != len(estart):
-        return None  # an edge key without a node group: fall back
-    nontriv = (counts > 1) & (ecount_per_node_group > 0)
-    refined_ids = np.empty(len(ids_s), dtype=np.int64)
-    mask_nodes = np.repeat(nontriv, counts)
-    refined_ids[~mask_nodes] = ids_s[~mask_nodes]
-    if nontriv.any():
-        nt_counts = counts[nontriv]
-        node_start = np.concatenate(([0], np.cumsum(nt_counts))).astype(
-            np.int64
-        )
-        edge_start = np.concatenate(
-            ([0], np.cumsum(ecount_per_node_group[nontriv]))
-        ).astype(np.int64)
-        mask_edges = np.repeat(nontriv, ecount_per_node_group)
-        # group-local endpoint indices via per-group searchsorted over
-        # the id-sorted member slice
-        lu = np.empty(int(edge_start[-1]), dtype=np.int64)
-        lv = np.empty(int(edge_start[-1]), dtype=np.int64)
-        uu_nt, vv_nt, ww_nt = uu[mask_edges], vv[mask_edges], ww[mask_edges]
-        nt_gstart = gstart[nontriv]
-        for gi in range(len(nt_counts)):
-            ns, ne = nt_gstart[gi], nt_gstart[gi] + nt_counts[gi]
-            es, ee = edge_start[gi], edge_start[gi + 1]
-            mslice = ids_s[ns:ne]
-            lu[es:ee] = np.searchsorted(mslice, uu_nt[es:ee])
-            lv[es:ee] = np.searchsorted(mslice, vv_nt[es:ee])
-        out = _nk.refine_batch(
-            node_start, edge_start, sz_s[mask_nodes],
-            stf_s[nt_gstart], cs[nt_gstart], lu, lv, ww_nt, gamma, seed,
-        )
-        if out is None:
-            return None
-        members_cat = np.flatnonzero(mask_nodes)
-        base_rep = np.repeat(node_start[:-1], nt_counts)
-        refined_ids[mask_nodes] = ids_s[members_cat[base_rep + out]]
-    return pd.DataFrame({"id": ids_s, "refined": refined_ids})
+    return pd.DataFrame({"id": ids, "refined": refined})
 
 
 def refine_partition(
@@ -344,7 +165,7 @@ def refine_partition(
     # ~64 communities per bucket the overhead amortizes while the
     # per-community reference semantics (and the scale guard's _b
     # sub-bucketing) are untouched: the kernel segments the bucket by
-    # (community, _b) and runs the same _refine_core per segment.
+    # (community, _b) and refines every segment in one native call.
     # Bucket count scales with the session's reducer setting, so larger
     # clusters get proportionally more buckets.
     spark = level.vertices.sparkSession
@@ -358,34 +179,7 @@ def refine_partition(
     def fn(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
         if nodes_pdf.empty:
             return pd.DataFrame({"id": [], "refined": []})
-        from graft import _native as _nk
-
-        if _nk.rng_ok():
-            out = _refine_bucket_native(nodes_pdf, edges_pdf, gamma, seed)
-            if out is not None:
-                return out
-        edges_by = {}
-        if len(edges_pdf):
-            edges_by = {
-                k: sub for k, sub in
-                edges_pdf.groupby(["community", "_b"], sort=False)
-            }
-        parts = []
-        trivial_ids: list = []
-        for key, nsub in nodes_pdf.groupby(["community", "_b"], sort=False):
-            esub = edges_by.get(key)
-            # exact short-circuit (same as seq_tail._refine_groups): a
-            # singleton community, or one with no intra edges, refines
-            # every member to itself — skip the per-community kernel
-            if len(nsub) == 1 or esub is None:
-                trivial_ids.extend(nsub["id"].tolist())
-                continue
-            parts.append(_refine_community(nsub, esub, gamma, seed))
-        if trivial_ids:
-            parts.append(
-                pd.DataFrame({"id": trivial_ids, "refined": trivial_ids})
-            )
-        return pd.concat(parts, ignore_index=True)
+        return _refine_bucket_native(nodes_pdf, edges_pdf, gamma, seed)
 
     return (
         assign.select("id", "community", "agg_count", "s_tot_full",
@@ -627,15 +421,15 @@ def leiden(
         _t0 = _time.time()
         spark = level.edges.sparkSession
         with superstep_conf(spark, level.edges.count()):
-            # the refinement cogroup is PYTHON-bound (one _refine_core
-            # call per community), not shuffle-bound: run it at 3x core
-            # parallelism even when the superstep reducers are sized
-            # smaller for shuffle latency (measured r3 on the 4M-row
-            # powerlaw level: 16 reducers left half the cores idle; r4:
-            # exactly-one-wave scheduling made the stage straggler-bound
-            # — one slow partition set the wall — so ~3 waves of smaller
-            # tasks amortize stragglers, per-task overhead is trivial
-            # against the per-community Python work)
+            # the refinement cogroup is task-bound (each bucket's Arrow
+            # to pandas conversion plus its refine_batch call), not
+            # shuffle-bound: run it at 3x core parallelism even when the
+            # superstep reducers are sized smaller for shuffle latency
+            # (measured r3 on the 4M-row powerlaw level: 16 reducers
+            # left half the cores idle; r4: exactly-one-wave scheduling
+            # made the stage straggler-bound — one slow partition set
+            # the wall — so ~3 waves of smaller tasks amortize
+            # stragglers)
             sp_now = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set(
                 "spark.sql.shuffle.partitions",

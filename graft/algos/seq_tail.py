@@ -7,24 +7,24 @@ distributed sweep costs more in job latency than the whole remaining
 computation. The honest scale design (same pattern as the refinement
 kernel, SURVEY.md §7 item 2) is to ship that tail to ONE executor task
 as an Arrow batch and run the exact sequential algorithm there —
-vectorized kernel on an executor, not a driver-side loop; the driver
-never touches row data. The BSP path still handles every level above
-the threshold (bench: louvain over the 16M-row power-law graph runs
-pure BSP).
+native kernel on an executor, not a driver-side loop; the driver never
+touches row data. The BSP path still handles every level above the
+threshold (bench: louvain over the 16M-row power-law graph runs pure
+BSP).
 
-Kernel layout (r3 rewrite, VERDICT r2 'next round' #7): the level graph
-lives in numpy CSR arrays (half-edge list + both-direction CSR with
-neighbor ids ascending); the greedy local-moving pass visits nodes in
-the seeded permutation order and does each node's neighbor-community
-gather / delta argmax as small vectorized ops; contraction is one
-lexsort + segment-sum. No dict-of-dict state anywhere, which is what
-lets the tail threshold sit at ~1M edge rows instead of 200k.
+Kernel layout: the level graph lives in numpy CSR arrays (half-edge
+list + both-direction CSR with neighbor ids ascending); the three
+sequential steps are the native C kernels of :mod:`graft._native` —
+``csr_build`` (counting sort), ``local_move`` (queue-greedy local
+moving in the seeded permutation order) and ``refine_batch`` (every
+community's refinement in one call); contraction is one lexsort +
+segment-sum in numpy. Their Python references live in
+``tests/reference_impls.py``.
 
-Semantics: greedy pass-until-stable local moving (CPM or modularity,
-same closed-form deltas as community._select_moves, tie-break toward
-the smallest community label) + for CPM the reference's refinement via
-leiden._refine_community (differentially tested against
-custom_leiden.py:349-459 semantics in
+Semantics: greedy local moving (CPM or modularity, same closed-form
+deltas as community._select_moves, tie-break toward the smallest
+community label) + for CPM the reference's refinement
+(custom_leiden.py:349-459 semantics, differentially tested in
 tests/test_refine_differential.py) + aggregation, for max_levels.
 Deterministic: inputs sorted by id, seeded generator, one permutation
 draw per pass.
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+
+from graft import _native as _nk
 
 
 def _half_edges(
@@ -63,36 +65,6 @@ def _half_edges(
     return (uniq // n).astype(np.int64), (uniq % n).astype(np.int64), out_w, loop_w
 
 
-def _csr(
-    n: int, eu: np.ndarray, ev: np.ndarray, ew: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Both-direction CSR (indptr, nbr, wgt) with each row's neighbors
-    ascending — the canonical accumulation order the distributed
-    refinement kernel uses too.
-
-    The (eu < ev) pairs are unique, so the sorted order is unique and
-    the native two-pass counting sort (graft._native.csr_build) returns
-    arrays identical to the lexsort below; it replaces the O(E log E)
-    lexsort with O(E) when the compiled kernels are available."""
-    from graft import _native as _nk
-
-    built = _nk.csr_build(n, eu, ev, ew)
-    if built is not None:
-        return built
-    su = np.concatenate([eu, ev])
-    sv = np.concatenate([ev, eu])
-    sw = np.concatenate([ew, ew])
-    order = np.lexsort((sv, su))
-    su, sv, sw = su[order], sv[order], sw[order]
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, su + 1, 1)
-    indptr = np.cumsum(indptr)
-    return indptr, sv, sw
-
-
-_VEC_DEGREE = 64  # per-visit gather: numpy beats dicts above this degree
-
-
 def _local_move(
     indptr: np.ndarray,
     nbr: np.ndarray,
@@ -113,19 +85,13 @@ def _local_move(
     re-enqueue the mover's neighbors outside its new community. Each
     node is revisited only when its neighborhood changed, instead of
     full pass-until-stable sweeps — strictly-positive deltas make the
-    objective monotone, so the queue drains.
+    objective monotone, so the queue drains. Runs in the native
+    ``local_move`` kernel.
 
     ``comm`` holds community SLOTS (indices into ``labels``, the sorted
-    distinct community labels — slot order == label order, so both
-    gather branches tie-break toward the smallest label, like the
-    distributed argmax). Mutates and returns ``comm``. One
-    ``rng.permutation`` draw per call.
-
-    Per-visit gather is hybrid: plain dict accumulation below
-    ``_VEC_DEGREE`` neighbors (lower constant), vectorized
-    unique+segment-sum above it (hub-proof) — both accumulate in
-    ascending-neighbor order over ascending candidate labels, so the
-    branches are numerically identical.
+    distinct community labels — slot order == label order, so ties
+    break toward the smallest label, like the distributed argmax).
+    Mutates and returns ``comm``. One ``rng.permutation`` draw per call.
 
     ``stats``: optional dict accumulating deterministic work counters —
     ``visits`` (queue pops = delta evaluations) and ``moves``
@@ -134,220 +100,72 @@ def _local_move(
     so visits/moves shrink vs a cold (singleton) seed even when
     wall-clock noise hides it.
     """
-    from collections import deque
-
-    from graft import _native as _nk
-
-    n = len(comm)
     n_slots = len(labels)
     n_c = np.zeros(n_slots, dtype=np.int64)
     np.add.at(n_c, comm, size)
     stot = np.zeros(n_slots, dtype=np.float64)
     np.add.at(stot, comm, strength)
-    if _nk.lib() is not None:
-        # native queue loop: identical schedule, accumulation order and
-        # tie-breaks (tests/test_native_kernels.py pins both paths to
-        # byte-identical outputs); the permutation is the same single
-        # rng draw the deque seeding below consumes
-        size64 = np.ascontiguousarray(size, dtype=np.int64)
-        strength64 = np.ascontiguousarray(strength, dtype=np.float64)
-        res = _nk.local_move(
-            indptr, nbr, wgt, size64, strength64, comm, n_c, stot,
-            rng.permutation(n), objective, gamma, m,
-        )
-        if res is not None:
-            if stats is not None:
-                stats["visits"] = stats.get("visits", 0) + res[0]
-                stats["moves"] = stats.get("moves", 0) + res[1]
-            return comm
-    comm_py = comm.tolist()
-    q = deque(rng.permutation(n).tolist())
-    in_q = bytearray([1]) * n
-    two_m_sq = 2.0 * m * m
-    n_visits = 0
-    n_moves = 0
-    while q:
-        v = q.popleft()
-        in_q[v] = 0
-        n_visits += 1
-        s, e = int(indptr[v]), int(indptr[v + 1])
-        if s == e:
-            continue
-        cv = comm_py[v]
-        sv_ = int(size[v])
-        kv = float(strength[v])
-        best = -1
-        best_delta = 0.0
-        if e - s >= _VEC_DEGREE:
-            nsl = comm[nbr[s:e]]
-            cand, inv = np.unique(nsl, return_inverse=True)
-            k_to = np.zeros(len(cand), dtype=np.float64)
-            np.add.at(k_to, inv, wgt[s:e])
-            oh = int(np.searchsorted(cand, cv))
-            k_own = (
-                float(k_to[oh]) if oh < len(cand) and cand[oh] == cv else 0.0
-            )
-            mask = cand != cv
-            if mask.any():
-                c_arr = cand[mask]
-                k_arr = k_to[mask]
-                if objective == "cpm":
-                    delta = (k_arr - gamma * sv_ * n_c[c_arr]) - (
-                        k_own - gamma * sv_ * (int(n_c[cv]) - sv_)
-                    )
-                else:
-                    delta = (k_arr - k_own) / m - kv * (
-                        stot[c_arr] - float(stot[cv]) + kv
-                    ) / two_m_sq
-                j = int(np.argmax(delta))
-                if delta[j] > 0.0:
-                    best = int(c_arr[j])
-                    best_delta = float(delta[j])
-        else:
-            kt: dict = {}
-            for u, w in zip(nbr[s:e].tolist(), wgt[s:e].tolist()):
-                c = comm_py[u]
-                kt[c] = kt.get(c, 0.0) + w
-            k_own = kt.get(cv, 0.0)
-            if objective == "cpm":
-                base = k_own - gamma * sv_ * (int(n_c[cv]) - sv_)
-                for c, k in sorted(kt.items()):
-                    if c == cv:
-                        continue
-                    delta = (k - gamma * sv_ * int(n_c[c])) - base
-                    if delta > best_delta:
-                        best, best_delta = c, delta
-            else:
-                sc = float(stot[cv])
-                for c, k in sorted(kt.items()):
-                    if c == cv:
-                        continue
-                    delta = (k - k_own) / m - kv * (
-                        float(stot[c]) - sc + kv
-                    ) / two_m_sq
-                    if delta > best_delta:
-                        best, best_delta = c, delta
-        if best >= 0 and best_delta > 0.0:
-            n_moves += 1
-            n_c[cv] -= sv_
-            n_c[best] += sv_
-            stot[cv] -= kv
-            stot[best] += kv
-            comm[v] = best
-            comm_py[v] = best
-            for u in nbr[s:e].tolist():
-                if comm_py[u] != best and not in_q[u]:
-                    q.append(u)
-                    in_q[u] = 1
+    visits, moves = _nk.local_move(
+        indptr, nbr, wgt, size, strength, comm, n_c, stot,
+        rng.permutation(len(comm)), objective, gamma, m,
+    )
     if stats is not None:
-        stats["visits"] = stats.get("visits", 0) + n_visits
-        stats["moves"] = stats.get("moves", 0) + n_moves
+        stats["visits"] = stats.get("visits", 0) + visits
+        stats["moves"] = stats.get("moves", 0) + moves
     return comm
 
 
-def _refine_groups(
+def refine_groups(
     ids: np.ndarray,
+    group: np.ndarray,
+    size: np.ndarray,
+    s_tot: np.ndarray,
+    comm_label: np.ndarray,
     eu: np.ndarray,
     ev: np.ndarray,
     ew: np.ndarray,
-    size: np.ndarray,
-    comm_label: np.ndarray,
     gamma: float,
     seed: int,
 ) -> np.ndarray:
-    """CPM refinement: run leiden._refine_core per community (the exact
-    reference semantics, shared with the distributed kernel's pandas
-    adapter) and return each node's refined community label (= founding
-    member id). Communities and their intra edges are grouped by one
-    argsort each — no per-edge Python, no per-community DataFrames."""
-    from graft import _native as _nk
-    from graft.algos.leiden import _refine_core
+    """CPM refinement of every group in one native ``refine_batch``
+    call; returns each node's refined community label (= the id of its
+    founding member).
 
+    Per node: ``ids`` (distinct), ``group`` (the unit refined on its
+    own: a community, or one hash sub-bucket of an oversized one),
+    ``size`` (aggregate node count), ``s_tot`` (the node's whole
+    community size, the well-connectedness total) and ``comm_label``
+    (seeds the group's visit permutation). ``eu``/``ev``/``ew``: half
+    edges as node positions with ``ids[eu] <= ids[ev]``, sorted by
+    ``(ids[eu], ids[ev])``; loops and edges between groups are ignored,
+    repeated pairs add up. Inside a
+    group the kernel sees members ordered by id and edges in that
+    sorted order — the canonical order its permutation and float
+    accumulation are defined over.
+    """
     n = len(ids)
-    order = np.argsort(comm_label, kind="stable")
-    bounds = np.flatnonzero(
-        np.diff(comm_label[order], prepend=comm_label[order[0]] - 1)
+    order = np.lexsort((ids, group))
+    gs = group[order]
+    start = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
+    counts = np.diff(np.append(start, n))
+    # node position -> group index / index within its group
+    g_of = np.empty(n, dtype=np.int64)
+    g_of[order] = np.repeat(np.arange(len(start)), counts)
+    loc = np.empty(n, dtype=np.int64)
+    loc[order] = np.arange(n) - np.repeat(start, counts)
+    intra = g_of[eu] == g_of[ev]
+    eu, ev, ew = eu[intra], ev[intra], ew[intra]
+    eorder = np.argsort(g_of[eu], kind="stable")
+    eu, ev, ew = eu[eorder], ev[eorder], ew[eorder]
+    head = order[start]
+    founder = _nk.refine_batch(
+        np.append(start, n),
+        np.searchsorted(g_of[eu], np.arange(len(start) + 1)),
+        size[order], s_tot[head], comm_label[head],
+        loc[eu], loc[ev], ew, gamma, seed,
     )
-    # intra-community half edges grouped the same way
-    intra = comm_label[eu] == comm_label[ev]
-    ieu, iev, iew = eu[intra], ev[intra], ew[intra]
-    ic = comm_label[ieu]
-    eorder = np.argsort(ic, kind="stable")
-    ieu, iev, iew, ic = ieu[eorder], iev[eorder], iew[eorder], ic[eorder]
-    ebounds = np.searchsorted(ic, comm_label[order][bounds])
     refined = np.empty(n, dtype=np.int64)
-    if _nk.rng_ok():
-        # Batched native refinement: one C call for every non-trivial
-        # community, same _refine_core semantics per group (including
-        # the per-community rng stream — the C permutation generator is
-        # validated bit-exact against numpy at import).  Trivial groups
-        # (singletons / no intra edges) keep the exact short-circuit.
-        counts = np.diff(np.append(bounds, n))
-        ebounds_full = np.append(ebounds, len(ic))
-        ecounts = np.diff(ebounds_full)
-        nontriv = (counts > 1) & (ecounts > 0)
-        mask_nodes = np.repeat(nontriv, counts)
-        mask_edges = np.repeat(nontriv, ecounts)
-        members_cat = order[mask_nodes]
-        triv_members = order[~mask_nodes]
-        refined[triv_members] = ids[triv_members]
-        if members_cat.size:
-            # global node position -> group-local index
-            loc = np.empty(n, dtype=np.int64)
-            loc[order] = np.arange(n, dtype=np.int64) - np.repeat(
-                bounds, counts
-            )
-            nt_counts = counts[nontriv]
-            node_start = np.concatenate(
-                ([0], np.cumsum(nt_counts))
-            ).astype(np.int64)
-            edge_start = np.concatenate(
-                ([0], np.cumsum(ecounts[nontriv]))
-            ).astype(np.int64)
-            s_tot = np.add.reduceat(size[order], bounds)[nontriv]
-            g_labels = comm_label[order][bounds][nontriv]
-            out = _nk.refine_batch(
-                node_start, edge_start, size[members_cat], s_tot,
-                g_labels, loc[ieu[mask_edges]], loc[iev[mask_edges]],
-                iew[mask_edges], gamma, seed,
-            )
-            if out is not None:
-                base_rep = np.repeat(node_start[:-1], nt_counts)
-                refined[members_cat] = ids[members_cat[base_rep + out]]
-                return refined
-        else:
-            return refined
-    starts = list(bounds) + [n]
-    for gi in range(len(bounds)):
-        lo, hi = starts[gi], starts[gi + 1]
-        members = order[lo:hi]
-        elo = ebounds[gi]
-        ehi = ebounds[gi + 1] if gi + 1 < len(ebounds) else len(ic)
-        # Exact short-circuits (bit-identical to the full call, measured
-        # r5 as the bulk of the 133k per-community invocations at tail
-        # levels): a singleton community refines to itself, and a
-        # community with NO intra edges has every k_to empty — no move
-        # can fire, every member stays its own founding singleton.
-        if hi - lo == 1 or elo == ehi:
-            refined[members] = ids[members]
-            continue
-        member_ids = ids[members].tolist()
-        c = int(comm_label[members[0]])
-        s_tot_full = int(size[members].sum())
-        lut = _refine_core(
-            member_ids,
-            size[members].tolist(),
-            s_tot_full,
-            c,
-            zip(
-                ids[ieu[elo:ehi]].tolist(),
-                ids[iev[elo:ehi]].tolist(),
-                iew[elo:ehi].tolist(),
-            ),
-            gamma,
-            seed,
-        )
-        refined[members] = [lut[x] for x in member_ids]
+    refined[order] = ids[order[np.repeat(start, counts) + founder]]
     return refined
 
 
@@ -367,7 +185,7 @@ def seq_community_tail(
     (src, dst, weight). A ``community`` column seeds the first level's
     local moving (maintain_p handoff from the distributed levels). For
     ``objective='cpm'`` each level is full Leiden: local moving,
-    refinement (leiden._refine_community), contraction by the refined
+    refinement (:func:`refine_groups`), contraction by the refined
     partition with maintained P communities. For modularity it is
     sequential Louvain. ``stats``: see :func:`_local_move` — accumulates
     deterministic visit/move counters across all levels.
@@ -394,7 +212,7 @@ def seq_community_tail(
     converged = False
     for _ in range(max_levels):
         n = len(ids)
-        indptr, nbr, wgt = _csr(n, eu, ev, ew)
+        indptr, nbr, wgt = _nk.csr_build(n, eu, ev, ew)
         labels = np.unique(init_label)
         comm_slot = np.searchsorted(labels, init_label).astype(np.int64)
         comm_slot = _local_move(
@@ -410,8 +228,11 @@ def seq_community_tail(
             converged = True
             break
         if objective == "cpm":
-            refined = _refine_groups(
-                ids, eu, ev, ew, size, comm_label, gamma, seed
+            comm_size = np.zeros(len(labels), dtype=np.int64)
+            np.add.at(comm_size, comm_slot, size)
+            refined = refine_groups(
+                ids, comm_slot, size, comm_size[comm_slot], comm_label,
+                eu, ev, ew, gamma, seed,
             )
             if len(np.unique(refined)) == n:
                 # refinement kept every node singleton — no compression;

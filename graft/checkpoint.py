@@ -17,10 +17,12 @@ loop, csrc/src/leiden_kernel.cu:1028-1214).
 from __future__ import annotations
 
 import atexit
+import itertools
 import json
 import os
 import shutil
 import tempfile
+import threading
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,7 +121,11 @@ class Checkpointer:
 
 
 _spill_root: str | None = None
-_spill_n = 0
+# spill names are unique per process: threads sharing a session must
+# never get the same path, or one's overwrite-mode spill replaces the
+# other's
+_spill_ids = itertools.count()
+_spill_lock = threading.Lock()
 
 
 def _resolve_spill_root(spark: SparkSession) -> str:
@@ -172,12 +178,12 @@ def truncate(df: DataFrame) -> DataFrame:
     :func:`drop_spill` on retired supersteps so long convergence runs
     do not accumulate unbounded spill directories.
     """
-    global _spill_root, _spill_n
+    global _spill_root
     spark = df.sparkSession
-    if _spill_root is None:
-        _spill_root = _resolve_spill_root(spark)
-    path = os.path.join(_spill_root, f"t{_spill_n}")
-    _spill_n += 1
+    with _spill_lock:
+        if _spill_root is None:
+            _spill_root = _resolve_spill_root(spark)
+        path = os.path.join(_spill_root, f"t{next(_spill_ids)}")
     df.write.mode("overwrite").parquet(path)
     # pin the schema on reread: skips the footer-inference job that
     # otherwise runs once per superstep (driver planning latency adds up

@@ -203,7 +203,15 @@ def skewed_graph(n: int, n_edges: int, seed: int):
     ]
 
 
-def refine_subset_ref(ids, n_v, intra_edges, gamma, order):
+def refine_visit_order(ids, seed, comm_id):
+    """The refine kernel's visit order for one community: ids sorted,
+    then permuted by the community's seeded stream."""
+    ids_sorted = sorted(ids)
+    rng = np.random.default_rng((seed * 1_000_003 + comm_id) % (2**63))
+    return [ids_sorted[i] for i in rng.permutation(len(ids_sorted))]
+
+
+def refine_subset_ref(ids, n_v, intra_edges, gamma, order, s_tot=None):
     """Clean-room implementation of the reference's merge_nodes_subset
     semantics (custom_leiden.py:349-459) with the remaining-communities
     set maintained EXPLICITLY and every gate recomputed from scratch —
@@ -212,7 +220,9 @@ def refine_subset_ref(ids, n_v, intra_edges, gamma, order):
 
     ids: vertices of one community S; n_v: aggregate node counts;
     intra_edges: single-counted (u, v, w) within S, no self-loops;
-    order: full visit order (the gate filter preserves it).
+    order: full visit order (the gate filter preserves it); s_tot:
+    total size of the whole community when ``ids`` is one hash
+    sub-bucket of it (default: the size of ``ids``).
     Returns {vertex: refined community label}.
     """
     adj: dict[int, dict[int, float]] = {v: {} for v in ids}
@@ -221,7 +231,8 @@ def refine_subset_ref(ids, n_v, intra_edges, gamma, order):
             continue
         adj[u][v] = adj[u].get(v, 0.0) + w
         adj[v][u] = adj[v].get(u, 0.0) + w
-    s_tot = sum(n_v[v] for v in ids)
+    if s_tot is None:
+        s_tot = sum(n_v[v] for v in ids)
     comm = {v: v for v in ids}
     members: dict[int, set[int]] = {v: {v} for v in ids}
     remaining = set(ids)
@@ -273,6 +284,77 @@ def refine_subset_ref(ids, n_v, intra_edges, gamma, order):
             comm[v] = best
             remaining.discard(old)
     return comm
+
+
+def local_move_ref(
+    indptr, nbr, wgt, size, strength, comm, n_c, stot, perm,
+    objective: str, gamma: float, m: float,
+) -> tuple[int, int]:
+    """Queue-greedy local moving over a CSR graph, in plain Python —
+    the twin of graft._native.local_move with the same arguments, the
+    same in-place updates of ``comm`` / ``n_c`` / ``stot`` and the same
+    (visits, moves) result. A FIFO queue starts in ``perm`` order; each
+    pop moves the node to the neighbor community of largest positive
+    delta (CPM or modularity; ties to the smallest slot), and a move
+    re-enqueues the mover's neighbors outside its new community.
+    Candidate weights accumulate in ascending-neighbor order (CSR rows
+    are ascending), so floats match the kernel bit for bit."""
+    from collections import deque
+
+    comm_py = comm.tolist()
+    q = deque(perm.tolist())
+    in_q = bytearray([1]) * len(comm_py)
+    two_m_sq = 2.0 * m * m
+    n_visits = 0
+    n_moves = 0
+    while q:
+        v = q.popleft()
+        in_q[v] = 0
+        n_visits += 1
+        s, e = int(indptr[v]), int(indptr[v + 1])
+        if s == e:
+            continue
+        cv = comm_py[v]
+        sv_ = int(size[v])
+        kv = float(strength[v])
+        kt: dict = {}
+        for u, w in zip(nbr[s:e].tolist(), wgt[s:e].tolist()):
+            c = comm_py[u]
+            kt[c] = kt.get(c, 0.0) + w
+        k_own = kt.get(cv, 0.0)
+        best = -1
+        best_delta = 0.0
+        if objective == "cpm":
+            base = k_own - gamma * sv_ * (int(n_c[cv]) - sv_)
+            for c, k in sorted(kt.items()):
+                if c == cv:
+                    continue
+                delta = (k - gamma * sv_ * int(n_c[c])) - base
+                if delta > best_delta:
+                    best, best_delta = c, delta
+        else:
+            sc = float(stot[cv])
+            for c, k in sorted(kt.items()):
+                if c == cv:
+                    continue
+                delta = (k - k_own) / m - kv * (
+                    float(stot[c]) - sc + kv
+                ) / two_m_sq
+                if delta > best_delta:
+                    best, best_delta = c, delta
+        if best >= 0:
+            n_moves += 1
+            n_c[cv] -= sv_
+            n_c[best] += sv_
+            stot[cv] -= kv
+            stot[best] += kv
+            comm[v] = best
+            comm_py[v] = best
+            for u in nbr[s:e].tolist():
+                if comm_py[u] != best and not in_q[u]:
+                    q.append(u)
+                    in_q[u] = 1
+    return n_visits, n_moves
 
 
 def greedy_louvain_ref(

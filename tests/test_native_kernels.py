@@ -1,23 +1,33 @@
-"""Equivalence pins for the native (C) sequential-tail kernels.
+"""Equivalence pins for the native (C) community-detection kernels.
 
-The C kernels in graft/_native/kernels.c must be BIT-IDENTICAL to the
-pure-Python/numpy reference paths — identical visit schedules, identical
-float accumulation order, identical tie-breaks, identical rng streams.
-These tests run the same inputs through both paths and assert exact
-equality of every output and work counter.
+The C kernels in graft/_native/kernels.c are the only production
+implementation of the tail's CSR build, local moving and refinement.
+Each is pinned BIT-IDENTICAL to its slow Python reference in
+tests/reference_impls.py — identical visit schedules, identical float
+accumulation order, identical tie-breaks, identical rng streams — by
+feeding both the same inputs and asserting exact equality of every
+output and work counter.
 """
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from graft import _native as nk
-
-pytestmark = pytest.mark.skipif(
-    nk.lib() is None, reason="no C compiler / native kernels unavailable"
+from tests.reference_impls import (
+    local_move_ref,
+    refine_subset_ref,
+    refine_visit_order,
 )
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _random_graph(rng, n=300, m=1800, weighted=True):
@@ -47,9 +57,7 @@ def _random_graph(rng, n=300, m=1800, weighted=True):
 
 
 def _hub_graph(rng, n=200, hub_deg=150):
-    """A star-heavy graph whose hub degree crosses _VEC_DEGREE, so the
-    local-moving gather exercises both the dict and the vectorized
-    Python branches against the single C path."""
+    """A star-heavy graph: the hub's gather spans >= 64 neighbors."""
     spokes = rng.choice(np.arange(1, n), size=hub_deg, replace=False)
     extra_src = rng.integers(1, n, size=400)
     extra_dst = rng.integers(1, n, size=400)
@@ -76,27 +84,42 @@ def _hub_graph(rng, n=200, hub_deg=150):
     return nodes, epdf, float(epdf["weight"].sum()) / 2.0
 
 
-def _run_both(monkeypatch, nodes, epdf, objective, gamma, m_half, seed,
-              warm=None):
+def _pin_local_move(monkeypatch, nodes, epdf, objective, gamma, m_half,
+                    seed, warm=None):
+    """Run the whole tail and check every level's native local_move call
+    against local_move_ref on a copy of the same inputs: exact comm,
+    slot aggregates, visits and moves. Returns the tail's labels and the
+    largest degree any pinned call saw."""
     from graft.algos import seq_tail
 
-    n_in = nodes.copy()
-    if warm is not None:
-        n_in = n_in.assign(community=warm)
-    stats_c: dict = {}
-    out_c = seq_tail.seq_community_tail(
-        n_in, epdf, objective, gamma, m_half, seed, stats=stats_c
-    )
-    monkeypatch.setattr(nk, "lib", lambda: None)
-    monkeypatch.setattr(nk, "rng_ok", lambda: False)
-    stats_p: dict = {}
-    out_p = seq_tail.seq_community_tail(
-        n_in, epdf, objective, gamma, m_half, seed, stats=stats_p
+    real = nk.local_move
+    calls = []
+
+    def pinned(indptr, nbr, wgt, size, strength, comm, n_c, stot, perm,
+               objective, gamma, m):
+        ref = [comm.copy(), n_c.copy(), stot.copy()]
+        want = local_move_ref(
+            indptr, nbr, wgt, size, strength, *ref, perm, objective,
+            gamma, m,
+        )
+        got = real(indptr, nbr, wgt, size, strength, comm, n_c, stot,
+                   perm, objective, gamma, m)
+        assert got == want
+        np.testing.assert_array_equal(comm, ref[0])
+        np.testing.assert_array_equal(n_c, ref[1])
+        np.testing.assert_array_equal(stot, ref[2])
+        calls.append(int(np.diff(indptr).max()))
+        return got
+
+    monkeypatch.setattr(nk, "local_move", pinned)
+    n_in = nodes if warm is None else nodes.assign(community=warm)
+    stats: dict = {}
+    out = seq_tail.seq_community_tail(
+        n_in, epdf, objective, gamma, m_half, seed, stats=stats
     )
     monkeypatch.undo()
-    assert stats_c == stats_p, (stats_c, stats_p)
-    pd.testing.assert_frame_equal(out_c, out_p)
-    return out_c
+    assert calls and stats["visits"] >= len(nodes)
+    return out, max(calls)
 
 
 def test_rng_stream_is_bit_exact():
@@ -138,35 +161,42 @@ def test_csr_build_matches_lexsort():
 def test_tail_c_equals_python(monkeypatch, objective, seed):
     rng = np.random.default_rng(seed)
     nodes, epdf, m_half = _random_graph(rng)
-    _run_both(monkeypatch, nodes, epdf, objective, 0.05, m_half, seed)
+    _pin_local_move(monkeypatch, nodes, epdf, objective, 0.05, m_half, seed)
 
 
 def test_tail_c_equals_python_hub(monkeypatch):
     rng = np.random.default_rng(42)
     nodes, epdf, m_half = _hub_graph(rng)
-    _run_both(monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234)
-    _run_both(monkeypatch, nodes, epdf, "modularity", 0.05, m_half, 1234)
+    for objective in ("cpm", "modularity"):
+        _, max_deg = _pin_local_move(
+            monkeypatch, nodes, epdf, objective, 0.05, m_half, 1234
+        )
+        assert max_deg >= 64
 
 
 def test_tail_c_equals_python_warm_seed(monkeypatch):
     rng = np.random.default_rng(5)
     nodes, epdf, m_half = _random_graph(rng, n=200, m=900)
-    cold = _run_both(monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234)
-    warm = cold["community"].to_numpy()
-    _run_both(monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234, warm=warm)
+    cold, _ = _pin_local_move(
+        monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234
+    )
+    _pin_local_move(
+        monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234,
+        warm=cold["community"].to_numpy(),
+    )
 
 
 def test_tail_c_equals_python_unweighted(monkeypatch):
     rng = np.random.default_rng(11)
     nodes, epdf, m_half = _random_graph(rng, weighted=False)
-    _run_both(monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234)
+    _pin_local_move(monkeypatch, nodes, epdf, "cpm", 0.05, m_half, 1234)
 
 
 def test_refine_bucket_native_equals_python_loop():
-    """The batched native bucket refinement must equal the per-community
-    Python loop of refine_partition.fn exactly (same grouping by
-    (community, _b), same rng streams, same trivial short-circuits)."""
-    from graft.algos.leiden import _refine_bucket_native, _refine_community
+    """The batched native bucket refinement must equal the reference
+    refinement of each (community, _b) group exactly (same visit order,
+    same full-community s_tot, trivial groups included)."""
+    from graft.algos.leiden import _refine_bucket_native
 
     rng = np.random.default_rng(17)
     rows = []
@@ -203,29 +233,69 @@ def test_refine_bucket_native_equals_python_loop():
     nodes_pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=3)
     edges_pdf = pd.DataFrame(edge_rows).sample(frac=1.0, random_state=4)
     got = _refine_bucket_native(nodes_pdf, edges_pdf, 0.25, 1234)
-    assert got is not None
-    # reference: the Python per-community loop (refine_partition.fn body)
-    edges_by = {
-        k: sub for k, sub in edges_pdf.groupby(["community", "_b"], sort=False)
-    }
-    parts = []
-    trivial = []
-    for key, nsub in nodes_pdf.groupby(["community", "_b"], sort=False):
-        esub = edges_by.get(key)
-        if len(nsub) == 1 or esub is None:
-            trivial.extend(nsub["id"].tolist())
-            continue
-        import graft._native as _nk_mod
+    got = dict(zip(got["id"], got["refined"]))
+    assert len(got) == len(nodes_pdf)
+    want: dict = {}
+    for (c, b), nsub in nodes_pdf.groupby(["community", "_b"]):
+        ids = nsub["id"].tolist()
+        esub = edges_pdf[
+            (edges_pdf["community"] == c) & (edges_pdf["_b"] == b)
+        ]
+        want.update(
+            refine_subset_ref(
+                ids,
+                dict(zip(nsub["id"], nsub["agg_count"])),
+                list(zip(esub["u"], esub["v"], esub["weight"])),
+                0.25,
+                refine_visit_order(ids, 1234, int(c)),
+                s_tot=int(nsub["s_tot_full"].iloc[0]),
+            )
+        )
+    assert got == want
+    # a bucket whose edge side is empty refines every member to itself
+    alone = _refine_bucket_native(nodes_pdf, pd.DataFrame(), 0.25, 1234)
+    assert (alone["id"] == alone["refined"]).all()
 
-        real_rng_ok = _nk_mod.rng_ok
-        _nk_mod.rng_ok = lambda: False  # force the pure-Python core
+
+def test_missing_compiler_fails_loudly(tmp_path):
+    """Without a C compiler the kernels cannot build: lib() raises
+    naming the compiler, and the tail raises instead of returning
+    labels."""
+    empty_bin = tmp_path / "bin"
+    empty_bin.mkdir()
+    script = textwrap.dedent(
+        """
+        import pandas as pd
+        from graft import _native
+        from graft.algos.seq_tail import seq_community_tail
+
         try:
-            parts.append(_refine_community(nsub, esub, 0.25, 1234))
-        finally:
-            _nk_mod.rng_ok = real_rng_ok
-    if trivial:
-        parts.append(pd.DataFrame({"id": trivial, "refined": trivial}))
-    ref = pd.concat(parts, ignore_index=True)
-    merged = got.merge(ref, on="id", suffixes=("_c", "_py"))
-    assert len(merged) == len(got) == len(ref)
-    assert (merged["refined_c"] == merged["refined_py"]).all()
+            _native.lib()
+        except RuntimeError as exc:
+            assert "`cc " in str(exc), exc
+        else:
+            raise SystemExit("lib() loaded without a compiler")
+        nodes = pd.DataFrame({"id": [1, 2, 3], "agg_count": 1,
+                              "k": [1.0, 2.0, 1.0]})
+        edges = pd.DataFrame({"src": [1, 2, 2, 3], "dst": [2, 1, 3, 2],
+                              "weight": 1.0})
+        try:
+            seq_community_tail(nodes, edges, "cpm", 0.1, 2.0, 1)
+        except RuntimeError:
+            print("LOUD")
+        else:
+            raise SystemExit("the tail returned labels without a compiler")
+        """
+    )
+    env = {
+        "PATH": str(empty_bin),
+        "PYTHONPATH": _REPO,
+        "GRAFT_CKERN_CACHE": str(tmp_path / "ckern"),
+        "HOME": str(tmp_path),
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr + proc.stdout
+    assert proc.stdout.strip() == "LOUD"

@@ -10,7 +10,9 @@ equals the engine's incrementally-maintained rc_cut. 200 random seeds
 ×  several graph shapes check it empirically — including after merges,
 where the two bookkeeping styles could in principle diverge.
 
-Runs without Spark: the kernel is exercised as a plain pandas function.
+Runs without Spark: the production bucket kernel
+(graft.algos.leiden._refine_bucket_native, one native refine_batch call
+per cogroup bucket) is exercised as a plain pandas function.
 """
 
 from __future__ import annotations
@@ -19,19 +21,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from graft.algos.leiden import _refine_community
+from graft.algos.leiden import _refine_bucket_native
 from tests.reference_impls import (
     dedup_undirected,
     random_graph,
     refine_subset_ref,
+    refine_visit_order,
 )
-
-
-def _partition(labels: dict) -> set[frozenset]:
-    groups: dict = {}
-    for v, c in labels.items():
-        groups.setdefault(c, set()).add(v)
-    return {frozenset(g) for g in groups.values()}
 
 
 def _run_kernel(ids, n_v, intra, gamma, seed, comm_id=0):
@@ -41,25 +37,20 @@ def _run_kernel(ids, n_v, intra, gamma, seed, comm_id=0):
             "community": [comm_id] * len(ids),
             "agg_count": [n_v[i] for i in ids],
             "s_tot_full": [sum(n_v.values())] * len(ids),
+            "_b": 0,
         }
     )
     edges = pd.DataFrame(
         {
+            "community": comm_id,
+            "_b": 0,
             "u": [e[0] for e in intra],
             "v": [e[1] for e in intra],
             "weight": [e[2] for e in intra],
         }
     )
-    out = _refine_community(nodes, edges, gamma, seed)
+    out = _refine_bucket_native(nodes, edges, gamma, seed)
     return dict(zip(out["id"], out["refined"]))
-
-
-def _kernel_order(ids, seed, comm_id=0):
-    """Reproduce the kernel's canonical visit order: ids sorted, then the
-    seeded permutation it draws internally."""
-    ids_sorted = sorted(ids)
-    rng = np.random.default_rng((seed * 1_000_003 + comm_id) % (2**63))
-    return [ids_sorted[i] for i in rng.permutation(len(ids_sorted))]
 
 
 @pytest.mark.parametrize("case", range(50))
@@ -81,10 +72,10 @@ def test_refinement_matches_reference_semantics(case):
         n_v = {i: int(rng.integers(1, 4)) for i in ids}
 
         got = _run_kernel(ids, n_v, intra, gamma, seed)
-        order = _kernel_order(ids, seed)
+        order = refine_visit_order(ids, seed, 0)
         want = refine_subset_ref(ids, n_v, intra, gamma, order)
 
-        assert _partition(got) == _partition(want), (
+        assert got == want, (
             f"divergence at n={n} p={p} gamma={gamma} seed={seed}"
         )
 
@@ -97,5 +88,7 @@ def test_refinement_weighted_no_ties():
         ids = list(range(25))
         n_v = {i: 1 for i in ids}
         got = _run_kernel(ids, n_v, intra, 0.08, seed)
-        want = refine_subset_ref(ids, n_v, intra, 0.08, _kernel_order(ids, seed))
-        assert _partition(got) == _partition(want)
+        want = refine_subset_ref(
+            ids, n_v, intra, 0.08, refine_visit_order(ids, seed, 0)
+        )
+        assert got == want

@@ -6,6 +6,8 @@ unbounded directories."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import pytest
 
@@ -16,10 +18,10 @@ from graft.checkpoint import drop_spill, truncate
 @pytest.fixture()
 def fresh_spill_root():
     """Reset the module-level spill root around a test."""
-    old_root, old_n = checkpoint._spill_root, checkpoint._spill_n
+    old_root = checkpoint._spill_root
     checkpoint._spill_root = None
     yield
-    checkpoint._spill_root, checkpoint._spill_n = old_root, old_n
+    checkpoint._spill_root = old_root
 
 
 def test_truncate_honors_configured_dir(spark, tmp_path, fresh_spill_root):
@@ -55,3 +57,39 @@ def test_drop_spill_deletes_retired_state(spark, tmp_path, fresh_spill_root):
         drop_spill(spark.range(3))
     finally:
         spark.conf.unset("spark.graft.spillDir")
+
+
+def test_concurrent_truncates_get_distinct_paths(spark, tmp_path, fresh_spill_root):
+    """Threads sharing one session each spill to their own path and read
+    back their own rows (a shared name would let one thread's
+    overwrite-mode spill replace another's)."""
+    spark.conf.set("spark.graft.spillDir", str(tmp_path))
+    n_threads = 8
+    start = threading.Barrier(n_threads)
+    results: dict = {}
+    errors: list = []
+
+    def work(i: int) -> None:
+        try:
+            start.wait(timeout=60)
+            df = truncate(spark.range(i * 1000, i * 1000 + 10 + i))
+            results[i] = (df._graft_spill_path, sorted(r.id for r in df.collect()))
+        except BaseException as exc:  # reported by the main thread
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.unset("spark.graft.spillDir")
+    assert not errors, errors
+    assert not any(t.is_alive() for t in threads)
+    assert len({path for path, _ in results.values()}) == n_threads
+    for i, (_, ids) in results.items():
+        assert ids == list(range(i * 1000, i * 1000 + 10 + i))

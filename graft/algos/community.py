@@ -33,7 +33,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, row_count, truncate
 
 
 @dataclass
@@ -82,11 +82,12 @@ def gather_neighbor_comm_weights(
     weight — self-loops excluded (a node is not its own neighbor,
     csrc/src/leiden_kernel.cu:66-69). Returns (id, nbr_comm, k_vc).
 
-    The assign side joins UN-projected (r6): when the sweep loop passes
-    the same vertex-state frame here and to ``_select_moves``'s ``v``
-    join, both broadcast build sides canonicalize identically (same
-    subtree, same ``id`` key) and ReuseExchange ships ONE vertex-state
-    broadcast per sweep instead of two."""
+    This join needs only the neighbor's ``(id, community)``, while
+    ``_select_moves``'s ``v`` join needs the vertex's whole state, so
+    column pruning gives the two vertex-state broadcasts different
+    schemas and both are built each sweep (on small levels the planner
+    may broadcast the edge side here instead). The single-build pin in
+    tests/test_plan_pins_bsp.py covers the community aggregate only."""
     a = assign.alias("_as")
     return (
         edges.where(F.col("src") != F.col("dst"))
@@ -103,8 +104,15 @@ def community_aggregates(vertices: DataFrame) -> DataFrame:
     """(community, n long, stot double): aggregate node count + total
     strength per community (A1 recomputed per superstep — the reference
     found full re-gather beats incremental maintenance, report.txt:24-25)."""
+    # coalesce: a plain sum is nullable, and Catalyst then infers an
+    # isnotnull filter on whichever join side keys on it — the two
+    # broadcasts of this aggregate in _select_moves stop canonicalizing
+    # alike and the aggregate is built twice per sweep. Sums over a
+    # non-empty group of non-null columns are never null, so this
+    # changes no value.
     return vertices.groupBy("community").agg(
-        F.sum("agg_count").alias("n"), F.sum("k").alias("stot")
+        F.coalesce(F.sum("agg_count"), F.lit(0)).alias("n"),
+        F.coalesce(F.sum("k"), F.lit(0.0)).alias("stot"),
     )
 
 
@@ -145,11 +153,10 @@ def _select_moves(
     """
     v = vertices.select("id", "community", "agg_count", "k").alias("_v")
     # Both dimension joins broadcast the IDENTICAL un-projected comm_agg
-    # subtree (r6): with per-join projections the two BroadcastExchange
-    # build sides canonicalized differently and the community-aggregate
-    # shuffle + broadcast was built TWICE per sweep; identical subtrees
-    # let ReuseExchange build it once (verify: the second occurrence
-    # plans as ReusedExchange).
+    # subtree, so the community aggregate's shuffle + broadcast is built
+    # ONCE per sweep and the second join plans as a ReusedExchange of it
+    # (pinned in tests/test_plan_pins_bsp.py). This needs the aggregate's
+    # columns to be non-nullable (see community_aggregates).
     ca1 = comm_agg.alias("_ca1")
     ca2 = comm_agg.alias("_ca2")
     cand = gather.join(v, "id").join(
@@ -314,6 +321,33 @@ _QUALITY_CHECK_FROM = 5
 _QUALITY_COLLAPSE_REL = 1e-3
 
 
+def superstep_reducers(n_edge_rows: int, cores: int, configured: int) -> int:
+    """Superstep reducer count for a level of ``n_edge_rows`` edge rows
+    (see :func:`superstep_conf`)."""
+    by_size = -(-int(n_edge_rows) // 500_000)
+    by_cores = min(cores, -(-int(n_edge_rows) // 250_000))
+    return max(4, min(configured, max(by_size, by_cores)))
+
+
+def refine_reducers(n_edge_rows: int, cores: int, sp: int) -> int:
+    """Reducer count of the refinement cogroup, given the superstep
+    count ``sp``: never fewer than ``sp``, else about one task per 40k
+    edge rows, capped at three waves (3 x cores).
+
+    The stage is task-bound — each task converts its Arrow batches to
+    pandas and makes one native ``refine_batch`` call — so its size
+    follows the data, not the core count. A 60k-row level on 4 cores
+    runs one wave of 4 tasks: every extra task there is a fixed Python
+    worker round-trip with no work behind it. From about 0.5M rows up
+    the cap holds: the 4M-row powerlaw level measured half the cores
+    idle with 16 reducers (r3), and straggler-bound walls at exactly
+    one wave (r4), so three waves of smaller tasks amortize a slow
+    partition. Labels do not depend on this count: each
+    ``(community, _b)`` group seeds its own RNG stream whatever bucket
+    carries it."""
+    return max(sp, min(3 * cores, -(-int(n_edge_rows) // 40_000)))
+
+
 @contextmanager
 def superstep_conf(spark, n_edge_rows: int):
     """Session tuning for iterative superstep sections; yields the
@@ -337,10 +371,9 @@ def superstep_conf(spark, n_edge_rows: int):
     """
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    cores = spark.sparkContext.defaultParallelism
-    by_size = -(-int(n_edge_rows) // 500_000)
-    by_cores = min(cores, -(-int(n_edge_rows) // 250_000))
-    sp = max(4, min(int(sp_before), max(by_size, by_cores)))
+    sp = superstep_reducers(
+        n_edge_rows, spark.sparkContext.defaultParallelism, int(sp_before)
+    )
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(sp))
     try:
@@ -348,6 +381,18 @@ def superstep_conf(spark, n_edge_rows: int):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", sp_before)
+
+
+def level_counts(level: Level) -> tuple[int, int]:
+    """(edge rows, vertices) of a level, the one count a level loop
+    takes per level: from the parquet footers when the level's tables
+    are graft leaves (every contracted level), otherwise with the
+    vertex count's aggregation under AQE off (one job, not one per
+    stage)."""
+    n_rows = row_count(level.edges)
+    with superstep_conf(level.edges.sparkSession, n_rows):
+        n_verts = row_count(level.vertices)
+    return n_rows, n_verts
 
 
 def move_nodes(
@@ -359,6 +404,7 @@ def move_nodes(
     seed: int = 1234,
     patience: int = 3,
     on_sweep=None,
+    n_edge_rows: int | None = None,
 ) -> tuple[Level, int]:
     """Local moving to convergence (C5/C8): repeat gather → delta →
     argmax → independent-set commit → apply, until a sweep commits zero
@@ -382,11 +428,17 @@ def move_nodes(
     (per-stage re-optimization latency exceeds its value on superstep
     state tables; see the conf save/restore below).
 
+    ``n_edge_rows`` is the edge table's row count when the caller
+    already knows it (level loops count each level once); otherwise it
+    is taken with :func:`graft.checkpoint.row_count`.
+
     Returns (updated level with the best-seen vertices, total moves).
     """
     edges = level.edges
     spark = edges.sparkSession
-    with superstep_conf(spark, edges.count()) as sp_sweep:
+    if n_edge_rows is None:
+        n_edge_rows = row_count(edges)
+    with superstep_conf(spark, n_edge_rows) as sp_sweep:
         # One shuffle per LEVEL instead of per sweep: hash-partition the
         # edge table by src and keep it cached for the whole loop. The
         # gather groupBy(src, nbr_comm), the per-vertex argmax groupBy
@@ -623,11 +675,3 @@ def propagate_labels(
         )
     return cur
 
-
-def all_singletons(vertices: DataFrame) -> bool:
-    """A8 convergence predicate (custom_leiden.py:601-609):
-    every community has exactly one (super)node."""
-    row = vertices.agg(
-        F.countDistinct("community").alias("c"), F.count(F.lit(1)).alias("n")
-    ).first()
-    return row["c"] == row["n"]

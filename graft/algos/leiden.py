@@ -36,13 +36,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import Checkpointer, truncate
+from graft.checkpoint import Checkpointer, drop_spill, row_count, truncate
 from graft.algos.community import (
     Level,
     _is_persisted,
     aggregate_graph,
     init_level,
+    level_counts,
     move_nodes,
+    refine_reducers,
     superstep_conf,
 )
 from graft.algos.seq_tail import refine_groups
@@ -181,7 +183,7 @@ def refine_partition(
             return pd.DataFrame({"id": [], "refined": []})
         return _refine_bucket_native(nodes_pdf, edges_pdf, gamma, seed)
 
-    return (
+    out = (
         assign.select("id", "community", "agg_count", "s_tot_full",
                       "_b", bucket)
         .groupBy("_g")
@@ -191,6 +193,9 @@ def refine_partition(
         )
         .applyInPandas(fn, schema="id long, refined long")
     )
+    # the spill this lazy result reads: dead once the caller truncates it
+    out._graft_inputs = (assign,)  # type: ignore[attr-defined]
+    return out
 
 
 def _maintained_vertices(
@@ -360,15 +365,18 @@ def leiden(
             _release(level.edges, _owns_edges)
             _owns_edges = True
             level = Level(
-                edges=checkpointer.load_table(f"level={done}/edges").persist(),
+                edges=checkpointer.load_table(f"level={done}/edges"),
                 vertices=checkpointer.load_table(f"level={done}/vertices"),
             )
             start_lvl = done + 1
     tail_at_base = False
+    # spills this call writes; all are dead once the final labels are a
+    # leaf of their own, and are dropped then
+    spills: list[DataFrame] = []
     for lvl in range(start_lvl, max_levels):
-        _n_rows, _n_verts = level.edges.count(), level.vertices.count()
+        n_rows, n_verts = level_counts(level)
         if _tail_ready(
-            _n_rows, _n_verts, sequential_tail_edges, tail_max_vertices,
+            n_rows, n_verts, sequential_tail_edges, tail_max_vertices,
         ):
             import os as _os
             import sys as _sys
@@ -385,8 +393,8 @@ def leiden(
             )
             if _os.environ.get("GRAFT_SWEEP_LOG"):
                 print(
-                    f"[leiden] lvl={lvl} tail rows={_n_rows} "
-                    f"verts={_n_verts} tail_s={_time.time() - _t0:.1f}",
+                    f"[leiden] lvl={lvl} tail rows={n_rows} "
+                    f"verts={n_verts} tail_s={_time.time() - _t0:.1f}",
                     file=_sys.stderr, flush=True,
                 )
             level = Level(edges=level.edges, vertices=tail)
@@ -394,7 +402,15 @@ def leiden(
             # the label fold below would be an identity join (no
             # mappings, tail covers every base id) — skip it (r6)
             tail_at_base = lvl == 0 and start_lvl == 0 and not mappings
+            if not tail_at_base:
+                spills.append(tail)
             break
+
+        # the BSP path reads the level's edge table several times; a
+        # contracted level's table is a parquet leaf, cached only here
+        # (a tail level reads it once)
+        if not _is_persisted(level.edges):
+            level.edges = level.edges.persist()
 
         def _on_sweep(it, n_moves, verts, _lvl=lvl):
             if checkpointer is not None:
@@ -406,49 +422,42 @@ def leiden(
         level, _ = move_nodes(
             level, objective="cpm", gamma=gamma,
             max_sweeps=max_sweeps, seed=seed + lvl, on_sweep=_on_sweep,
+            n_edge_rows=n_rows,
         )
-        # one bookkeeping agg per level (vertex + community counts)
-        row = level.vertices.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("community").alias("c"),
-        ).first()
-        n_before = row["n"]
-        if row["c"] == n_before:
-            break  # all singletons
+        spills.append(level.vertices)
         import os as _os
         import time as _time
 
         _t0 = _time.time()
         spark = level.edges.sparkSession
-        with superstep_conf(spark, level.edges.count()):
-            # the refinement cogroup is task-bound (each bucket's Arrow
-            # to pandas conversion plus its refine_batch call), not
-            # shuffle-bound: run it at 3x core parallelism even when the
-            # superstep reducers are sized smaller for shuffle latency
-            # (measured r3 on the 4M-row powerlaw level: 16 reducers
-            # left half the cores idle; r4: exactly-one-wave scheduling
-            # made the stage straggler-bound — one slow partition set
-            # the wall — so ~3 waves of smaller tasks amortize
-            # stragglers)
-            sp_now = spark.conf.get("spark.sql.shuffle.partitions")
+        with superstep_conf(spark, n_rows) as sp:
+            # A8 convergence (custom_leiden.py:601-609): every community
+            # one (super)node. One bookkeeping job per level (AQE off:
+            # one stage chain, not one job per stage)
+            n_comms = level.vertices.agg(
+                F.countDistinct("community")
+            ).first()[0]
+            if n_comms == n_verts:
+                break  # all singletons
+            # the refinement cogroup is task-bound, so its reducer
+            # count follows the level's size (refine_reducers), not the
+            # superstep's shuffle sizing
             spark.conf.set(
                 "spark.sql.shuffle.partitions",
-                str(max(
-                    int(sp_now),
-                    3 * spark.sparkContext.defaultParallelism,
+                str(refine_reducers(
+                    n_rows, spark.sparkContext.defaultParallelism, sp,
                 )),
             )
-            refined = truncate(refine_partition(level, gamma, seed + lvl))
-            spark.conf.set("spark.sql.shuffle.partitions", sp_now)
-            n_refined = refined.agg(F.countDistinct("refined")).first()[0]
+            lazy_refined = refine_partition(level, gamma, seed + lvl)
+            refined = truncate(lazy_refined)
+            spark.conf.set("spark.sql.shuffle.partitions", str(sp))
+            spills += [refined, *lazy_refined._graft_inputs]
             if _os.environ.get("GRAFT_SWEEP_LOG"):
                 print(
-                    f"[leiden] lvl={lvl} n={n_before} refined={n_refined} "
+                    f"[leiden] lvl={lvl} n={n_verts} "
                     f"refine_s={_time.time() - _t0:.1f}",
                     file=__import__('sys').stderr, flush=True,
                 )
-            if n_refined == n_before:
-                break  # refinement kept every node singleton
             new_edges = truncate(
                 aggregate_graph(
                     level.edges,
@@ -458,11 +467,16 @@ def leiden(
             new_vertices = truncate(
                 _maintained_vertices(level.vertices, refined, new_edges)
             )
+            spills += [new_edges, new_vertices]
             if _os.environ.get("GRAFT_SWEEP_LOG"):
                 print(
                     f"[leiden] lvl={lvl} aggregate_s={_time.time() - _t0:.1f}",
                     file=__import__('sys').stderr, flush=True,
                 )
+        # each refined community is one supernode, so as many supernodes
+        # as vertices means refinement kept every node singleton
+        if row_count(new_vertices) == n_verts:
+            break
         mappings.append(
             refined.select(
                 F.col("id").alias("child"), F.col("refined").alias("parent")
@@ -476,7 +490,7 @@ def leiden(
             )
         _release(level.edges, _owns_edges)
         _owns_edges = True
-        level = Level(edges=new_edges.persist(), vertices=new_vertices)
+        level = Level(edges=new_edges, vertices=new_vertices)
 
     if tail_at_base:
         # level-0 tail: its (id, community) output IS the final label
@@ -504,7 +518,7 @@ def leiden(
         from graft.quality import cpm
 
         q = cpm(graph.edges, final, gamma)
-        _release(level.edges, _owns_edges)
-        return final, q
     _release(level.edges, _owns_edges)
-    return final
+    for df in spills:
+        drop_spill(df)
+    return (final, q) if return_quality else final

@@ -19,8 +19,10 @@ from graft.algos.community import (
     aggregate_graph,
     aggregate_vertices,
     init_level,
+    level_counts,
     move_nodes,
     propagate_labels,
+    superstep_conf,
 )
 from graft.graph import Graph
 
@@ -104,16 +106,16 @@ def louvain(
             _release(level.edges, _owns_edges)
             _owns_edges = True
             level = Level(
-                edges=checkpointer.load_table(f"level={done}/edges").persist(),
+                edges=checkpointer.load_table(f"level={done}/edges"),
                 vertices=checkpointer.load_table(f"level={done}/vertices"),
             )
             start_lvl = done + 1
     for lvl in range(start_lvl, max_levels):
         from graft.algos.leiden import _tail_ready
 
+        n_rows, n_verts = level_counts(level)
         if _tail_ready(
-            level.edges.count(), level.vertices.count(),
-            sequential_tail_edges, tail_max_vertices,
+            n_rows, n_verts, sequential_tail_edges, tail_max_vertices,
         ):
             from graft.algos.seq_tail import run_tail_distributed
 
@@ -142,6 +144,12 @@ def louvain(
             )
             break
 
+        # the BSP path reads the level's edge table several times; a
+        # contracted level's table is a parquet leaf, cached only here
+        # (a tail level reads it once)
+        if not _is_persisted(level.edges):
+            level.edges = level.edges.persist()
+
         def _on_sweep(it, n_moves, verts, _lvl=lvl):
             if checkpointer is not None:
                 checkpointer.save(
@@ -152,15 +160,16 @@ def louvain(
         level, n_moves = move_nodes(
             level, objective="modularity", m=m,
             max_sweeps=max_sweeps, seed=seed + lvl, on_sweep=_on_sweep,
+            n_edge_rows=n_rows,
         )
-        # one bookkeeping agg per level: vertex count + community count
-        # covers both the all-singletons and the no-compression exits
-        row = level.vertices.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("community").alias("c"),
-        ).first()
-        n_before, n_after = row["n"], row["c"]
-        if n_moves == 0 or n_after == n_before:
+        # one bookkeeping job per level (AQE off, as in leiden): the
+        # community count covers both the all-singletons and the
+        # no-compression exits
+        with superstep_conf(level.edges.sparkSession, n_rows):
+            n_comms = level.vertices.agg(
+                F.countDistinct("community")
+            ).first()[0]
+        if n_moves == 0 or n_comms == n_verts:
             if initial_membership is not None and not mappings:
                 # warm level-0 labels are not identity even with zero
                 # moves — record them, or the seeded structure would
@@ -191,7 +200,7 @@ def louvain(
             )
         _release(level.edges, _owns_edges)
         _owns_edges = True
-        level = Level(edges=new_edges.persist(), vertices=new_vertices)
+        level = Level(edges=new_edges, vertices=new_vertices)
     result = propagate_labels(base_ids, mappings)
     result = truncate(result)
     base_ids.unpersist()

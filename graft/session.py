@@ -7,9 +7,11 @@ apply (AQE, Arrow, adaptive skew-join) and only executor topology changes
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -65,8 +67,37 @@ def get_spark(
 
 # app ids whose one-time engine warmup already ran (getOrCreate returns
 # the same context many times; the warmup must run once per JVM, not
-# once per call)
+# once per call); the lock makes check-and-record atomic across threads
 _warmed_app_ids: set[str] = set()
+_warm_lock = threading.Lock()
+_log = logging.getLogger(__name__)
+
+
+def _warm_scheduler(spark: SparkSession) -> None:
+    """Job scheduler + codegen'd aggregate."""
+    spark.range(16).selectExpr("sum(id)").collect()
+
+
+def _warm_parquet(spark: SparkSession) -> None:
+    """Parquet write/read + committer + file-index machinery, through a
+    tempdir on this process's host (so only on a ``local`` master,
+    whose executors share that filesystem)."""
+    d = tempfile.mkdtemp(prefix="graft-warm-")
+    try:
+        p = os.path.join(d, "w.parquet")
+        spark.range(4).write.mode("overwrite").parquet(p)
+        spark.read.parquet(p).count()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _warm_python_worker(spark: SparkSession) -> None:
+    """Python worker fork + worker-side pandas/pyarrow import."""
+
+    def _ident(batches):
+        yield from batches
+
+    spark.range(4).mapInPandas(_ident, "id long").collect()
 
 
 def _warm_session(spark: SparkSession) -> None:
@@ -76,39 +107,34 @@ def _warm_session(spark: SparkSession) -> None:
     to whichever query happens to run first: scheduler + whole-stage
     codegen (janino) compilation, the parquet writer/reader + output
     committer class loading, and the Python worker pool fork with its
-    worker-side pandas/numpy imports. Measured on this box the first
-    user action absorbs ~3.5s of that (first parquet query 6.1s cold vs
-    2.4s after warmup; first pandas-UDF op 1.75s vs 0.45s).
+    worker-side pandas/numpy imports. Unwarmed, the first user action
+    absorbed ~3.5s of that in the r6 measurements (first parquet query
+    6.1s cold vs 2.4s after warmup; first pandas-UDF op 1.75s vs 0.45s).
 
     Everything here runs on synthetic literals or a throwaway tempdir —
     no caller table, path, or configuration is touched, so no query
-    result or input scan is ever precomputed. Disable with
-    ``GRAFT_NO_SESSION_WARM=1`` (e.g. when profiling cold-start itself).
+    result or input scan is ever precomputed. Each step is best-effort
+    on its own: one that fails (say the parquet step on an unusual
+    filesystem) leaves the others to run, and a session that cannot be
+    warmed is handed back unwarmed rather than failing creation.
+    Disable with ``GRAFT_NO_SESSION_WARM=1`` (e.g. when profiling
+    cold-start itself).
     """
     if os.environ.get("GRAFT_NO_SESSION_WARM"):
         return
     app_id = spark.sparkContext.applicationId
-    if app_id in _warmed_app_ids:
-        return
-    _warmed_app_ids.add(app_id)
-    try:
-        # job scheduler + codegen'd aggregate
-        spark.range(16).selectExpr("sum(id)").collect()
-        # parquet write/read + committer + file-index machinery
-        d = tempfile.mkdtemp(prefix="graft-warm-")
+    with _warm_lock:
+        if app_id in _warmed_app_ids:
+            return
+        _warmed_app_ids.add(app_id)
+    master = spark.sparkContext.master
+    steps = [_warm_scheduler]
+    if master == "local" or master.startswith("local["):
+        steps.append(_warm_parquet)
+    steps.append(_warm_python_worker)
+    for step in steps:
         try:
-            p = os.path.join(d, "w.parquet")
-            spark.range(4).write.mode("overwrite").parquet(p)
-            spark.read.parquet(p).count()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-
-        # python worker fork + worker-side pandas/pyarrow import
-        def _ident(batches):
-            yield from batches
-
-        spark.range(4).mapInPandas(_ident, "id long").collect()
-    except Exception:
-        # warmup is best-effort; a session that cannot run it yet is
-        # handed back unwarmed rather than failing creation
-        pass
+            step(spark)
+        except Exception:
+            _log.warning("session warmup step %s failed", step.__name__,
+                         exc_info=True)

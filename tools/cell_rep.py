@@ -65,9 +65,12 @@ def main() -> None:
             raise SystemExit(f"unknown cell {cell}")
         return round(time.perf_counter() - t0, 3)
 
+    # host load around the timed reps, to tell host noise from code
+    load1_before = os.getloadavg()[0]
     walls = [run_once() for _ in range(reps)]
     print(json.dumps({"cell": cell, "walls": walls,
-                      "load1": os.getloadavg()[0]}))
+                      "load1_before": load1_before,
+                      "load1_after": os.getloadavg()[0]}))
     spark.stop()
 
 

@@ -331,20 +331,22 @@ def superstep_reducers(n_edge_rows: int, cores: int, configured: int) -> int:
 
 def refine_reducers(n_edge_rows: int, cores: int, sp: int) -> int:
     """Reducer count of the refinement cogroup, given the superstep
-    count ``sp``: never fewer than ``sp``, else about one task per 40k
-    edge rows, capped at three waves (3 x cores).
+    count ``sp``: never fewer than ``sp``, else one task per 40k edge
+    rows, capped at three waves (3 x cores).
 
     The stage is task-bound — each task converts its Arrow batches to
-    pandas and makes one native ``refine_batch`` call — so its size
-    follows the data, not the core count. A 60k-row level on 4 cores
-    runs one wave of 4 tasks: every extra task there is a fixed Python
-    worker round-trip with no work behind it. From about 0.5M rows up
-    the cap holds: the 4M-row powerlaw level measured half the cores
-    idle with 16 reducers (r3), and straggler-bound walls at exactly
-    one wave (r4), so three waves of smaller tasks amortize a slow
-    partition. Labels do not depend on this count: each
-    ``(community, _b)`` group seeds its own RNG stream whatever bucket
-    carries it."""
+    pandas and makes one native ``refine_batch`` call — so every task
+    beyond the data's need is a fixed Python worker round-trip. Measured
+    on local[4] (synthetic powerlaw levels after local moving, refine +
+    spill wall, median of 3): 58k rows 1.06 s at 4 tasks vs 1.58 s at
+    12; 247k rows 1.33 s at this rule's 7 vs 1.55 s at 12; 496k rows
+    0.94 s at 4 vs 1.71 s at 12; 4M rows 2.06 s at ``sp`` = 8 vs 2.64 s
+    at 12. On 4 cores ``sp`` alone was fastest at every size; the
+    3 x cores cap stands on many-core evidence not re-measured since
+    the native kernel (r3: half of 32 cores idle with 16 reducers on a
+    4M-row level; r4: straggler-bound walls at exactly one wave).
+    Labels do not depend on this count: each ``(community, _b)`` group
+    seeds its own RNG stream whatever bucket carries it."""
     return max(sp, min(3 * cores, -(-int(n_edge_rows) // 40_000)))
 
 

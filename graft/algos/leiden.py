@@ -36,7 +36,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import Checkpointer, drop_spill, row_count, truncate
+from graft.checkpoint import (
+    Checkpointer,
+    drop_spill,
+    row_count,
+    spill_inputs,
+    truncate,
+    with_spill_inputs,
+)
 from graft.algos.community import (
     Level,
     _is_persisted,
@@ -194,8 +201,7 @@ def refine_partition(
         .applyInPandas(fn, schema="id long, refined long")
     )
     # the spill this lazy result reads: dead once the caller truncates it
-    out._graft_inputs = (assign,)  # type: ignore[attr-defined]
-    return out
+    return with_spill_inputs(out, assign)
 
 
 def _maintained_vertices(
@@ -451,7 +457,7 @@ def leiden(
             lazy_refined = refine_partition(level, gamma, seed + lvl)
             refined = truncate(lazy_refined)
             spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-            spills += [refined, *lazy_refined._graft_inputs]
+            spills += [refined, *spill_inputs(lazy_refined)]
             if _os.environ.get("GRAFT_SWEEP_LOG"):
                 print(
                     f"[leiden] lvl={lvl} n={n_verts} "

@@ -29,7 +29,6 @@ import pyarrow as pa
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class Checkpointer:
@@ -60,7 +59,8 @@ class Checkpointer:
         can be audited against the original. The counts are rows per
         WRITE task (``[partition id, rows]``, the id taken from each
         ``part-NNNNN`` file name), read from the parquet footers the
-        write just produced — no Spark job.
+        write just produced — no Spark job. The Checkpointer root is a
+        local directory (``__init__`` creates it with ``os.makedirs``).
         """
         path = self._step_dir(step)
         state.write.mode("overwrite").parquet(path)
@@ -68,16 +68,9 @@ class Checkpointer:
             self.spark.read.schema(state.schema).parquet(path), path
         )
         part_counts: dict[int, int] = {}
-        try:
-            for name, rows in _footer_rows(path):
-                pid = int(name.split("-", 2)[1])
-                part_counts[pid] = part_counts.get(pid, 0) + rows
-        except _UNREADABLE:
-            # a root pyarrow cannot open (e.g. an s3a:// URI): one job
-            # counts rows per read partition instead
-            part_counts = dict(
-                reread.groupBy(F.spark_partition_id()).count().collect()
-            )
+        for name, rows in _footer_rows(path):
+            pid = int(name.split("-", 2)[1])
+            part_counts[pid] = part_counts.get(pid, 0) + rows
         rec = {
             "step": step,
             "partition_rows": sorted([p, n] for p, n in part_counts.items()),
@@ -260,3 +253,19 @@ def drop_spill(df: DataFrame) -> None:
     path = getattr(df, "_graft_spill_path", None)
     if path and "://" not in path:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def with_spill_inputs(df: DataFrame, *spills: DataFrame) -> DataFrame:
+    """Hand ``spills`` — :func:`truncate` outputs that only the lazy
+    ``df`` reads — to ``df``'s consumer: once it has truncated ``df``
+    they are dead, and it drops them via :func:`spill_inputs`. Returns
+    ``df``."""
+    df._graft_spill_inputs = spills  # type: ignore[attr-defined]
+    return df
+
+
+def spill_inputs(df: DataFrame) -> tuple[DataFrame, ...]:
+    """The spills handed over with :func:`with_spill_inputs`; empty for
+    any other frame, including one derived from ``df`` (its inputs'
+    spills then stay on disk until the spill root is removed)."""
+    return getattr(df, "_graft_spill_inputs", ())

@@ -10,7 +10,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from graft import checkpoint
-from graft.checkpoint import Checkpointer, drop_spill, row_count, truncate
+from graft.checkpoint import (
+    Checkpointer,
+    drop_spill,
+    row_count,
+    spill_inputs,
+    truncate,
+    with_spill_inputs,
+)
 from graft.graph import Graph
 
 
@@ -62,6 +69,16 @@ def test_drop_spill_never_deletes_a_checkpoint_table(spark, tmp_path):
     drop_spill(ck.load_table("t"))
     assert ck.has_table("t")
     assert ck.load_table("t").count() == 5
+
+
+def test_spill_inputs_travel_with_the_marked_frame_only(spark):
+    leaf = spark.range(3)
+    lazy = with_spill_inputs(leaf.select("id"), leaf)
+    (handed,) = spill_inputs(lazy)
+    assert handed is leaf
+    # a derived frame carries no hand-over: nothing to drop, no error
+    assert spill_inputs(lazy.where("id > 0")) == ()
+    assert spill_inputs(leaf) == ()
 
 
 def test_save_partition_rows_sum_to_state_rows(spark, tmp_path):

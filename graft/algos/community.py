@@ -25,8 +25,6 @@ original vertices carried by the (super)node.
 
 from __future__ import annotations
 
-import os
-import sys
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -310,6 +308,9 @@ def _quality(
 # sweep index from which oscillation detection kicks in; before that,
 # sweeps are assumed productive
 _QUALITY_CHECK_FROM = 5
+# local moving stops once this many quality probes in a row found no
+# improvement over the best-seen partition
+_PATIENCE = 3
 # the exact-quality probe is an edges double-join costing about as much
 # as a sweep, so it runs ONLY when the free committed-gain signal
 # collapses — absolutely (≤1e-12) or relative to the best sweep seen
@@ -404,14 +405,13 @@ def move_nodes(
     m: float = 1.0,
     max_sweeps: int = 50,
     seed: int = 1234,
-    patience: int = 3,
     on_sweep=None,
     n_edge_rows: int | None = None,
 ) -> tuple[Level, int]:
     """Local moving to convergence (C5/C8): repeat gather → delta →
     argmax → independent-set commit → apply, until a sweep commits zero
-    moves OR the partition quality stops improving for ``patience``
-    sweeps (bulk-synchronous moves on hub-heavy graphs can oscillate a
+    moves OR the partition quality stops improving for ``_PATIENCE``
+    probes (bulk-synchronous moves on hub-heavy graphs can oscillate a
     small churn set forever — quality-guided stopping keeps the
     best-seen partition, the BSP analog of the reference's hard
     10-iteration cap, csrc/src/leiden_kernel.cu:1211-1213).
@@ -453,7 +453,7 @@ def move_nodes(
         loop_edges.count()
         out, total = _move_nodes_loop(
             Level(edges=loop_edges, vertices=level.vertices),
-            objective, gamma, m, max_sweeps, seed, patience, on_sweep,
+            objective, gamma, m, max_sweeps, seed, on_sweep,
         )
         loop_edges.unpersist()
         # hand back the CALLER's edge frame, not the loop-local
@@ -470,7 +470,6 @@ def _move_nodes_loop(
     m: float,
     max_sweeps: int,
     seed: int,
-    patience: int,
     on_sweep,
 ) -> tuple[Level, int]:
     from pyspark.sql import Observation
@@ -551,14 +550,6 @@ def _move_nodes_loop(
             gain <= 1e-12 or gain < peak_gain * _QUALITY_COLLAPSE_REL
         ):
             q_cur = _quality(edges, vertices, objective, gamma, m)
-        if os.environ.get("GRAFT_SWEEP_LOG"):
-            import time as _time
-
-            print(
-                f"[sweep] t={_time.time():.1f} it={it} moves={n_moves} "
-                f"gain={gain:.6g} q={q_cur}",
-                file=sys.stderr, flush=True,
-            )
         if q_cur is not None:
             final_q = q_cur
             if best_q is None or q_cur > best_q + 1e-12:
@@ -576,7 +567,7 @@ def _move_nodes_loop(
         final_q = None  # the new state has not been evaluated yet
         if on_sweep is not None:
             on_sweep(it, n_moves, new_vertices)
-        if stall >= patience:
+        if stall >= _PATIENCE:
             break
     # the loop's last state may be unevaluated (stall/max_sweeps exit one
     # sweep after its chain ran) — one catch-up quality job, then keep

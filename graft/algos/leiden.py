@@ -1,10 +1,14 @@
-"""Leiden community detection (C16, custom_leiden.py:693-757 semantics).
+"""Leiden community detection (C16, custom_leiden.py:693-757 semantics),
+and the level loop it shares with Louvain.
 
-Level loop: CPM local moving (shared BSP machinery, community.py) →
+Level loop (:func:`_level_loop`): local moving (shared BSP machinery,
+community.py) or, once a level is small enough, the one-task sequential
+tail → the algorithm's contraction step → next level. Leiden's step is
 convergence check → refinement → contraction by the *refined* partition
-with initial communities from P (maintain_p, custom_leiden.py:493-523)
-→ next level. Final labels flow down the refined-mapping chain
-(propagate_partitions, custom_leiden.py:659-677).
+with initial communities from P (maintain_p, custom_leiden.py:493-523);
+Louvain's (graft.algos.louvain) contracts by the moved partition. Final
+labels flow down the mapping chain (propagate_partitions,
+custom_leiden.py:659-677).
 
 Refinement (merge_nodes_subset, custom_leiden.py:350-460 /
 refine_kernel csrc/src/leiden_kernel.cu:599-761) is inherently
@@ -31,6 +35,8 @@ Semantics preserved (SURVEY.md §1.4 item 7):
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -51,10 +57,11 @@ from graft.algos.community import (
     init_level,
     level_counts,
     move_nodes,
+    propagate_labels,
     refine_reducers,
     superstep_conf,
 )
-from graft.algos.seq_tail import refine_groups
+from graft.algos import seq_tail
 from graft.graph import Graph
 
 
@@ -66,7 +73,7 @@ def _refine_bucket_native(
     (one rng stream per community).
 
     Spark only guarantees cogroup batches are grouped by key, not
-    ordered, so :func:`refine_groups` anchors the seeded visit
+    ordered, so :func:`seq_tail.refine_groups` anchors the seeded visit
     permutation and float accumulation to members ordered by id and
     edges by (u, v); otherwise results would drift across parallelism
     levels. Each group gates well-connectedness against ``s_tot_full``,
@@ -88,7 +95,7 @@ def _refine_bucket_native(
     eu = by_id[np.searchsorted(ids, uu, sorter=by_id)]
     ev = by_id[np.searchsorted(ids, vv, sorter=by_id)]
     assert np.array_equal(ids[eu], uu) and np.array_equal(ids[ev], vv)
-    refined = refine_groups(
+    refined = seq_tail.refine_groups(
         ids, group.to_numpy(dtype=np.int64),
         nodes_pdf["agg_count"].to_numpy(dtype=np.int64),
         nodes_pdf["s_tot_full"].to_numpy(dtype=np.int64),
@@ -255,16 +262,198 @@ def _tail_ready(
     n_edge_rows: int, n_verts: int, tail_edges: int,
     max_vertices: int | None = None,
 ) -> bool:
-    """True when the remaining levels should finish as ONE executor task
-    (see the leiden docstring; 0 for ``tail_edges`` forces BSP).
-    ``max_vertices`` overrides the module vertex cap (bench harnesses
-    shrink it to keep the distributed level-0 path measured)."""
+    """The tail gate of the level loop: True when the remaining levels
+    should finish as ONE executor task via the sequential tail kernel
+    (graft.algos.seq_tail) — at that size every distributed sweep costs
+    more in job latency than the whole remaining computation.
+
+    A level passes when its edge table has at most ``tail_edges`` rows,
+    OR its vertex set is at most ``max_vertices`` (default
+    ``_TAIL_MAX_VERTICES``) with the edge multigraph under the
+    ``_TAIL_MAX_EDGE_ROWS`` byte guard. ``tail_edges=0`` forces BSP at
+    every level. The 1M-row default of ``sequential_tail_edges`` is
+    backed by the r3 CSR/queue kernel rewrite: a full multi-level CPM
+    tail over 500k symmetrized rows measures ~4 s in one task (was
+    ~60 s as dict-of-dict loops), versus tens of seconds for the BSP
+    sweeps it replaces; the vertex trigger covers contracted levels of
+    structureless graphs, whose vertex count shrinks geometrically while
+    the edge multigraph stays wide (BSP sweeps there burn seconds of
+    latency per handful of movers). Bench harnesses shrink
+    ``max_vertices`` to keep the distributed level-0 path measured."""
     if not tail_edges:
         return False
     cap = _TAIL_MAX_VERTICES if max_vertices is None else max_vertices
     return n_edge_rows <= tail_edges or (
         n_verts <= cap and n_edge_rows <= _TAIL_MAX_EDGE_ROWS
     )
+
+
+def _level_loop(
+    graph: Graph,
+    contract: Callable[..., tuple[DataFrame, Level] | None],
+    *,
+    algo: str,
+    objective: str,
+    gamma: float,
+    m: float,
+    max_levels: int,
+    max_sweeps: int,
+    seed: int,
+    checkpointer: Checkpointer | None,
+    sequential_tail_edges: int,
+    tail_max_vertices: int | None,
+    initial_membership: DataFrame | None,
+) -> DataFrame:
+    """The level loop of Leiden and Louvain; ``(id, community)`` final
+    labels on the original vertices, a spill of their own.
+
+    Per level: count it (:func:`level_counts`); once it passes the tail
+    gate (:func:`_tail_ready`) the remaining levels run as one executor
+    task and the loop ends. Otherwise BSP local moving
+    (:func:`move_nodes`, seed ``seed + level``, one
+    ``Checkpointer.save`` per sweep), then the algorithm's contraction
+    step ``contract(lvl, level, n_rows, n_verts, n_moves, spills)``. It
+    gets the moved level, its edge rows and vertex count and the moves
+    committed; it appends every spill it writes to ``spills``; it
+    returns the level's ``(child, parent)`` mapping and the contracted
+    level, or None when the level converged, which ends the loop. With
+    a checkpointer each contracted level's mapping, edges and vertices
+    are saved, and a later call resumes after the deepest level saved
+    whole — identical final labels to an uninterrupted run.
+
+    ``initial_membership`` seeds level 0's communities (vertices absent
+    from it start as singletons). The caller's cached edge frame is
+    never evicted: only frames this loop persisted are released. The
+    labels fold the mapping chain down to the original vertices and end
+    with the final level's communities; every spill the loop or a step
+    wrote is dropped once they are written, or when the loop raises.
+    """
+    base_ids = graph.vertices().persist()
+    level = init_level(graph.edges)
+    if initial_membership is not None:
+        level.vertices = level.vertices.join(
+            initial_membership.withColumnRenamed("community", "_c0"),
+            "id",
+            "left",
+        ).select(
+            "id",
+            F.coalesce("_c0", F.col("id")).alias("community"),
+            "agg_count",
+            "k",
+        )
+    # Ownership (r6): persisting the caller's edge frame returns the
+    # SAME object when it is already cached, so unpersisting it on exit
+    # silently evicted the caller's cache — every later algorithm on
+    # the same Graph re-derived and re-cached the edge table. Only
+    # frames this loop created (contracted levels, or a level-0
+    # persist the caller had not done) are released.
+    owns_edges = not _is_persisted(level.edges)
+    level.edges = level.edges.persist()
+    mappings: list[DataFrame] = []
+    # spills this call writes; all are dead once the final labels are a
+    # leaf of their own
+    spills: list[DataFrame] = []
+    start_lvl = 0
+    try:
+        if checkpointer is not None:
+            # mid-aggregation-level resume (north_rule): reload the
+            # deepest fully-persisted level (edges + vertices + mapping)
+            # and the mapping chain below it
+            done = -1
+            for k in range(max_levels):
+                names = [f"level={k}/{t}" for t in ("mapping", "edges", "vertices")]
+                if all(checkpointer.has_table(n) for n in names):
+                    done = k
+                else:
+                    break
+            if done >= 0:
+                mappings = [
+                    checkpointer.load_table(f"level={k}/mapping")
+                    for k in range(done + 1)
+                ]
+                loaded = Level(
+                    edges=checkpointer.load_table(f"level={done}/edges"),
+                    vertices=checkpointer.load_table(f"level={done}/vertices"),
+                )
+                if owns_edges:
+                    level.edges.unpersist()
+                level, owns_edges = loaded, True
+                start_lvl = done + 1
+        tail_at_base = False
+        for lvl in range(start_lvl, max_levels):
+            n_rows, n_verts = level_counts(level)
+            if _tail_ready(
+                n_rows, n_verts, sequential_tail_edges, tail_max_vertices,
+            ):
+                tail = truncate(
+                    seq_tail.run_tail_distributed(
+                        level.edges, level.vertices, objective, gamma, m,
+                        seed + lvl,
+                    )
+                )
+                level = Level(edges=level.edges, vertices=tail)
+                # the whole run was one tail task over the base vertex
+                # set: the label fold would be an identity join (no
+                # mappings, tail covers every base id) — skip it (r6)
+                tail_at_base = lvl == 0
+                if not tail_at_base:
+                    spills.append(tail)
+                break
+
+            # the BSP path reads the level's edge table several times; a
+            # contracted level's table is a parquet leaf, cached only
+            # here (a tail level reads it once)
+            if not _is_persisted(level.edges):
+                level.edges = level.edges.persist()
+
+            def _on_sweep(it, n_moves, verts, _lvl=lvl):
+                if checkpointer is not None:
+                    checkpointer.save(
+                        _lvl * 1000 + it, verts, algo=algo,
+                        level=_lvl, sweep=it, moves=n_moves,
+                    )
+
+            level, n_moves = move_nodes(
+                level, objective=objective, gamma=gamma, m=m,
+                max_sweeps=max_sweeps, seed=seed + lvl, on_sweep=_on_sweep,
+                n_edge_rows=n_rows,
+            )
+            spills.append(level.vertices)
+            step = contract(lvl, level, n_rows, n_verts, n_moves, spills)
+            if step is None:
+                break
+            mapping, nxt = step
+            mappings.append(mapping)
+            if checkpointer is not None:
+                checkpointer.save_table(f"level={lvl}/mapping", mapping)
+                nxt = Level(
+                    edges=checkpointer.save_table(f"level={lvl}/edges", nxt.edges),
+                    vertices=checkpointer.save_table(
+                        f"level={lvl}/vertices", nxt.vertices
+                    ),
+                )
+            if owns_edges:
+                level.edges.unpersist()
+            level, owns_edges = nxt, True
+
+        final = level.vertices.select("id", "community")
+        if not tail_at_base:
+            # level-0 tail: its output IS the final label table, already
+            # a truncated leaf over the base vertex set; otherwise fold
+            # orig id → coarsest node → that node's final community
+            final = truncate(propagate_labels(base_ids, mappings + [
+                final.select(
+                    F.col("id").alias("child"),
+                    F.col("community").alias("parent"),
+                )
+            ]))
+    finally:
+        base_ids.unpersist()
+        if owns_edges:
+            level.edges.unpersist()
+        for df in spills:
+            drop_spill(df)
+    return final
 
 
 def leiden(
@@ -307,134 +496,15 @@ def leiden(
 
     ``max_sweeps`` caps BSP local moving per level (default mirrors the
     reference's hard 10-iteration cap, csrc/src/leiden_kernel.cu:1211-
-    1213; deeper levels pick up what a capped level leaves). Once a
-    level fits one Arrow batch — edge table at most
-    ``sequential_tail_edges`` rows, OR vertex set under
-    ``_TAIL_MAX_VERTICES`` with the edge multigraph under the
-    ``_TAIL_MAX_EDGE_ROWS`` byte guard — the remaining levels run as
-    ONE executor task via the sequential tail kernel
-    (graft.algos.seq_tail): at that size every distributed sweep costs
-    more in job latency than the whole remaining computation. The 1M
-    row default is backed by the r3 CSR/queue kernel rewrite: a full
-    multi-level CPM tail over 500k symmetrized rows measures ~4 s in
-    one task (was ~60 s as dict-of-dict loops), versus tens of seconds
-    for the BSP sweeps it replaces; the vertex trigger covers
-    contracted levels of structureless graphs, whose vertex count
-    shrinks geometrically while the edge multigraph stays wide (BSP
-    sweeps there burn seconds of latency per handful of movers). Set
-    ``sequential_tail_edges=0`` to force the BSP path at every level."""
-    base_ids = graph.vertices().persist()
-    level = init_level(graph.edges)
-    if initial_membership is not None:
-        level.vertices = level.vertices.join(
-            initial_membership.withColumnRenamed("community", "_c0"),
-            "id",
-            "left",
-        ).select(
-            "id",
-            F.coalesce("_c0", F.col("id")).alias("community"),
-            "agg_count",
-            "k",
-        )
-    # Ownership (r6): persisting the caller's edge frame returns the
-    # SAME object when it is already cached, so unpersisting it on exit
-    # silently evicted the caller's cache — every later algorithm on
-    # the same Graph re-derived and re-cached the edge table. Only
-    # frames this function created (contracted levels, or a level-0
-    # persist the caller had not done) are released.
-    _owns_edges = not _is_persisted(level.edges)
-    level.edges = level.edges.persist()
+    1213; deeper levels pick up what a capped level leaves). Levels run
+    in :func:`_level_loop`, shared with Louvain; ``sequential_tail_edges``
+    and ``tail_max_vertices`` feed its tail gate (:func:`_tail_ready`),
+    and ``sequential_tail_edges=0`` forces the BSP path at every level.
+    Leiden's contraction step refines the moved partition and contracts
+    by the refined one; a level converges when local moving leaves every
+    node singleton or refinement does."""
 
-    def _release(df: DataFrame, owned: bool) -> None:
-        if owned:
-            df.unpersist()
-
-    mappings: list[DataFrame] = []
-    start_lvl = 0
-    if checkpointer is not None:
-        # mid-aggregation-level resume (north_rule): reload the deepest
-        # fully-persisted level (edges + vertices + mapping) and the
-        # mapping chain below it, then continue the level loop from
-        # there — identical final labels to an uninterrupted run.
-        done = -1
-        for k in range(max_levels):
-            names = [f"level={k}/{t}" for t in ("mapping", "edges", "vertices")]
-            if all(checkpointer.has_table(n) for n in names):
-                done = k
-            else:
-                break
-        if done >= 0:
-            mappings = [
-                checkpointer.load_table(f"level={k}/mapping")
-                for k in range(done + 1)
-            ]
-            _release(level.edges, _owns_edges)
-            _owns_edges = True
-            level = Level(
-                edges=checkpointer.load_table(f"level={done}/edges"),
-                vertices=checkpointer.load_table(f"level={done}/vertices"),
-            )
-            start_lvl = done + 1
-    tail_at_base = False
-    # spills this call writes; all are dead once the final labels are a
-    # leaf of their own, and are dropped then
-    spills: list[DataFrame] = []
-    for lvl in range(start_lvl, max_levels):
-        n_rows, n_verts = level_counts(level)
-        if _tail_ready(
-            n_rows, n_verts, sequential_tail_edges, tail_max_vertices,
-        ):
-            import os as _os
-            import sys as _sys
-            import time as _time
-
-            from graft.algos.seq_tail import run_tail_distributed
-
-            _t0 = _time.time()
-            tail = truncate(
-                run_tail_distributed(
-                    level.edges, level.vertices, "cpm", gamma, 1.0,
-                    seed + lvl,
-                )
-            )
-            if _os.environ.get("GRAFT_SWEEP_LOG"):
-                print(
-                    f"[leiden] lvl={lvl} tail rows={n_rows} "
-                    f"verts={n_verts} tail_s={_time.time() - _t0:.1f}",
-                    file=_sys.stderr, flush=True,
-                )
-            level = Level(edges=level.edges, vertices=tail)
-            # the whole run was one tail task over the base vertex set:
-            # the label fold below would be an identity join (no
-            # mappings, tail covers every base id) — skip it (r6)
-            tail_at_base = lvl == 0 and start_lvl == 0 and not mappings
-            if not tail_at_base:
-                spills.append(tail)
-            break
-
-        # the BSP path reads the level's edge table several times; a
-        # contracted level's table is a parquet leaf, cached only here
-        # (a tail level reads it once)
-        if not _is_persisted(level.edges):
-            level.edges = level.edges.persist()
-
-        def _on_sweep(it, n_moves, verts, _lvl=lvl):
-            if checkpointer is not None:
-                checkpointer.save(
-                    _lvl * 1000 + it, verts, algo="leiden",
-                    level=_lvl, sweep=it, moves=n_moves,
-                )
-
-        level, _ = move_nodes(
-            level, objective="cpm", gamma=gamma,
-            max_sweeps=max_sweeps, seed=seed + lvl, on_sweep=_on_sweep,
-            n_edge_rows=n_rows,
-        )
-        spills.append(level.vertices)
-        import os as _os
-        import time as _time
-
-        _t0 = _time.time()
+    def contract(lvl, level, n_rows, n_verts, n_moves, spills):
         spark = level.edges.sparkSession
         with superstep_conf(spark, n_rows) as sp:
             # A8 convergence (custom_leiden.py:601-609): every community
@@ -444,7 +514,7 @@ def leiden(
                 F.countDistinct("community")
             ).first()[0]
             if n_comms == n_verts:
-                break  # all singletons
+                return None  # all singletons
             # the refinement cogroup is task-bound, so its reducer
             # count follows the level's size (refine_reducers), not the
             # superstep's shuffle sizing
@@ -458,12 +528,6 @@ def leiden(
             refined = truncate(lazy_refined)
             spark.conf.set("spark.sql.shuffle.partitions", str(sp))
             spills += [refined, *spill_inputs(lazy_refined)]
-            if _os.environ.get("GRAFT_SWEEP_LOG"):
-                print(
-                    f"[leiden] lvl={lvl} n={n_verts} "
-                    f"refine_s={_time.time() - _t0:.1f}",
-                    file=__import__('sys').stderr, flush=True,
-                )
             new_edges = truncate(
                 aggregate_graph(
                     level.edges,
@@ -474,57 +538,25 @@ def leiden(
                 _maintained_vertices(level.vertices, refined, new_edges)
             )
             spills += [new_edges, new_vertices]
-            if _os.environ.get("GRAFT_SWEEP_LOG"):
-                print(
-                    f"[leiden] lvl={lvl} aggregate_s={_time.time() - _t0:.1f}",
-                    file=__import__('sys').stderr, flush=True,
-                )
         # each refined community is one supernode, so as many supernodes
         # as vertices means refinement kept every node singleton
         if row_count(new_vertices) == n_verts:
-            break
-        mappings.append(
-            refined.select(
-                F.col("id").alias("child"), F.col("refined").alias("parent")
-            )
+            return None
+        mapping = refined.select(
+            F.col("id").alias("child"), F.col("refined").alias("parent")
         )
-        if checkpointer is not None:
-            checkpointer.save_table(f"level={lvl}/mapping", mappings[-1])
-            new_edges = checkpointer.save_table(f"level={lvl}/edges", new_edges)
-            new_vertices = checkpointer.save_table(
-                f"level={lvl}/vertices", new_vertices
-            )
-        _release(level.edges, _owns_edges)
-        _owns_edges = True
-        level = Level(edges=new_edges, vertices=new_vertices)
+        return mapping, Level(edges=new_edges, vertices=new_vertices)
 
-    if tail_at_base:
-        # level-0 tail: its (id, community) output IS the final label
-        # table — already a truncated leaf over the base vertex set
-        final = level.vertices.select("id", "community")
-    else:
-        # fold orig id → coarsest supernode, then take that supernode's
-        # final P community
-        cur = base_ids.select("id", F.col("id").alias("node"))
-        for mp in mappings:
-            cur = cur.join(
-                mp.withColumnRenamed("child", "node"), "node", "left"
-            ).select("id", F.coalesce("parent", "node").alias("node"))
-        final = cur.join(
-            level.vertices.select(
-                F.col("id").alias("node"),
-                F.col("community").alias("community"),
-            ),
-            "node",
-            "left",
-        ).select("id", F.coalesce("community", "node").alias("community"))
-        final = truncate(final)
-    base_ids.unpersist()
+    final = _level_loop(
+        graph, contract, algo="leiden", objective="cpm", gamma=gamma, m=1.0,
+        max_levels=max_levels, max_sweeps=max_sweeps, seed=seed,
+        checkpointer=checkpointer,
+        sequential_tail_edges=sequential_tail_edges,
+        tail_max_vertices=tail_max_vertices,
+        initial_membership=initial_membership,
+    )
     if return_quality:
         from graft.quality import cpm
 
-        q = cpm(graph.edges, final, gamma)
-    _release(level.edges, _owns_edges)
-    for df in spills:
-        drop_spill(df)
-    return (final, q) if return_quality else final
+        return final, cpm(graph.edges, final, gamma)
+    return final

@@ -1,5 +1,6 @@
 import pytest
 
+from graft import checkpoint
 from graft.session import get_spark
 
 
@@ -10,3 +11,14 @@ def spark():
     })
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def spill_dir(spark, tmp_path):
+    """A fresh spill root under ``tmp_path`` for the test's duration."""
+    old_root = checkpoint._spill_root
+    checkpoint._spill_root = None
+    spark.conf.set("spark.graft.spillDir", str(tmp_path / "spill"))
+    yield
+    spark.conf.unset("spark.graft.spillDir")
+    checkpoint._spill_root = old_root

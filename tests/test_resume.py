@@ -2,7 +2,14 @@
 (north_rule: "resumable from checkpoint with per-partition lineage +
 metrics ... resumable mid-aggregation-level")."""
 
-from graft import fixtures
+import hashlib
+import importlib
+import os
+
+import numpy as np
+import pytest
+
+from graft import checkpoint, fixtures
 from graft.algos.leiden import leiden
 from graft.algos.louvain import louvain
 from graft.checkpoint import Checkpointer
@@ -111,4 +118,75 @@ def test_msf_resume_equivalence(spark, tmp_path):
         for r in minimum_spanning_forest(g, checkpointer=ck2).collect()
     )
     assert resumed == full
+    g.unpersist()
+
+
+def _powerlaw_edges(n_vertices=300, n_edges=1500, seed=7):
+    """A seeded power-law graph: endpoints drawn with probability
+    proportional to rank^-0.8, self-loops and repeats redrawn."""
+    rng = np.random.default_rng(seed)
+    p = 1.0 / np.arange(1, n_vertices + 1) ** 0.8
+    p /= p.sum()
+    seen = set()
+    while len(seen) < n_edges:
+        u, v = rng.choice(n_vertices, size=2, p=p)
+        if u != v:
+            seen.add((int(min(u, v)), int(max(u, v))))
+    return [(u, v, 1.0) for u, v in sorted(seen)]
+
+
+def _digest(rows):
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
+
+
+# Per algorithm: the call its contraction step makes once per level
+# after local moving, and the digest of the sorted (id, community) rows
+# (299 of them) of an uninterrupted run with the same arguments. One
+# sweep per level keeps the four levels cheap; every one contracts.
+FAIL_INSIDE_LEVEL = {
+    "leiden": (leiden, "graft.algos.leiden", "refine_partition", "0b2a0e3cb40b09b0"),
+    "louvain": (louvain, "graft.algos.louvain", "aggregate_graph", "940ac876d3d64eaa"),
+}
+LEVELS = 4
+
+
+@pytest.mark.parametrize("algo", sorted(FAIL_INSIDE_LEVEL))
+def test_resume_after_failure_inside_a_level(
+    spark, tmp_path, spill_dir, monkeypatch, algo
+):
+    """A run that fails inside its last level, after levels 0-2 were
+    contracted and saved, leaves no spill and no persisted frame behind,
+    and resumes from the saved levels to exactly the labels of an
+    uninterrupted run."""
+    run, module, name, want = FAIL_INSIDE_LEVEL[algo]
+    g = Graph.from_undirected(fixtures.edges_df(spark, _powerlaw_edges())).cache()
+    g.edges.count()
+    n_persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    mod = importlib.import_module(module)
+    real = getattr(mod, name)
+    calls = []
+
+    def failing(*a, **k):
+        calls.append(1)
+        if len(calls) == LEVELS:
+            raise RuntimeError("injected failure inside the level")
+        return real(*a, **k)
+
+    def labels(**kw):
+        out = run(
+            g, seed=5, sequential_tail_edges=0, max_sweeps=1,
+            max_levels=LEVELS, **kw,
+        )
+        return sorted((r.id, r.community) for r in out.collect())
+
+    monkeypatch.setattr(mod, name, failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        labels(checkpointer=Checkpointer(spark, str(tmp_path), algo))
+    monkeypatch.setattr(mod, name, real)
+    assert os.listdir(checkpoint._spill_root) == []
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == n_persisted
+    ck = Checkpointer(spark, str(tmp_path), algo)
+    saved = [k for k in range(LEVELS) if ck.has_table(f"level={k}/mapping")]
+    assert saved == list(range(LEVELS - 1))
+    assert _digest(labels(checkpointer=ck)) == want
     g.unpersist()

@@ -6,7 +6,6 @@ from __future__ import annotations
 import os
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 from graft import checkpoint
@@ -19,17 +18,6 @@ from graft.checkpoint import (
     with_spill_inputs,
 )
 from graft.graph import Graph
-
-
-@pytest.fixture()
-def spill_dir(spark, tmp_path):
-    """A fresh spill root under ``tmp_path`` for the test's duration."""
-    old_root = checkpoint._spill_root
-    checkpoint._spill_root = None
-    spark.conf.set("spark.graft.spillDir", str(tmp_path / "spill"))
-    yield
-    spark.conf.unset("spark.graft.spillDir")
-    checkpoint._spill_root = old_root
 
 
 def _jobs_in_fresh_group(spark, fn):

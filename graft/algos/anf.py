@@ -95,7 +95,7 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
     from graft.algos.community import superstep_conf
 
     spark = graph.edges.sparkSession
-    n_rows = graph.edges.count()
+    n_rows = graph.edge_rows()
     n_verts = graph.num_vertices()
     sketch_bytes = n_verts * (2 ** lg_config_k // 2 + 100)
     broadcastable = sketch_bytes <= _HLL_BROADCAST_MAX_BYTES

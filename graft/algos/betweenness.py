@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import run_one_task, superstep_conf
 from graft.checkpoint import drop_spill, truncate
 from graft.graph import Graph
 
@@ -294,10 +294,9 @@ def _sequential_brandes(
     per_edge: bool,
     factor: float,
 ) -> DataFrame:
-    """Sequential-tail execution (same pattern/rationale as
-    graft.algos.seq_tail): the full Brandes pass as ONE cogrouped
-    ``applyInPandas`` task — per source, a vectorized level-synchronous
-    BFS + dependency sweep over the symmetric edge arrays. Identical
+    """The full Brandes pass as ONE task (:func:`run_one_task`) — per
+    source, a vectorized level-synchronous BFS + dependency sweep over
+    the symmetric edge arrays. Identical
     semantics to the superstep path (same source set, same factor,
     same 6-dp round), without paying O(k · diameter) job rounds on a
     graph that fits one Arrow batch. Only entered when the source set
@@ -315,13 +314,8 @@ def _sequential_brandes(
             "id",
             "left",
         )
-        .select(
-            F.lit(0).alias("_g"),
-            "id",
-            F.coalesce("is_src", F.lit(0)).alias("is_src"),
-        )
+        .select("id", F.coalesce("is_src", F.lit(0)).alias("is_src"))
     )
-    edges = adj.select(F.lit(0).alias("_g"), "src", "dst")
     out_schema = (
         f"u {id_type}, v {id_type}, betweenness double"
         if per_edge
@@ -363,11 +357,7 @@ def _sequential_brandes(
             }
         )
 
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(fn, schema=out_schema)
-    )
+    return run_one_task(fn, out_schema, adj.select("src", "dst"), nodes)
 
 
 def betweenness_centrality(

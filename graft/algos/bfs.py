@@ -62,7 +62,7 @@ def bfs_hops(
         )
     )
     rounds = max_hops if max_hops is not None else 10**9
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         it = 0
         while it < rounds:
             it += 1

@@ -72,7 +72,7 @@ def ic_spread(
             f"ic_spread: no seed vertex from {seed_set!r} exists in the"
             " graph"
         )
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         for _ in range(rounds):
             relaxed = (
                 live.join(act.withColumnRenamed("id", "src"), "src")

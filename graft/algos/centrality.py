@@ -67,7 +67,7 @@ def katz_centrality(
     x = truncate(verts.select("id", F.lit(float(beta)).alias("x")))
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
-    with superstep_conf(spark, graph.edges.count()):
+    with superstep_conf(spark, graph.edge_rows()):
         for _ in range(iters):
             new_x = truncate(
                 verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
@@ -144,7 +144,7 @@ def hits(
     a = h
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
-    with superstep_conf(spark, graph.edges.count()):
+    with superstep_conf(spark, graph.edge_rows()):
         for _ in range(iters):
             new_a = truncate(_norm(
                 verts.join(_ax(graph.edges, h, "ax"), "id", "left")
@@ -190,7 +190,7 @@ def eigenvector_centrality(
     )
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
-    with superstep_conf(spark, graph.edges.count()):
+    with superstep_conf(spark, graph.edge_rows()):
         for _ in range(iters):
             y = verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
                 "id", F.coalesce("ax", F.lit(0.0)).alias("x")

@@ -386,6 +386,63 @@ def superstep_conf(spark, n_edge_rows: int):
         spark.conf.set("spark.sql.shuffle.partitions", sp_before)
 
 
+def one_task(graph, threshold: int, checkpointer=None) -> bool:
+    """The one-task gate of the fixpoint operators (pagerank,
+    connected_components, triangle_count, strongly_connected_components,
+    truss_number, core_number, pic_embedding, minimum_spanning_forest):
+    True when the whole computation should run as ONE executor task
+    (:func:`run_one_task`) instead of supersteps.
+
+    - A graph of at most ``threshold`` edge rows fits one Arrow batch,
+      and at that size every distributed superstep costs more in job
+      latency than the whole remaining computation. The operators'
+      1M-row default (r3): the union-find kernel takes ~1.3 s and the
+      triangle kernel ~4 s on 1M symmetrized rows, under the superstep
+      paths' shuffle cost at that size.
+    - ``threshold`` 0 forces supersteps.
+    - A ``checkpointer`` forces supersteps: per-superstep resume is
+      the point of checkpointing.
+
+    The terms are evaluated in that order, so the last two cases run
+    no count job; otherwise the count is :meth:`Graph.edge_rows`,
+    memoized on the Graph."""
+    return (
+        checkpointer is None
+        and bool(threshold)
+        and graph.edge_rows() <= threshold
+    )
+
+
+def run_one_task(fn, schema: str, edges: DataFrame, nodes=None) -> DataFrame:
+    """Run ``fn`` over the whole of ``edges`` (and ``nodes``) in ONE
+    executor task: every row gets the constant key ``_g``, one group
+    shuffles to one task, and ``fn`` gets the rows as pandas frames
+    without the key — ``fn(edges_pdf)`` through ``groupBy``, or
+    ``fn(nodes_pdf, edges_pdf)`` through ``cogroup`` when there is a
+    node side. The driver never touches row data.
+
+    An empty input has no group, so ``fn`` is not called and the
+    result is empty. A node side derived from the edge endpoints is
+    never empty in the one group, whereas the edge side may be (an
+    empty side arrives with its columns and dtypes)."""
+    e = edges.select(F.lit(0).alias("_g"), "*").groupBy("_g")
+    if nodes is None:
+        return e.applyInPandas(
+            lambda epdf: fn(epdf.drop(columns="_g")), schema=schema
+        )
+    return (
+        nodes.select(F.lit(0).alias("_g"), "*")
+        .groupBy("_g")
+        .cogroup(e)
+        .applyInPandas(
+            lambda vpdf, epdf: fn(
+                vpdf.drop(columns="_g"), epdf.drop(columns="_g")
+            ),
+            schema=schema,
+        )
+    )
+
+
 def level_counts(level: Level) -> tuple[int, int]:
     """(edge rows, vertices) of a level, the one count a level loop
     takes per level: from the parquet footers when the level's tables

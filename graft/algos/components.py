@@ -23,7 +23,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.checkpoint import Checkpointer, drop_spill, truncate
 from graft.graph import Graph
 
@@ -41,20 +41,13 @@ def _min_neighbor_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def _sequential_cc(graph: Graph) -> DataFrame:
-    """Sequential-tail execution (same pattern/rationale as
-    graft.algos.seq_tail): union-find over the whole edge table as ONE
-    cogrouped ``applyInPandas`` task, labels = min id per component —
-    identical output to both distributed modes, without paying
-    O(diameter) or O(log n) job rounds on a graph that fits one Arrow
-    batch."""
+    """Union-find over the whole edge table as ONE task (see
+    :func:`graft.algos.community.one_task`), labels = min id per
+    component — identical output to both distributed modes."""
     import numpy as np
     import pandas as pd
 
     def fn(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty:
-            return pd.DataFrame(
-                {"id": vpdf["id"].iloc[:0], "comp": vpdf["id"].iloc[:0]}
-            )
         ids = np.sort(vpdf["id"].to_numpy())
         pos = pd.Series(np.arange(len(ids)), index=ids)
         parent = np.arange(len(ids))
@@ -82,15 +75,11 @@ def _sequential_cc(graph: Graph) -> DataFrame:
 
     # vertex keys are type-agnostic engine-wide; min-id labels are
     # lexicographic for string keys, matching F.min/F.least distributed
-    nodes = graph.vertices().select(F.lit(0).alias("_g"), "id")
+    nodes = graph.vertices()
     id_type = nodes.schema["id"].dataType.simpleString()
-    edges = graph.without_self_loops().select(
-        F.lit(0).alias("_g"), "src", "dst"
-    )
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(fn, schema=f"id {id_type}, comp {id_type}")
+    return run_one_task(
+        fn, f"id {id_type}, comp {id_type}",
+        graph.without_self_loops().select("src", "dst"), nodes,
     )
 
 
@@ -104,12 +93,7 @@ def connected_components(
 ) -> DataFrame:
     """Returns ``(id long, comp long)`` with comp = min id in component.
 
-    Graphs at most ``sequential_threshold`` edge rows run as one
-    union-find task (``_sequential_cc``; 0 forces the superstep path);
-    the checkpointed path always runs supersteps. The 1M default (r3):
-    the union-find kernel measures ~1.3 s on 1M symmetrized rows,
-    versus several seconds of per-round shuffle latency for the
-    superstep modes at that size.
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
 
     ``initial_labels``: warm start for the propagate path — an
     ``(id, comp)`` table from a previous run on a SUBGRAPH of this
@@ -124,11 +108,7 @@ def connected_components(
     component would propagate a foreign min and corrupt the result.
     Ignored on the sequential and star paths (union-find is exact
     either way; star rewrites edges, not labels)."""
-    if (
-        checkpointer is None
-        and sequential_threshold
-        and graph.edges.count() <= sequential_threshold
-    ):
+    if one_task(graph, sequential_threshold, checkpointer):
         return _sequential_cc(graph)
     if mode == "star":
         return _cc_star(graph, max_iter, checkpointer)
@@ -141,7 +121,7 @@ def connected_components(
             .select("id", F.coalesce("_c0", F.col("id")).alias("comp"))
         )
     labels = truncate(labels)
-    with superstep_conf(edges.sparkSession, edges.count()):
+    with superstep_conf(edges.sparkSession, graph.edge_rows()):
         changed = 0
         for it in range(max_iter):
             # the changed-count probe rides the spill write via
@@ -239,7 +219,7 @@ def _cc_star(
         .where(F.col("u") > F.col("v"))
         .distinct()
     )
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         e = truncate(e)
         sig = _sig(e)
         for it in range(max_iter):

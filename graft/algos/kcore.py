@@ -10,10 +10,10 @@ the engine carries both:
 
 - :func:`core_number` — the per-vertex core index for EVERY vertex in one
   pass (so a core-decomposition caller never re-runs peeling per k).
-  Below the sequential threshold it runs the exact Batagelj–Zaversnik
-  O(E) bin-sort peel as ONE executor task (same tail pattern as
-  graft.algos.seq_tail); above it, the distributed path iterates the
-  neighborhood h-index operator c'(v) = min(c(v), H({c(u): u ∈ N(v)}))
+  When :func:`graft.algos.community.one_task` says so it runs the exact
+  Batagelj–Zaversnik O(E) bin-sort peel as ONE executor task; else the
+  distributed path iterates the neighborhood h-index operator
+  c'(v) = min(c(v), H({c(u): u ∈ N(v)}))
   from c0 = degree, whose fixpoint is exactly the core number
   (Lü et al., "The H-index of a network node and its relation to degree
   and coreness", Nat. Commun. 2016). Each round is one join + one
@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.algos.community import one_task, run_one_task, superstep_conf
+from graft.checkpoint import drop_spill, row_count, truncate
 from graft.graph import Graph
 
 
@@ -51,7 +51,7 @@ def k_core(graph: Graph, k: int, max_iter: int | None = None) -> DataFrame:
     edges = truncate(
         graph.without_self_loops().select("src", "dst").distinct()
     )
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         it = 0
         while True:
             it += 1
@@ -73,8 +73,8 @@ def k_core(graph: Graph, k: int, max_iter: int | None = None) -> DataFrame:
                     "left_semi",
                 )
             )
-            n_old = edges.count()
-            n_new = new_edges.count()
+            n_old = row_count(edges)
+            n_new = row_count(new_edges)
             drop_spill(edges)
             edges = new_edges
             if n_new == n_old:
@@ -84,20 +84,11 @@ def k_core(graph: Graph, k: int, max_iter: int | None = None) -> DataFrame:
 
 def _sequential_core_number(graph: Graph) -> DataFrame:
     """Exact Batagelj–Zaversnik bin-sort peeling over the whole graph as
-    ONE cogrouped ``applyInPandas`` task (same pattern and rationale as
-    graft.algos.seq_tail: below the threshold every distributed round
-    costs more in job latency than the entire remaining computation)."""
+    ONE task (see :func:`graft.algos.community.one_task`)."""
     import numpy as np
     import pandas as pd
 
     def fn(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty:
-            return pd.DataFrame(
-                {
-                    "id": vpdf["id"].iloc[:0],
-                    "core": pd.Series([], dtype="int64"),
-                }
-            )
         ids = np.sort(vpdf["id"].to_numpy())
         n = len(ids)
         pos_of = pd.Series(np.arange(n), index=ids)
@@ -135,15 +126,11 @@ def _sequential_core_number(graph: Graph) -> DataFrame:
                     core[u] = cu - 1
         return pd.DataFrame({"id": ids, "core": core})
 
-    nodes = graph.vertices().select(F.lit(0).alias("_g"), "id")
+    nodes = graph.vertices()
     id_type = nodes.schema["id"].dataType.simpleString()
-    edges = graph.without_self_loops().select("src", "dst").distinct().select(
-        F.lit(0).alias("_g"), "src", "dst"
-    )
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(fn, schema=f"id {id_type}, core long")
+    return run_one_task(
+        fn, f"id {id_type}, core long",
+        graph.without_self_loops().select("src", "dst").distinct(), nodes,
     )
 
 
@@ -153,16 +140,12 @@ def core_number(
     """Returns ``(id, core long)`` for ALL vertices (cugraph.core_number
     parity; self-loops excluded from degrees, isolated vertices core 0).
 
-    Graphs at most ``sequential_threshold`` symmetrized edge rows run
-    the exact BZ peel as one task (0 forces the distributed path); above
-    it the h-index fixpoint iteration runs distributed — monotone
-    non-increasing from the degree, so the changed-count probe is an
-    exact stopping rule.
+    One task runs the exact BZ peel (``sequential_threshold``: see
+    :func:`graft.algos.community.one_task`); supersteps run the h-index
+    fixpoint iteration — monotone non-increasing from the degree, so
+    the changed-count probe is an exact stopping rule.
     """
-    if (
-        sequential_threshold
-        and graph.edges.count() <= sequential_threshold
-    ):
+    if one_task(graph, sequential_threshold):
         return _sequential_core_number(graph)
 
     adj = truncate(graph.without_self_loops().select("src", "dst").distinct())

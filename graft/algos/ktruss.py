@@ -40,7 +40,7 @@ def k_truss(graph: Graph, k: int) -> DataFrame:
         .distinct()
     )
     min_support = max(k - 2, 0)
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         while True:
             # triangles x<y<z: wedge at the minimum corner, closed by a
             # semi-join on the (y, z) edge

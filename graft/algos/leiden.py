@@ -27,8 +27,8 @@ Semantics preserved (SURVEY.md §1.4 item 7):
 - only nodes still in singleton refined communities move;
 - greedy best positive CPM delta with deterministic (min-label)
   tie-break — the reference's actual behavior (its exp(ΔH/θ) sampling
-  branch is commented out, custom_leiden.py:428-450); θ is accepted for
-  API parity with cugraph.leiden (examples/test2.py:49) but unused;
+  branch is commented out, custom_leiden.py:428-450), so there is no θ
+  parameter;
 - connectedness totals use aggregate node counts, not edge weights
   (candidate_node_count, custom_leiden.py:159-165).
 """
@@ -459,7 +459,6 @@ def _level_loop(
 def leiden(
     graph: Graph,
     gamma: float = 0.05,
-    theta: float = 1.0,  # noqa: ARG001 — API parity; greedy per reference
     max_levels: int = 10,
     max_sweeps: int = 15,
     seed: int = 1234,

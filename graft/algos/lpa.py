@@ -57,7 +57,7 @@ def label_propagation(
             .select("id", F.coalesce("_seed", F.col("label")).alias("label"))
         )
     labels = truncate(labels)
-    with superstep_conf(edges.sparkSession, edges.count()):
+    with superstep_conf(edges.sparkSession, graph.edge_rows()):
         for it in range(max_iter):
             new_labels = lpa_round(edges, labels)
             new_labels = truncate(new_labels)

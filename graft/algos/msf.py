@@ -34,17 +34,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.algos.components import connected_components
 from graft.checkpoint import Checkpointer, drop_spill, truncate
 from graft.graph import Graph
 
 
 def _sequential_msf(edges: DataFrame) -> DataFrame:
-    """Kruskal + union-find over ONE Arrow batch as a single executor
-    task (same dispatch rationale as the other sequential tails). The
-    ``(weight, u, v)`` sort order makes the result the identical unique
-    MSF the distributed rounds produce."""
+    """Kruskal + union-find as ONE task (see
+    :func:`graft.algos.community.one_task`). The ``(weight, u, v)`` sort
+    order makes the result the identical unique MSF the distributed
+    rounds produce."""
     import pandas as pd
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -68,14 +68,7 @@ def _sequential_msf(edges: DataFrame) -> DataFrame:
         return pd.DataFrame(keep, columns=["u", "v", "weight"])
 
     id_type = edges.schema["u"].dataType.simpleString()
-    return (
-        edges.select(F.lit(0).alias("_g"), "u", "v", "weight")
-        .groupBy("_g")
-        .applyInPandas(
-            lambda _k, pdf: fn(pdf.drop(columns=["_g"])),
-            schema=f"u {id_type}, v {id_type}, weight double",
-        )
-    )
+    return run_one_task(fn, f"u {id_type}, v {id_type}, weight double", edges)
 
 
 def minimum_spanning_forest(
@@ -89,8 +82,7 @@ def minimum_spanning_forest(
     (one tree per connected component; u < v canonical orientation;
     cugraph.minimum_spanning_tree API shape).
 
-    Graphs at most ``sequential_threshold`` symmetrized edge rows run
-    as one Kruskal task (0 forces the Borůvka rounds).
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
     ``max_iter`` is a safety cap far above any real round count (the
     component count at least halves per round, so 64 covers 2^64
     vertices); hitting it raises rather than returning a partial
@@ -100,7 +92,7 @@ def minimum_spanning_forest(
     contracted work list (kind='w') plus the forest so far (kind='f'),
     so the round state is a single atomic write — with per-round
     work/forest counts in the metrics, and resumes from the latest
-    complete round (the checkpointed path always runs Borůvka rounds)."""
+    complete round."""
     spark = graph.edges.sparkSession
     schema_id = graph.edges.schema["src"].dataType.simpleString()
     empty = spark.createDataFrame(
@@ -116,12 +108,7 @@ def minimum_spanning_forest(
         )
     )
 
-    n_rows = graph.edges.count()
-    if (
-        checkpointer is None
-        and sequential_threshold
-        and n_rows <= sequential_threshold
-    ):
+    if one_task(graph, sequential_threshold, checkpointer):
         return _sequential_msf(cand)
 
     # working edge list: (a, b) = current component endpoints,
@@ -149,7 +136,7 @@ def minimum_spanning_forest(
         )
     if work.limit(1).count() == 0:
         return forest
-    with superstep_conf(spark, n_rows):
+    with superstep_conf(spark, graph.edge_rows()):
         for rnd in range(start, max_iter):
             e_struct = F.struct("weight", "u", "v", "a", "b").alias("e")
             offers = work.select(F.col("a").alias("comp"), e_struct).unionAll(

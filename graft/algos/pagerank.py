@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.checkpoint import Checkpointer, drop_spill, truncate
 from graft.graph import Graph
 
@@ -55,12 +55,9 @@ def _sequential_pagerank(
     sources: list | None = None,
     has_r0: bool = False,
 ) -> DataFrame:
-    """Sequential-tail execution: the whole power iteration as ONE
-    cogrouped ``applyInPandas`` task (same pattern and rationale as
-    graft.algos.seq_tail — below the threshold every distributed
-    superstep costs more in job latency than the entire remaining
-    computation; the vectorized kernel runs on an executor, the driver
-    never touches row data). Semantics identical to the superstep loop:
+    """The whole power iteration as ONE task (see
+    :func:`graft.algos.community.one_task`). Semantics identical to the
+    superstep loop:
     dangling mass redistributed along the teleport vector,
     missing-inflow vertices keep their teleport share, L1-delta stopping
     (or an exact ``fixed_iterations`` count). With ``sources`` the
@@ -74,13 +71,6 @@ def _sequential_pagerank(
     source_set = set(sources) if sources else None
 
     def fn(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty:
-            return pd.DataFrame(
-                {
-                    "id": vpdf["id"].iloc[:0],
-                    "rank": pd.Series([], dtype="float64"),
-                }
-            )
         ids = np.sort(vpdf["id"].to_numpy())
         pos = pd.Series(np.arange(len(ids)), index=ids)
         src = pos[epdf["src"].to_numpy()].to_numpy()
@@ -122,15 +112,10 @@ def _sequential_pagerank(
     # vertex keys are type-agnostic engine-wide (long-renumbered or raw
     # string actors) — mirror the input id type in the output schema
     id_type = verts.schema["id"].dataType.simpleString()
-    if has_r0:
-        nodes = verts.select(F.lit(0).alias("_g"), "id", "r0")
-    else:
-        nodes = verts.select(F.lit(0).alias("_g"), "id")
-    edges = trans.select(F.lit(0).alias("_g"), "src", "dst", "p")
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(fn, schema=f"id {id_type}, rank double")
+    nodes = verts.select("id", "r0") if has_r0 else verts.select("id")
+    return run_one_task(
+        fn, f"id {id_type}, rank double",
+        trans.select("src", "dst", "p"), nodes,
     )
 
 
@@ -169,11 +154,7 @@ def pagerank(
     r0 = e. The per-superstep plan only changes by one broadcast join
     against the (tiny, materialized) source table.
 
-    Graphs whose transition table fits one Arrow batch
-    (≤ ``sequential_threshold`` rows) run as ONE executor task
-    (see _sequential_pagerank; 0 forces the superstep path). The
-    checkpointed path always runs supersteps — per-superstep resume is
-    the point of checkpointing.
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
     """
     spark = graph.edges.sparkSession
     verts = graph.vertices_cached()
@@ -192,11 +173,7 @@ def pagerank(
         if n_src == 0:
             raise ValueError("no source vertex present in the graph")
 
-    if (
-        checkpointer is None
-        and sequential_threshold
-        and graph.edges.count() <= sequential_threshold
-    ):
+    if one_task(graph, sequential_threshold, checkpointer):
         v_in = verts
         if initial_ranks is not None:
             v_in = verts.join(
@@ -284,7 +261,7 @@ def pagerank(
 
     # data-sized reducers + AQE off for the superstep loop — same
     # latency rationale as community.superstep_conf
-    with superstep_conf(spark, graph.edges.count()):
+    with superstep_conf(spark, graph.edge_rows()):
         teleport = (1.0 - alpha) / n
         if fixed_iterations is not None:
             max_iter = fixed_iterations
@@ -412,7 +389,7 @@ def batch_personalized_pagerank(
     )
     trans = graph.transition()
     state = truncate(seeds)
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         for _ in range(fixed_iterations):
             gather = (
                 state.join(trans.withColumnRenamed("src", "id"), "id")

@@ -8,13 +8,10 @@ degenerates to WCC; the operator exists for raw directed input
 (``Graph(edges, symmetric=False)``), e.g. the turn-flow actor graph
 (``graft.io.transcripts_to_directed_edges``).
 
-Two execution paths, same dispatch philosophy as every other fixpoint
-operator in the engine (components/pagerank/lpa/triangles):
+Two execution paths, chosen by :func:`graft.algos.community.one_task`:
 
-- **Sequential tail** (≤ ``sequential_threshold`` edge rows, default
-  1M): iterative Tarjan over a CSR built inside ONE cogrouped
-  ``applyInPandas`` task. Exact, O(V+E), no per-round job latency —
-  the honest regime for any graph that fits an Arrow batch.
+- **One task**: iterative Tarjan over a CSR built inside ONE executor
+  task. Exact, O(V+E), no per-round job latency.
 
 - **Distributed coloring** (Orzan's algorithm — the standard
   shuffle-friendly SCC: forward max-label propagation to a fixpoint
@@ -43,29 +40,23 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.checkpoint import drop_spill, truncate
 from graft.graph import Graph
 
 
 def _sequential_scc(graph: Graph) -> DataFrame:
-    """Iterative Tarjan over the whole directed edge table as ONE
-    cogrouped task (same tail pattern/rationale as components._sequential_cc)."""
+    """Iterative Tarjan over the whole directed edge table as ONE task
+    (see :func:`graft.algos.community.one_task`)."""
     import numpy as np
     import pandas as pd
 
     def fn(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty:
-            return pd.DataFrame(
-                {"id": vpdf["id"].iloc[:0], "comp": vpdf["id"].iloc[:0]}
-            )
         ids = np.sort(vpdf["id"].unique())
         pos = pd.Series(np.arange(len(ids)), index=ids)
         n = len(ids)
-        src = pos[epdf["src"].to_numpy()].to_numpy() if len(epdf) else \
-            np.empty(0, dtype=np.int64)
-        dst = pos[epdf["dst"].to_numpy()].to_numpy() if len(epdf) else \
-            np.empty(0, dtype=np.int64)
+        src = pos[epdf["src"].to_numpy()].to_numpy()
+        dst = pos[epdf["dst"].to_numpy()].to_numpy()
         # CSR over out-edges
         order = np.argsort(src, kind="stable")
         src, dst = src[order], dst[order]
@@ -120,13 +111,11 @@ def _sequential_scc(graph: Graph) -> DataFrame:
                         comp[members] = min(members)
         return pd.DataFrame({"id": ids, "comp": ids[comp]})
 
-    nodes = graph.vertices().select(F.lit(0).alias("_g"), "id")
+    nodes = graph.vertices()
     id_type = nodes.schema["id"].dataType.simpleString()
-    edges = graph.edges.select(F.lit(0).alias("_g"), "src", "dst")
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(fn, schema=f"id {id_type}, comp {id_type}")
+    return run_one_task(
+        fn, f"id {id_type}, comp {id_type}",
+        graph.edges.select("src", "dst"), nodes,
     )
 
 
@@ -140,10 +129,9 @@ def strongly_connected_components(
     ``graph.edges`` is taken as DIRECTED (src → dst); pass the raw
     asymmetric table via ``Graph(edges, symmetric=False)``. On a
     symmetrized table the result equals ``connected_components``.
-    Graphs at most ``sequential_threshold`` edge rows run as one
-    Tarjan task (0 forces the distributed coloring path).
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
     """
-    if sequential_threshold and graph.edges.count() <= sequential_threshold:
+    if one_task(graph, sequential_threshold):
         return _sequential_scc(graph)
     return _coloring_scc(graph, max_iter)
 
@@ -189,7 +177,7 @@ def _coloring_scc(graph: Graph, max_iter: int) -> DataFrame:
     )
     verts = truncate(graph.vertices())
     done: DataFrame | None = None
-    with superstep_conf(spark, graph.edges.count()):
+    with superstep_conf(spark, graph.edge_rows()):
         for _outer in range(max_iter):
             if verts.limit(1).count() == 0:
                 break

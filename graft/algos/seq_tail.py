@@ -299,29 +299,14 @@ def run_tail_distributed(
     level_edges, level_vertices, objective: str, gamma: float, m: float,
     seed: int,
 ):
-    """Execute the sequential tail as ONE cogrouped applyInPandas task
-    (the whole level graph is one Arrow batch on one executor).
+    """Execute the sequential tail as ONE task
+    (:func:`graft.algos.community.run_one_task`: the whole level graph
+    is one Arrow batch on one executor).
     Returns a DataFrame (id long, community long)."""
     from pyspark.sql import functions as F
 
-    def fn(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        if nodes_pdf.empty:
-            return pd.DataFrame(
-                {
-                    "id": pd.Series([], dtype="int64"),
-                    "community": pd.Series([], dtype="int64"),
-                }
-            )
-        return seq_community_tail(
-            nodes_pdf.drop(columns=["_g"]),
-            edges_pdf.drop(columns=["_g"]) if len(edges_pdf) else
-            pd.DataFrame({"src": [], "dst": [], "weight": []}),
-            objective, gamma, m, seed,
-        )
+    from graft.algos.community import run_one_task
 
-    nodes = level_vertices.select(
-        F.lit(0).alias("_g"), "id", "community", "agg_count", "k"
-    )
     # Ship only the canonical half of the symmetrized table (r6): the
     # kernel's _half_edges keeps src < dst rows plus loops and DISCARDS
     # the mirrored direction, so filtering it out here halves the
@@ -329,10 +314,10 @@ def run_tail_distributed(
     # result (strength comes from the nodes' k column, never recomputed
     # from these rows).
     edges = level_edges.where(F.col("src") <= F.col("dst")).select(
-        F.lit(0).alias("_g"), "src", "dst", "weight"
+        "src", "dst", "weight"
     )
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(fn, schema="id long, community long")
+    return run_one_task(
+        lambda v, e: seq_community_tail(v, e, objective, gamma, m, seed),
+        "id long, community long", edges,
+        level_vertices.select("id", "community", "agg_count", "k"),
     )

@@ -33,10 +33,9 @@ table into the edge scan, AQE-off superstep conf, copartition variant
 at 10^12 vertices) carries over. The L1 normalizer folds into the same
 job as a scalar-aggregate cross join (no per-iteration driver collect).
 Each k-means round is one scan emitting k (sum, count) scalars; the
-driver holds only the k centroids. Graphs whose transition table fits
-one Arrow batch run the whole embedding as ONE executor task (numpy
-kernel, same dispatch rule and rationale as
-pagerank._sequential_pagerank).
+driver holds only the k centroids. Small graphs run the whole
+embedding as ONE executor task (numpy kernel; the gate is
+:func:`graft.algos.community.one_task`).
 
 Determinism: fixed iteration counts, exact-percentile init, argmin
 ties broken toward the lowest centroid index, and final cluster ids
@@ -49,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.algos.priority import hash_priority
 from graft.checkpoint import Checkpointer, drop_spill, truncate
 from graft.graph import Graph
@@ -58,21 +57,14 @@ from graft.graph import Graph
 def _sequential_pic(
     verts: DataFrame, trans: DataFrame, iterations: int
 ) -> DataFrame:
-    """The whole truncated power iteration as ONE cogrouped
-    ``applyInPandas`` task (same dispatch rationale as
-    pagerank._sequential_pagerank: below the threshold every distributed
-    superstep costs more in job latency than the entire remaining
-    computation). ``verts`` carries the shared v0 column so both
-    execution paths start from the identical vector."""
+    """The whole truncated power iteration as ONE task (see
+    :func:`graft.algos.community.one_task`). ``verts`` carries the
+    shared v0 column so both execution paths start from the identical
+    vector."""
     import numpy as np
     import pandas as pd
 
     def fn(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        if vpdf.empty:
-            return pd.DataFrame(
-                {"id": vpdf["id"].iloc[:0],
-                 "v": pd.Series([], dtype="float64")}
-            )
         order = np.argsort(vpdf["id"].to_numpy())
         ids = vpdf["id"].to_numpy()[order]
         v = vpdf["v"].to_numpy(dtype=np.float64)[order]
@@ -92,14 +84,9 @@ def _sequential_pic(
         return pd.DataFrame({"id": ids, "v": v})
 
     id_type = verts.schema["id"].dataType.simpleString()
-    nodes = verts.select(F.lit(0).alias("_g"), "id", "v")
-    edges = trans.select(F.lit(0).alias("_g"), "src", "dst", "p")
-    return (
-        nodes.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(
-            lambda _k, v_, e_: fn(v_, e_), schema=f"id {id_type}, v double"
-        )
+    return run_one_task(
+        fn, f"id {id_type}, v double",
+        trans.select("src", "dst", "p"), verts.select("id", "v"),
     )
 
 
@@ -116,12 +103,9 @@ def pic_embedding(
     value-hash oracle certifies the plumbing — the same design as the
     ``pagerank_3iter`` contract row).
 
-    Graphs whose transition table fits one Arrow batch
-    (≤ ``sequential_threshold`` rows) run as ONE executor task
-    (0 forces the superstep path). A ``checkpointer`` persists the
-    vector + metrics per superstep and resumes from the latest complete
-    one (the checkpointed path always runs supersteps — per-superstep
-    resume is the point)."""
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
+    A ``checkpointer`` persists the vector + metrics per superstep and
+    resumes from the latest complete one."""
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
     spark = graph.edges.sparkSession
@@ -131,7 +115,6 @@ def pic_embedding(
         return spark.createDataFrame([], f"id {id_type}, v double")
 
     trans = graph.transition()
-    n_rows = graph.edges.count()
 
     # v0: md5-prefix uniform in [0, 1), L1-normalized — deterministic,
     # automorphism-breaking, and replayable in any engine with md5
@@ -143,11 +126,7 @@ def pic_embedding(
         "id", (F.col("u") / F.col("nrm")).alias("v")
     )
 
-    if (
-        checkpointer is None
-        and sequential_threshold
-        and n_rows <= sequential_threshold
-    ):
+    if one_task(graph, sequential_threshold, checkpointer):
         # truncated like the superstep path's return, so callers can
         # uniformly drop_spill the embedding when they are done
         return truncate(_sequential_pic(v0, trans, iterations))
@@ -161,7 +140,7 @@ def pic_embedding(
             start += 1
     if v is None:
         v = truncate(v0)
-    with superstep_conf(spark, n_rows):
+    with superstep_conf(spark, graph.edge_rows()):
         for it in range(start, iterations):
             # v ← W·v (neighbor averaging; see the kernel comment — the
             # PageRank mass-flow direction is a fixed point of v0 ∝ s):

@@ -69,7 +69,7 @@ def label_spreading(
     rank_w = Window.partitionBy("id").orderBy(
         F.desc(F.round("mass", 6)), "label"
     )
-    with superstep_conf(edges.sparkSession, edges.count()):
+    with superstep_conf(edges.sparkSession, graph.edge_rows()):
         for _ in range(rounds):
             gathered = (
                 edges.join(

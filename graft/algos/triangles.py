@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graft.algos.community import one_task, run_one_task
 from graft.checkpoint import truncate
 from graft.graph import Graph
 
@@ -53,13 +54,13 @@ def _oriented(graph: Graph) -> DataFrame:
 
 
 def _sequential_triangle_count(graph: Graph) -> int:
-    """Sequential-tail execution (same rationale as graft.algos.seq_tail):
-    the whole count as ONE executor task — degree-ranked orientation +
+    """The whole count as ONE task (see
+    :func:`graft.algos.community.one_task`) — degree-ranked orientation +
     out-neighbor set intersections, the in-memory twin of the wedge-close
     join (each triangle counted once at its lowest-rank corner)."""
     import pandas as pd
 
-    def fn(key, epdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(epdf: pd.DataFrame) -> pd.DataFrame:
         deg: dict = {}
         pairs = set()
         for u, v in zip(epdf["src"], epdf["dst"]):
@@ -80,26 +81,18 @@ def _sequential_triangle_count(graph: Graph) -> int:
                     n += len(nbrs & ob)
         return pd.DataFrame({"n": [n]})
 
-    e = (
-        graph.without_self_loops()
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .withColumn("_g", F.lit(0))
+    e = graph.without_self_loops().select(
+        F.least("src", "dst").alias("src"),
+        F.greatest("src", "dst").alias("dst"),
     )
-    row = e.groupBy("_g").applyInPandas(fn, schema="n long").first()
+    row = run_one_task(fn, "n long", e).first()
     return int(row["n"]) if row is not None else 0
 
 
 def triangle_count(graph: Graph, sequential_threshold: int = 1_000_000) -> int:
-    """Total number of triangles in the graph. Graphs at most
-    ``sequential_threshold`` edge rows count in one task
-    (``_sequential_triangle_count``; 0 forces the distributed joins).
-    The 1M default (r3): the set-intersection kernel measures ~4 s on
-    1M symmetrized rows — under the wedge-join path's shuffle cost at
-    that size."""
-    if sequential_threshold and graph.edges.count() <= sequential_threshold:
+    """Total number of triangles in the graph.
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`."""
+    if one_task(graph, sequential_threshold):
         return _sequential_triangle_count(graph)
     o = _oriented(graph).persist()
     o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))

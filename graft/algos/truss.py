@@ -7,11 +7,10 @@ peeling per k; :func:`truss_number` emits max-k membership for EVERY
 edge in one job (truss(e) = the largest k such that e is in the
 k-truss; every non-loop edge is in the 2-truss).
 
-Two paths, same dispatch pattern as core_number / the seq_tail family:
+Two paths, chosen by :func:`graft.algos.community.one_task`:
 
-- sequential (≤ threshold symmetrized rows): the exact support-peeling
-  algorithm (Wang & Cheng, "Truss decomposition in massive networks",
-  VLDB 2012) as ONE cogrouped ``applyInPandas`` task — a lazy-deletion
+- one task: the exact support-peeling algorithm (Wang & Cheng, "Truss
+  decomposition in massive networks", VLDB 2012) — a lazy-deletion
   heap over edge supports, removing the min-support edge and
   decrementing its triangle partners.
 
@@ -29,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.algos.community import superstep_conf
+from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.checkpoint import drop_spill, truncate
 from graft.graph import Graph
 
@@ -44,22 +43,13 @@ def _oriented_edges(graph: Graph) -> DataFrame:
 
 
 def _sequential_truss_number(graph: Graph) -> DataFrame:
-    """Exact support peeling over the whole graph as ONE cogrouped
-    ``applyInPandas`` task (below the threshold every distributed
-    round costs more in job latency than the remaining computation)."""
+    """Exact support peeling over the whole graph as ONE task (see
+    :func:`graft.algos.community.one_task`)."""
     import heapq
 
     import pandas as pd
 
-    def fn(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
-        if epdf.empty:
-            return pd.DataFrame(
-                {
-                    "u": epdf["u"].iloc[:0],
-                    "v": epdf["v"].iloc[:0],
-                    "truss": pd.Series([], dtype="int64"),
-                }
-            )
+    def fn(epdf: pd.DataFrame) -> pd.DataFrame:
         adj: dict = {}
         for u, v in zip(epdf["u"], epdf["v"]):
             adj.setdefault(u, set()).add(v)
@@ -97,16 +87,7 @@ def _sequential_truss_number(graph: Graph) -> DataFrame:
 
     ends = _oriented_edges(graph)
     id_type = ends.schema["u"].dataType.simpleString()
-    edges = ends.select(F.lit(0).alias("_g"), "u", "v")
-    marker = edges.select("_g").limit(1)
-    return (
-        marker.groupBy("_g")
-        .cogroup(edges.groupBy("_g"))
-        .applyInPandas(
-            lambda _m, e: fn(e, e),
-            schema=f"u {id_type}, v {id_type}, truss long",
-        )
-    )
+    return run_one_task(fn, f"u {id_type}, v {id_type}, truss long", ends)
 
 
 def truss_number(
@@ -116,22 +97,18 @@ def truss_number(
     (oriented u < v): the largest k such that the edge survives in the
     k-truss. Minimum value 2 (an edge in no triangle).
 
-    Graphs at most ``sequential_threshold`` symmetrized edge rows run
-    the exact peel as one task (0 forces the distributed level-peeling
-    path). Differentially certified against repeated
+    ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
+    Differentially certified against repeated
     :func:`graft.algos.ktruss.k_truss` membership in
     tests/test_truss.py.
     """
-    if (
-        sequential_threshold
-        and graph.edges.count() <= sequential_threshold
-    ):
+    if one_task(graph, sequential_threshold):
         return _sequential_truss_number(graph)
 
     e = truncate(_oriented_edges(graph))
     out: DataFrame | None = None
     k = 2
-    with superstep_conf(graph.edges.sparkSession, graph.edges.count()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
         while True:
             n_cur = e.count()
             if n_cur == 0:

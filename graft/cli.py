@@ -221,7 +221,7 @@ def main(argv=None) -> None:
         )
         out.write.mode("overwrite").parquet(args.output)
         elapsed = time.perf_counter() - t0
-        n_edges = g.edges.count()
+        n_edges = g.edge_rows()
         print(json.dumps({
             "algo": args.algo, "seconds": round(elapsed, 3),
             "sym_edge_rows": n_edges,
@@ -233,7 +233,7 @@ def main(argv=None) -> None:
     out = out.join(mapping, "id").drop("id").withColumnRenamed("vid", "actor")
     out.write.mode("overwrite").parquet(args.output)
     elapsed = time.perf_counter() - t0
-    n_edges = g.edges.count()
+    n_edges = g.edge_rows()
     print(json.dumps({
         "algo": args.algo, "seconds": round(elapsed, 3),
         "sym_edge_rows": n_edges,

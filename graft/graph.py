@@ -32,6 +32,7 @@ class Graph:
     _trans_copart: DataFrame | None = field(default=None, repr=False)
     _verts: DataFrame | None = field(default=None, repr=False)
     _nv: int | None = field(default=None, repr=False)
+    _ne: int | None = field(default=None, repr=False)
     _adj: DataFrame | None = field(default=None, repr=False)
     _adj_rows: int | None = field(default=None, repr=False)
     _brandes_bcast: object | None = field(default=None, repr=False)
@@ -136,6 +137,17 @@ class Graph:
         if self._nv is None:
             self.vertices_cached()
         return self._nv
+
+    def edge_rows(self) -> int:
+        """Rows of the edge table, counted once per Graph — from the
+        parquet footers when the table is a graft leaf
+        (:func:`graft.checkpoint.row_count`), otherwise with one count
+        job. Operators size their gates and reducers with it."""
+        if self._ne is None:
+            from graft.checkpoint import row_count
+
+            self._ne = row_count(self.edges)
+        return self._ne
 
     def total_edge_weight(self) -> float:
         """m — single-counted total edge weight (R1, custom_leiden.py:69-75).

@@ -22,3 +22,22 @@ def spill_dir(spark, tmp_path):
     yield
     spark.conf.unset("spark.graft.spillDir")
     checkpoint._spill_root = old_root
+
+
+@pytest.fixture()
+def persisted_rdds(spark):
+    """A function returning the ids of the RDDs the SparkContext holds
+    persisted, for tests that assert a call leaves that set as it
+    found it. The fixture first releases every cache and persisted RDD
+    that earlier tests left in the shared session: such a leftover can
+    leave the set at any later moment (the context holds persisted RDDs
+    by weak reference, so a dropped ``localCheckpoint`` frame goes once
+    Spark lets go of its plan and the JVM collects garbage — seen
+    mid-call in the level-loop test), which would read as the call
+    releasing an RDD it never touched."""
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    left = jsc.getPersistentRDDs()
+    for k in left.keySet().toArray():
+        left.get(k).unpersist(False)
+    return lambda: {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}

@@ -43,13 +43,14 @@ CASES = [(a, p, False) for a in RUNS for p in PATHS] + [
     "algo,path,warm", CASES,
     ids=[f"{a}-{p}" + ("-warm" if w else "") for a, p, w in CASES],
 )
-def test_level_loop_labels_and_leftovers(spark, spill_dir, algo, path, warm):
+def test_level_loop_labels_and_leftovers(
+    spark, spill_dir, persisted_rdds, algo, path, warm
+):
     g = Graph.from_undirected(
         fixtures.edges_df(spark, fixtures.clique_ring_edges())
     ).cache()
     g.edges.count()
-    jsc = spark.sparkContext._jsc
-    n_persisted = len(jsc.getPersistentRDDs())
+    persisted = persisted_rdds()
     kw = dict(PATHS[path])
     if warm:
         kw["initial_membership"] = spark.createDataFrame(
@@ -58,13 +59,13 @@ def test_level_loop_labels_and_leftovers(spark, spill_dir, algo, path, warm):
     labels = RUNS[algo](g, **kw)
     rows = sorted((r.id, r.community) for r in labels.collect())
     cached = _is_persisted(g.edges)
-    n_left = len(jsc.getPersistentRDDs())
+    left_persisted = persisted_rdds()
     g.unpersist()
 
     case = f"{algo}-{path}" + ("-warm" if warm else "")
     assert rows == list(enumerate(EXPECTED[case]))
     assert cached
-    assert n_left == n_persisted
+    assert left_persisted == persisted
     # the labels are a spill of their own (the level-0 tail's output,
     # for the tail path); every other spill of the run is gone
     left = os.listdir(checkpoint._spill_root)

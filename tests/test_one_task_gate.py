@@ -93,14 +93,15 @@ def test_both_paths_agree_on_empty_and_self_loop_only_graphs(spark, shape):
 
 
 @pytest.mark.parametrize("name", list(OPS))
-def test_callers_cache_kept_and_nothing_persisted_left(spark, spill_dir, name):
-    jsc = spark.sparkContext._jsc
+def test_callers_cache_kept_and_nothing_persisted_left(
+    spark, spill_dir, persisted_rdds, name
+):
     g = _graph(spark, _seeded_edges())
-    n_before = len(jsc.getPersistentRDDs())
+    before = persisted_rdds()
     g.cache()
     g.edges.count()
     for path, kw in PATHS.items():
         _rows(OPS[name](g, **kw))
         assert _is_persisted(g.edges), path
     g.unpersist()
-    assert len(jsc.getPersistentRDDs()) == n_before
+    assert persisted_rdds() == before

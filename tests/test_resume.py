@@ -152,7 +152,7 @@ LEVELS = 4
 
 @pytest.mark.parametrize("algo", sorted(FAIL_INSIDE_LEVEL))
 def test_resume_after_failure_inside_a_level(
-    spark, tmp_path, spill_dir, monkeypatch, algo
+    spark, tmp_path, spill_dir, monkeypatch, persisted_rdds, algo
 ):
     """A run that fails inside its last level, after levels 0-2 were
     contracted and saved, leaves no spill and no persisted frame behind,
@@ -161,7 +161,7 @@ def test_resume_after_failure_inside_a_level(
     run, module, name, want = FAIL_INSIDE_LEVEL[algo]
     g = Graph.from_undirected(fixtures.edges_df(spark, _powerlaw_edges())).cache()
     g.edges.count()
-    n_persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    persisted = persisted_rdds()
     mod = importlib.import_module(module)
     real = getattr(mod, name)
     calls = []
@@ -184,7 +184,7 @@ def test_resume_after_failure_inside_a_level(
         labels(checkpointer=Checkpointer(spark, str(tmp_path), algo))
     monkeypatch.setattr(mod, name, real)
     assert os.listdir(checkpoint._spill_root) == []
-    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == n_persisted
+    assert persisted_rdds() == persisted
     ck = Checkpointer(spark, str(tmp_path), algo)
     saved = [k for k in range(LEVELS) if ck.has_table(f"level={k}/mapping")]
     assert saved == list(range(LEVELS - 1))

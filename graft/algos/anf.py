@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -56,29 +56,29 @@ def neighborhood_function(
 def _exact_nf(graph: Graph, max_hops: int) -> DataFrame:
     spark = graph.edges.sparkSession
     edges = graph.without_self_loops().select("src", "dst")
-    # truncate (parquet spill), NOT localCheckpoint: each round
-    # references `reach` twice (union + join), the self-join shape whose
-    # carried size estimate squares per iteration under LogicalRDD
-    # (graft.checkpoint.truncate docstring)
-    reach = truncate(
-        graph.vertices().select(F.col("id").alias("s"), F.col("id").alias("v"))
-    )
-    counts = [(0, reach.count())]
-    for h in range(1, max_hops + 1):
-        grown = reach.unionAll(
-            reach.join(edges, reach["v"] == edges["src"]).select(
-                "s", F.col("dst").alias("v")
-            )
-        ).distinct()
-        prev = reach
-        reach = truncate(grown)
-        drop_spill(prev)
-        counts.append((h, reach.count()))
-        if counts[-1][1] == counts[-2][1]:
-            # reachability fixpoint: every later hop repeats this count
-            counts += [(i, counts[-1][1]) for i in range(h + 1, max_hops + 1)]
-            break
-    drop_spill(reach)
+    with scratch():
+        # truncate (parquet spill), NOT localCheckpoint: each round
+        # references `reach` twice (union + join), the self-join shape whose
+        # carried size estimate squares per iteration under LogicalRDD
+        # (graft.checkpoint.truncate docstring)
+        reach = truncate(
+            graph.vertices().select(F.col("id").alias("s"), F.col("id").alias("v"))
+        )
+        counts = [(0, row_count(reach))]
+        for h in range(1, max_hops + 1):
+            grown = reach.unionAll(
+                reach.join(edges, reach["v"] == edges["src"]).select(
+                    "s", F.col("dst").alias("v")
+                )
+            ).distinct()
+            prev = reach
+            reach = truncate(grown)
+            drop_spill(prev)
+            counts.append((h, row_count(reach)))
+            if counts[-1][1] == counts[-2][1]:
+                # reachability fixpoint: every later hop repeats this count
+                counts += [(i, counts[-1][1]) for i in range(h + 1, max_hops + 1)]
+                break
     return spark.createDataFrame(counts, "hop int, n_pairs long")
 
 
@@ -107,7 +107,7 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
         return int(round(row["t"]))
 
     counts: list[tuple[int, int]]
-    with superstep_conf(spark, n_rows) as sp:
+    with superstep_conf(spark, n_rows) as sp, scratch() as s:
         if broadcastable:
             # r6 exchange-free rounds: the union B_{h+1}(v) = B_h(v) ∪
             # ⋃_{u∈N(v)} B_h(u) is computed by joining the BROADCAST
@@ -122,8 +122,9 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
             # ObjectHashAggregate partial sketches per round (the
             # dominant cost: ~200 B per partial). Sketch content is
             # identical either way (register-max union is
-            # order-independent), so estimates match bit-for-bit.
-            adj = (
+            # order-independent), so estimates match bit-for-bit. The
+            # cache fills during the first round's write.
+            adj = s.persist(
                 graph.without_self_loops().select("src", "dst")
                 .unionAll(
                     graph.vertices().select(
@@ -131,9 +132,7 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
                     )
                 )
                 .repartition(sp, "src")
-                .persist()
             )
-            adj.count()
         else:
             adj = graph.without_self_loops().select("src", "dst")
         # B_0(v) = {v}: one sketch per vertex seeded with its own id
@@ -173,9 +172,6 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
                     (i, counts[-1][1]) for i in range(h + 1, max_hops + 1)
                 ]
                 break
-        drop_spill(sk)
-        if broadcastable:
-            adj.unpersist()
     return spark.createDataFrame(counts, "hop int, n_pairs long")
 
 

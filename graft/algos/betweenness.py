@@ -29,16 +29,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import scratch, truncate
 from graft.graph import Graph
 
 
-def _forward_levels(adj, sources, _t) -> list[DataFrame]:
+def _forward_levels(adj, sources) -> list[DataFrame]:
     """Multi-source level-synchronous BFS carrying shortest-path counts
     sigma: one edge join + anti-join + hash-agg per DEPTH for all
     sources at once, state keyed (s, id). Returns the per-depth levels
     (``levels[d]`` = vertices at distance d from their source s)."""
-    frontier = _t(
+    frontier = truncate(
         sources.select("s", F.col("s").alias("id"),
                        F.lit(1.0).alias("sigma"))
     )
@@ -53,11 +53,11 @@ def _forward_levels(adj, sources, _t) -> list[DataFrame]:
             .groupBy("s", "id")
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt = _t(reached)
+        nxt = truncate(reached)
         if nxt.limit(1).count() == 0:
             break
         levels.append(nxt)
-        visited = _t(visited.unionAll(nxt.select("s", "id")))
+        visited = truncate(visited.unionAll(nxt.select("s", "id")))
     return levels
 
 
@@ -421,15 +421,8 @@ def betweenness_centrality(
             graph, adj, sources, False, factor
         )
 
-    spills: list[DataFrame] = []
-
-    def _t(df: DataFrame) -> DataFrame:
-        out = truncate(df)
-        spills.append(out)
-        return out
-
-    with superstep_conf(spark, m):
-        levels = _forward_levels(adj, sources, _t)
+    with superstep_conf(spark, m), scratch() as s:
+        levels = _forward_levels(adj, sources)
 
         # ---- backward: dependency accumulation, depths descending ----
         # delta at the deepest level is 0; each shallower level gathers
@@ -458,7 +451,7 @@ def betweenness_centrality(
                     ).alias("delta")
                 )
             )
-            delta = _t(
+            delta = truncate(
                 levels[d]
                 .join(gathered, ["s", "id"], "left")
                 .select("s", "id", "sigma",
@@ -489,8 +482,7 @@ def betweenness_centrality(
                 ).alias("betweenness"),
             )
         )
-        for df in spills:
-            drop_spill(df)
+        s.keep(out)
     return out
 
 
@@ -565,15 +557,8 @@ def edge_betweenness_centrality(
             graph, adj, sources, True, factor
         )
 
-    spills: list[DataFrame] = []
-
-    def _t(df: DataFrame) -> DataFrame:
-        out = truncate(df)
-        spills.append(out)
-        return out
-
-    with superstep_conf(spark, m):
-        levels = _forward_levels(adj, sources, _t)
+    with superstep_conf(spark, m), scratch() as s:
+        levels = _forward_levels(adj, sources)
 
         acc: list[DataFrame] = []
         delta = levels[-1].select(
@@ -586,7 +571,7 @@ def edge_betweenness_centrality(
                 F.col("sigma").alias("sigma_w"),
                 "delta",
             )
-            contrib = _t(
+            contrib = truncate(
                 levels[d]
                 .join(adj.withColumnRenamed("src", "id"), "id")
                 .select("s", "id", "sigma", F.col("dst").alias("w"))
@@ -605,7 +590,7 @@ def edge_betweenness_centrality(
             gathered = contrib.groupBy("s", "id").agg(
                 F.sum("c").alias("delta")
             )
-            delta = _t(
+            delta = truncate(
                 levels[d]
                 .join(gathered, ["s", "id"], "left")
                 .select("s", "id",
@@ -634,6 +619,5 @@ def edge_betweenness_centrality(
                 ).alias("betweenness"),
             )
         )
-        for df in spills:
-            drop_spill(df)
+        s.keep(out)
     return out

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -64,30 +64,32 @@ def katz_centrality(
     """
     spark = graph.edges.sparkSession
     verts = graph.vertices_cached()
-    x = truncate(verts.select("id", F.lit(float(beta)).alias("x")))
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
-    with superstep_conf(spark, graph.edge_rows()):
-        for _ in range(iters):
-            new_x = truncate(
-                verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
-                    "id",
-                    (
-                        F.lit(alpha) * F.coalesce("ax", F.lit(0.0))
-                        + F.lit(float(beta))
-                    ).alias("x"),
+    with scratch() as s:
+        x = truncate(verts.select("id", F.lit(float(beta)).alias("x")))
+        with superstep_conf(spark, graph.edge_rows()):
+            for _ in range(iters):
+                new_x = truncate(
+                    verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
+                        "id",
+                        (
+                            F.lit(alpha) * F.coalesce("ax", F.lit(0.0))
+                            + F.lit(float(beta))
+                        ).alias("x"),
+                    )
                 )
-            )
-            if probe:
-                delta = (
-                    new_x.join(x.withColumnRenamed("x", "old"), "id")
-                    .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
-                    .first()[0]
-                )
-            drop_spill(x)
-            x = new_x
-            if probe and delta < tol:
-                break
+                if probe:
+                    delta = (
+                        new_x.join(x.withColumnRenamed("x", "old"), "id")
+                        .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
+                        .first()[0]
+                    )
+                drop_spill(x)
+                x = new_x
+                if probe and delta < tol:
+                    break
+        s.keep(x)
     if normalized:
         norm = x.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).first()[0]
         if norm and norm > 0:
@@ -140,31 +142,33 @@ def hits(
             .agg(F.sum(F.col("x") * F.col("weight")).alias("ax"))
         )
 
-    h = truncate(verts.select("id", F.lit(1.0 / float(n) ** 0.5).alias("x")))
-    a = h
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
-    with superstep_conf(spark, graph.edge_rows()):
-        for _ in range(iters):
-            new_a = truncate(_norm(
-                verts.join(_ax(graph.edges, h, "ax"), "id", "left")
-                .select("id", F.coalesce("ax", F.lit(0.0)).alias("x"))
-            ))
-            new_h = truncate(_norm(
-                verts.join(_atx(new_a), "id", "left")
-                .select("id", F.coalesce("ax", F.lit(0.0)).alias("x"))
-            ))
-            if probe:
-                delta = (
-                    new_h.join(h.withColumnRenamed("x", "old"), "id")
-                    .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
-                    .first()[0]
-                )
-            drop_spill(h)
-            drop_spill(a)
-            h, a = new_h, new_a
-            if probe and delta < tol:
-                break
+    with scratch() as s:
+        h = truncate(verts.select("id", F.lit(1.0 / float(n) ** 0.5).alias("x")))
+        a = h
+        with superstep_conf(spark, graph.edge_rows()):
+            for _ in range(iters):
+                new_a = truncate(_norm(
+                    verts.join(_ax(graph.edges, h, "ax"), "id", "left")
+                    .select("id", F.coalesce("ax", F.lit(0.0)).alias("x"))
+                ))
+                new_h = truncate(_norm(
+                    verts.join(_atx(new_a), "id", "left")
+                    .select("id", F.coalesce("ax", F.lit(0.0)).alias("x"))
+                ))
+                if probe:
+                    delta = (
+                        new_h.join(h.withColumnRenamed("x", "old"), "id")
+                        .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
+                        .first()[0]
+                    )
+                drop_spill(h)
+                drop_spill(a)
+                h, a = new_h, new_a
+                if probe and delta < tol:
+                    break
+        s.keep(h, a)
     return h.withColumnRenamed("x", "hub").join(
         a.select("id", F.col("x").alias("authority")), "id"
     ).select("id", "hub", "authority")
@@ -185,37 +189,39 @@ def eigenvector_centrality(
     n = graph.num_vertices()
     if n == 0:
         return spark.createDataFrame([], "id long, eigenvector double")
-    x = truncate(
-        verts.select("id", F.lit(1.0 / float(n) ** 0.5).alias("x"))
-    )
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
-    with superstep_conf(spark, graph.edge_rows()):
-        for _ in range(iters):
-            y = verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
-                "id", F.coalesce("ax", F.lit(0.0)).alias("x")
-            )
-            y = truncate(y)
-            norm = y.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).first()[0]
-            if not norm or norm == 0.0:
-                # zero vector (no edges): centrality degenerates to 0
-                drop_spill(x)
-                x = y
-                break
-            new_x = truncate(
-                y.select("id", (F.col("x") / F.lit(norm)).alias("x"))
-            )
-            if probe:
-                delta = (
-                    new_x.join(x.withColumnRenamed("x", "old"), "id")
-                    .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
-                    .first()[0]
+    with scratch() as s:
+        x = truncate(
+            verts.select("id", F.lit(1.0 / float(n) ** 0.5).alias("x"))
+        )
+        with superstep_conf(spark, graph.edge_rows()):
+            for _ in range(iters):
+                y = verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
+                    "id", F.coalesce("ax", F.lit(0.0)).alias("x")
                 )
-            drop_spill(x)
-            drop_spill(y)
-            x = new_x
-            if probe and delta < tol:
-                break
+                y = truncate(y)
+                norm = y.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).first()[0]
+                if not norm or norm == 0.0:
+                    # zero vector (no edges): centrality degenerates to 0
+                    drop_spill(x)
+                    x = y
+                    break
+                new_x = truncate(
+                    y.select("id", (F.col("x") / F.lit(norm)).alias("x"))
+                )
+                if probe:
+                    delta = (
+                        new_x.join(x.withColumnRenamed("x", "old"), "id")
+                        .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
+                        .first()[0]
+                    )
+                drop_spill(x)
+                drop_spill(y)
+                x = new_x
+                if probe and delta < tol:
+                    break
+        s.keep(x)
     return x.select("id", F.col("x").alias("eigenvector"))
 
 

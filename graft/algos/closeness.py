@@ -29,56 +29,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
 
 
-def multi_source_depths(
-    graph: Graph, sources: DataFrame
-) -> tuple[DataFrame, list[DataFrame]]:
+def multi_source_depths(graph: Graph, sources: DataFrame) -> DataFrame:
     """All hop distances from each source in one superstep loop:
     ``(s, id, depth int)`` — one row per (source, reached vertex),
-    including ``(s, s, 0)``. Returns ``(depths, spills)``; the caller
-    owns dropping the spill frames (the result is one of them)."""
+    including ``(s, s, 0)``. The result is a spill of its own."""
     spark = graph.edges.sparkSession
-    adj = truncate(
-        graph.without_self_loops().select("src", "dst").distinct()
-    )
-    spills: list[DataFrame] = [adj]
-
-    def _t(df: DataFrame) -> DataFrame:
-        out = truncate(df)
-        spills.append(out)
-        return out
-
-    with superstep_conf(spark, adj.count()):
-        # distinct: a duplicated source row would double-count every
-        # depth it contributes downstream
-        frontier = _t(
-            sources.select("s", F.col("s").alias("id")).distinct()
+    with scratch() as s:
+        adj = truncate(
+            graph.without_self_loops().select("src", "dst").distinct()
         )
-        visited = frontier
-        parts = [frontier.select("s", "id", F.lit(0).alias("depth"))]
-        t = 0
-        while True:
-            t += 1
-            nxt = _t(
-                frontier.join(adj.withColumnRenamed("src", "id"), "id")
-                .select("s", F.col("dst").alias("id"))
-                .join(visited, ["s", "id"], "left_anti")
-                .distinct()
+        with superstep_conf(spark, row_count(adj)):
+            # distinct: a duplicated source row would double-count every
+            # depth it contributes downstream
+            frontier = truncate(
+                sources.select("s", F.col("s").alias("id")).distinct()
             )
-            if nxt.limit(1).count() == 0:
-                break
-            parts.append(nxt.select("s", "id", F.lit(t).alias("depth")))
-            visited = _t(visited.unionAll(nxt))
-            frontier = nxt
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        out = truncate(out)
-        spills.append(out)
-    return out, spills
+            visited = frontier
+            parts = [frontier.select("s", "id", F.lit(0).alias("depth"))]
+            t = 0
+            while True:
+                t += 1
+                nxt = truncate(
+                    frontier.join(adj.withColumnRenamed("src", "id"), "id")
+                    .select("s", F.col("dst").alias("id"))
+                    .join(visited, ["s", "id"], "left_anti")
+                    .distinct()
+                )
+                if nxt.limit(1).count() == 0:
+                    break
+                parts.append(nxt.select("s", "id", F.lit(t).alias("depth")))
+                visited = truncate(visited.unionAll(nxt))
+                frontier = nxt
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionAll(p)
+            out = truncate(out)
+        s.keep(out)
+    return out
 
 
 def _source_pool(
@@ -125,33 +116,33 @@ def closeness_centrality(
         return verts.select("id", F.lit(0.0).alias("closeness"))
     scale = float(n) / n_src if sampled else 1.0
 
-    depths, spills = multi_source_depths(graph, srcs)
-    agg = depths.groupBy("id").agg(
-        (F.count(F.lit(1)) * scale).alias("r"),
-        (F.sum("depth") * scale).alias("sd"),
-    )
-    out = truncate(
-        verts.join(agg, "id", "left")
-        .select(
-            "id",
-            F.round(
-                F.when(
-                    F.coalesce("sd", F.lit(0.0)) <= 0, F.lit(0.0)
-                ).otherwise(
-                    (F.col("r") - 1)
-                    / F.col("sd")
-                    * (
-                        (F.col("r") - 1) / F.lit(n - 1.0)
-                        if wf_improved
-                        else F.lit(1.0)
-                    )
-                ),
-                6,
-            ).alias("closeness"),
+    with scratch() as s:
+        depths = multi_source_depths(graph, srcs)
+        agg = depths.groupBy("id").agg(
+            (F.count(F.lit(1)) * scale).alias("r"),
+            (F.sum("depth") * scale).alias("sd"),
         )
-    )
-    for df in spills:
-        drop_spill(df)
+        out = truncate(
+            verts.join(agg, "id", "left")
+            .select(
+                "id",
+                F.round(
+                    F.when(
+                        F.coalesce("sd", F.lit(0.0)) <= 0, F.lit(0.0)
+                    ).otherwise(
+                        (F.col("r") - 1)
+                        / F.col("sd")
+                        * (
+                            (F.col("r") - 1) / F.lit(n - 1.0)
+                            if wf_improved
+                            else F.lit(1.0)
+                        )
+                    ),
+                    6,
+                ).alias("closeness"),
+            )
+        )
+        s.keep(out)
     return out
 
 
@@ -172,20 +163,20 @@ def harmonic_centrality(
         return verts.select("id", F.lit(0.0).alias("harmonic"))
     scale = float(graph.num_vertices()) / n_src if sampled else 1.0
 
-    depths, spills = multi_source_depths(graph, srcs)
-    agg = (
-        depths.where(F.col("depth") > 0)
-        .groupBy("id")
-        .agg((F.sum(1.0 / F.col("depth")) * scale).alias("h"))
-    )
-    out = truncate(
-        verts.join(agg, "id", "left").select(
-            "id",
-            F.round(F.coalesce("h", F.lit(0.0)), 6).alias("harmonic"),
+    with scratch() as s:
+        depths = multi_source_depths(graph, srcs)
+        agg = (
+            depths.where(F.col("depth") > 0)
+            .groupBy("id")
+            .agg((F.sum(1.0 / F.col("depth")) * scale).alias("h"))
         )
-    )
-    for df in spills:
-        drop_spill(df)
+        out = truncate(
+            verts.join(agg, "id", "left").select(
+                "id",
+                F.round(F.coalesce("h", F.lit(0.0)), 6).alias("harmonic"),
+            )
+        )
+        s.keep(out)
     return out
 
 
@@ -199,17 +190,17 @@ def eccentricity(
     rows (their distances to everything they reach)."""
     verts = graph.vertices_cached()
     srcs, _ = _source_pool(graph, None, sources, 0)
-    depths, spills = multi_source_depths(graph, srcs)
-    agg = depths.groupBy(F.col("s").alias("id")).agg(
-        F.max("depth").alias("e")
-    )
-    out = truncate(
-        verts.join(agg, "id", "left").select(
-            "id", F.coalesce("e", F.lit(0)).cast("int").alias("ecc")
+    with scratch() as s:
+        depths = multi_source_depths(graph, srcs)
+        agg = depths.groupBy(F.col("s").alias("id")).agg(
+            F.max("depth").alias("e")
         )
-    )
-    for df in spills:
-        drop_spill(df)
+        out = truncate(
+            verts.join(agg, "id", "left").select(
+                "id", F.coalesce("e", F.lit(0)).cast("int").alias("ecc")
+            )
+        )
+        s.keep(out)
     return out
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
 from graft.algos.priority import hash_priority
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -35,69 +35,61 @@ def greedy_color(graph: Graph, seed: int = 42) -> DataFrame:
     a given (graph, seed); isolated / self-loop-only vertices get 0."""
     verts = graph.vertices_cached()
     spark = graph.edges.sparkSession
-    adj = truncate(
-        graph.without_self_loops().select("src", "dst").distinct()
-    )
-    spills = [adj]
-
-    def _t(df: DataFrame) -> DataFrame:
-        out = truncate(df)
-        spills.append(out)
-        return out
 
     def prio(col):
         return F.struct(
             hash_priority(col, seed).alias("h"), col.alias("i")
         )
 
-    uncolored = _t(verts.select("id"))
-    colored_parts: list[DataFrame] = []
-    colored = _t(
-        verts.select("id", F.lit(0).alias("color")).limit(0)
-    )
-    with superstep_conf(spark, adj.count()):
-        while uncolored.limit(1).count() > 0:
-            # ready: no uncolored neighbor of higher priority
-            blocked = (
-                adj.join(uncolored.withColumnRenamed("id", "src"), "src")
-                .join(uncolored.withColumnRenamed("id", "dst"), "dst")
-                .where(prio(F.col("dst")) > prio(F.col("src")))
-                .select(F.col("src").alias("id"))
-                .distinct()
-            )
-            ready = uncolored.join(blocked, "id", "left_anti")
-            # smallest color absent among already-colored neighbors
-            used = (
-                adj.join(ready.withColumnRenamed("id", "src"), "src")
-                .join(
-                    colored.withColumnRenamed("id", "dst"), "dst"
+    with scratch() as s:
+        adj = truncate(
+            graph.without_self_loops().select("src", "dst").distinct()
+        )
+        uncolored = truncate(verts.select("id"))
+        colored = truncate(
+            verts.select("id", F.lit(0).alias("color")).limit(0)
+        )
+        with superstep_conf(spark, row_count(adj)):
+            while uncolored.limit(1).count() > 0:
+                # ready: no uncolored neighbor of higher priority
+                blocked = (
+                    adj.join(uncolored.withColumnRenamed("id", "src"), "src")
+                    .join(uncolored.withColumnRenamed("id", "dst"), "dst")
+                    .where(prio(F.col("dst")) > prio(F.col("src")))
+                    .select(F.col("src").alias("id"))
+                    .distinct()
                 )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.collect_set("color").alias("used"))
-            )
-            newly = _t(
-                ready.join(used, "id", "left")
-                .select(
-                    "id",
-                    F.when(F.col("used").isNull(), F.lit(0))
-                    .otherwise(
-                        F.array_min(
-                            F.array_except(
-                                F.sequence(
-                                    F.lit(0), F.size("used")
-                                ),
-                                F.col("used"),
+                ready = uncolored.join(blocked, "id", "left_anti")
+                # smallest color absent among already-colored neighbors
+                used = (
+                    adj.join(ready.withColumnRenamed("id", "src"), "src")
+                    .join(
+                        colored.withColumnRenamed("id", "dst"), "dst"
+                    )
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.collect_set("color").alias("used"))
+                )
+                newly = truncate(
+                    ready.join(used, "id", "left")
+                    .select(
+                        "id",
+                        F.when(F.col("used").isNull(), F.lit(0))
+                        .otherwise(
+                            F.array_min(
+                                F.array_except(
+                                    F.sequence(
+                                        F.lit(0), F.size("used")
+                                    ),
+                                    F.col("used"),
+                                )
                             )
                         )
+                        .cast("int")
+                        .alias("color"),
                     )
-                    .cast("int")
-                    .alias("color"),
                 )
-            )
-            colored_parts.append(newly)
-            colored = _t(colored.unionAll(newly))
-            uncolored = _t(uncolored.join(newly, "id", "left_anti"))
-        out = truncate(colored.select("id", "color"))
-        for df in spills:
-            drop_spill(df)
+                colored = truncate(colored.unionAll(newly))
+                uncolored = truncate(uncolored.join(newly, "id", "left_anti"))
+            out = truncate(colored.select("id", "color"))
+        s.keep(out)
     return out

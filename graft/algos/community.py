@@ -31,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import drop_spill, row_count, truncate
+from graft.checkpoint import row_count, scratch, truncate
 
 
 @dataclass
@@ -40,19 +40,6 @@ class Level:
 
     edges: DataFrame  # (src, dst, weight) symmetrized, loops once
     vertices: DataFrame  # (id, community, agg_count, k)
-
-
-def _is_persisted(df: DataFrame) -> bool:
-    """True when the frame already carries a storage level — i.e. the
-    CALLER persisted it. Level loops use this to avoid evicting a cache
-    they do not own (persist() on an already-persisted frame returns
-    the same object, so a later unpersist() would release the caller's
-    cache)."""
-    try:
-        lvl = df.storageLevel
-        return bool(lvl.useMemory or lvl.useDisk)
-    except Exception:
-        return False
 
 
 def init_level(edges: DataFrame) -> Level:
@@ -497,7 +484,7 @@ def move_nodes(
     spark = edges.sparkSession
     if n_edge_rows is None:
         n_edge_rows = row_count(edges)
-    with superstep_conf(spark, n_edge_rows) as sp_sweep:
+    with superstep_conf(spark, n_edge_rows) as sp_sweep, scratch() as s:
         # One shuffle per LEVEL instead of per sweep: hash-partition the
         # edge table by src and keep it cached for the whole loop. The
         # gather groupBy(src, nbr_comm), the per-vertex argmax groupBy
@@ -506,13 +493,15 @@ def move_nodes(
         # state sweep plan contains no E-sized exchange at all — the
         # partitioning amortizes over ~15 sweeps. (Also right-sizes the
         # partition count: the old coalesce() did only that part.)
-        loop_edges = edges.repartition(sp_sweep, "src").persist()
+        loop_edges = s.persist(edges.repartition(sp_sweep, "src"))
         loop_edges.count()
         out, total = _move_nodes_loop(
             Level(edges=loop_edges, vertices=level.vertices),
             objective, gamma, m, max_sweeps, seed, on_sweep,
         )
-        loop_edges.unpersist()
+        # the best-seen state is one of the loop's spills; every other
+        # spill of the loop is released with the scratch
+        s.keep(out.vertices)
         # hand back the CALLER's edge frame, not the loop-local
         # repartitioned derivative: callers unpersist level.edges when
         # the level is contracted away, and unpersisting a derived frame
@@ -535,7 +524,6 @@ def _move_nodes_loop(
     vertices = truncate(
         level.vertices.select("id", "community", "agg_count", "k")
     )
-    spills: list[DataFrame] = [vertices]
     total = 0
     best_vertices = vertices
     best_q = None
@@ -562,7 +550,6 @@ def _move_nodes_loop(
         moves = truncate(
             _select_moves(vertices, gather, comm_agg, objective, gamma, m)
         )
-        spills.append(moves)
         # The conflict resolution, its (move count, committed-gain sum)
         # metrics AND the apply all ride ONE materialization: the
         # resolved commit set is explicitly broadcast into the apply
@@ -593,7 +580,6 @@ def _move_nodes_loop(
                 "k",
             )
         )
-        spills.append(new_vertices)
         crow = obs.get
         n_moves, gain = crow["n"], float(crow["g"])
         peak_gain = max(peak_gain, gain)
@@ -637,15 +623,6 @@ def _move_nodes_loop(
             best_vertices = vertices
     elif best_q is None:
         best_vertices = vertices  # quality tracking never kicked in
-    if getattr(best_vertices, "_graft_spill_path", None) is None:
-        # defensive: every state in this loop is a truncated leaf, but
-        # if a non-leaf ever reaches here, write it once so the spill
-        # leaves it references can be dropped safely
-        best_vertices = truncate(best_vertices)
-    keep = getattr(best_vertices, "_graft_spill_path", None)
-    for df in spills:
-        if getattr(df, "_graft_spill_path", None) != keep:
-            drop_spill(df)
     return Level(edges=edges, vertices=best_vertices), total
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import Checkpointer, drop_spill, truncate
+from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -112,54 +112,55 @@ def connected_components(
         return _sequential_cc(graph)
     if mode == "star":
         return _cc_star(graph, max_iter, checkpointer)
-    edges = graph.without_self_loops().select("src", "dst").persist()
-    labels = graph.vertices().select("id", F.col("id").alias("comp"))
-    if initial_labels is not None:
-        labels = (
-            graph.vertices()
-            .join(initial_labels.withColumnRenamed("comp", "_c0"), "id", "left")
-            .select("id", F.coalesce("_c0", F.col("id")).alias("comp"))
-        )
-    labels = truncate(labels)
-    with superstep_conf(edges.sparkSession, graph.edge_rows()):
-        changed = 0
-        for it in range(max_iter):
-            # the changed-count probe rides the spill write via
-            # observe(): collected DURING the truncate action, so each
-            # round is ONE job instead of write + join-count (labels is
-            # a truncated parquet leaf — double reference is stats-safe)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            paired = _min_neighbor_round(edges, labels).join(
-                labels.select("id", F.col("comp").alias("_old")), "id"
-            ).observe(
-                obs,
-                F.sum(
-                    (F.col("comp") != F.col("_old")).cast("long")
-                ).alias("changed"),
+    with scratch() as s:
+        edges = s.persist(graph.without_self_loops().select("src", "dst"))
+        labels = graph.vertices().select("id", F.col("id").alias("comp"))
+        if initial_labels is not None:
+            labels = (
+                graph.vertices()
+                .join(initial_labels.withColumnRenamed("comp", "_c0"), "id", "left")
+                .select("id", F.coalesce("_c0", F.col("id")).alias("comp"))
             )
-            new_labels = truncate(paired.select("id", "comp"))
-            changed = int(obs.get["changed"] or 0)
-            drop_spill(labels)
-            labels = new_labels
-            if checkpointer is not None:
-                labels = checkpointer.save(it, labels, algo="cc", changed=changed)
-            if changed == 0:
-                break
-    edges.unpersist()
-    if changed != 0:
-        # propagate mode is O(diameter); a chain longer than max_iter
-        # (mega-conversation pathology) would return silently-wrong
-        # labels — fall back to the O(log n) star mode instead.
-        warnings.warn(
-            f"connected_components(mode='propagate') did not converge in "
-            f"{max_iter} rounds ({changed} labels still changing) — "
-            "falling back to mode='star'",
-            stacklevel=2,
-        )
-        return _cc_star(graph, max_iter, checkpointer)
-    return labels
+        labels = truncate(labels)
+        with superstep_conf(edges.sparkSession, graph.edge_rows()):
+            changed = 0
+            for it in range(max_iter):
+                # the changed-count probe rides the spill write via
+                # observe(): collected DURING the truncate action, so each
+                # round is ONE job instead of write + join-count (labels is
+                # a truncated parquet leaf — double reference is stats-safe)
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                paired = _min_neighbor_round(edges, labels).join(
+                    labels.select("id", F.col("comp").alias("_old")), "id"
+                ).observe(
+                    obs,
+                    F.sum(
+                        (F.col("comp") != F.col("_old")).cast("long")
+                    ).alias("changed"),
+                )
+                new_labels = truncate(paired.select("id", "comp"))
+                changed = int(obs.get["changed"] or 0)
+                drop_spill(labels)
+                labels = new_labels
+                if checkpointer is not None:
+                    labels = checkpointer.save(it, labels, algo="cc", changed=changed)
+                if changed == 0:
+                    break
+        if changed == 0:
+            s.keep(labels)
+            return labels
+    # propagate mode is O(diameter); a chain longer than max_iter
+    # (mega-conversation pathology) would return silently-wrong
+    # labels — fall back to the O(log n) star mode instead.
+    warnings.warn(
+        f"connected_components(mode='propagate') did not converge in "
+        f"{max_iter} rounds ({changed} labels still changing) — "
+        "falling back to mode='star'",
+        stacklevel=2,
+    )
+    return _cc_star(graph, max_iter, checkpointer)
 
 
 def _cc_star(
@@ -219,7 +220,7 @@ def _cc_star(
         .where(F.col("u") > F.col("v"))
         .distinct()
     )
-    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
+    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()), scratch() as s:
         e = truncate(e)
         sig = _sig(e)
         for it in range(max_iter):
@@ -241,6 +242,7 @@ def _cc_star(
                 e = checkpointer.save(it, e, algo="cc_star", changed=changed)
             if changed == 0:
                 break
+        s.keep(e)
     # At the fixed point every edge is (member, root). Roots and isolated
     # vertices label themselves.
     labels = e.select(F.col("u").alias("id"), F.col("v").alias("comp"))

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import scratch, truncate
 from graft.graph import Graph
 
 
@@ -73,95 +73,87 @@ def ecg(
         .distinct()
     )
 
-    vote_parts: list[DataFrame] = []
-    spills: list[DataFrame] = []
-    for i in range(ensemble_size):
-        labels = truncate(
-            louvain(
+    with scratch() as s:
+        vote_parts: list[DataFrame] = []
+        for i in range(ensemble_size):
+            # louvain's labels are a leaf of their own, released with
+            # this scratch
+            labels = louvain(
                 graph,
                 max_levels=1,
                 max_sweeps=max_sweeps,
                 seed=seed + 7919 * i,
             )
-        )
-        spills.append(labels)
-        vote_parts.append(
-            und.join(
-                labels.select(F.col("id").alias("u"),
-                              F.col("community").alias("cu")),
-                "u",
+            vote_parts.append(
+                und.join(
+                    labels.select(F.col("id").alias("u"),
+                                  F.col("community").alias("cu")),
+                    "u",
+                )
+                .join(
+                    labels.select(F.col("id").alias("v"),
+                                  F.col("community").alias("cv")),
+                    "v",
+                )
+                .select(
+                    "u",
+                    "v",
+                    F.when(F.col("cu") == F.col("cv"), F.lit(1))
+                    .otherwise(F.lit(0))
+                    .alias("vote"),
+                )
+            )
+        votes = vote_parts[0]
+        for p in vote_parts[1:]:
+            votes = votes.unionAll(p)
+        votes = votes.groupBy("u", "v").agg(F.sum("vote").alias("votes"))
+
+        # 2-core gate: an edge is in the 2-core subgraph iff both endpoints
+        # survive the k=2 peel (the k-core is the INDUCED subgraph, so its
+        # edge set is exactly the both-endpoints-in edges)
+        core2 = k_core(graph, 2).select(F.col("id"), F.lit(1).alias("in2"))
+        w = F.when(
+            F.col("in_u").isNotNull() & F.col("in_v").isNotNull(),
+            F.lit(min_weight)
+            + F.lit(1.0 - min_weight) * F.col("votes") / ensemble_size,
+        ).otherwise(F.lit(min_weight))
+        reweighted = truncate(
+            votes.join(
+                core2.select(F.col("id").alias("u"),
+                             F.col("in2").alias("in_u")),
+                "u", "left",
             )
             .join(
-                labels.select(F.col("id").alias("v"),
-                              F.col("community").alias("cv")),
-                "v",
+                core2.select(F.col("id").alias("v"),
+                             F.col("in2").alias("in_v")),
+                "v", "left",
             )
             .select(
-                "u",
-                "v",
-                F.when(F.col("cu") == F.col("cv"), F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("vote"),
+                F.col("u").alias("src"),
+                F.col("v").alias("dst"),
+                w.alias("weight"),
             )
         )
-    votes = vote_parts[0]
-    for p in vote_parts[1:]:
-        votes = votes.unionAll(p)
-    votes = votes.groupBy("u", "v").agg(F.sum("vote").alias("votes"))
 
-    # 2-core gate: an edge is in the 2-core subgraph iff both endpoints
-    # survive the k=2 peel (the k-core is the INDUCED subgraph, so its
-    # edge set is exactly the both-endpoints-in edges)
-    core2 = k_core(graph, 2).select(F.col("id"), F.lit(1).alias("in2"))
-    w = F.when(
-        F.col("in_u").isNotNull() & F.col("in_v").isNotNull(),
-        F.lit(min_weight)
-        + F.lit(1.0 - min_weight) * F.col("votes") / ensemble_size,
-    ).otherwise(F.lit(min_weight))
-    reweighted = truncate(
-        votes.join(
-            core2.select(F.col("id").alias("u"),
-                         F.col("in2").alias("in_u")),
-            "u", "left",
+        final_graph = Graph.from_undirected(reweighted)
+        final_graph.edges = s.persist(final_graph.edges)
+        out = louvain(final_graph, seed=seed)
+        # vertices present ONLY via self-loops exist in graph.vertices()
+        # (and get labels from plain louvain) but carry no co-clustering
+        # vote and no reweighted edge, so they are absent from final_graph:
+        # restore them as singletons labeled by their own id — collision-
+        # free, since every final_graph community label is the min MEMBER
+        # id of a community these vertices are not in
+        out = truncate(
+            graph.vertices().join(out, "id", "left").select(
+                "id", F.coalesce("community", F.col("id")).alias("community")
+            )
         )
-        .join(
-            core2.select(F.col("id").alias("v"),
-                         F.col("in2").alias("in_v")),
-            "v", "left",
-        )
-        .select(
-            F.col("u").alias("src"),
-            F.col("v").alias("dst"),
-            w.alias("weight"),
-        )
-    )
-
-    final_graph = Graph.from_undirected(reweighted).cache()
-    out = louvain(final_graph, seed=seed)
-    # vertices present ONLY via self-loops exist in graph.vertices()
-    # (and get labels from plain louvain) but carry no co-clustering
-    # vote and no reweighted edge, so they are absent from final_graph:
-    # restore them as singletons labeled by their own id — collision-
-    # free, since every final_graph community label is the min MEMBER
-    # id of a community these vertices are not in
-    out = graph.vertices().join(out, "id", "left").select(
-        "id", F.coalesce("community", F.col("id")).alias("community")
-    )
+        s.keep(out)
     if return_quality:
         # quality reported on the ORIGINAL weights (the reweighting is
         # internal machinery, not the user's objective)
         from graft.quality import modularity
 
-        out = truncate(out)
-        q = modularity(graph.edges, out.select("id", "community"))
-        final_graph.unpersist()
-        drop_spill(reweighted)
-        for df in spills:
-            drop_spill(df)
-        return out, q
-    out = truncate(out)
-    final_graph.unpersist()
-    drop_spill(reweighted)
-    for df in spills:
-        drop_spill(df)
+        return out, modularity(graph.edges, out.select("id", "community"))
     return out

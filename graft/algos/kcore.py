@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, row_count, truncate
+from graft.checkpoint import drop_spill, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -48,37 +48,39 @@ def k_core(graph: Graph, k: int, max_iter: int | None = None) -> DataFrame:
     fixpoint is not reached within the cap, never returning a partial
     result.
     """
-    edges = truncate(
-        graph.without_self_loops().select("src", "dst").distinct()
-    )
-    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-        it = 0
-        while True:
-            it += 1
-            if max_iter is not None and it > max_iter:
-                raise RuntimeError(
-                    f"k_core(k={k}) did not reach its peeling fixpoint "
-                    f"within max_iter={max_iter} rounds"
+    with scratch() as s:
+        edges = truncate(
+            graph.without_self_loops().select("src", "dst").distinct()
+        )
+        with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
+            it = 0
+            while True:
+                it += 1
+                if max_iter is not None and it > max_iter:
+                    raise RuntimeError(
+                        f"k_core(k={k}) did not reach its peeling fixpoint "
+                        f"within max_iter={max_iter} rounds"
+                    )
+                deg = edges.groupBy(F.col("src").alias("id")).agg(
+                    F.count(F.lit(1)).alias("d")
                 )
-            deg = edges.groupBy(F.col("src").alias("id")).agg(
-                F.count(F.lit(1)).alias("d")
-            )
-            survivors = deg.where(F.col("d") >= k).select("id")
-            new_edges = truncate(
-                edges.join(
-                    survivors.withColumnRenamed("id", "src"), "src",
-                    "left_semi",
-                ).join(
-                    survivors.withColumnRenamed("id", "dst"), "dst",
-                    "left_semi",
+                survivors = deg.where(F.col("d") >= k).select("id")
+                new_edges = truncate(
+                    edges.join(
+                        survivors.withColumnRenamed("id", "src"), "src",
+                        "left_semi",
+                    ).join(
+                        survivors.withColumnRenamed("id", "dst"), "dst",
+                        "left_semi",
+                    )
                 )
-            )
-            n_old = row_count(edges)
-            n_new = row_count(new_edges)
-            drop_spill(edges)
-            edges = new_edges
-            if n_new == n_old:
-                break
+                n_old = row_count(edges)
+                n_new = row_count(new_edges)
+                drop_spill(edges)
+                edges = new_edges
+                if n_new == n_old:
+                    break
+        s.keep(edges)
     return edges.select(F.col("src").alias("id")).distinct()
 
 
@@ -148,48 +150,50 @@ def core_number(
     if one_task(graph, sequential_threshold):
         return _sequential_core_number(graph)
 
-    adj = truncate(graph.without_self_loops().select("src", "dst").distinct())
-    verts = graph.vertices()
-    deg = adj.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("core")
-    )
-    cores = truncate(
-        verts.join(deg, "id", "left").select(
-            "id", F.coalesce("core", F.lit(0)).cast("long").alias("core")
+    with scratch() as s:
+        adj = truncate(graph.without_self_loops().select("src", "dst").distinct())
+        verts = graph.vertices()
+        deg = adj.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("core")
         )
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("c"), "dst")
-    with superstep_conf(adj.sparkSession, adj.count()):
-        while True:
-            nbr = adj.join(
-                cores.withColumnRenamed("id", "dst"), "dst"
-            ).select("src", "dst", F.col("core").alias("c"))
-            # neighborhood h-index: max over rank r of min(c_r, r) with
-            # neighbor cores sorted descending
-            h = (
-                nbr.withColumn("r", F.row_number().over(w))
-                .select("src", F.least(F.col("c"), F.col("r")).alias("m"))
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.max("m").alias("h"))
+        cores = truncate(
+            verts.join(deg, "id", "left").select(
+                "id", F.coalesce("core", F.lit(0)).cast("long").alias("core")
             )
-            new_cores = truncate(
-                cores.join(h, "id", "left").select(
-                    "id",
-                    F.least(
-                        "core", F.coalesce("h", F.lit(0))
-                    ).cast("long").alias("core"),
+        )
+        w = Window.partitionBy("src").orderBy(F.desc("c"), "dst")
+        with superstep_conf(adj.sparkSession, row_count(adj)):
+            while True:
+                nbr = adj.join(
+                    cores.withColumnRenamed("id", "dst"), "dst"
+                ).select("src", "dst", F.col("core").alias("c"))
+                # neighborhood h-index: max over rank r of min(c_r, r) with
+                # neighbor cores sorted descending
+                h = (
+                    nbr.withColumn("r", F.row_number().over(w))
+                    .select("src", F.least(F.col("c"), F.col("r")).alias("m"))
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.max("m").alias("h"))
                 )
-            )
-            changed = (
-                new_cores.join(
-                    cores.withColumnRenamed("core", "old"), "id"
+                new_cores = truncate(
+                    cores.join(h, "id", "left").select(
+                        "id",
+                        F.least(
+                            "core", F.coalesce("h", F.lit(0))
+                        ).cast("long").alias("core"),
+                    )
                 )
-                .where(F.col("core") != F.col("old"))
-                .limit(1)
-                .count()
-            )
-            drop_spill(cores)
-            cores = new_cores
-            if changed == 0:
-                break
+                changed = (
+                    new_cores.join(
+                        cores.withColumnRenamed("core", "old"), "id"
+                    )
+                    .where(F.col("core") != F.col("old"))
+                    .limit(1)
+                    .count()
+                )
+                drop_spill(cores)
+                cores = new_cores
+                if changed == 0:
+                    break
+        s.keep(cores)
     return cores

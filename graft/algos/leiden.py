@@ -42,17 +42,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.checkpoint import (
-    Checkpointer,
-    drop_spill,
-    row_count,
-    spill_inputs,
-    truncate,
-    with_spill_inputs,
-)
+from graft.checkpoint import Checkpointer, row_count, scratch, truncate
 from graft.algos.community import (
     Level,
-    _is_persisted,
     aggregate_graph,
     init_level,
     level_counts,
@@ -197,7 +189,7 @@ def refine_partition(
             return pd.DataFrame({"id": [], "refined": []})
         return _refine_bucket_native(nodes_pdf, edges_pdf, gamma, seed)
 
-    out = (
+    return (
         assign.select("id", "community", "agg_count", "s_tot_full",
                       "_b", bucket)
         .groupBy("_g")
@@ -207,8 +199,6 @@ def refine_partition(
         )
         .applyInPandas(fn, schema="id long, refined long")
     )
-    # the spill this lazy result reads: dead once the caller truncates it
-    return with_spill_inputs(out, assign)
 
 
 def _maintained_vertices(
@@ -312,49 +302,40 @@ def _level_loop(
     task and the loop ends. Otherwise BSP local moving
     (:func:`move_nodes`, seed ``seed + level``, one
     ``Checkpointer.save`` per sweep), then the algorithm's contraction
-    step ``contract(lvl, level, n_rows, n_verts, n_moves, spills)``. It
-    gets the moved level, its edge rows and vertex count and the moves
-    committed; it appends every spill it writes to ``spills``; it
-    returns the level's ``(child, parent)`` mapping and the contracted
-    level, or None when the level converged, which ends the loop. With
-    a checkpointer each contracted level's mapping, edges and vertices
-    are saved, and a later call resumes after the deepest level saved
-    whole — identical final labels to an uninterrupted run.
+    step ``contract(lvl, level, n_rows, n_verts, n_moves)``. It gets
+    the moved level, its edge rows and vertex count and the moves
+    committed; it returns the level's ``(child, parent)`` mapping and
+    the contracted level, or None when the level converged, which ends
+    the loop. With a checkpointer each contracted level's mapping,
+    edges and vertices are saved, and a later call resumes after the
+    deepest level saved whole — identical final labels to an
+    uninterrupted run.
 
     ``initial_membership`` seeds level 0's communities (vertices absent
-    from it start as singletons). The caller's cached edge frame is
-    never evicted: only frames this loop persisted are released. The
-    labels fold the mapping chain down to the original vertices and end
-    with the final level's communities; every spill the loop or a step
-    wrote is dropped once they are written, or when the loop raises.
+    from it start as singletons). The labels fold the mapping chain
+    down to the original vertices and end with the final level's
+    communities. The loop's scratch owns every spill the loop or a step
+    writes and every frame it persists; the caller's cached edge frame
+    is never evicted (:meth:`Scratch.persist`), and each level's edges
+    are released once the level is contracted away.
     """
-    base_ids = graph.vertices().persist()
-    level = init_level(graph.edges)
-    if initial_membership is not None:
-        level.vertices = level.vertices.join(
-            initial_membership.withColumnRenamed("community", "_c0"),
-            "id",
-            "left",
-        ).select(
-            "id",
-            F.coalesce("_c0", F.col("id")).alias("community"),
-            "agg_count",
-            "k",
-        )
-    # Ownership (r6): persisting the caller's edge frame returns the
-    # SAME object when it is already cached, so unpersisting it on exit
-    # silently evicted the caller's cache — every later algorithm on
-    # the same Graph re-derived and re-cached the edge table. Only
-    # frames this loop created (contracted levels, or a level-0
-    # persist the caller had not done) are released.
-    owns_edges = not _is_persisted(level.edges)
-    level.edges = level.edges.persist()
-    mappings: list[DataFrame] = []
-    # spills this call writes; all are dead once the final labels are a
-    # leaf of their own
-    spills: list[DataFrame] = []
-    start_lvl = 0
-    try:
+    with scratch() as s:
+        base_ids = s.persist(graph.vertices())
+        level = init_level(graph.edges)
+        if initial_membership is not None:
+            level.vertices = level.vertices.join(
+                initial_membership.withColumnRenamed("community", "_c0"),
+                "id",
+                "left",
+            ).select(
+                "id",
+                F.coalesce("_c0", F.col("id")).alias("community"),
+                "agg_count",
+                "k",
+            )
+        level.edges = s.persist(level.edges)
+        mappings: list[DataFrame] = []
+        start_lvl = 0
         if checkpointer is not None:
             # mid-aggregation-level resume (north_rule): reload the
             # deepest fully-persisted level (edges + vertices + mapping)
@@ -371,13 +352,11 @@ def _level_loop(
                     checkpointer.load_table(f"level={k}/mapping")
                     for k in range(done + 1)
                 ]
-                loaded = Level(
+                s.release(level.edges)
+                level = Level(
                     edges=checkpointer.load_table(f"level={done}/edges"),
                     vertices=checkpointer.load_table(f"level={done}/vertices"),
                 )
-                if owns_edges:
-                    level.edges.unpersist()
-                level, owns_edges = loaded, True
                 start_lvl = done + 1
         tail_at_base = False
         for lvl in range(start_lvl, max_levels):
@@ -396,15 +375,12 @@ def _level_loop(
                 # set: the label fold would be an identity join (no
                 # mappings, tail covers every base id) — skip it (r6)
                 tail_at_base = lvl == 0
-                if not tail_at_base:
-                    spills.append(tail)
                 break
 
             # the BSP path reads the level's edge table several times; a
             # contracted level's table is a parquet leaf, cached only
             # here (a tail level reads it once)
-            if not _is_persisted(level.edges):
-                level.edges = level.edges.persist()
+            level.edges = s.persist(level.edges)
 
             def _on_sweep(it, n_moves, verts, _lvl=lvl):
                 if checkpointer is not None:
@@ -418,8 +394,7 @@ def _level_loop(
                 max_sweeps=max_sweeps, seed=seed + lvl, on_sweep=_on_sweep,
                 n_edge_rows=n_rows,
             )
-            spills.append(level.vertices)
-            step = contract(lvl, level, n_rows, n_verts, n_moves, spills)
+            step = contract(lvl, level, n_rows, n_verts, n_moves)
             if step is None:
                 break
             mapping, nxt = step
@@ -432,27 +407,22 @@ def _level_loop(
                         f"level={lvl}/vertices", nxt.vertices
                     ),
                 )
-            if owns_edges:
-                level.edges.unpersist()
-            level, owns_edges = nxt, True
+            s.release(level.edges)
+            level = nxt
 
-        final = level.vertices.select("id", "community")
-        if not tail_at_base:
+        if tail_at_base:
             # level-0 tail: its output IS the final label table, already
-            # a truncated leaf over the base vertex set; otherwise fold
-            # orig id → coarsest node → that node's final community
-            final = truncate(propagate_labels(base_ids, mappings + [
-                final.select(
-                    F.col("id").alias("child"),
-                    F.col("community").alias("parent"),
-                )
-            ]))
-    finally:
-        base_ids.unpersist()
-        if owns_edges:
-            level.edges.unpersist()
-        for df in spills:
-            drop_spill(df)
+            # a truncated leaf over the base vertex set
+            s.keep(level.vertices)
+            return level.vertices.select("id", "community")
+        # fold orig id → coarsest node → that node's final community
+        final = truncate(propagate_labels(base_ids, mappings + [
+            level.vertices.select(
+                F.col("id").alias("child"),
+                F.col("community").alias("parent"),
+            )
+        ]))
+        s.keep(final)
     return final
 
 
@@ -503,7 +473,7 @@ def leiden(
     by the refined one; a level converges when local moving leaves every
     node singleton or refinement does."""
 
-    def contract(lvl, level, n_rows, n_verts, n_moves, spills):
+    def contract(lvl, level, n_rows, n_verts, n_moves):
         spark = level.edges.sparkSession
         with superstep_conf(spark, n_rows) as sp:
             # A8 convergence (custom_leiden.py:601-609): every community
@@ -523,10 +493,8 @@ def leiden(
                     n_rows, spark.sparkContext.defaultParallelism, sp,
                 )),
             )
-            lazy_refined = refine_partition(level, gamma, seed + lvl)
-            refined = truncate(lazy_refined)
+            refined = truncate(refine_partition(level, gamma, seed + lvl))
             spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-            spills += [refined, *spill_inputs(lazy_refined)]
             new_edges = truncate(
                 aggregate_graph(
                     level.edges,
@@ -536,7 +504,6 @@ def leiden(
             new_vertices = truncate(
                 _maintained_vertices(level.vertices, refined, new_edges)
             )
-            spills += [new_edges, new_vertices]
         # each refined community is one supernode, so as many supernodes
         # as vertices means refinement kept every node singleton
         if row_count(new_vertices) == n_verts:

@@ -66,7 +66,7 @@ def louvain(
     ``sequential_tail_edges=0`` forces the BSP path at every level."""
     m = graph.total_edge_weight()
 
-    def contract(lvl, level, n_rows, n_verts, n_moves, spills):
+    def contract(lvl, level, n_rows, n_verts, n_moves):
         if n_moves == 0:
             return None
         # one bookkeeping job per level (AQE off, as in leiden)
@@ -77,7 +77,6 @@ def louvain(
         if n_comms == n_verts:
             return None  # no compression — converged
         new_edges = truncate(aggregate_graph(level.edges, level.vertices))
-        spills.append(new_edges)
         mapping = level.vertices.select(
             F.col("id").alias("child"), F.col("community").alias("parent")
         )

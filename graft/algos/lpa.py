@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import Checkpointer, truncate
+from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -43,35 +43,37 @@ def label_propagation(
     bit-identity with a cold one; vertices absent from the seed (new
     actors) start as their own label.
     """
-    edges = graph.without_self_loops().persist()
-    labels = graph.vertices().select("id", F.col("id").alias("label"))
-    if initial_labels is not None:
-        labels = (
-            labels.join(
-                initial_labels.select(
-                    "id", F.col("label").alias("_seed")
-                ),
-                "id",
-                "left",
+    with scratch() as s:
+        edges = s.persist(graph.without_self_loops())
+        labels = graph.vertices().select("id", F.col("id").alias("label"))
+        if initial_labels is not None:
+            labels = (
+                labels.join(
+                    initial_labels.select(
+                        "id", F.col("label").alias("_seed")
+                    ),
+                    "id",
+                    "left",
+                )
+                .select("id", F.coalesce("_seed", F.col("label")).alias("label"))
             )
-            .select("id", F.coalesce("_seed", F.col("label")).alias("label"))
-        )
-    labels = truncate(labels)
-    with superstep_conf(edges.sparkSession, graph.edge_rows()):
-        for it in range(max_iter):
-            new_labels = lpa_round(edges, labels)
-            new_labels = truncate(new_labels)
-            changed = (
-                new_labels.join(labels.withColumnRenamed("label", "old"), "id")
-                .where(F.col("label") != F.col("old"))
-                .count()
-            )
-            labels = new_labels
-            if checkpointer is not None:
-                labels = checkpointer.save(it, labels, algo="lpa", changed=changed)
-            if changed == 0:
-                break
-    edges.unpersist()
+        labels = truncate(labels)
+        with superstep_conf(edges.sparkSession, graph.edge_rows()):
+            for it in range(max_iter):
+                new_labels = lpa_round(edges, labels)
+                new_labels = truncate(new_labels)
+                changed = (
+                    new_labels.join(labels.withColumnRenamed("label", "old"), "id")
+                    .where(F.col("label") != F.col("old"))
+                    .count()
+                )
+                drop_spill(labels)
+                labels = new_labels
+                if checkpointer is not None:
+                    labels = checkpointer.save(it, labels, algo="lpa", changed=changed)
+                if changed == 0:
+                    break
+        s.keep(labels)
     return labels
 
 

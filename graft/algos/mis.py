@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
 from graft.algos.priority import hash_priority
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -37,73 +37,66 @@ def maximal_independent_set(graph: Graph, seed: int = 42) -> DataFrame:
     Deterministic for a given (graph, seed)."""
     verts = graph.vertices_cached()
     spark = graph.edges.sparkSession
-    adj = truncate(
-        graph.without_self_loops().select("src", "dst").distinct()
-    )
-    spills = [adj]
-
-    def _t(df: DataFrame) -> DataFrame:
-        out = truncate(df)
-        spills.append(out)
-        return out
-
-    undecided = _t(verts.select("id"))
-    chosen_parts: list[DataFrame] = []
-    with superstep_conf(spark, adj.count()):
-        while undecided.limit(1).count() > 0:
-            # edges whose both endpoints are still undecided
-            live = (
-                adj.join(undecided.withColumnRenamed("id", "src"), "src")
-                .join(undecided.withColumnRenamed("id", "dst"), "dst")
-            )
-            nb_min = (
-                live.join(
-                    undecided.select(
-                        F.col("id").alias("dst"),
-                        F.struct(
-                            hash_priority(F.col("id"), seed).alias("p"),
-                            F.col("id").alias("i"),
-                        ).alias("np"),
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("np").alias("nmin"))
-            )
-            winners = _t(
-                undecided.join(nb_min, "id", "left")
-                .where(
-                    F.col("nmin").isNull()
-                    | (
-                        F.struct(
-                            hash_priority(F.col("id"), seed).alias("p"),
-                            F.col("id").alias("i"),
-                        )
-                        < F.col("nmin")
-                    )
-                )
-                .select("id")
-            )
-            chosen_parts.append(winners)
-            # retire winners and everything adjacent to a winner
-            retired = winners.unionAll(
-                adj.join(
-                    winners.withColumnRenamed("id", "src"), "src"
-                ).select(F.col("dst").alias("id"))
-            ).distinct()
-            undecided = _t(
-                undecided.join(retired, "id", "left_anti")
-            )
-        mis = chosen_parts[0] if chosen_parts else verts.limit(0)
-        for p in chosen_parts[1:]:
-            mis = mis.unionAll(p)
-        out = truncate(
-            verts.join(
-                mis.withColumn("in_mis", F.lit(True)), "id", "left"
-            ).select(
-                "id", F.coalesce("in_mis", F.lit(False)).alias("in_mis")
-            )
+    with scratch() as s:
+        adj = truncate(
+            graph.without_self_loops().select("src", "dst").distinct()
         )
-        for df in spills:
-            drop_spill(df)
+        undecided = truncate(verts.select("id"))
+        chosen_parts: list[DataFrame] = []
+        with superstep_conf(spark, row_count(adj)):
+            while undecided.limit(1).count() > 0:
+                # edges whose both endpoints are still undecided
+                live = (
+                    adj.join(undecided.withColumnRenamed("id", "src"), "src")
+                    .join(undecided.withColumnRenamed("id", "dst"), "dst")
+                )
+                nb_min = (
+                    live.join(
+                        undecided.select(
+                            F.col("id").alias("dst"),
+                            F.struct(
+                                hash_priority(F.col("id"), seed).alias("p"),
+                                F.col("id").alias("i"),
+                            ).alias("np"),
+                        ),
+                        "dst",
+                    )
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.min("np").alias("nmin"))
+                )
+                winners = truncate(
+                    undecided.join(nb_min, "id", "left")
+                    .where(
+                        F.col("nmin").isNull()
+                        | (
+                            F.struct(
+                                hash_priority(F.col("id"), seed).alias("p"),
+                                F.col("id").alias("i"),
+                            )
+                            < F.col("nmin")
+                        )
+                    )
+                    .select("id")
+                )
+                chosen_parts.append(winners)
+                # retire winners and everything adjacent to a winner
+                retired = winners.unionAll(
+                    adj.join(
+                        winners.withColumnRenamed("id", "src"), "src"
+                    ).select(F.col("dst").alias("id"))
+                ).distinct()
+                undecided = truncate(
+                    undecided.join(retired, "id", "left_anti")
+                )
+            mis = chosen_parts[0] if chosen_parts else verts.limit(0)
+            for p in chosen_parts[1:]:
+                mis = mis.unionAll(p)
+            out = truncate(
+                verts.join(
+                    mis.withColumn("in_mis", F.lit(True)), "id", "left"
+                ).select(
+                    "id", F.coalesce("in_mis", F.lit(False)).alias("in_mis")
+                )
+            )
+        s.keep(out)
     return out

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.algos.components import connected_components
-from graft.checkpoint import Checkpointer, drop_spill, truncate
+from graft.checkpoint import Checkpointer, drop_spill, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -127,108 +127,110 @@ def minimum_spanning_forest(
             forest = combined.where(F.col("kind") == "f").select(
                 "u", "v", "weight"
             )
-    if work is None:
-        work = truncate(
-            cand.select(
-                F.col("u").alias("a"), F.col("v").alias("b"),
-                "weight", "u", "v",
-            )
-        )
-    if work.limit(1).count() == 0:
-        return forest
-    with superstep_conf(spark, graph.edge_rows()):
-        for rnd in range(start, max_iter):
-            e_struct = F.struct("weight", "u", "v", "a", "b").alias("e")
-            offers = work.select(F.col("a").alias("comp"), e_struct).unionAll(
-                work.select(F.col("b").alias("comp"), e_struct)
-            )
-            grabbed = (
-                offers.groupBy("comp")
-                .agg(F.min("e").alias("e"))
-                .select("e.*")
-                .distinct()
-            )
-            grabbed = truncate(grabbed)
-            prev_forest = forest
-            forest = truncate(
-                forest.unionByName(grabbed.select("u", "v", "weight"))
-            )
-            drop_spill(prev_forest)  # no-op on the initial empty frame
-            # merge graph: one vertex per component, the grabbed edges
-            # as links — geometrically small, engine CC dispatches it
-            # to the union-find task as soon as it fits a batch
-            merge = Graph.from_undirected(
-                grabbed.select(
-                    F.col("a").alias("src"), F.col("b").alias("dst"),
-                    F.lit(1.0).alias("weight"),
-                )
-            )
-            cc = truncate(connected_components(merge))
-            relabeled = (
-                work.join(
-                    cc.select(F.col("id").alias("a"),
-                              F.col("comp").alias("na")),
-                    "a", "left",
-                )
-                .join(
-                    cc.select(F.col("id").alias("b"),
-                              F.col("comp").alias("nb")),
-                    "b", "left",
-                )
-                .select(
-                    F.coalesce("na", "a").alias("ra"),
-                    F.coalesce("nb", "b").alias("rb"),
+    with scratch() as s:
+        if work is None:
+            work = truncate(
+                cand.select(
+                    F.col("u").alias("a"), F.col("v").alias("b"),
                     "weight", "u", "v",
                 )
-                .where(F.col("ra") != F.col("rb"))
             )
-            # contract: between any two merged components only the
-            # minimum edge can ever be grabbed — keep exactly that one
-            contracted = (
-                relabeled.select(
-                    F.least("ra", "rb").alias("a"),
-                    F.greatest("ra", "rb").alias("b"),
-                    F.struct("weight", "u", "v").alias("e"),
+        if work.limit(1).count() == 0:
+            return forest
+        with superstep_conf(spark, graph.edge_rows()):
+            for rnd in range(start, max_iter):
+                e_struct = F.struct("weight", "u", "v", "a", "b").alias("e")
+                offers = work.select(F.col("a").alias("comp"), e_struct).unionAll(
+                    work.select(F.col("b").alias("comp"), e_struct)
                 )
-                .groupBy("a", "b")
-                .agg(F.min("e").alias("e"))
-                .select("a", "b", "e.*")
-            )
-            prev, prev_grab, prev_cc = work, grabbed, cc
-            work = truncate(contracted)
-            drop_spill(prev)
-            drop_spill(prev_grab)
-            drop_spill(prev_cc)
-            if checkpointer is not None:
-                combined = work.select(
-                    F.lit("w").alias("kind"), "a", "b", "weight", "u", "v"
-                ).unionByName(
-                    forest.select(
-                        F.lit("f").alias("kind"),
-                        F.lit(None).cast(schema_id).alias("a"),
-                        F.lit(None).cast(schema_id).alias("b"),
-                        "weight", "u", "v",
+                grabbed = (
+                    offers.groupBy("comp")
+                    .agg(F.min("e").alias("e"))
+                    .select("e.*")
+                    .distinct()
+                )
+                grabbed = truncate(grabbed)
+                prev_forest = forest
+                forest = truncate(
+                    forest.unionByName(grabbed.select("u", "v", "weight"))
+                )
+                drop_spill(prev_forest)  # no-op on the initial empty frame
+                # merge graph: one vertex per component, the grabbed edges
+                # as links — geometrically small, engine CC dispatches it
+                # to the union-find task as soon as it fits a batch
+                merge = Graph.from_undirected(
+                    grabbed.select(
+                        F.col("a").alias("src"), F.col("b").alias("dst"),
+                        F.lit(1.0).alias("weight"),
                     )
                 )
-                saved = checkpointer.save(
-                    rnd, combined, algo="msf",
-                    n_work=work.count(), n_forest=forest.count(),
+                cc = truncate(connected_components(merge))
+                relabeled = (
+                    work.join(
+                        cc.select(F.col("id").alias("a"),
+                                  F.col("comp").alias("na")),
+                        "a", "left",
+                    )
+                    .join(
+                        cc.select(F.col("id").alias("b"),
+                                  F.col("comp").alias("nb")),
+                        "b", "left",
+                    )
+                    .select(
+                        F.coalesce("na", "a").alias("ra"),
+                        F.coalesce("nb", "b").alias("rb"),
+                        "weight", "u", "v",
+                    )
+                    .where(F.col("ra") != F.col("rb"))
                 )
-                work = saved.where(F.col("kind") == "w").select(
-                    "a", "b", "weight", "u", "v"
+                # contract: between any two merged components only the
+                # minimum edge can ever be grabbed — keep exactly that one
+                contracted = (
+                    relabeled.select(
+                        F.least("ra", "rb").alias("a"),
+                        F.greatest("ra", "rb").alias("b"),
+                        F.struct("weight", "u", "v").alias("e"),
+                    )
+                    .groupBy("a", "b")
+                    .agg(F.min("e").alias("e"))
+                    .select("a", "b", "e.*")
                 )
-                forest = saved.where(F.col("kind") == "f").select(
-                    "u", "v", "weight"
+                prev, prev_grab, prev_cc = work, grabbed, cc
+                work = truncate(contracted)
+                drop_spill(prev)
+                drop_spill(prev_grab)
+                drop_spill(prev_cc)
+                if checkpointer is not None:
+                    combined = work.select(
+                        F.lit("w").alias("kind"), "a", "b", "weight", "u", "v"
+                    ).unionByName(
+                        forest.select(
+                            F.lit("f").alias("kind"),
+                            F.lit(None).cast(schema_id).alias("a"),
+                            F.lit(None).cast(schema_id).alias("b"),
+                            "weight", "u", "v",
+                        )
+                    )
+                    saved = checkpointer.save(
+                        rnd, combined, algo="msf",
+                        n_work=row_count(work), n_forest=row_count(forest),
+                    )
+                    work = saved.where(F.col("kind") == "w").select(
+                        "a", "b", "weight", "u", "v"
+                    )
+                    forest = saved.where(F.col("kind") == "f").select(
+                        "u", "v", "weight"
+                    )
+                # emptiness checked AFTER contraction so a run that needs
+                # exactly max_iter rounds completes instead of raising
+                if work.limit(1).count() == 0:
+                    break
+            else:
+                raise RuntimeError(
+                    f"minimum_spanning_forest did not converge within "
+                    f"max_iter={max_iter} rounds"
                 )
-            # emptiness checked AFTER contraction so a run that needs
-            # exactly max_iter rounds completes instead of raising
-            if work.limit(1).count() == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"minimum_spanning_forest did not converge within "
-                f"max_iter={max_iter} rounds"
-            )
+        s.keep(forest)
     return forest
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import Checkpointer, drop_spill, truncate
+from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -187,163 +187,163 @@ def pagerank(
             has_r0=initial_ranks is not None,
         )
 
-    e_df = None
-    if sources:
-        e_df = truncate(hits.select("id", F.lit(1.0 / n_src).alias("e")))
+    with scratch() as s:
+        e_df = None
+        if sources:
+            e_df = truncate(hits.select("id", F.lit(1.0 / n_src).alias("e")))
 
-    out_w = graph.edges.groupBy("src").agg(F.sum("weight").alias("s"))
-    if join_strategy == "copartition":
-        # The 10^12-vertex configuration: the rank table cannot be
-        # broadcast, so the transition table is pre-partitioned by the
-        # join key once (memoized on the Graph) — every superstep then
-        # shuffles ONLY the small rank table to the matching
-        # partitioning, and the edge table is probed in place (no
-        # per-superstep driver-side broadcast build, no edge shuffle).
-        # Pair with autoBroadcastJoinThreshold=-1,
-        # preferSortMergeJoin=false and AQE partition coalescing off so
-        # the co-partitioning is preserved (see bench.scaling_run).
-        trans = graph.transition(copartitioned=True)
-    else:
-        trans = graph.transition()  # memoized on the Graph
-
-    start = 0
-    ranks = None
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            start, ranks = resumed
-            start += 1
-    if ranks is None:
-        if initial_ranks is not None:
-            # warm start, renormalized so the invariant Σrank = 1 holds
-            # even when the vertex set changed since r0 was computed
-            warm = verts.join(
-                initial_ranks.withColumnRenamed("rank", "_r0"), "id", "left"
-            ).select("id", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"))
-            warm = truncate(warm)
-            s0 = warm.agg(F.sum("rank")).first()[0] or 1.0
-            prev = warm
-            ranks = truncate(
-                warm.select("id", (F.col("rank") / F.lit(s0)).alias("rank"))
-            )
-            drop_spill(prev)
-        elif e_df is not None:
-            ranks = truncate(
-                verts.join(e_df, "id", "left").select(
-                    "id", F.coalesce("e", F.lit(0.0)).alias("rank")
-                )
-            )
+        out_w = graph.edges.groupBy("src").agg(F.sum("weight").alias("s"))
+        if join_strategy == "copartition":
+            # The 10^12-vertex configuration: the rank table cannot be
+            # broadcast, so the transition table is pre-partitioned by the
+            # join key once (memoized on the Graph) — every superstep then
+            # shuffles ONLY the small rank table to the matching
+            # partitioning, and the edge table is probed in place (no
+            # per-superstep driver-side broadcast build, no edge shuffle).
+            # Pair with autoBroadcastJoinThreshold=-1,
+            # preferSortMergeJoin=false and AQE partition coalescing off so
+            # the co-partitioning is preserved (see bench.scaling_run).
+            trans = graph.transition(copartitioned=True)
         else:
-            ranks = truncate(verts.select("id", F.lit(1.0 / n).alias("rank")))
+            trans = graph.transition()  # memoized on the Graph
 
-    # Structural probes, skipped entirely on the symmetrized Graph
-    # contract (graph.symmetric: src/dst vertex sets coincide, so every
-    # vertex has both in- and out-edges):
-    # - dangling vertices (no out-edges) need their mass redistributed;
-    # - source vertices (out-edges but no in-edges — possible on raw
-    #   directed input even with zero danglings) receive no inflow, so
-    #   the fill join must run or they silently lose their teleport mass.
-    # Each probe is a full shuffle over the edge table — at 10^12 turns
-    # these one-per-call jobs cost as much as several supersteps, which
-    # is why the contract flag matters.
-    dangling_ids = None
-    has_dangling = False
-    needs_fill = False
-    if not graph.symmetric:
-        dangling_ids = verts.join(
-            out_w, verts.id == out_w.src, "left_anti"
-        ).persist()
-        has_dangling = dangling_ids.limit(1).count() > 0
-        in_dsts = graph.edges.select(F.col("dst").alias("id")).distinct()
-        needs_fill = has_dangling or (
-            verts.join(in_dsts, "id", "left_anti").limit(1).count() > 0
-        )
-
-    # data-sized reducers + AQE off for the superstep loop — same
-    # latency rationale as community.superstep_conf
-    with superstep_conf(spark, graph.edge_rows()):
-        teleport = (1.0 - alpha) / n
-        if fixed_iterations is not None:
-            max_iter = fixed_iterations
-        for it in range(start, max_iter):
-            dangling = 0.0
-            if has_dangling:
-                dangling = (
-                    ranks.join(dangling_ids, "id", "left_semi")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                    .first()[0]
+        start = 0
+        ranks = None
+        if checkpointer is not None:
+            resumed = checkpointer.resume()
+            if resumed is not None:
+                start, ranks = resumed
+                start += 1
+        if ranks is None:
+            if initial_ranks is not None:
+                # warm start, renormalized so the invariant Σrank = 1 holds
+                # even when the vertex set changed since r0 was computed
+                warm = verts.join(
+                    initial_ranks.withColumnRenamed("rank", "_r0"), "id", "left"
+                ).select("id", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"))
+                warm = truncate(warm)
+                s0 = warm.agg(F.sum("rank")).first()[0] or 1.0
+                prev = warm
+                ranks = truncate(
+                    warm.select("id", (F.col("rank") / F.lit(s0)).alias("rank"))
                 )
-            base = teleport + alpha * dangling / n
-            inflow = (
-                trans.join(ranks, trans.src == ranks.id)
-                .groupBy(trans.dst.alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("p")).alias("inflow"))
-            )
-            if e_df is not None:
-                # personalized teleport: base mass lands on the source
-                # set only (tiny broadcast join), everyone else keeps
-                # just their alpha-damped inflow
-                new_ranks = (
-                    verts.join(inflow, "id", "left")
-                    .join(e_df, "id", "left")
-                    .select(
-                        "id",
-                        (
-                            F.lit(1.0 - alpha) * F.coalesce("e", F.lit(0.0))
-                            + F.lit(alpha * dangling)
-                            * F.coalesce("e", F.lit(0.0))
-                            + F.lit(alpha)
-                            * F.coalesce("inflow", F.lit(0.0))
-                        ).alias("rank"),
+                drop_spill(prev)
+            elif e_df is not None:
+                ranks = truncate(
+                    verts.join(e_df, "id", "left").select(
+                        "id", F.coalesce("e", F.lit(0.0)).alias("rank")
                     )
                 )
-            elif needs_fill:
-                new_ranks = verts.join(inflow, "id", "left").select(
-                    "id",
-                    (
-                        F.lit(base)
-                        + F.lit(alpha) * F.coalesce("inflow", F.lit(0.0))
-                    ).alias("rank"),
-                )
             else:
-                new_ranks = inflow.select(
-                    "id",
-                    (F.lit(base) + F.lit(alpha) * F.col("inflow")).alias("rank"),
-                )
+                ranks = truncate(verts.select("id", F.lit(1.0 / n).alias("rank")))
 
-            if fixed_iterations is not None:
-                last = it == max_iter - 1
-                if last or (it + 1 - start) % truncate_every == 0:
-                    new_ranks = truncate(new_ranks)
-                    drop_spill(ranks)
-                ranks = new_ranks
-                continue
-
-            # convergence probe rides the spill write via observe():
-            # the L1 delta is collected DURING the truncate action, so
-            # each superstep is ONE job instead of write + join-agg
-            # (prev ranks are a truncated parquet leaf, so referencing
-            # them twice in this one plan is stats-safe)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            paired = new_ranks.join(
-                ranks.select("id", F.col("rank").alias("_old")), "id"
-            ).observe(
-                obs, F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1")
+        # Structural probes, skipped entirely on the symmetrized Graph
+        # contract (graph.symmetric: src/dst vertex sets coincide, so every
+        # vertex has both in- and out-edges):
+        # - dangling vertices (no out-edges) need their mass redistributed;
+        # - source vertices (out-edges but no in-edges — possible on raw
+        #   directed input even with zero danglings) receive no inflow, so
+        #   the fill join must run or they silently lose their teleport mass.
+        # Each probe is a full shuffle over the edge table — at 10^12 turns
+        # these one-per-call jobs cost as much as several supersteps, which
+        # is why the contract flag matters.
+        dangling_ids = None
+        has_dangling = False
+        needs_fill = False
+        if not graph.symmetric:
+            dangling_ids = s.persist(verts.join(
+                out_w, verts.id == out_w.src, "left_anti"
+            ))
+            has_dangling = dangling_ids.limit(1).count() > 0
+            in_dsts = graph.edges.select(F.col("dst").alias("id")).distinct()
+            needs_fill = has_dangling or (
+                verts.join(in_dsts, "id", "left_anti").limit(1).count() > 0
             )
-            new_ranks = truncate(paired.select("id", "rank"))
-            delta = obs.get["l1"]
-            drop_spill(ranks)
-            ranks = new_ranks
-            if checkpointer is not None:
-                ranks = checkpointer.save(it, ranks, algo="pagerank", l1_delta=delta)
-                drop_spill(new_ranks)
-            if delta < tol:
-                break
 
-    if dangling_ids is not None:
-        dangling_ids.unpersist()
+        # data-sized reducers + AQE off for the superstep loop — same
+        # latency rationale as community.superstep_conf
+        with superstep_conf(spark, graph.edge_rows()):
+            teleport = (1.0 - alpha) / n
+            if fixed_iterations is not None:
+                max_iter = fixed_iterations
+            for it in range(start, max_iter):
+                dangling = 0.0
+                if has_dangling:
+                    dangling = (
+                        ranks.join(dangling_ids, "id", "left_semi")
+                        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+                        .first()[0]
+                    )
+                base = teleport + alpha * dangling / n
+                inflow = (
+                    trans.join(ranks, trans.src == ranks.id)
+                    .groupBy(trans.dst.alias("id"))
+                    .agg(F.sum(F.col("rank") * F.col("p")).alias("inflow"))
+                )
+                if e_df is not None:
+                    # personalized teleport: base mass lands on the source
+                    # set only (tiny broadcast join), everyone else keeps
+                    # just their alpha-damped inflow
+                    new_ranks = (
+                        verts.join(inflow, "id", "left")
+                        .join(e_df, "id", "left")
+                        .select(
+                            "id",
+                            (
+                                F.lit(1.0 - alpha) * F.coalesce("e", F.lit(0.0))
+                                + F.lit(alpha * dangling)
+                                * F.coalesce("e", F.lit(0.0))
+                                + F.lit(alpha)
+                                * F.coalesce("inflow", F.lit(0.0))
+                            ).alias("rank"),
+                        )
+                    )
+                elif needs_fill:
+                    new_ranks = verts.join(inflow, "id", "left").select(
+                        "id",
+                        (
+                            F.lit(base)
+                            + F.lit(alpha) * F.coalesce("inflow", F.lit(0.0))
+                        ).alias("rank"),
+                    )
+                else:
+                    new_ranks = inflow.select(
+                        "id",
+                        (F.lit(base) + F.lit(alpha) * F.col("inflow")).alias("rank"),
+                    )
+
+                if fixed_iterations is not None:
+                    last = it == max_iter - 1
+                    if last or (it + 1 - start) % truncate_every == 0:
+                        new_ranks = truncate(new_ranks)
+                        drop_spill(ranks)
+                    ranks = new_ranks
+                    continue
+
+                # convergence probe rides the spill write via observe():
+                # the L1 delta is collected DURING the truncate action, so
+                # each superstep is ONE job instead of write + join-agg
+                # (prev ranks are a truncated parquet leaf, so referencing
+                # them twice in this one plan is stats-safe)
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                paired = new_ranks.join(
+                    ranks.select("id", F.col("rank").alias("_old")), "id"
+                ).observe(
+                    obs, F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1")
+                )
+                new_ranks = truncate(paired.select("id", "rank"))
+                delta = obs.get["l1"]
+                drop_spill(ranks)
+                ranks = new_ranks
+                if checkpointer is not None:
+                    ranks = checkpointer.save(it, ranks, algo="pagerank", l1_delta=delta)
+                    drop_spill(new_ranks)
+                if delta < tol:
+                    break
+
+        s.keep(ranks)
     # verts is the Graph's memoized vertex table — stays cached for the
     # next algorithm on the same Graph (Graph.unpersist releases it)
     return ranks
@@ -388,28 +388,30 @@ def batch_personalized_pagerank(
         F.col("id").alias("source"), "id", F.lit(1.0).alias("rank")
     )
     trans = graph.transition()
-    state = truncate(seeds)
-    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-        for _ in range(fixed_iterations):
-            gather = (
-                state.join(trans.withColumnRenamed("src", "id"), "id")
-                .groupBy("source", F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("p")).alias("g"))
-            )
-            parts = gather.select(
-                "source", "id", (F.lit(alpha) * F.col("g")).alias("r")
-            ).unionAll(
-                seeds.select(
-                    "source", "id", F.lit(1.0 - alpha).alias("r")
+    with scratch() as s:
+        state = truncate(seeds)
+        with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
+            for _ in range(fixed_iterations):
+                gather = (
+                    state.join(trans.withColumnRenamed("src", "id"), "id")
+                    .groupBy("source", F.col("dst").alias("id"))
+                    .agg(F.sum(F.col("rank") * F.col("p")).alias("g"))
                 )
-            )
-            nxt = truncate(
-                parts.groupBy("source", "id").agg(
-                    F.sum("r").alias("rank")
+                parts = gather.select(
+                    "source", "id", (F.lit(alpha) * F.col("g")).alias("r")
+                ).unionAll(
+                    seeds.select(
+                        "source", "id", F.lit(1.0 - alpha).alias("r")
+                    )
                 )
-            )
-            drop_spill(state)
-            state = nxt
+                nxt = truncate(
+                    parts.groupBy("source", "id").agg(
+                        F.sum("r").alias("rank")
+                    )
+                )
+                drop_spill(state)
+                state = nxt
+        s.keep(state)
     srcs = seeds.select("source")
     return (
         verts.crossJoin(F.broadcast(srcs))

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import scratch, truncate
 from graft.graph import Graph
 
 _LCG_M = 2147483647
@@ -85,136 +85,129 @@ def neighbor_sample(
     # memoized simple adjacency on the Graph (r6): shared leaf with
     # betweenness/WL; only a max_degree truncation spills its own copy
     adj, n_adj = graph.simple_adjacency()
-    if max_degree is not None:
-        adj = (
-            adj.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("src").orderBy(
-                        _score(
-                            F.col("src"), F.col("src"), F.col("dst"),
-                            0, seed,
-                        ),
-                        "dst",
-                    )
-                ),
-            )
-            .where(F.col("rn") <= max_degree)
-            .drop("rn")
-        )
-        adj = truncate(adj)
-        spills = [adj]
-    else:
-        spills = []
-    if roots is None:
-        roots = graph.vertices()
-    spark = graph.edges.sparkSession
-    frontier = roots.select(F.col("id").cast("long").alias("root"))
-    frontier = frontier.select("root", F.col("root").alias("id"))
-    parts: list[DataFrame] = []
-    with superstep_conf(spark, n_adj) as sp:
-        # Array fast path (r6), engaged when ``max_degree`` bounds the
-        # per-vertex adjacency: collapse each vertex's (truncated)
-        # neighbor list into ONE array row, hash-partitioned by vertex
-        # and cached for all hops. Each hop is then a keyed join of the
-        # frontier against the array table plus per-row array ops in
-        # codegen — score every element, array_sort by (score, dst),
-        # slice the fanout prefix, explode. The old plan shuffled and
-        # SORTED the full candidate-edge expansion (Σ deg(frontier)
-        # rows — ~100M on the 2M-edge bench hop 2) through a window per
-        # hop; this one shuffles only the frontier (the array table is
-        # partitioned once). Selected rows are IDENTICAL: array_sort on
-        # struct(score, dst) is the same (score asc, dst asc) total
-        # order as the window's row_number. Without ``max_degree`` a hub
-        # row would be unbounded, so the window path (whose
-        # WindowGroupLimit pre-filters map-side) stays — at 100 TB the
-        # documented hub mitigation is to set max_degree.
-        arrays = max_degree is not None
-        if arrays:
-            adj_arr = (
-                adj.groupBy(F.col("src").alias("id"))
-                .agg(F.collect_list("dst").alias("_dsts"))
-                .repartition(sp, "id")
-                .persist()
-            )
-            adj_arr.count()
-
-        def _hop_scored(h: int, fanout: int) -> DataFrame:
-            def elem_score(d):
-                return (
-                    (
-                        d
-                        + 31 * F.col("root")
-                        + F.lit(97 * h + seed)
-                    )
-                    % _LCG_M
-                    * F.lit(_LCG_A)
-                ) % _LCG_M
-
-            top = F.slice(
-                F.array_sort(
-                    F.transform(
-                        "_dsts",
-                        lambda d: F.struct(
-                            elem_score(d).alias("s"), d.alias("dst")
-                        ),
-                    )
-                ),
-                1,
-                fanout,
-            )
-            return (
-                frontier.join(adj_arr, "id")
-                .select(
-                    "root",
-                    F.lit(h).alias("hop"),
-                    F.col("id").alias("src"),
-                    F.explode(
-                        F.transform(top, lambda x: x["dst"])
-                    ).alias("dst"),
+    with scratch() as s:
+        if max_degree is not None:
+            adj = (
+                adj.withColumn(
+                    "rn",
+                    F.row_number().over(
+                        Window.partitionBy("src").orderBy(
+                            _score(
+                                F.col("src"), F.col("src"), F.col("dst"),
+                                0, seed,
+                            ),
+                            "dst",
+                        )
+                    ),
                 )
+                .where(F.col("rn") <= max_degree)
+                .drop("rn")
             )
-
-        for h, fanout in enumerate(fanouts, start=1):
+            adj = truncate(adj)
+        if roots is None:
+            roots = graph.vertices()
+        spark = graph.edges.sparkSession
+        frontier = roots.select(F.col("id").cast("long").alias("root"))
+        frontier = frontier.select("root", F.col("root").alias("id"))
+        parts: list[DataFrame] = []
+        with superstep_conf(spark, n_adj) as sp:
+            # Array fast path (r6), engaged when ``max_degree`` bounds the
+            # per-vertex adjacency: collapse each vertex's (truncated)
+            # neighbor list into ONE array row, hash-partitioned by vertex
+            # and cached for all hops. Each hop is then a keyed join of the
+            # frontier against the array table plus per-row array ops in
+            # codegen — score every element, array_sort by (score, dst),
+            # slice the fanout prefix, explode. The old plan shuffled and
+            # SORTED the full candidate-edge expansion (Σ deg(frontier)
+            # rows — ~100M on the 2M-edge bench hop 2) through a window per
+            # hop; this one shuffles only the frontier (the array table is
+            # partitioned once). Selected rows are IDENTICAL: array_sort on
+            # struct(score, dst) is the same (score asc, dst asc) total
+            # order as the window's row_number. Without ``max_degree`` a hub
+            # row would be unbounded, so the window path (whose
+            # WindowGroupLimit pre-filters map-side) stays — at 100 TB the
+            # documented hub mitigation is to set max_degree.
+            arrays = max_degree is not None
             if arrays:
-                ranked = _hop_scored(h, fanout)
-            else:
-                ranked = (
-                    frontier.join(
-                        adj.withColumnRenamed("src", "id"), "id"
-                    )
-                    .withColumn(
-                        "rn",
-                        F.row_number().over(
-                            Window.partitionBy("root", "id").orderBy(
-                                _score(
-                                    F.col("root"), F.col("id"),
-                                    F.col("dst"), h, seed,
-                                ),
-                                "dst",
-                            )
-                        ),
-                    )
-                    .where(F.col("rn") <= fanout)
+                adj_arr = s.persist(
+                    adj.groupBy(F.col("src").alias("id"))
+                    .agg(F.collect_list("dst").alias("_dsts"))
+                    .repartition(sp, "id")
+                )
+                adj_arr.count()
+
+            def _hop_scored(h: int, fanout: int) -> DataFrame:
+                def elem_score(d):
+                    return (
+                        (
+                            d
+                            + 31 * F.col("root")
+                            + F.lit(97 * h + seed)
+                        )
+                        % _LCG_M
+                        * F.lit(_LCG_A)
+                    ) % _LCG_M
+
+                top = F.slice(
+                    F.array_sort(
+                        F.transform(
+                            "_dsts",
+                            lambda d: F.struct(
+                                elem_score(d).alias("s"), d.alias("dst")
+                            ),
+                        )
+                    ),
+                    1,
+                    fanout,
+                )
+                return (
+                    frontier.join(adj_arr, "id")
                     .select(
                         "root",
                         F.lit(h).alias("hop"),
                         F.col("id").alias("src"),
-                        "dst",
+                        F.explode(
+                            F.transform(top, lambda x: x["dst"])
+                        ).alias("dst"),
                     )
                 )
-            block = truncate(ranked)
-            spills.append(block)
-            parts.append(block)
-            frontier = block.select(
-                "root", F.col("dst").alias("id")
-            ).distinct()
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        out = truncate(out)
-        if arrays:
-            adj_arr.unpersist()
-        for df in spills:
-            drop_spill(df)
+
+            for h, fanout in enumerate(fanouts, start=1):
+                if arrays:
+                    ranked = _hop_scored(h, fanout)
+                else:
+                    ranked = (
+                        frontier.join(
+                            adj.withColumnRenamed("src", "id"), "id"
+                        )
+                        .withColumn(
+                            "rn",
+                            F.row_number().over(
+                                Window.partitionBy("root", "id").orderBy(
+                                    _score(
+                                        F.col("root"), F.col("id"),
+                                        F.col("dst"), h, seed,
+                                    ),
+                                    "dst",
+                                )
+                            ),
+                        )
+                        .where(F.col("rn") <= fanout)
+                        .select(
+                            "root",
+                            F.lit(h).alias("hop"),
+                            F.col("id").alias("src"),
+                            "dst",
+                        )
+                    )
+                block = truncate(ranked)
+                parts.append(block)
+                frontier = block.select(
+                    "root", F.col("dst").alias("id")
+                ).distinct()
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionAll(p)
+            out = truncate(out)
+        s.keep(out)
     return out

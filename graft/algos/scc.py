@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -170,74 +170,78 @@ def _max_forward_fixpoint(
 
 def _coloring_scc(graph: Graph, max_iter: int) -> DataFrame:
     spark = graph.edges.sparkSession
-    edges_all = truncate(
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    verts = truncate(graph.vertices())
-    done: DataFrame | None = None
-    with superstep_conf(spark, graph.edge_rows()):
-        for _outer in range(max_iter):
-            if verts.limit(1).count() == 0:
-                break
-            colors = _max_forward_fixpoint(edges_all, verts, max_iter)
-            # backward reach from each color root, restricted to the
-            # root's color set: member(u) if u is its own root, or
-            # u→v with member(v) and color(u)==color(v)
-            ec = (
-                edges_all.join(
-                    colors.withColumnRenamed("id", "src")
-                    .withColumnRenamed("color", "c_src"), "src")
-                .join(
-                    colors.withColumnRenamed("id", "dst")
-                    .withColumnRenamed("color", "c_dst"), "dst")
-                .where(F.col("c_src") == F.col("c_dst"))
-                .select("src", "dst")
-            )
-            ec = truncate(ec)
-            members = truncate(
-                colors.where(F.col("id") == F.col("color"))
-                .select("id", "color")
-            )
-            frontier = members
-            for _ in range(max_iter):
-                step = (
-                    ec.join(
-                        frontier.withColumnRenamed("id", "dst"), "dst")
-                    .select(F.col("src").alias("id"), "color")
-                    .distinct()
-                    .join(members, ["id", "color"], "left_anti")
-                )
-                step = truncate(step)
-                if step.limit(1).count() == 0:
+    with scratch() as s:
+        edges_all = truncate(
+            graph.edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        verts = truncate(graph.vertices())
+        done: DataFrame | None = None
+        with superstep_conf(spark, graph.edge_rows()):
+            for _outer in range(max_iter):
+                if verts.limit(1).count() == 0:
                     break
-                members = truncate(members.unionAll(step))
-                frontier = step
-            # detected SCCs: relabel color → min member id, emit, shrink
-            found = members.groupBy("color").agg(F.min("id").alias("comp"))
-            out = members.join(found, "color").select("id", "comp")
-            out = truncate(out)
-            done = out if done is None else done.unionAll(out)
-            done = truncate(done)
-            verts = truncate(
-                verts.join(out.select("id"), "id", "left_anti")
-            )
-            edges_all = truncate(
-                edges_all
-                .join(verts.withColumnRenamed("id", "src"), "src", "semi")
-                .join(verts.withColumnRenamed("id", "dst"), "dst", "semi")
-                .select("src", "dst")
-            )
-        else:
-            warnings.warn(
-                f"strongly_connected_components did not finish in "
-                f"{max_iter} outer rounds — remaining vertices labeled "
-                "as singletons may be wrong",
-                stacklevel=2,
-            )
-            leftover = verts.select("id", F.col("id").alias("comp"))
-            done = leftover if done is None else done.unionAll(leftover)
+                colors = _max_forward_fixpoint(edges_all, verts, max_iter)
+                # backward reach from each color root, restricted to the
+                # root's color set: member(u) if u is its own root, or
+                # u→v with member(v) and color(u)==color(v)
+                ec = (
+                    edges_all.join(
+                        colors.withColumnRenamed("id", "src")
+                        .withColumnRenamed("color", "c_src"), "src")
+                    .join(
+                        colors.withColumnRenamed("id", "dst")
+                        .withColumnRenamed("color", "c_dst"), "dst")
+                    .where(F.col("c_src") == F.col("c_dst"))
+                    .select("src", "dst")
+                )
+                ec = truncate(ec)
+                members = truncate(
+                    colors.where(F.col("id") == F.col("color"))
+                    .select("id", "color")
+                )
+                frontier = members
+                for _ in range(max_iter):
+                    step = (
+                        ec.join(
+                            frontier.withColumnRenamed("id", "dst"), "dst")
+                        .select(F.col("src").alias("id"), "color")
+                        .distinct()
+                        .join(members, ["id", "color"], "left_anti")
+                    )
+                    step = truncate(step)
+                    if step.limit(1).count() == 0:
+                        break
+                    members = truncate(members.unionAll(step))
+                    frontier = step
+                # detected SCCs: relabel color → min member id, emit, shrink
+                found = members.groupBy("color").agg(F.min("id").alias("comp"))
+                out = members.join(found, "color").select("id", "comp")
+                out = truncate(out)
+                done = out if done is None else done.unionAll(out)
+                done = truncate(done)
+                verts = truncate(
+                    verts.join(out.select("id"), "id", "left_anti")
+                )
+                edges_all = truncate(
+                    edges_all
+                    .join(verts.withColumnRenamed("id", "src"), "src", "semi")
+                    .join(verts.withColumnRenamed("id", "dst"), "dst", "semi")
+                    .select("src", "dst")
+                )
+            else:
+                warnings.warn(
+                    f"strongly_connected_components did not finish in "
+                    f"{max_iter} outer rounds — remaining vertices labeled "
+                    "as singletons may be wrong",
+                    stacklevel=2,
+                )
+                # the result reads the detected SCCs and the leftover ids
+                s.keep(done, verts)
+                leftover = verts.select("id", F.col("id").alias("comp"))
+                done = leftover if done is None else done.unionAll(leftover)
+        s.keep(done)
     if done is None:
         id_type = graph.vertices().schema["id"].dataType.simpleString()
         return spark.createDataFrame([], f"id {id_type}, comp {id_type}")

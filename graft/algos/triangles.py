@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task
-from graft.checkpoint import truncate
+from graft.checkpoint import scratch, truncate
 from graft.graph import Graph
 
 
@@ -94,45 +94,44 @@ def triangle_count(graph: Graph, sequential_threshold: int = 1_000_000) -> int:
     ``sequential_threshold``: see :func:`graft.algos.community.one_task`."""
     if one_task(graph, sequential_threshold):
         return _sequential_triangle_count(graph)
-    o = _oriented(graph).persist()
-    o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
-    # normalize the closing edge to id order: wedges carry (y < z) by id,
-    # while o is oriented by degree-rank
-    closing = o.select(
-        F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
-    )
-    closed = wedges.join(closing, ["y", "z"], "left_semi")
-    n = closed.count()
-    o.unpersist()
-    return n
+    with scratch() as s:
+        o = s.persist(_oriented(graph))
+        o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
+        wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
+        # normalize the closing edge to id order: wedges carry (y < z) by id,
+        # while o is oriented by degree-rank
+        closing = o.select(
+            F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
+        )
+        return wedges.join(closing, ["y", "z"], "left_semi").count()
 
 
 def triangles_per_vertex(graph: Graph) -> DataFrame:
     """Returns ``(id long, triangles long)`` — per-vertex triangle counts
     (each triangle contributes 1 to each of its three corners)."""
-    o = _oriented(graph).persist()
-    o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
-    # normalize the closing edge to id order: wedges carry (y < z) by id,
-    # while o is oriented by degree-rank
-    closing = o.select(
-        F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
-    )
-    closed = wedges.join(closing, ["y", "z"], "left_semi").persist()
-    per_corner = (
-        closed.select(F.col("x").alias("id"))
-        .unionAll(closed.select(F.col("y").alias("id")))
-        .unionAll(closed.select(F.col("z").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-    out = graph.vertices().join(per_corner, "id", "left").select(
-        "id", F.coalesce("triangles", F.lit(0)).alias("triangles")
-    )
-    out = truncate(out)
-    closed.unpersist()
-    o.unpersist()
+    with scratch() as s:
+        o = s.persist(_oriented(graph))
+        o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
+        wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
+        # normalize the closing edge to id order: wedges carry (y < z) by id,
+        # while o is oriented by degree-rank
+        closing = o.select(
+            F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
+        )
+        closed = s.persist(wedges.join(closing, ["y", "z"], "left_semi"))
+        per_corner = (
+            closed.select(F.col("x").alias("id"))
+            .unionAll(closed.select(F.col("y").alias("id")))
+            .unionAll(closed.select(F.col("z").alias("id")))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("triangles"))
+        )
+        out = truncate(
+            graph.vertices().join(per_corner, "id", "left").select(
+                "id", F.coalesce("triangles", F.lit(0)).alias("triangles")
+            )
+        )
+        s.keep(out)
     return out

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -105,80 +105,82 @@ def truss_number(
     if one_task(graph, sequential_threshold):
         return _sequential_truss_number(graph)
 
-    e = truncate(_oriented_edges(graph))
-    out: DataFrame | None = None
-    k = 2
-    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-        while True:
-            n_cur = e.count()
-            if n_cur == 0:
-                break
-            # (k+1)-truss fixpoint from the current survivor set:
-            # support filter at min_support = k-1, iterated to stability
-            cur = e
+    with scratch() as s:
+        e = truncate(_oriented_edges(graph))
+        out: DataFrame | None = None
+        k = 2
+        with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
             while True:
-                tri = (
-                    cur.select(F.col("u").alias("x"), F.col("v").alias("y"))
-                    .join(
-                        cur.select(F.col("u").alias("x"), F.col("v").alias("z")),
-                        "x",
-                    )
-                    .where(F.col("y") < F.col("z"))
-                    .join(
-                        cur.select(F.col("u").alias("y"), F.col("v").alias("z")),
-                        ["y", "z"],
-                        "left_semi",
-                    )
-                )
-                sup = (
-                    tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
-                    .unionAll(
-                        tri.select(F.col("x").alias("u"), F.col("z").alias("v"))
-                    )
-                    .unionAll(
-                        tri.select(F.col("y").alias("u"), F.col("z").alias("v"))
-                    )
-                    .groupBy("u", "v")
-                    .agg(F.count(F.lit(1)).alias("s"))
-                )
-                nxt = truncate(
-                    cur.join(sup, ["u", "v"], "left")
-                    .where(F.coalesce("s", F.lit(0)) >= k - 1)
-                    .select("u", "v")
-                )
-                n_old, n_new = cur.count(), nxt.count()
-                stable = n_new == n_old
-                s_min = None
-                if stable and n_new:
-                    # min surviving support, evaluated BEFORE cur's spill
-                    # is dropped (sup's lineage reads cur's parquet)
-                    s_min = (
-                        cur.join(sup, ["u", "v"], "left")
-                        .agg(F.min(F.coalesce("s", F.lit(0))).alias("m"))
-                        .first()["m"]
-                    )
-                if cur is not e:
-                    drop_spill(cur)
-                cur = nxt
-                if stable:
+                if row_count(e) == 0:
                     break
-            # edges deleted between the k-truss (= e) and the (k+1)-truss
-            # carry truss number k
-            removed = truncate(
-                e.join(cur, ["u", "v"], "left_anti").withColumn(
-                    "truss", F.lit(k).cast("long")
+                # (k+1)-truss fixpoint from the current survivor set:
+                # support filter at min_support = k-1, iterated to stability
+                cur = e
+                while True:
+                    tri = (
+                        cur.select(F.col("u").alias("x"), F.col("v").alias("y"))
+                        .join(
+                            cur.select(F.col("u").alias("x"), F.col("v").alias("z")),
+                            "x",
+                        )
+                        .where(F.col("y") < F.col("z"))
+                        .join(
+                            cur.select(F.col("u").alias("y"), F.col("v").alias("z")),
+                            ["y", "z"],
+                            "left_semi",
+                        )
+                    )
+                    sup = (
+                        tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
+                        .unionAll(
+                            tri.select(F.col("x").alias("u"), F.col("z").alias("v"))
+                        )
+                        .unionAll(
+                            tri.select(F.col("y").alias("u"), F.col("z").alias("v"))
+                        )
+                        .groupBy("u", "v")
+                        .agg(F.count(F.lit(1)).alias("s"))
+                    )
+                    nxt = truncate(
+                        cur.join(sup, ["u", "v"], "left")
+                        .where(F.coalesce("s", F.lit(0)) >= k - 1)
+                        .select("u", "v")
+                    )
+                    n_old, n_new = row_count(cur), row_count(nxt)
+                    stable = n_new == n_old
+                    s_min = None
+                    if stable and n_new:
+                        # min surviving support, evaluated BEFORE cur's spill
+                        # is dropped (sup's lineage reads cur's parquet)
+                        s_min = (
+                            cur.join(sup, ["u", "v"], "left")
+                            .agg(F.min(F.coalesce("s", F.lit(0))).alias("m"))
+                            .first()["m"]
+                        )
+                    if cur is not e:
+                        drop_spill(cur)
+                    cur = nxt
+                    if stable:
+                        break
+                # edges deleted between the k-truss (= e) and the (k+1)-truss
+                # carry truss number k
+                removed = truncate(
+                    e.join(cur, ["u", "v"], "left_anti").withColumn(
+                        "truss", F.lit(k).cast("long")
+                    )
                 )
-            )
-            out = removed if out is None else out.unionAll(removed)
-            drop_spill(e)
-            e = cur
-            # level jump: cur is stable with every support ≥ its min s_min,
-            # so cur IS the k''-truss for every k'' ≤ s_min + 2 — the next
-            # level that removes anything is s_min + 2 (a 30-clique jumps
-            # straight from 2 to 30 instead of paying 28 empty fixpoints)
-            if s_min is None:
-                break  # survivor set is empty
-            k = max(k + 1, int(s_min) + 2)
+                # the result reads every level's removed edges
+                s.keep(removed)
+                out = removed if out is None else out.unionAll(removed)
+                drop_spill(e)
+                e = cur
+                # level jump: cur is stable with every support ≥ its min s_min,
+                # so cur IS the k''-truss for every k'' ≤ s_min + 2 — the next
+                # level that removes anything is s_min + 2 (a 30-clique jumps
+                # straight from 2 to 30 instead of paying 28 empty fixpoints)
+                if s_min is None:
+                    break  # survivor set is empty
+                k = max(k + 1, int(s_min) + 2)
     if out is None:
         # graph had no non-loop edges
         ends = _oriented_edges(graph)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, row_count, scratch, truncate
 from graft.graph import Graph
 
 _LCG_M = 2147483647
@@ -63,58 +63,57 @@ def random_walks(
             "renumber with graft.io.actor_edges_to_long first"
         )
     adj = graph.without_self_loops().select("src", "dst").distinct()
-    indexed = truncate(
-        adj.withColumn(
-            "idx",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy("dst")
-            ) - 1,
+    with scratch() as s:
+        indexed = truncate(
+            adj.withColumn(
+                "idx",
+                F.row_number().over(
+                    Window.partitionBy("src").orderBy("dst")
+                ) - 1,
+            )
         )
-    )
-    deg = indexed.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    starts = graph.vertices().select(
-        "id",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(num_walks - 1))
-        ).alias("rep"),
-    ).select(
-        (F.col("id").cast("long") * num_walks + F.col("rep"))
-        .alias("walk_id"),
-        "id",
-    )
+        deg = indexed.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("d")
+        )
+        starts = graph.vertices().select(
+            "id",
+            F.explode(
+                F.sequence(F.lit(0), F.lit(num_walks - 1))
+            ).alias("rep"),
+        ).select(
+            (F.col("id").cast("long") * num_walks + F.col("rep"))
+            .alias("walk_id"),
+            "id",
+        )
 
-    spark = graph.edges.sparkSession
-    spills = [indexed]
-    parts = [starts.select("walk_id", F.lit(0).alias("step"), "id")]
-    cur = starts
-    with superstep_conf(spark, adj.count()):
-        for t in range(1, walk_length + 1):
-            idx = _draw(F.col("walk_id"), t, seed) % F.col("d")
-            nxt = (
-                cur.join(deg, "id")
-                .select("walk_id", "id", idx.cast("int").alias("idx"))
-                .join(
-                    indexed.select(
-                        F.col("src").alias("id"), "idx",
-                        F.col("dst").alias("nid"),
-                    ),
-                    ["id", "idx"],
+        spark = graph.edges.sparkSession
+        parts = [starts.select("walk_id", F.lit(0).alias("step"), "id")]
+        cur = starts
+        # ``indexed`` holds one row per adjacency row
+        with superstep_conf(spark, row_count(indexed)):
+            for t in range(1, walk_length + 1):
+                idx = _draw(F.col("walk_id"), t, seed) % F.col("d")
+                nxt = (
+                    cur.join(deg, "id")
+                    .select("walk_id", "id", idx.cast("int").alias("idx"))
+                    .join(
+                        indexed.select(
+                            F.col("src").alias("id"), "idx",
+                            F.col("dst").alias("nid"),
+                        ),
+                        ["id", "idx"],
+                    )
+                    .select("walk_id", F.col("nid").alias("id"))
                 )
-                .select("walk_id", F.col("nid").alias("id"))
-            )
-            cur = truncate(nxt)
-            spills.append(cur)
-            parts.append(
-                cur.select("walk_id", F.lit(t).alias("step"), "id")
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        out = truncate(out)
-        for df in spills:
-            drop_spill(df)
+                cur = truncate(nxt)
+                parts.append(
+                    cur.select("walk_id", F.lit(t).alias("step"), "id")
+                )
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionAll(p)
+            out = truncate(out)
+        s.keep(out)
     return out
 
 
@@ -166,107 +165,104 @@ def node2vec_walks(
             "renumber with graft.io.actor_edges_to_long first"
         )
     w_ret, w_com, w_far = _bias_weights(p, q)
-    adj = truncate(
-        graph.without_self_loops().select("src", "dst").distinct()
-    )
-    indexed = truncate(
-        adj.withColumn(
-            "idx",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy("dst")
-            ) - 1,
+    with scratch() as s:
+        adj = truncate(
+            graph.without_self_loops().select("src", "dst").distinct()
         )
-    )
-    deg = indexed.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    starts = graph.vertices().select(
-        "id",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(num_walks - 1))
-        ).alias("rep"),
-    ).select(
-        (F.col("id").cast("long") * num_walks + F.col("rep"))
-        .alias("walk_id"),
-        "id",
-    )
+        indexed = truncate(
+            adj.withColumn(
+                "idx",
+                F.row_number().over(
+                    Window.partitionBy("src").orderBy("dst")
+                ) - 1,
+            )
+        )
+        deg = indexed.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("d")
+        )
+        starts = graph.vertices().select(
+            "id",
+            F.explode(
+                F.sequence(F.lit(0), F.lit(num_walks - 1))
+            ).alias("rep"),
+        ).select(
+            (F.col("id").cast("long") * num_walks + F.col("rep"))
+            .alias("walk_id"),
+            "id",
+        )
 
-    spark = graph.edges.sparkSession
-    spills = [adj, indexed]
-    parts = [starts.select("walk_id", F.lit(0).alias("step"), "id")]
-    with superstep_conf(spark, adj.count()):
-        # step 1: uniform (no prev) — the random_walks transition
-        idx = _draw(F.col("walk_id"), 1, seed) % F.col("d")
-        cur = truncate(
-            starts.join(deg, "id")
-            .select("walk_id", "id", idx.cast("int").alias("idx"))
-            .join(
-                indexed.select(
-                    F.col("src").alias("id"), "idx",
-                    F.col("dst").alias("nid"),
-                ),
-                ["id", "idx"],
-            )
-            .select(
-                "walk_id",
-                F.col("nid").alias("id"),
-                F.col("id").alias("prev"),
-            )
-        )
-        spills.append(cur)
-        parts.append(cur.select("walk_id", F.lit(1).alias("step"), "id"))
-        for t in range(2, walk_length + 1):
-            cand = (
-                cur.join(adj.withColumnRenamed("src", "id"), "id")
+        spark = graph.edges.sparkSession
+        parts = [starts.select("walk_id", F.lit(0).alias("step"), "id")]
+        with superstep_conf(spark, row_count(adj)):
+            # step 1: uniform (no prev) — the random_walks transition
+            idx = _draw(F.col("walk_id"), 1, seed) % F.col("d")
+            cur = truncate(
+                starts.join(deg, "id")
+                .select("walk_id", "id", idx.cast("int").alias("idx"))
                 .join(
-                    adj.select(
-                        F.col("src").alias("prev"),
-                        F.col("dst").alias("dst"),
-                        F.lit(1).alias("is_common"),
+                    indexed.select(
+                        F.col("src").alias("id"), "idx",
+                        F.col("dst").alias("nid"),
                     ),
-                    ["prev", "dst"],
-                    "left",
-                )
-                .withColumn(
-                    "w",
-                    F.when(F.col("dst") == F.col("prev"), F.lit(w_ret))
-                    .when(F.col("is_common").isNotNull(), F.lit(w_com))
-                    .otherwise(F.lit(w_far)),
-                )
-            )
-            win = Window.partitionBy("walk_id").orderBy("dst")
-            picked = (
-                cand.withColumn("cum", F.sum("w").over(win))
-                .withColumn(
-                    "total",
-                    F.sum("w").over(
-                        Window.partitionBy("walk_id")
-                    ),
-                )
-                .withColumn(
-                    "x", _draw(F.col("walk_id"), t, seed) % F.col("total")
-                )
-                .where(
-                    (F.col("x") >= F.col("cum") - F.col("w"))
-                    & (F.col("x") < F.col("cum"))
+                    ["id", "idx"],
                 )
                 .select(
                     "walk_id",
-                    F.col("dst").alias("id"),
+                    F.col("nid").alias("id"),
                     F.col("id").alias("prev"),
                 )
             )
-            cur = truncate(picked)
-            spills.append(cur)
-            parts.append(
-                cur.select("walk_id", F.lit(t).alias("step"), "id")
-            )
-        out = parts[0]
-        for pt in parts[1:]:
-            out = out.unionAll(pt)
-        out = truncate(out)
-        for df in spills:
-            drop_spill(df)
+            parts.append(cur.select("walk_id", F.lit(1).alias("step"), "id"))
+            for t in range(2, walk_length + 1):
+                cand = (
+                    cur.join(adj.withColumnRenamed("src", "id"), "id")
+                    .join(
+                        adj.select(
+                            F.col("src").alias("prev"),
+                            F.col("dst").alias("dst"),
+                            F.lit(1).alias("is_common"),
+                        ),
+                        ["prev", "dst"],
+                        "left",
+                    )
+                    .withColumn(
+                        "w",
+                        F.when(F.col("dst") == F.col("prev"), F.lit(w_ret))
+                        .when(F.col("is_common").isNotNull(), F.lit(w_com))
+                        .otherwise(F.lit(w_far)),
+                    )
+                )
+                win = Window.partitionBy("walk_id").orderBy("dst")
+                picked = (
+                    cand.withColumn("cum", F.sum("w").over(win))
+                    .withColumn(
+                        "total",
+                        F.sum("w").over(
+                            Window.partitionBy("walk_id")
+                        ),
+                    )
+                    .withColumn(
+                        "x", _draw(F.col("walk_id"), t, seed) % F.col("total")
+                    )
+                    .where(
+                        (F.col("x") >= F.col("cum") - F.col("w"))
+                        & (F.col("x") < F.col("cum"))
+                    )
+                    .select(
+                        "walk_id",
+                        F.col("dst").alias("id"),
+                        F.col("id").alias("prev"),
+                    )
+                )
+                cur = truncate(picked)
+                parts.append(
+                    cur.select("walk_id", F.lit(t).alias("step"), "id")
+                )
+            out = parts[0]
+            for pt in parts[1:]:
+                out = out.unionAll(pt)
+            out = truncate(out)
+        s.keep(out)
     return out
 
 

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -75,40 +75,36 @@ def wl_colors(graph: Graph, rounds: int = 2) -> DataFrame:
     # memoized on the Graph (r6): shared leaf with betweenness/sampling,
     # so repeated structural operators pay the distinct + write once
     adj, n_adj = graph.simple_adjacency()
-    spills = []
-    deg = adj.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    colors = truncate(
-        verts.join(deg, "id", "left").select(
-            "id", F.coalesce("d", F.lit(0)).cast("long").alias("color")
+    with scratch() as s:
+        deg = adj.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("d")
         )
-    )
-    spills.append(colors)
-    with superstep_conf(graph.edges.sparkSession, n_adj):
-        for _ in range(rounds):
-            nbr = (
-                adj.join(colors.withColumnRenamed("id", "dst"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(_nbr_sum().alias("ns"))
+        colors = truncate(
+            verts.join(deg, "id", "left").select(
+                "id", F.coalesce("d", F.lit(0)).cast("long").alias("color")
             )
-            colors = truncate(
-                colors.join(nbr, "id", "left").select(
-                    "id",
-                    _recolor(
-                        F.concat(
-                            F.col("color").cast("string"),
-                            F.lit("|"),
-                            F.coalesce("ns", F.lit(0)).cast("string"),
-                        )
-                    ).alias("color"),
+        )
+        with superstep_conf(graph.edges.sparkSession, n_adj):
+            for _ in range(rounds):
+                nbr = (
+                    adj.join(colors.withColumnRenamed("id", "dst"), "dst")
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(_nbr_sum().alias("ns"))
                 )
-            )
-            spills.append(colors)
-    out = colors
-    for df in spills[:-1]:
-        drop_spill(df)
-    return out
+                colors = truncate(
+                    colors.join(nbr, "id", "left").select(
+                        "id",
+                        _recolor(
+                            F.concat(
+                                F.col("color").cast("string"),
+                                F.lit("|"),
+                                F.coalesce("ns", F.lit(0)).cast("string"),
+                            )
+                        ).alias("color"),
+                    )
+                )
+        s.keep(colors)
+    return colors
 
 
 def graph_fingerprint(graph: Graph, rounds: int = 2) -> DataFrame:
@@ -240,53 +236,49 @@ def _grouped_wl_fingerprints(
     id)`` distinct. Runs 1-WL independently inside every key group in
     one job set and returns ``(key, fingerprint, n_colors,
     n_vertices)``."""
-    adj = truncate(
-        und.select(key, F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(
-            und.select(key, F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        .distinct()
-    )
-    spills = [adj]
-    deg = adj.groupBy(key, F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    colors = truncate(
-        verts.join(deg, [key, "id"], "left").select(
-            key,
-            "id",
-            F.coalesce("d", F.lit(0)).cast("long").alias("color"),
-        )
-    )
-    spills.append(colors)
-    with superstep_conf(und.sparkSession, adj.count()):
-        for _ in range(rounds):
-            nbr = (
-                adj.join(
-                    colors.withColumnRenamed("id", "dst"),
-                    [key, "dst"],
-                )
-                .groupBy(key, F.col("src").alias("id"))
-                .agg(_nbr_sum().alias("ns"))
+    with scratch() as s:
+        adj = truncate(
+            und.select(key, F.col("a").alias("src"), F.col("b").alias("dst"))
+            .unionAll(
+                und.select(key, F.col("b").alias("src"), F.col("a").alias("dst"))
             )
-            colors = truncate(
-                colors.join(nbr, [key, "id"], "left").select(
-                    key,
-                    "id",
-                    _recolor(
-                        F.concat(
-                            F.col("color").cast("string"),
-                            F.lit("|"),
-                            F.coalesce("ns", F.lit(0)).cast("string"),
-                        )
-                    ).alias("color"),
-                )
+            .distinct()
+        )
+        deg = adj.groupBy(key, F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("d")
+        )
+        colors = truncate(
+            verts.join(deg, [key, "id"], "left").select(
+                key,
+                "id",
+                F.coalesce("d", F.lit(0)).cast("long").alias("color"),
             )
-            spills.append(colors)
+        )
+        with superstep_conf(und.sparkSession, row_count(adj)):
+            for _ in range(rounds):
+                nbr = (
+                    adj.join(
+                        colors.withColumnRenamed("id", "dst"),
+                        [key, "dst"],
+                    )
+                    .groupBy(key, F.col("src").alias("id"))
+                    .agg(_nbr_sum().alias("ns"))
+                )
+                colors = truncate(
+                    colors.join(nbr, [key, "id"], "left").select(
+                        key,
+                        "id",
+                        _recolor(
+                            F.concat(
+                                F.col("color").cast("string"),
+                                F.lit("|"),
+                                F.coalesce("ns", F.lit(0)).cast("string"),
+                            )
+                        ).alias("color"),
+                    )
+                )
+        s.keep(colors)
     fp, nc = _fingerprint_agg()
-    out = colors.groupBy(key).agg(
+    return colors.groupBy(key).agg(
         fp, nc, F.count(F.lit(1)).alias("n_vertices")
     )
-    for df in spills[:-1]:
-        drop_spill(df)
-    return out

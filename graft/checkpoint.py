@@ -1,17 +1,16 @@
-"""Per-superstep checkpointing with per-partition lineage + metrics.
+"""Superstep state: lineage truncation, the lifetime of an operator's
+intermediates, and per-superstep checkpoints.
 
-north_rule requirement: "resumable from checkpoint with per-partition
-lineage + metrics". Every iterative algorithm in graft.algos accepts an
-optional :class:`Checkpointer`; when present, each superstep's vertex
-state is written to parquet together with a metrics record (iteration
-number, move/delta counts, quality, per-partition row counts), and a run
-can resume from the latest complete superstep.
-
-Without a checkpoint dir, algorithms still call
-``localCheckpoint(eager=True)`` per superstep to truncate lineage —
-mandatory for iterative DataFrame loops, otherwise the plan grows
-without bound (the Spark analog of the reference's host-driven while
-loop, csrc/src/leiden_kernel.cu:1028-1214).
+Iterative algorithms cut lineage every superstep with :func:`truncate`,
+a parquet spill round-trip (otherwise the plan grows without bound —
+the Spark analog of the reference's host-driven while loop,
+csrc/src/leiden_kernel.cu:1028-1214); :func:`scratch` releases the
+spills and persisted frames of one operator call. With a
+:class:`Checkpointer` (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics") each superstep's state is also saved
+with a metrics record (iteration, move/delta counts, quality,
+per-partition row counts), and a run resumes from the latest complete
+superstep.
 """
 
 from __future__ import annotations
@@ -23,7 +22,8 @@ import os
 import shutil
 import tempfile
 import threading
-from typing import Any
+from contextlib import contextmanager
+from typing import Any, Iterator
 
 import pyarrow as pa
 import pyarrow.fs as pafs
@@ -211,25 +211,9 @@ def _resolve_spill_root(spark: SparkSession) -> str:
     return root
 
 
-def truncate(df: DataFrame) -> DataFrame:
-    """Cut lineage between supersteps via a parquet spill round-trip.
-
-    Why not ``localCheckpoint``: Spark's LogicalRDD *preserves* the
-    estimated statistics of the plan it truncates, and Catalyst's
-    size-only estimator multiplies join children's sizeInBytes. A
-    superstep that references its state twice (self-join shapes like
-    conflict resolution or quality evaluation) therefore *squares* the
-    carried estimate every iteration — after ~10 supersteps the driver
-    spends minutes multiplying thousand-digit BigIntegers inside
-    SizeInBytesOnlyStatsPlanVisitor. A parquet round-trip resets leaf
-    stats to the true file size (keeping AQE/broadcast decisions sane)
-    and is the same mechanism a cluster run uses for reliable
-    per-superstep checkpoints.
-
-    The returned DataFrame carries its spill path; iterative loops call
-    :func:`drop_spill` on retired supersteps so long convergence runs
-    do not accumulate unbounded spill directories.
-    """
+def spill(df: DataFrame) -> DataFrame:
+    """:func:`truncate` without a :func:`scratch` owner: the caller
+    alone releases the leaf (a Graph's memoized adjacency)."""
     global _spill_root
     spark = df.sparkSession
     with _spill_lock:
@@ -245,27 +229,132 @@ def truncate(df: DataFrame) -> DataFrame:
     return out
 
 
+def truncate(df: DataFrame) -> DataFrame:
+    """Cut lineage between supersteps via a parquet spill round-trip.
+
+    Why not ``localCheckpoint``: Spark's LogicalRDD *preserves* the
+    estimated statistics of the plan it truncates, and Catalyst's
+    size-only estimator multiplies join children's sizeInBytes. A
+    superstep that references its state twice (self-join shapes like
+    conflict resolution or quality evaluation) therefore *squares* the
+    carried estimate every iteration — after ~10 supersteps the driver
+    spends minutes multiplying thousand-digit BigIntegers inside
+    SizeInBytesOnlyStatsPlanVisitor. A parquet round-trip resets leaf
+    stats to the true file size (keeping AQE/broadcast decisions sane)
+    and is the same mechanism a cluster run uses for reliable
+    per-superstep checkpoints.
+
+    The spill belongs to the calling thread's innermost open
+    :func:`scratch` (to the caller when none is open); loops release a
+    retired superstep's spill early with :func:`drop_spill`.
+    """
+    out = spill(df)
+    stack = _scratch_stack()
+    if stack:
+        stack[-1]._paths.append(out._graft_spill_path)
+    return out
+
+
+def _remove_spill(path: str | None) -> None:
+    if path and "://" not in path:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def drop_spill(df: DataFrame) -> None:
     """Delete the spill files backing a truncated DataFrame (no-op for
     frames that did not come from :func:`truncate`). Only call once the
     frame — and everything derived from it without an intervening
     truncate — is dead."""
-    path = getattr(df, "_graft_spill_path", None)
-    if path and "://" not in path:
-        shutil.rmtree(path, ignore_errors=True)
+    _remove_spill(getattr(df, "_graft_spill_path", None))
 
 
-def with_spill_inputs(df: DataFrame, *spills: DataFrame) -> DataFrame:
-    """Hand ``spills`` — :func:`truncate` outputs that only the lazy
-    ``df`` reads — to ``df``'s consumer: once it has truncated ``df``
-    they are dead, and it drops them via :func:`spill_inputs`. Returns
-    ``df``."""
-    df._graft_spill_inputs = spills  # type: ignore[attr-defined]
-    return df
+def _is_persisted(df: DataFrame) -> bool:
+    """True when the frame already carries a storage level.
+    ``persist()`` on such a frame returns the same object, so a later
+    ``unpersist()`` would release a cache its caller made."""
+    try:
+        lvl = df.storageLevel
+        return bool(lvl.useMemory or lvl.useDisk)
+    except Exception:
+        return False
 
 
-def spill_inputs(df: DataFrame) -> tuple[DataFrame, ...]:
-    """The spills handed over with :func:`with_spill_inputs`; empty for
-    any other frame, including one derived from ``df`` (its inputs'
-    spills then stay on disk until the spill root is removed)."""
-    return getattr(df, "_graft_spill_inputs", ())
+class Scratch:
+    """The intermediates of one operator call; see :func:`scratch`."""
+
+    def __init__(self, parent: "Scratch | None") -> None:
+        self._parent = parent
+        self._paths: list[str] = []
+        self._kept: set[str] = set()
+        self._persisted: list[DataFrame] = []
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted. A frame that already is (a cache of the
+        caller's) is returned as it is and never released here."""
+        if _is_persisted(df):
+            return df
+        df = df.persist()
+        self._persisted.append(df)
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        """Unpersist ``df`` now if this scratch persisted it (a level
+        loop releases each level's edges once it is contracted away)."""
+        for i, own in enumerate(self._persisted):
+            if own is df:
+                del self._persisted[i]
+                df.unpersist()
+                return
+
+    def keep(self, *dfs: DataFrame) -> None:
+        """Hand the spills backing ``dfs`` (the operator's result, or
+        the leaves a lazy result reads) to the enclosing scratch when
+        this one exits normally — to the caller when this scratch is
+        the outermost."""
+        for df in dfs:
+            path = getattr(df, "_graft_spill_path", None)
+            if path in self._paths:
+                self._kept.add(path)
+
+    def _close(self, hand_on: bool) -> None:
+        for df in self._persisted:
+            df.unpersist()
+        for path in self._paths:
+            if hand_on and path in self._kept:
+                if self._parent is not None:
+                    self._parent._paths.append(path)
+            else:
+                _remove_spill(path)
+
+
+_scratches = threading.local()
+
+
+def _scratch_stack() -> list[Scratch]:
+    stack = getattr(_scratches, "stack", None)
+    if stack is None:
+        stack = _scratches.stack = []
+    return stack
+
+
+@contextmanager
+def scratch() -> Iterator[Scratch]:
+    """Own the intermediates of one operator call. While it is open,
+    every :func:`truncate` on this thread registers its spill here
+    (threads sharing a session keep separate scratches); frames are
+    persisted through :meth:`Scratch.persist`. On exit every frame
+    this scratch persisted is unpersisted, and every registered spill
+    is deleted except, on a normal exit, those handed on with
+    :meth:`Scratch.keep`; a raise deletes them all. Scratches nest: a
+    kept spill joins the enclosing scratch, which releases it in turn
+    unless it keeps it too."""
+    stack = _scratch_stack()
+    s = Scratch(stack[-1] if stack else None)
+    stack.append(s)
+    ok = False
+    try:
+        yield s
+        ok = True
+    finally:
+        stack.pop()
+        s._close(ok)

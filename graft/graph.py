@@ -246,12 +246,13 @@ class Graph:
         Returns ``(frame, row_count)``; released by :meth:`unpersist`.
         """
         if self._adj is None:
-            from graft.checkpoint import truncate
+            from graft.checkpoint import row_count, spill
 
-            self._adj = truncate(
+            # the Graph's own leaf: no operator's scratch releases it
+            self._adj = spill(
                 self.without_self_loops().select("src", "dst").distinct()
             )
-            self._adj_rows = self._adj.count()
+            self._adj_rows = row_count(self._adj)
         return self._adj, self._adj_rows
 
     def has_self_loops(self) -> bool:

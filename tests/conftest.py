@@ -1,4 +1,8 @@
+import os
+import shutil
+
 import pytest
+from pyspark.sql import DataFrame
 
 from graft import checkpoint
 from graft.session import get_spark
@@ -22,6 +26,28 @@ def spill_dir(spark, tmp_path):
     yield
     spark.conf.unset("spark.graft.spillDir")
     checkpoint._spill_root = old_root
+
+
+@pytest.fixture()
+def leftover_spills(spill_dir):
+    """A function returning the directories under the fresh spill root
+    that a call's result ``out`` does not read (``out.inputFiles()``; a
+    scalar result reads none), i.e. the spills the call left behind.
+    It then empties the root, so the next call is judged alone; ``out``
+    is unreadable afterwards."""
+    def leftover(out) -> list[str]:
+        root = checkpoint._spill_root
+        if root is None or not os.path.isdir(root):
+            return []
+        read = out.inputFiles() if isinstance(out, DataFrame) else []
+        left = []
+        for name in sorted(os.listdir(root)):
+            prefix = f"/{os.path.basename(root)}/{name}/"
+            if not any(prefix in f for f in read):
+                left.append(name)
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        return left
+    return leftover
 
 
 @pytest.fixture()

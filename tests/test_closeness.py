@@ -26,10 +26,9 @@ def test_multi_source_depths_exact(spark):
     edges = random_graph(30, 0.12, seed=7, weighted=False)
     g = _graph(spark, edges)
     srcs = g.vertices().selectExpr("id AS s")
-    depths, spills = multi_source_depths(g, srcs)
+    depths = multi_source_depths(g, srcs)
     got = {(r.s, r.id): r.depth for r in depths.collect()}
-    for df in spills:
-        drop_spill(df)
+    drop_spill(depths)
     g.unpersist()
     assert got == all_pairs_hops_ref(edges)
 

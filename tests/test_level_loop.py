@@ -10,7 +10,7 @@ import os
 import pytest
 
 from graft import checkpoint, fixtures
-from graft.algos.community import _is_persisted
+from graft.checkpoint import _is_persisted
 from graft.algos.leiden import leiden
 from graft.algos.louvain import louvain
 from graft.graph import Graph

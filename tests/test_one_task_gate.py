@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from graft import fixtures
-from graft.algos.community import _is_persisted, one_task
+from graft.algos.community import one_task
 from graft.algos.components import connected_components
 from graft.algos.kcore import core_number
 from graft.algos.msf import minimum_spanning_forest
@@ -19,7 +19,7 @@ from graft.algos.scc import strongly_connected_components
 from graft.algos.spectral import pic_embedding
 from graft.algos.triangles import triangle_count
 from graft.algos.truss import truss_number
-from graft.checkpoint import Checkpointer
+from graft.checkpoint import Checkpointer, _is_persisted
 from graft.graph import Graph
 from tests.reference_impls import random_graph
 from tests.test_row_count import _jobs_in_fresh_group
@@ -94,14 +94,17 @@ def test_both_paths_agree_on_empty_and_self_loop_only_graphs(spark, shape):
 
 @pytest.mark.parametrize("name", list(OPS))
 def test_callers_cache_kept_and_nothing_persisted_left(
-    spark, spill_dir, persisted_rdds, name
+    spark, leftover_spills, persisted_rdds, name
 ):
     g = _graph(spark, _seeded_edges())
     before = persisted_rdds()
     g.cache()
     g.edges.count()
     for path, kw in PATHS.items():
-        _rows(OPS[name](g, **kw))
+        out = OPS[name](g, **kw)
+        _rows(out)
         assert _is_persisted(g.edges), path
+        # every spill the call left behind is one its result reads
+        assert leftover_spills(out) == [], path
     g.unpersist()
     assert persisted_rdds() == before

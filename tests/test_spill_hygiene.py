@@ -1,0 +1,121 @@
+"""What the loop operators outside the one-task gate leave behind. After
+a call the spill root holds only the spills its result reads, the set
+of persisted RDDs is as it was, and no parquet leaf graft wrote was
+counted by a Spark job (``checkpoint.row_count`` reads its footers). A
+call that fails part way leaves the spill root and the persisted set as
+it found them."""
+
+from __future__ import annotations
+
+import importlib
+import os
+
+import pytest
+
+from graft import checkpoint, fixtures
+from graft.algos.betweenness import betweenness_centrality
+from graft.algos.centrality import eigenvector_centrality, hits, katz_centrality
+from graft.algos.closeness import closeness_centrality
+from graft.algos.coloring import greedy_color
+from graft.algos.ecg import ecg
+from graft.algos.kcore import k_core
+from graft.algos.louvain import louvain
+from graft.algos.lpa import label_propagation
+from graft.algos.mis import maximal_independent_set
+from graft.algos.walks import random_walks
+from graft.algos.wl import wl_colors
+from graft.checkpoint import _is_persisted
+from graft.graph import Graph
+
+# a triangle (a 2-core of diameter 1) and small iteration caps keep each
+# call to a handful of supersteps
+EDGES = [(0, 1, 1.0), (0, 2, 1.0), (1, 2, 1.0)]
+OPS = {
+    "lpa": lambda g: label_propagation(g, max_iter=1),
+    "hits": lambda g: hits(g, fixed_iterations=1),
+    "katz": lambda g: katz_centrality(g, fixed_iterations=1),
+    "eigenvector": lambda g: eigenvector_centrality(g, fixed_iterations=1),
+    "k_core": lambda g: k_core(g, 2),
+    "coloring": greedy_color,
+    "mis": maximal_independent_set,
+    "closeness": closeness_centrality,
+    "walks": lambda g: random_walks(g, walk_length=1),
+    "wl": lambda g: wl_colors(g, rounds=1),
+    "betweenness_bsp": lambda g: betweenness_centrality(
+        g, sequential_threshold=0
+    ),
+    "ecg": lambda g: ecg(g, ensemble_size=1, max_sweeps=2),
+}
+
+# (module whose third truncate raises, the call)
+FAILING = {
+    "louvain_bsp": (
+        "graft.algos.community",
+        lambda g: louvain(g, sequential_tail_edges=0, max_sweeps=2),
+    ),
+    "lpa": ("graft.algos.lpa", lambda g: label_propagation(g, max_iter=2)),
+    "coloring": ("graft.algos.coloring", OPS["coloring"]),
+    "closeness": ("graft.algos.closeness", OPS["closeness"]),
+}
+
+
+def _cached_graph(spark) -> Graph:
+    return Graph.from_undirected(fixtures.edges_df(spark, EDGES)).cache()
+
+
+@pytest.mark.parametrize("name", list(OPS))
+def test_loop_operator_leaves_only_what_its_result_reads(
+    spark, leftover_spills, persisted_rdds, monkeypatch, name
+):
+    persisted = persisted_rdds()
+    g = _cached_graph(spark)
+    frame = type(g.edges)
+    real_count = frame.count
+    leaf_counts = []
+
+    def count(df):
+        if getattr(df, "_graft_parquet_path", None) is not None:
+            leaf_counts.append(df._graft_parquet_path)
+        return real_count(df)
+
+    monkeypatch.setattr(frame, "count", count)
+    out = OPS[name](g)
+    rows = out.collect()
+    monkeypatch.setattr(frame, "count", real_count)
+
+    assert rows
+    assert leaf_counts == []
+    assert _is_persisted(g.edges)
+    # Graph.unpersist releases the Graph's own caches and its memoized
+    # adjacency spill; whatever is left, the call left
+    g.unpersist()
+    assert persisted_rdds() == persisted
+    assert leftover_spills(out) == []
+
+
+@pytest.mark.parametrize("name", list(FAILING))
+def test_failure_part_way_leaves_nothing(
+    spark, spill_dir, persisted_rdds, monkeypatch, name
+):
+    module, run = FAILING[name]
+    persisted = persisted_rdds()
+    g = _cached_graph(spark)
+    mod = importlib.import_module(module)
+    real = mod.truncate
+    calls = []
+
+    def failing(df):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected failure at the third truncate")
+        return real(df)
+
+    monkeypatch.setattr(mod, "truncate", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        run(g)
+    monkeypatch.setattr(mod, "truncate", real)
+
+    g.unpersist()
+    assert persisted_rdds() == persisted
+    root = checkpoint._spill_root
+    assert root is None or os.listdir(root) == []

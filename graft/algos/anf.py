@@ -29,10 +29,10 @@ neighborhood-function curve is its natural aggregate at web scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graft.checkpoint import drop_spill, row_count, scratch, truncate
+from graft.checkpoint import drop_spill, observed, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -100,11 +100,8 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
     sketch_bytes = n_verts * (2 ** lg_config_k // 2 + 100)
     broadcastable = sketch_bytes <= _HLL_BROADCAST_MAX_BYTES
 
-    def total(s: DataFrame) -> int:
-        row = s.agg(
-            F.sum(F.hll_sketch_estimate("sk")).alias("t")
-        ).first()
-        return int(round(row["t"]))
+    def estimated(sk: DataFrame) -> tuple[DataFrame, Observation]:
+        return observed(sk, t=F.sum(F.hll_sketch_estimate("sk")))
 
     counts: list[tuple[int, int]]
     with superstep_conf(spark, n_rows) as sp, scratch() as s:
@@ -136,14 +133,15 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
         else:
             adj = graph.without_self_loops().select("src", "dst")
         # B_0(v) = {v}: one sketch per vertex seeded with its own id
-        sk = truncate(
+        sk, obs = estimated(
             graph.vertices()
             .groupBy("id")
             .agg(
                 F.hll_sketch_agg(F.col("id"), F.lit(lg_config_k)).alias("sk")
             )
         )
-        counts = [(0, total(sk))]
+        sk = truncate(sk)
+        counts = [(0, obs.get["t"])]
         for h in range(1, max_hops + 1):
             if broadcastable:
                 gathered = (
@@ -162,9 +160,10 @@ def _hll_nf(graph: Graph, max_hops: int, lg_config_k: int) -> DataFrame:
                     .agg(F.hll_union_agg("sk").alias("sk"))
                 )
             prev = sk
-            sk = truncate(gathered)
+            sk, obs = estimated(gathered)
+            sk = truncate(sk)
             drop_spill(prev)
-            counts.append((h, total(sk)))
+            counts.append((h, obs.get["t"]))
             if counts[-1][1] == counts[-2][1]:
                 # sketch-union fixpoint (unions are monotone, estimates
                 # are a deterministic function of the sketch): pad, stop

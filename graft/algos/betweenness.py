@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import run_one_task, superstep_conf
-from graft.checkpoint import scratch, truncate
+from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -54,7 +54,7 @@ def _forward_levels(adj, sources) -> list[DataFrame]:
             .agg(F.sum("sigma").alias("sigma"))
         )
         nxt = truncate(reached)
-        if nxt.limit(1).count() == 0:
+        if row_count(nxt) == 0:
             break
         levels.append(nxt)
         visited = truncate(visited.unionAll(nxt.select("s", "id")))

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, observed, scratch, truncate
 from graft.graph import Graph
 
 
@@ -56,50 +56,43 @@ def bfs_hops(
     col = "cost" if weighted else "hop"
     zero = F.lit(0.0) if weighted else F.lit(0)
     step = F.col("weight") if weighted else F.lit(1)
-    dist = truncate(
-        verts.select(
-            "id", F.when(F.col("id") == source, zero).alias(col)
-        )
-    )
+    probe = max_hops is None
     rounds = max_hops if max_hops is not None else 10**9
-    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-        it = 0
-        while it < rounds:
-            it += 1
-            frontier = dist.where(F.col(col).isNotNull()).select("id", col)
-            relaxed = (
-                graph.edges.join(
-                    frontier.withColumnRenamed("id", "src"), "src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col(col) + step).alias(col))
+    with scratch() as s:
+        dist = truncate(
+            verts.select(
+                "id", F.when(F.col("id") == source, zero).alias(col)
             )
-            best = (
-                frontier.unionAll(relaxed)
-                .groupBy("id")
-                .agg(F.min(col).alias(col))
-            )
-            new_dist = truncate(
-                verts.join(best, "id", "left").select("id", col)
-            )
-            if max_hops is None:
-                changed = (
-                    new_dist.join(
-                        dist.withColumnRenamed(col, "old"), "id"
+        )
+        with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
+            it = 0
+            while it < rounds:
+                it += 1
+                frontier = dist.where(F.col(col).isNotNull()).select("id", col)
+                relaxed = (
+                    graph.edges.join(
+                        frontier.withColumnRenamed("id", "src"), "src"
                     )
-                    .where(
-                        ~F.col(col).eqNullSafe(F.col("old"))
-                    )
-                    .limit(1)
-                    .count()
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.min(F.col(col) + step).alias(col))
                 )
+                best = (
+                    frontier.unionAll(relaxed)
+                    .groupBy("id")
+                    .agg(F.min(col).alias(col))
+                )
+                left = dist.withColumnRenamed(col, "old") if probe else verts
+                nxt = left.join(best, "id", "left")
+                if probe:
+                    nxt, obs = observed(nxt, changed=F.sum(
+                        (~F.col(col).eqNullSafe(F.col("old"))).cast("long")
+                    ))
+                new_dist = truncate(nxt.select("id", col))
                 drop_spill(dist)
                 dist = new_dist
-                if changed == 0:
+                if probe and not obs.get["changed"]:
                     break
-            else:
-                drop_spill(dist)
-                dist = new_dist
+        s.keep(dist)
     if not return_predecessors:
         return dist
     d_src = dist.select(

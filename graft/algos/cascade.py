@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, row_count, scratch, truncate
 from graft.graph import Graph
 from graft.pipeline.splits import _MOD, _u60
 
@@ -59,31 +59,33 @@ def ic_spread(
             < int(p * _MOD)
         )
     ).select("src", "dst")
-    seed_set = [s for s in seeds]
-    act = truncate(
-        graph.vertices()
-        .where(F.col("id").isin(seed_set))
-        .select("id", F.lit(0).alias("round"))
-    )
-    # same contract as pagerank's source validation: a typo'd seed is
-    # an input error, not an empty cascade
-    if act.limit(1).count() == 0:
-        raise ValueError(
-            f"ic_spread: no seed vertex from {seed_set!r} exists in the"
-            " graph"
+    seed_set = list(seeds)
+    with scratch() as s:
+        act = truncate(
+            graph.vertices()
+            .where(F.col("id").isin(seed_set))
+            .select("id", F.lit(0).alias("round"))
         )
-    with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-        for _ in range(rounds):
-            relaxed = (
-                live.join(act.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col("round") + 1).alias("round"))
+        # same contract as pagerank's source validation: a typo'd seed is
+        # an input error, not an empty cascade
+        if row_count(act) == 0:
+            raise ValueError(
+                f"ic_spread: no seed vertex from {seed_set!r} exists in the"
+                " graph"
             )
-            nxt = truncate(
-                act.unionAll(relaxed)
-                .groupBy("id")
-                .agg(F.min("round").alias("round"))
-            )
-            drop_spill(act)
-            act = nxt
+        with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
+            for _ in range(rounds):
+                relaxed = (
+                    live.join(act.withColumnRenamed("id", "src"), "src")
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.min(F.col("round") + 1).alias("round"))
+                )
+                nxt = truncate(
+                    act.unionAll(relaxed)
+                    .groupBy("id")
+                    .agg(F.min("round").alias("round"))
+                )
+                drop_spill(act)
+                act = nxt
+        s.keep(act)
     return act

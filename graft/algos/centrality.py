@@ -8,6 +8,11 @@ PageRank: the small score table joins into the big edge scan — the edge
 table is never shuffled — followed by one groupBy-sum; lineage truncated
 per superstep, AQE off + data-sized reducers via superstep_conf).
 
+A per-step scalar costs no job of its own (checkpoint.observed): a norm
+is observed during the write of its raw vector, whose unit vector is a
+projection of the leaf; the L1 delta during a write whose rows carry
+the previous value as ``old``.
+
 Semantics (fixed-iteration forms are what the SQL oracles certify):
 
 - Katz:        x_{t+1}(v) = alpha * Σ_{u} w_uv · x_t(u) + beta,
@@ -27,12 +32,46 @@ plain relational A·x product computes — and what the oracle SQL mirrors.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, scratch, truncate
+from graft.checkpoint import drop_spill, observed, scratch, truncate
 from graft.graph import Graph
+
+
+def _next_vector(
+    verts: DataFrame, x: DataFrame, inflow: DataFrame, value: Column,
+    probe: bool,
+) -> DataFrame:
+    """``(id, x)`` = ``value`` over ``inflow`` for every vertex; with
+    ``probe`` also ``(old)``, the previous vector, for the L1 delta."""
+    if not probe:
+        return verts.join(inflow, "id", "left").select("id", value.alias("x"))
+    return x.withColumnRenamed("x", "old").join(inflow, "id", "left").select(
+        "id", value.alias("x"), "old"
+    )
+
+
+def _unit_step(
+    raw: DataFrame, probe: bool
+) -> tuple[DataFrame, DataFrame, float, float | None]:
+    """Writes ``raw`` with its L2 norm observed; returns (unit vector,
+    the spill it reads, norm, L1 delta or None). The unit vector is a
+    projection of that spill (a zero vector stays as it is); with
+    ``probe`` it is written once more, its delta to ``old`` observed."""
+    raw, obs = observed(raw, sq=F.sum(F.col("x") * F.col("x")))
+    leaf = truncate(raw)
+    norm = math.sqrt(obs.get["sq"] or 0.0)
+    unit = leaf.withColumn("x", F.col("x") / F.lit(norm)) if norm else leaf
+    if not probe:
+        return unit, leaf, norm, None
+    unit, obs = observed(unit, l1=F.sum(F.abs(F.col("x") - F.col("old"))))
+    unit = truncate(unit.select("id", "x"))
+    drop_spill(leaf)
+    return unit, unit, norm, obs.get["l1"] or 0.0
 
 
 def _ax(edges: DataFrame, x: DataFrame, out_col: str) -> DataFrame:
@@ -66,28 +105,18 @@ def katz_centrality(
     verts = graph.vertices_cached()
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
+    value = F.lit(alpha) * F.coalesce("ax", F.lit(0.0)) + F.lit(float(beta))
     with scratch() as s:
         x = truncate(verts.select("id", F.lit(float(beta)).alias("x")))
         with superstep_conf(spark, graph.edge_rows()):
             for _ in range(iters):
-                new_x = truncate(
-                    verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
-                        "id",
-                        (
-                            F.lit(alpha) * F.coalesce("ax", F.lit(0.0))
-                            + F.lit(float(beta))
-                        ).alias("x"),
-                    )
-                )
+                step = _next_vector(verts, x, _ax(graph.edges, x, "ax"), value, probe)
                 if probe:
-                    delta = (
-                        new_x.join(x.withColumnRenamed("x", "old"), "id")
-                        .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
-                        .first()[0]
-                    )
+                    step, obs = observed(step, l1=F.sum(F.abs(F.col("x") - F.col("old"))))
+                new_x = truncate(step.select("id", "x"))
                 drop_spill(x)
                 x = new_x
-                if probe and delta < tol:
+                if probe and (obs.get["l1"] or 0.0) < tol:
                     break
         s.keep(x)
     if normalized:
@@ -117,8 +146,8 @@ def hits(
     is the probe-free, SQL-oracle-certified mode; otherwise the loop
     stops when the hub vector's L1 delta drops below ``tol``. Plan per
     half-step: the small score table joins into the big edge scan (the
-    edge table is never shuffled), one groupBy-sum, one scalar norm agg
-    — identical shape to the PageRank superstep.
+    edge table is never shuffled), one groupBy-sum, the norm observed
+    during the write — identical shape to the PageRank superstep.
     """
     spark = graph.edges.sparkSession
     verts = graph.vertices_cached()
@@ -127,12 +156,6 @@ def hits(
         return spark.createDataFrame(
             [], "id long, hub double, authority double"
         )
-
-    def _norm(df: DataFrame) -> DataFrame:
-        nrm = df.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).first()[0]
-        if not nrm or nrm == 0.0:
-            return df
-        return df.select("id", (F.col("x") / F.lit(nrm)).alias("x"))
 
     def _atx(x: DataFrame) -> DataFrame:
         """One Aᵀ·x product: h flows along edge direction into dst."""
@@ -144,34 +167,29 @@ def hits(
 
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
+    value = F.coalesce("ax", F.lit(0.0))
     with scratch() as s:
         h = truncate(verts.select("id", F.lit(1.0 / float(n) ** 0.5).alias("x")))
         a = h
+        leaves = [h]  # the spills h and a read
         with superstep_conf(spark, graph.edge_rows()):
             for _ in range(iters):
-                new_a = truncate(_norm(
-                    verts.join(_ax(graph.edges, h, "ax"), "id", "left")
-                    .select("id", F.coalesce("ax", F.lit(0.0)).alias("x"))
-                ))
-                new_h = truncate(_norm(
-                    verts.join(_atx(new_a), "id", "left")
-                    .select("id", F.coalesce("ax", F.lit(0.0)).alias("x"))
-                ))
-                if probe:
-                    delta = (
-                        new_h.join(h.withColumnRenamed("x", "old"), "id")
-                        .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
-                        .first()[0]
-                    )
-                drop_spill(h)
-                drop_spill(a)
-                h, a = new_h, new_a
+                a, a_leaf, _, _ = _unit_step(
+                    _next_vector(verts, h, _ax(graph.edges, h, "ax"), value, False),
+                    False,
+                )
+                h, h_leaf, _, delta = _unit_step(
+                    _next_vector(verts, h, _atx(a), value, probe), probe
+                )
+                for leaf in leaves:
+                    drop_spill(leaf)
+                leaves = [a_leaf, h_leaf]
                 if probe and delta < tol:
                     break
-        s.keep(h, a)
-    return h.withColumnRenamed("x", "hub").join(
+        s.keep(*leaves)
+    return h.select("id", F.col("x").alias("hub")).join(
         a.select("id", F.col("x").alias("authority")), "id"
-    ).select("id", "hub", "authority")
+    )
 
 
 def eigenvector_centrality(
@@ -191,37 +209,26 @@ def eigenvector_centrality(
         return spark.createDataFrame([], "id long, eigenvector double")
     iters = fixed_iterations if fixed_iterations is not None else max_iter
     probe = fixed_iterations is None
+    value = F.coalesce("ax", F.lit(0.0))
     with scratch() as s:
         x = truncate(
             verts.select("id", F.lit(1.0 / float(n) ** 0.5).alias("x"))
         )
+        leaf = x  # the spill x reads
         with superstep_conf(spark, graph.edge_rows()):
             for _ in range(iters):
-                y = verts.join(_ax(graph.edges, x, "ax"), "id", "left").select(
-                    "id", F.coalesce("ax", F.lit(0.0)).alias("x")
+                x, new_leaf, norm, delta = _unit_step(
+                    _next_vector(verts, x, _ax(graph.edges, x, "ax"), value, probe),
+                    probe,
                 )
-                y = truncate(y)
-                norm = y.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).first()[0]
-                if not norm or norm == 0.0:
+                drop_spill(leaf)
+                leaf = new_leaf
+                if not norm:
                     # zero vector (no edges): centrality degenerates to 0
-                    drop_spill(x)
-                    x = y
                     break
-                new_x = truncate(
-                    y.select("id", (F.col("x") / F.lit(norm)).alias("x"))
-                )
-                if probe:
-                    delta = (
-                        new_x.join(x.withColumnRenamed("x", "old"), "id")
-                        .agg(F.sum(F.abs(F.col("x") - F.col("old"))))
-                        .first()[0]
-                    )
-                drop_spill(x)
-                drop_spill(y)
-                x = new_x
                 if probe and delta < tol:
                     break
-        s.keep(x)
+        s.keep(leaf)
     return x.select("id", F.col("x").alias("eigenvector"))
 
 

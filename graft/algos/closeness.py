@@ -38,11 +38,9 @@ def multi_source_depths(graph: Graph, sources: DataFrame) -> DataFrame:
     ``(s, id, depth int)`` — one row per (source, reached vertex),
     including ``(s, s, 0)``. The result is a spill of its own."""
     spark = graph.edges.sparkSession
+    adj, n_adj = graph.simple_adjacency()
     with scratch() as s:
-        adj = truncate(
-            graph.without_self_loops().select("src", "dst").distinct()
-        )
-        with superstep_conf(spark, row_count(adj)):
+        with superstep_conf(spark, n_adj):
             # distinct: a duplicated source row would double-count every
             # depth it contributes downstream
             frontier = truncate(
@@ -59,7 +57,7 @@ def multi_source_depths(graph: Graph, sources: DataFrame) -> DataFrame:
                     .join(visited, ["s", "id"], "left_anti")
                     .distinct()
                 )
-                if nxt.limit(1).count() == 0:
+                if row_count(nxt) == 0:
                     break
                 parts.append(nxt.select("s", "id", F.lit(t).alias("depth")))
                 visited = truncate(visited.unionAll(nxt))

@@ -41,16 +41,14 @@ def greedy_color(graph: Graph, seed: int = 42) -> DataFrame:
             hash_priority(col, seed).alias("h"), col.alias("i")
         )
 
+    adj, n_adj = graph.simple_adjacency()
     with scratch() as s:
-        adj = truncate(
-            graph.without_self_loops().select("src", "dst").distinct()
-        )
         uncolored = truncate(verts.select("id"))
         colored = truncate(
             verts.select("id", F.lit(0).alias("color")).limit(0)
         )
-        with superstep_conf(spark, row_count(adj)):
-            while uncolored.limit(1).count() > 0:
+        with superstep_conf(spark, n_adj):
+            while row_count(uncolored) > 0:
                 # ready: no uncolored neighbor of higher priority
                 blocked = (
                     adj.join(uncolored.withColumnRenamed("id", "src"), "src")

@@ -20,23 +20,26 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
+from graft.checkpoint import Checkpointer, drop_spill, observed, scratch, truncate
 from graft.graph import Graph
 
 
 def _min_neighbor_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """labels' = min(label, min over neighbors' labels). Edges symmetric."""
+    """labels' = min(label, min over neighbors' labels), as ``(id, comp,
+    old)`` with the previous label alongside. Edges symmetric."""
     nbr_min = (
         edges.join(labels, edges.dst == labels.id)
         .groupBy(edges.src.alias("id"))
         .agg(F.min("comp").alias("nbr"))
     )
     return labels.join(nbr_min, "id", "left").select(
-        "id", F.least("comp", F.coalesce("nbr", "comp")).alias("comp")
+        "id",
+        F.least("comp", F.coalesce("nbr", "comp")).alias("comp"),
+        F.col("comp").alias("old"),
     )
 
 
@@ -125,23 +128,12 @@ def connected_components(
         with superstep_conf(edges.sparkSession, graph.edge_rows()):
             changed = 0
             for it in range(max_iter):
-                # the changed-count probe rides the spill write via
-                # observe(): collected DURING the truncate action, so each
-                # round is ONE job instead of write + join-count (labels is
-                # a truncated parquet leaf — double reference is stats-safe)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                paired = _min_neighbor_round(edges, labels).join(
-                    labels.select("id", F.col("comp").alias("_old")), "id"
-                ).observe(
-                    obs,
-                    F.sum(
-                        (F.col("comp") != F.col("_old")).cast("long")
-                    ).alias("changed"),
+                step, obs = observed(
+                    _min_neighbor_round(edges, labels),
+                    changed=F.sum((F.col("comp") != F.col("old")).cast("long")),
                 )
-                new_labels = truncate(paired.select("id", "comp"))
-                changed = int(obs.get["changed"] or 0)
+                new_labels = truncate(step.select("id", "comp"))
+                changed = obs.get["changed"] or 0
                 drop_spill(labels)
                 labels = new_labels
                 if checkpointer is not None:
@@ -200,19 +192,20 @@ def _cc_star(
         ).unionAll(m.select(F.col("u"), F.col("m").alias("v")))
         return pairs.where(F.col("u") != F.col("v")).distinct()
 
-    def _sig(df: DataFrame) -> tuple:
-        # cheap fixed-point probe: the star rounds produce DISTINCT edge
-        # sets, so (count, xor of 64-bit row hashes, decimal sum of row
-        # hashes) identifies the set — ONE aggregation per round instead
-        # of two full exceptAll sort/shuffle set-differences (decimal sum
-        # because long sums overflow-error under ANSI mode; the xor+sum
-        # pair makes an accidental collision astronomically unlikely)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("x"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-        ).first()
-        return (row["n"], row["x"], row["s"])
+    def _signed(df: DataFrame) -> tuple[DataFrame, Observation]:
+        # cheap fixed-point probe, observed during the spill write: the
+        # star rounds produce DISTINCT edge sets, so (count, xor of
+        # 64-bit row hashes, decimal sum of row hashes) identifies the
+        # set — no job of its own instead of two full exceptAll
+        # sort/shuffle set-differences (decimal sum because long sums
+        # overflow-error under ANSI mode; the xor+sum pair makes an
+        # accidental collision astronomically unlikely)
+        return observed(
+            df,
+            n=F.count(F.lit(1)),
+            x=F.bit_xor(F.xxhash64("u", "v")),
+            s=F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+        )
 
     e = (
         graph.without_self_loops()
@@ -221,11 +214,13 @@ def _cc_star(
         .distinct()
     )
     with superstep_conf(graph.edges.sparkSession, graph.edge_rows()), scratch() as s:
+        e, obs = _signed(e)
         e = truncate(e)
-        sig = _sig(e)
+        sig = tuple(obs.get.values())
         for it in range(max_iter):
-            new_e = truncate(small_star(large_star(e)))
-            new_sig = _sig(new_e)
+            new_e, obs = _signed(small_star(large_star(e)))
+            new_e = truncate(new_e)
+            new_sig = tuple(obs.get.values())
             changed = int(new_sig != sig)
             if changed == 0:
                 # The signature is probabilistic — a collision would

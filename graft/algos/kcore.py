@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, row_count, scratch, truncate
+from graft.checkpoint import drop_spill, observed, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -175,25 +175,20 @@ def core_number(
                     .groupBy(F.col("src").alias("id"))
                     .agg(F.max("m").alias("h"))
                 )
-                new_cores = truncate(
+                step, obs = observed(
                     cores.join(h, "id", "left").select(
                         "id",
                         F.least(
                             "core", F.coalesce("h", F.lit(0))
                         ).cast("long").alias("core"),
-                    )
+                        F.col("core").alias("old"),
+                    ),
+                    changed=F.sum((F.col("core") != F.col("old")).cast("long")),
                 )
-                changed = (
-                    new_cores.join(
-                        cores.withColumnRenamed("core", "old"), "id"
-                    )
-                    .where(F.col("core") != F.col("old"))
-                    .limit(1)
-                    .count()
-                )
+                new_cores = truncate(step.select("id", "core"))
                 drop_spill(cores)
                 cores = new_cores
-                if changed == 0:
+                if not obs.get["changed"]:
                     break
         s.keep(cores)
     return cores

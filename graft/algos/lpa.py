@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
+from graft.checkpoint import Checkpointer, drop_spill, observed, scratch, truncate
 from graft.graph import Graph
 
 
@@ -60,13 +60,12 @@ def label_propagation(
         labels = truncate(labels)
         with superstep_conf(edges.sparkSession, graph.edge_rows()):
             for it in range(max_iter):
-                new_labels = lpa_round(edges, labels)
-                new_labels = truncate(new_labels)
-                changed = (
-                    new_labels.join(labels.withColumnRenamed("label", "old"), "id")
-                    .where(F.col("label") != F.col("old"))
-                    .count()
+                step, obs = observed(
+                    lpa_round(edges, labels),
+                    changed=F.sum((F.col("label") != F.col("old")).cast("long")),
                 )
+                new_labels = truncate(step.select("id", "label"))
+                changed = obs.get["changed"] or 0
                 drop_spill(labels)
                 labels = new_labels
                 if checkpointer is not None:
@@ -78,7 +77,8 @@ def label_propagation(
 
 
 def lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous round; isolated vertices keep their label."""
+    """One synchronous round ``(id, label, old)``: the new label next to
+    the previous one; isolated vertices keep their label."""
     scores = (
         edges.join(labels, edges.dst == labels.id)
         .groupBy(edges.src.alias("vid"), F.col("label"))
@@ -93,4 +93,4 @@ def lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     ).select(F.col("vid").alias("id"), "label")
     return labels.select("id", F.col("label").alias("old")).join(
         best, "id", "left"
-    ).select("id", F.coalesce("label", "old").alias("label"))
+    ).select("id", F.coalesce("label", "old").alias("label"), "old")

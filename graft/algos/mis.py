@@ -37,14 +37,12 @@ def maximal_independent_set(graph: Graph, seed: int = 42) -> DataFrame:
     Deterministic for a given (graph, seed)."""
     verts = graph.vertices_cached()
     spark = graph.edges.sparkSession
+    adj, n_adj = graph.simple_adjacency()
     with scratch() as s:
-        adj = truncate(
-            graph.without_self_loops().select("src", "dst").distinct()
-        )
         undecided = truncate(verts.select("id"))
         chosen_parts: list[DataFrame] = []
-        with superstep_conf(spark, row_count(adj)):
-            while undecided.limit(1).count() > 0:
+        with superstep_conf(spark, n_adj):
+            while row_count(undecided) > 0:
                 # edges whose both endpoints are still undecided
                 live = (
                     adj.join(undecided.withColumnRenamed("id", "src"), "src")

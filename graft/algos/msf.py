@@ -135,7 +135,7 @@ def minimum_spanning_forest(
                     "weight", "u", "v",
                 )
             )
-        if work.limit(1).count() == 0:
+        if row_count(work) == 0:
             return forest
         with superstep_conf(spark, graph.edge_rows()):
             for rnd in range(start, max_iter):

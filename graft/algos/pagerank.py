@@ -30,8 +30,9 @@ Scale design (verified with .explain + profiling):
 - ``fixed_iterations`` mode runs probe-free; ``truncate_every``
   controls how many supersteps chain into one job between lineage
   truncations (the bench scaling job chains all of them).
-- convergence mode pays one truncate + one L1-delta agg per superstep
-  (the driver-side probe, csrc/src/leiden_kernel.cu:1054-1066 analog).
+- convergence mode pays one truncate per superstep: the L1 delta (the
+  convergence probe, csrc/src/leiden_kernel.cu:1054-1066 analog) is
+  observed during that write, not computed by a job of its own.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
+from graft.checkpoint import Checkpointer, drop_spill, observed, scratch, truncate
 from graft.graph import Graph
 
 
@@ -320,18 +321,15 @@ def pagerank(
                     ranks = new_ranks
                     continue
 
-                # convergence probe rides the spill write via observe():
-                # the L1 delta is collected DURING the truncate action, so
+                # the L1 delta is observed during the spill write, so
                 # each superstep is ONE job instead of write + join-agg
                 # (prev ranks are a truncated parquet leaf, so referencing
                 # them twice in this one plan is stats-safe)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                paired = new_ranks.join(
-                    ranks.select("id", F.col("rank").alias("_old")), "id"
-                ).observe(
-                    obs, F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1")
+                paired, obs = observed(
+                    new_ranks.join(
+                        ranks.select("id", F.col("rank").alias("_old")), "id"
+                    ),
+                    l1=F.sum(F.abs(F.col("rank") - F.col("_old"))),
                 )
                 new_ranks = truncate(paired.select("id", "rank"))
                 delta = obs.get["l1"]

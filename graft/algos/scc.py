@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, scratch, truncate
+from graft.checkpoint import drop_spill, observed, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -148,20 +148,17 @@ def _max_forward_fixpoint(
             .groupBy(edges.dst.alias("id"))
             .agg(F.max("color").alias("up"))
         )
-        new_colors = truncate(
+        step, obs = observed(
             colors.join(inflow, "id", "left").select(
                 "id", F.greatest("color", F.coalesce("up", "color"))
-                .alias("color")
-            )
+                .alias("color"), F.col("color").alias("old"),
+            ),
+            changed=F.sum((F.col("color") != F.col("old")).cast("long")),
         )
-        changed = (
-            new_colors.join(
-                colors.withColumnRenamed("color", "old"), "id"
-            ).where(F.col("color") != F.col("old")).count()
-        )
+        new_colors = truncate(step.select("id", "color"))
         drop_spill(colors)
         colors = new_colors
-        if changed == 0:
+        if not obs.get["changed"]:
             return colors
     raise RuntimeError(
         f"SCC forward coloring did not converge in {max_iter} rounds"
@@ -180,7 +177,7 @@ def _coloring_scc(graph: Graph, max_iter: int) -> DataFrame:
         done: DataFrame | None = None
         with superstep_conf(spark, graph.edge_rows()):
             for _outer in range(max_iter):
-                if verts.limit(1).count() == 0:
+                if row_count(verts) == 0:
                     break
                 colors = _max_forward_fixpoint(edges_all, verts, max_iter)
                 # backward reach from each color root, restricted to the
@@ -211,7 +208,7 @@ def _coloring_scc(graph: Graph, max_iter: int) -> DataFrame:
                         .join(members, ["id", "color"], "left_anti")
                     )
                     step = truncate(step)
-                    if step.limit(1).count() == 0:
+                    if row_count(step) == 0:
                         break
                     members = truncate(members.unionAll(step))
                     frontier = step

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, truncate
+from graft.checkpoint import drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -65,38 +65,40 @@ def label_spreading(
     ).distinct()
     seed_ids = seed_dist.select("id").distinct()
     edges = graph.edges
-    dist = truncate(seed_dist)
     rank_w = Window.partitionBy("id").orderBy(
         F.desc(F.round("mass", 6)), "label"
     )
-    with superstep_conf(edges.sparkSession, graph.edge_rows()):
-        for _ in range(rounds):
-            gathered = (
-                edges.join(
-                    dist.withColumnRenamed("id", "src"), "src"
+    with scratch() as s:
+        dist = truncate(seed_dist)
+        with superstep_conf(edges.sparkSession, graph.edge_rows()):
+            for _ in range(rounds):
+                gathered = (
+                    edges.join(
+                        dist.withColumnRenamed("id", "src"), "src"
+                    )
+                    .groupBy(F.col("dst").alias("id"), "label")
+                    .agg(F.sum(F.col("weight") * F.col("mass")).alias("m"))
                 )
-                .groupBy(F.col("dst").alias("id"), "label")
-                .agg(F.sum(F.col("weight") * F.col("mass")).alias("m"))
-            )
-            norm_w = Window.partitionBy("id")
-            spread = gathered.select(
-                "id",
-                "label",
-                (F.col("m") / F.sum("m").over(norm_w)).alias("mass"),
-            )
-            if top_labels is not None:
-                spread = (
-                    spread.withColumn("r", F.row_number().over(rank_w))
-                    .where(F.col("r") <= top_labels)
-                    .drop("r")
+                norm_w = Window.partitionBy("id")
+                spread = gathered.select(
+                    "id",
+                    "label",
+                    (F.col("m") / F.sum("m").over(norm_w)).alias("mass"),
                 )
-            new_dist = truncate(
-                spread.join(seed_ids, "id", "left_anti").unionByName(
-                    seed_dist
+                if top_labels is not None:
+                    spread = (
+                        spread.withColumn("r", F.row_number().over(rank_w))
+                        .where(F.col("r") <= top_labels)
+                        .drop("r")
+                    )
+                new_dist = truncate(
+                    spread.join(seed_ids, "id", "left_anti").unionByName(
+                        seed_dist
+                    )
                 )
-            )
-            drop_spill(dist)
-            dist = new_dist
+                drop_spill(dist)
+                dist = new_dist
+        s.keep(dist)
     return (
         dist.withColumn("rk", F.row_number().over(rank_w))
         .where(F.col("rk") == 1)

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
-from graft.checkpoint import drop_spill, row_count, scratch, truncate
+from graft.checkpoint import drop_spill, observed, row_count, scratch, truncate
 from graft.graph import Graph
 
 
@@ -141,22 +141,20 @@ def truss_number(
                         .groupBy("u", "v")
                         .agg(F.count(F.lit(1)).alias("s"))
                     )
-                    nxt = truncate(
+                    # the min support is observed during the write, before
+                    # the support filter: when nothing is deleted it is the
+                    # min surviving support
+                    supported, obs = observed(
                         cur.join(sup, ["u", "v"], "left")
-                        .where(F.coalesce("s", F.lit(0)) >= k - 1)
-                        .select("u", "v")
+                        .select("u", "v", F.coalesce("s", F.lit(0)).alias("s")),
+                        m=F.min("s"),
+                    )
+                    nxt = truncate(
+                        supported.where(F.col("s") >= k - 1).select("u", "v")
                     )
                     n_old, n_new = row_count(cur), row_count(nxt)
                     stable = n_new == n_old
-                    s_min = None
-                    if stable and n_new:
-                        # min surviving support, evaluated BEFORE cur's spill
-                        # is dropped (sup's lineage reads cur's parquet)
-                        s_min = (
-                            cur.join(sup, ["u", "v"], "left")
-                            .agg(F.min(F.coalesce("s", F.lit(0))).alias("m"))
-                            .first()["m"]
-                        )
+                    s_min = obs.get["m"] if stable and n_new else None
                     if cur is not e:
                         drop_spill(cur)
                     cur = nxt

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, row_count, scratch, truncate
+from graft.checkpoint import drop_spill, scratch, truncate
 from graft.graph import Graph
 
 _LCG_M = 2147483647
@@ -62,7 +62,7 @@ def random_walks(
             f"random_walks needs integral vertex ids, got {id_type}; "
             "renumber with graft.io.actor_edges_to_long first"
         )
-    adj = graph.without_self_loops().select("src", "dst").distinct()
+    adj, n_adj = graph.simple_adjacency()
     with scratch() as s:
         indexed = truncate(
             adj.withColumn(
@@ -90,7 +90,7 @@ def random_walks(
         parts = [starts.select("walk_id", F.lit(0).alias("step"), "id")]
         cur = starts
         # ``indexed`` holds one row per adjacency row
-        with superstep_conf(spark, row_count(indexed)):
+        with superstep_conf(spark, n_adj):
             for t in range(1, walk_length + 1):
                 idx = _draw(F.col("walk_id"), t, seed) % F.col("d")
                 nxt = (
@@ -165,10 +165,8 @@ def node2vec_walks(
             "renumber with graft.io.actor_edges_to_long first"
         )
     w_ret, w_com, w_far = _bias_weights(p, q)
+    adj, n_adj = graph.simple_adjacency()
     with scratch() as s:
-        adj = truncate(
-            graph.without_self_loops().select("src", "dst").distinct()
-        )
         indexed = truncate(
             adj.withColumn(
                 "idx",
@@ -193,7 +191,7 @@ def node2vec_walks(
 
         spark = graph.edges.sparkSession
         parts = [starts.select("walk_id", F.lit(0).alias("step"), "id")]
-        with superstep_conf(spark, row_count(adj)):
+        with superstep_conf(spark, n_adj):
             # step 1: uniform (no prev) — the random_walks transition
             idx = _draw(F.col("walk_id"), 1, seed) % F.col("d")
             cur = truncate(

@@ -28,7 +28,7 @@ from typing import Any, Iterator
 import pyarrow as pa
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 class Checkpointer:
@@ -253,6 +253,16 @@ def truncate(df: DataFrame) -> DataFrame:
     if stack:
         stack[-1]._paths.append(out._graft_spill_path)
     return out
+
+
+def observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with the aggregates ``aggs`` (name → column) attached, and
+    the Observation holding their values once the :func:`truncate` of
+    that frame has run: a loop's stop test or per-step scalar then costs
+    no Spark job of its own. ``obs.get[name]`` is None for a sum, min or
+    max over no rows."""
+    obs = Observation()
+    return df.observe(obs, *(c.alias(n) for n, c in aggs.items())), obs
 
 
 def _remove_spill(path: str | None) -> None:

@@ -3,7 +3,9 @@ a call the spill root holds only the spills its result reads, the set
 of persisted RDDs is as it was, and no parquet leaf graft wrote was
 counted by a Spark job (``checkpoint.row_count`` reads its footers). A
 call that fails part way leaves the spill root and the persisted set as
-it found them."""
+it found them. A Graph's loop operators share one simple adjacency, and
+``superstep_conf`` gives the session its config back when its body
+raises."""
 
 from __future__ import annotations
 
@@ -14,14 +16,18 @@ import pytest
 
 from graft import checkpoint, fixtures
 from graft.algos.betweenness import betweenness_centrality
+from graft.algos.bfs import bfs_hops
+from graft.algos.cascade import ic_spread
 from graft.algos.centrality import eigenvector_centrality, hits, katz_centrality
 from graft.algos.closeness import closeness_centrality
 from graft.algos.coloring import greedy_color
+from graft.algos.community import superstep_conf
 from graft.algos.ecg import ecg
 from graft.algos.kcore import k_core
 from graft.algos.louvain import louvain
 from graft.algos.lpa import label_propagation
 from graft.algos.mis import maximal_independent_set
+from graft.algos.spreading import label_spreading
 from graft.algos.walks import random_walks
 from graft.algos.wl import wl_colors
 from graft.checkpoint import _is_persisted
@@ -45,6 +51,11 @@ OPS = {
         g, sequential_threshold=0
     ),
     "ecg": lambda g: ecg(g, ensemble_size=1, max_sweeps=2),
+    "bfs_hops": lambda g: bfs_hops(g, 0),
+    "ic_spread": lambda g: ic_spread(g, [0]),
+    "label_spreading": lambda g: label_spreading(
+        g, g.edges.sparkSession.createDataFrame([(0, "a")], "id long, label string")
+    ),
 }
 
 # (module whose third truncate raises, the call)
@@ -56,6 +67,8 @@ FAILING = {
     "lpa": ("graft.algos.lpa", lambda g: label_propagation(g, max_iter=2)),
     "coloring": ("graft.algos.coloring", OPS["coloring"]),
     "closeness": ("graft.algos.closeness", OPS["closeness"]),
+    "bfs_hops": ("graft.algos.bfs", OPS["bfs_hops"]),
+    "ic_spread": ("graft.algos.cascade", OPS["ic_spread"]),
 }
 
 
@@ -119,3 +132,34 @@ def test_failure_part_way_leaves_nothing(
     assert persisted_rdds() == persisted
     root = checkpoint._spill_root
     assert root is None or os.listdir(root) == []
+
+
+def test_loop_operators_share_one_simple_adjacency(spark, spill_dir, monkeypatch):
+    g = _cached_graph(spark)
+    real = checkpoint.spill
+    written = []
+
+    def spill(df):
+        written.append(df.columns)
+        return real(df)
+
+    monkeypatch.setattr(checkpoint, "spill", spill)
+    for op in (greedy_color, maximal_independent_set, closeness_centrality):
+        op(g).collect()
+    monkeypatch.setattr(checkpoint, "spill", real)
+    g.unpersist()
+    assert written.count(["src", "dst"]) == 1
+
+
+def test_superstep_conf_restores_the_session_conf_when_its_body_raises(spark):
+    aqe, parts = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(parts)
+    spark.conf.set(parts, "7")
+    try:
+        with pytest.raises(RuntimeError, match="body"):
+            with superstep_conf(spark, 10):
+                assert (spark.conf.get(aqe), spark.conf.get(parts)) == ("false", "4")
+                raise RuntimeError("body")
+        assert (spark.conf.get(aqe), spark.conf.get(parts)) == ("true", "7")
+    finally:
+        spark.conf.set(parts, saved)

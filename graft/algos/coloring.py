@@ -13,8 +13,10 @@ DuckDB oracle. Colors used ≤ max degree + 1 by construction.
 Plan per round: one join of the uncolored adjacency against the
 colored set (collect_set of neighbor colors, then the mex via
 array_except over a 0..deg sequence — all JVM-side array functions),
-one join against the uncolored set for the readiness test. State
-shrinks monotonically; no driver data beyond the convergence scalar.
+one join against the uncolored set for the readiness test. The colored
+set is the union of the rounds' newly colored spills, each written
+once. State shrinks monotonically; no driver data beyond the
+convergence scalar.
 """
 
 from __future__ import annotations
@@ -44,9 +46,8 @@ def greedy_color(graph: Graph, seed: int = 42) -> DataFrame:
     adj, n_adj = graph.simple_adjacency()
     with scratch() as s:
         uncolored = truncate(verts.select("id"))
-        colored = truncate(
-            verts.select("id", F.lit(0).alias("color")).limit(0)
-        )
+        # the union of the rounds' newly colored leaves
+        colored = verts.select("id", F.lit(0).alias("color")).limit(0)
         with superstep_conf(spark, n_adj):
             while row_count(uncolored) > 0:
                 # ready: no uncolored neighbor of higher priority
@@ -86,8 +87,8 @@ def greedy_color(graph: Graph, seed: int = 42) -> DataFrame:
                         .alias("color"),
                     )
                 )
-                colored = truncate(colored.unionAll(newly))
+                colored = colored.unionAll(newly)
                 uncolored = truncate(uncolored.join(newly, "id", "left_anti"))
-            out = truncate(colored.select("id", "color"))
+            out = truncate(colored)
         s.keep(out)
     return out

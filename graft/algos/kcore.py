@@ -1,18 +1,12 @@
 """k-core extraction and full core decomposition (degree peeling).
 
 The cugraph API family ships ``cugraph.k_core`` AND ``cugraph.core_number``;
-the engine carries both:
-
-- :func:`k_core` — membership of the maximal subgraph where every vertex
-  has degree ≥ k, by repeatedly deleting under-degree vertices until a
-  fixpoint. Each round is one degree aggregation + one semi-join filter
-  over the surviving edge set.
+the engine carries both, with one peeling path:
 
 - :func:`core_number` — the per-vertex core index for EVERY vertex in one
-  pass (so a core-decomposition caller never re-runs peeling per k).
-  When :func:`graft.algos.community.one_task` says so it runs the exact
-  Batagelj–Zaversnik O(E) bin-sort peel as ONE executor task; else the
-  distributed path iterates the neighborhood h-index operator
+  pass. When :func:`graft.algos.community.one_task` says so it runs the
+  exact Batagelj–Zaversnik O(E) bin-sort peel as ONE executor task; else
+  the distributed path iterates the neighborhood h-index operator
   c'(v) = min(c(v), H({c(u): u ∈ N(v)}))
   from c0 = degree, whose fixpoint is exactly the core number
   (Lü et al., "The H-index of a network node and its relation to degree
@@ -20,6 +14,10 @@ the engine carries both:
   per-vertex window + one groupBy — O(few) rounds on link graphs, and
   the iteration is monotone non-increasing so the changed-count probe
   terminates it exactly.
+
+- :func:`k_core` — membership of the maximal subgraph where every vertex
+  has degree ≥ k: a filter of :func:`core_number` at ``core ≥ k``
+  (v is in the k-core iff its core number is at least k).
 
 Training-data relevance: the k-core is the standard "dense interaction
 backbone" filter (drop leaf actors / one-off conversations before
@@ -37,51 +35,11 @@ from graft.checkpoint import drop_spill, observed, row_count, scratch, truncate
 from graft.graph import Graph
 
 
-def k_core(graph: Graph, k: int, max_iter: int | None = None) -> DataFrame:
-    """Returns ``(id,)`` — the vertices of the k-core (possibly empty).
-
-    Peeling is monotone (vertices only ever leave), so the loop runs to
-    the first round that deletes nothing — guaranteed to terminate, so
-    by default there is NO round cap (a cap would silently return an
-    under-peeled superset on chain-like graphs whose peeling depth
-    exceeds it). Passing ``max_iter`` raises RuntimeError if the
-    fixpoint is not reached within the cap, never returning a partial
-    result.
-    """
-    with scratch() as s:
-        edges = truncate(
-            graph.without_self_loops().select("src", "dst").distinct()
-        )
-        with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-            it = 0
-            while True:
-                it += 1
-                if max_iter is not None and it > max_iter:
-                    raise RuntimeError(
-                        f"k_core(k={k}) did not reach its peeling fixpoint "
-                        f"within max_iter={max_iter} rounds"
-                    )
-                deg = edges.groupBy(F.col("src").alias("id")).agg(
-                    F.count(F.lit(1)).alias("d")
-                )
-                survivors = deg.where(F.col("d") >= k).select("id")
-                new_edges = truncate(
-                    edges.join(
-                        survivors.withColumnRenamed("id", "src"), "src",
-                        "left_semi",
-                    ).join(
-                        survivors.withColumnRenamed("id", "dst"), "dst",
-                        "left_semi",
-                    )
-                )
-                n_old = row_count(edges)
-                n_new = row_count(new_edges)
-                drop_spill(edges)
-                edges = new_edges
-                if n_new == n_old:
-                    break
-        s.keep(edges)
-    return edges.select(F.col("src").alias("id")).distinct()
+def k_core(graph: Graph, k: int) -> DataFrame:
+    """Returns ``(id,)`` — the vertices of the k-core (possibly empty):
+    the vertices whose core number is at least ``k`` (cores are nested).
+    For ``k`` ≤ 1 that is every vertex with a non-loop edge."""
+    return core_number(graph).where(F.col("core") >= max(k, 1)).select("id")
 
 
 def _sequential_core_number(graph: Graph) -> DataFrame:

@@ -24,9 +24,10 @@ MERGE GRAPH (≤ one edge per component — tiny, and it dispatches to the
 one-task union-find kernel as soon as it fits a batch), and one
 ``(comp-pair) → min-edge`` contraction groupBy that shrinks the working
 edge list geometrically. No driver-side data: the driver holds only
-per-round counts. Below the Arrow-batch threshold the whole forest runs
-as ONE executor task (Kruskal + union-find — the sequential-tail rule
-every fixpoint algorithm in the engine follows).
+per-round counts, read from the working spill's parquet footers (the
+stop test runs no job). Below the Arrow-batch threshold the whole
+forest runs as ONE executor task (Kruskal + union-find — the
+sequential-tail rule every fixpoint algorithm in the engine follows).
 """
 
 from __future__ import annotations
@@ -197,6 +198,7 @@ def minimum_spanning_forest(
                 )
                 prev, prev_grab, prev_cc = work, grabbed, cc
                 work = truncate(contracted)
+                n_work = row_count(work)
                 drop_spill(prev)
                 drop_spill(prev_grab)
                 drop_spill(prev_cc)
@@ -213,7 +215,7 @@ def minimum_spanning_forest(
                     )
                     saved = checkpointer.save(
                         rnd, combined, algo="msf",
-                        n_work=row_count(work), n_forest=row_count(forest),
+                        n_work=n_work, n_forest=row_count(forest),
                     )
                     work = saved.where(F.col("kind") == "w").select(
                         "a", "b", "weight", "u", "v"
@@ -223,7 +225,7 @@ def minimum_spanning_forest(
                     )
                 # emptiness checked AFTER contraction so a run that needs
                 # exactly max_iter rounds completes instead of raising
-                if work.limit(1).count() == 0:
+                if n_work == 0:
                     break
             else:
                 raise RuntimeError(

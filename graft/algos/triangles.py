@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task
-from graft.checkpoint import scratch, truncate
+from graft.checkpoint import Scratch, scratch, truncate
 from graft.graph import Graph
 
 
@@ -89,38 +89,36 @@ def _sequential_triangle_count(graph: Graph) -> int:
     return int(row["n"]) if row is not None else 0
 
 
+def _closed_wedges(s: Scratch, graph: Graph) -> DataFrame:
+    """``(x, y, z)`` — every triangle once, at its wedge apex ``x`` by
+    (degree, id) rank, with ``y < z`` by id. The oriented edge set is
+    persisted in ``s``, since the plan reads it three times."""
+    o = s.persist(_oriented(graph))
+    o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
+    # normalize the closing edge to id order: wedges carry (y < z) by id,
+    # while o is oriented by degree-rank
+    closing = o.select(
+        F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
+    )
+    return wedges.join(closing, ["y", "z"], "left_semi")
+
+
 def triangle_count(graph: Graph, sequential_threshold: int = 1_000_000) -> int:
     """Total number of triangles in the graph.
     ``sequential_threshold``: see :func:`graft.algos.community.one_task`."""
     if one_task(graph, sequential_threshold):
         return _sequential_triangle_count(graph)
     with scratch() as s:
-        o = s.persist(_oriented(graph))
-        o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
-        # normalize the closing edge to id order: wedges carry (y < z) by id,
-        # while o is oriented by degree-rank
-        closing = o.select(
-            F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
-        )
-        return wedges.join(closing, ["y", "z"], "left_semi").count()
+        return _closed_wedges(s, graph).count()
 
 
 def triangles_per_vertex(graph: Graph) -> DataFrame:
     """Returns ``(id long, triangles long)`` — per-vertex triangle counts
     (each triangle contributes 1 to each of its three corners)."""
     with scratch() as s:
-        o = s.persist(_oriented(graph))
-        o1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        o2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        wedges = o1.join(o2, "x").where(F.col("y") < F.col("z"))
-        # normalize the closing edge to id order: wedges carry (y < z) by id,
-        # while o is oriented by degree-rank
-        closing = o.select(
-            F.least("a", "b").alias("y"), F.greatest("a", "b").alias("z")
-        )
-        closed = s.persist(wedges.join(closing, ["y", "z"], "left_semi"))
+        closed = s.persist(_closed_wedges(s, graph))
         per_corner = (
             closed.select(F.col("x").alias("id"))
             .unionAll(closed.select(F.col("y").alias("id")))

@@ -1,11 +1,10 @@
 """Full truss decomposition: per-edge truss numbers in one pass.
 
 Counterpart of graft.algos.kcore.core_number for the triangle-density
-backbone: :func:`graft.algos.ktruss.k_truss` answers membership for ONE
-k per call, so a truss-decomposition caller would re-run support
-peeling per k; :func:`truss_number` emits max-k membership for EVERY
-edge in one job (truss(e) = the largest k such that e is in the
-k-truss; every non-loop edge is in the 2-truss).
+backbone: :func:`truss_number` emits max-k membership for EVERY edge in
+one job (truss(e) = the largest k such that e is in the k-truss; every
+non-loop edge is in the 2-truss), and
+:func:`graft.algos.ktruss.k_truss` reads one k of it.
 
 Two paths, chosen by :func:`graft.algos.community.one_task`:
 
@@ -14,13 +13,14 @@ Two paths, chosen by :func:`graft.algos.community.one_task`:
   heap over edge supports, removing the min-support edge and
   decrementing its triangle partners.
 
-- distributed: level peeling — for k = 2, 3, …: run the k_truss-style
-  support-filter fixpoint for the (k+1)-truss and stamp the edges it
-  deletes with truss = k. Every edge is deleted exactly once across
-  all levels, so total work is the k_truss fixpoint work plus one
-  anti-join per level; levels are bounded by the max truss (small on
-  link graphs). Each round stays one wedge join + one hash-agg + one
-  filter — no all-pairs, nothing driver-sized.
+- distributed: level peeling — for k = 2, 3, …: run the support
+  fixpoint (:func:`_support_fixpoint`, the one triangle-support peel of
+  the engine, which k_truss also runs above the gate) for the
+  (k+1)-truss and stamp the edges it deletes with truss = k. Every edge
+  is deleted exactly once across all levels, so total work is one
+  fixpoint's work plus one anti-join per level; levels are bounded by
+  the max truss (small on link graphs). Each round stays one wedge join
+  + one hash-agg + one filter — no all-pairs, nothing driver-sized.
 """
 
 from __future__ import annotations
@@ -90,6 +90,59 @@ def _sequential_truss_number(graph: Graph) -> DataFrame:
     return run_one_task(fn, f"u {id_type}, v {id_type}, truss long", ends)
 
 
+def _support_fixpoint(
+    e: DataFrame, min_support: int
+) -> tuple[DataFrame, int | None]:
+    """Peels the oriented edge spill ``e`` (``u < v``) to the maximal
+    subgraph whose every edge lies in at least ``min_support`` triangles
+    — the ``(min_support + 2)``-truss of ``e``. Returns ``(survivors,
+    s_min)``: the survivors' spill and their minimum support (None when
+    none survive). Each round is one wedge join, one support count and
+    one filter; peeling is monotone (edges only ever leave), so the loop
+    stops at the first round that deletes nothing, read from the spills'
+    footers. ``e`` itself is left to the caller."""
+    cur = e
+    while True:
+        # triangles x<y<z: wedge at the minimum corner, closed by a
+        # semi-join on the (y, z) edge
+        tri = (
+            cur.select(F.col("u").alias("x"), F.col("v").alias("y"))
+            .join(
+                cur.select(F.col("u").alias("x"), F.col("v").alias("z")),
+                "x",
+            )
+            .where(F.col("y") < F.col("z"))
+            .join(
+                cur.select(F.col("u").alias("y"), F.col("v").alias("z")),
+                ["y", "z"],
+                "left_semi",
+            )
+        )
+        sup = (
+            tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
+            .unionAll(tri.select(F.col("x").alias("u"), F.col("z").alias("v")))
+            .unionAll(tri.select(F.col("y").alias("u"), F.col("z").alias("v")))
+            .groupBy("u", "v")
+            .agg(F.count(F.lit(1)).alias("s"))
+        )
+        # the survivors' min support is observed during the write; it is
+        # read only once nothing is deleted. Observing after the filter
+        # leaves the join free to become an inner join.
+        survivors, obs = observed(
+            cur.join(sup, ["u", "v"], "left")
+            .select("u", "v", F.coalesce("s", F.lit(0)).alias("s"))
+            .where(F.col("s") >= min_support),
+            m=F.min("s"),
+        )
+        nxt = truncate(survivors.select("u", "v"))
+        n_old, n_new = row_count(cur), row_count(nxt)
+        if cur is not e:
+            drop_spill(cur)
+        cur = nxt
+        if n_new == n_old:
+            return cur, (int(obs.get["m"]) if n_new else None)
+
+
 def truss_number(
     graph: Graph, sequential_threshold: int = 1_000_000
 ) -> DataFrame:
@@ -98,9 +151,8 @@ def truss_number(
     k-truss. Minimum value 2 (an edge in no triangle).
 
     ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
-    Differentially certified against repeated
-    :func:`graft.algos.ktruss.k_truss` membership in
-    tests/test_truss.py.
+    Both paths are certified against a pure-Python repeated k-truss
+    peel in tests/test_truss.py.
     """
     if one_task(graph, sequential_threshold):
         return _sequential_truss_number(graph)
@@ -110,56 +162,9 @@ def truss_number(
         out: DataFrame | None = None
         k = 2
         with superstep_conf(graph.edges.sparkSession, graph.edge_rows()):
-            while True:
-                if row_count(e) == 0:
-                    break
-                # (k+1)-truss fixpoint from the current survivor set:
-                # support filter at min_support = k-1, iterated to stability
-                cur = e
-                while True:
-                    tri = (
-                        cur.select(F.col("u").alias("x"), F.col("v").alias("y"))
-                        .join(
-                            cur.select(F.col("u").alias("x"), F.col("v").alias("z")),
-                            "x",
-                        )
-                        .where(F.col("y") < F.col("z"))
-                        .join(
-                            cur.select(F.col("u").alias("y"), F.col("v").alias("z")),
-                            ["y", "z"],
-                            "left_semi",
-                        )
-                    )
-                    sup = (
-                        tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
-                        .unionAll(
-                            tri.select(F.col("x").alias("u"), F.col("z").alias("v"))
-                        )
-                        .unionAll(
-                            tri.select(F.col("y").alias("u"), F.col("z").alias("v"))
-                        )
-                        .groupBy("u", "v")
-                        .agg(F.count(F.lit(1)).alias("s"))
-                    )
-                    # the min support is observed during the write, before
-                    # the support filter: when nothing is deleted it is the
-                    # min surviving support
-                    supported, obs = observed(
-                        cur.join(sup, ["u", "v"], "left")
-                        .select("u", "v", F.coalesce("s", F.lit(0)).alias("s")),
-                        m=F.min("s"),
-                    )
-                    nxt = truncate(
-                        supported.where(F.col("s") >= k - 1).select("u", "v")
-                    )
-                    n_old, n_new = row_count(cur), row_count(nxt)
-                    stable = n_new == n_old
-                    s_min = obs.get["m"] if stable and n_new else None
-                    if cur is not e:
-                        drop_spill(cur)
-                    cur = nxt
-                    if stable:
-                        break
+            while row_count(e):
+                # the (k+1)-truss: support ≥ k-1 from the current survivors
+                cur, s_min = _support_fixpoint(e, k - 1)
                 # edges deleted between the k-truss (= e) and the (k+1)-truss
                 # carry truss number k
                 removed = truncate(
@@ -178,7 +183,7 @@ def truss_number(
                 # straight from 2 to 30 instead of paying 28 empty fixpoints)
                 if s_min is None:
                     break  # survivor set is empty
-                k = max(k + 1, int(s_min) + 2)
+                k = max(k + 1, s_min + 2)
     if out is None:
         # graph had no non-loop edges
         ends = _oriented_edges(graph)

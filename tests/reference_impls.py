@@ -92,6 +92,52 @@ def triangles_per_vertex_ref(edges) -> dict[int, int]:
     return out
 
 
+def kcore_ref(edges, k) -> set:
+    """Sequential vertex peeling on the undirected simple graph: the
+    k-core's vertices (those with a non-loop edge for k ≤ 1)."""
+    adj: dict[int, set[int]] = {}
+    for u, v, _ in edges:
+        if u == v:
+            continue
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    changed = True
+    while changed:
+        changed = False
+        for v in list(adj):
+            if len(adj[v]) < k:
+                for u in adj[v]:
+                    adj[u].discard(v)
+                del adj[v]
+                changed = True
+    return {v for v in adj if adj[v]}
+
+
+def ktruss_ref(edges, k) -> set:
+    """Sequential support peeling on the undirected simple graph: the
+    k-truss's edges, oriented (min, max)."""
+    es = set()
+    adj: dict[int, set[int]] = {}
+    for u, v, _ in edges:
+        if u == v:
+            continue
+        a, b = min(u, v), max(u, v)
+        es.add((a, b))
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    changed = True
+    while changed:
+        changed = False
+        for (a, b) in sorted(es):
+            support = len(adj[a] & adj[b])
+            if support < k - 2:
+                es.discard((a, b))
+                adj[a].discard(b)
+                adj[b].discard(a)
+                changed = True
+    return es
+
+
 def lpa_ref(edges, max_iter: int = 20) -> dict[int, int]:
     """Synchronous weighted LPA, tie-break (max weight, min label) —
     mirrors graft.algos.lpa exactly, including the changed==0 stop."""

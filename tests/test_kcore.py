@@ -4,29 +4,10 @@ import numpy as np
 import pytest
 
 from graft import fixtures
+from graft.algos import kcore
 from graft.algos.kcore import core_number, k_core
 from graft.graph import Graph
-from tests.reference_impls import random_graph
-
-
-def _kcore_ref(edges, k):
-    """Sequential peeling oracle on the undirected simple graph."""
-    adj: dict[int, set[int]] = {}
-    for u, v, _ in edges:
-        if u == v:
-            continue
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    changed = True
-    while changed:
-        changed = False
-        for v in list(adj):
-            if len(adj[v]) < k:
-                for u in adj[v]:
-                    adj[u].discard(v)
-                del adj[v]
-                changed = True
-    return {v for v in adj if adj[v]}
+from tests.reference_impls import kcore_ref, random_graph
 
 
 def _run(spark, edges, k):
@@ -51,27 +32,27 @@ def test_triangle_with_tail(spark):
     assert _run(spark, edges, 2) == {0, 1, 2}
 
 
-@pytest.mark.parametrize("k", [2, 3])
+@pytest.mark.parametrize("k", [0, 2, 3])
 def test_random_graph_matches_peeling_oracle(spark, k):
     edges = random_graph(60, 0.06, seed=17)
-    assert _run(spark, edges, k) == _kcore_ref(edges, k)
+    assert _run(spark, edges, k) == kcore_ref(edges, k)
+
+
+@pytest.mark.parametrize("k", [0, 2, 3])
+def test_supersteps_match_peeling_oracle(spark, monkeypatch, k):
+    # above the one-task gate k_core reads core_number's h-index fixpoint
+    monkeypatch.setattr(kcore, "one_task", lambda *a, **kw: False)
+    edges = random_graph(60, 0.06, seed=17)
+    assert _run(spark, edges, k) == kcore_ref(edges, k)
 
 
 def test_deep_peeling_chain_reaches_fixpoint(spark):
     # A long path peels ~2 vertices per round: the true 2-core is EMPTY
     # but any fixed round cap under ~n/2 would return an under-peeled
-    # superset. The fixpoint loop must return the exact empty set.
+    # superset. The exact peel must return the empty set.
     n = 250
     edges = [(i, i + 1, 1.0) for i in range(n - 1)]
     assert _run(spark, edges, 2) == set()
-
-
-def test_k_core_max_iter_cap_raises(spark):
-    edges = [(i, i + 1, 1.0) for i in range(49)]
-    g = Graph.from_undirected(fixtures.edges_df(spark, edges)).cache()
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        k_core(g, 2, max_iter=3)
-    g.unpersist()
 
 
 def _core_number_ref(edges):

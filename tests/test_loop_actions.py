@@ -184,6 +184,43 @@ def test_more_supersteps_run_no_more_actions(graphs, actions, monkeypatch, name)
     assert sorted(a_long) == sorted(a_short)
 
 
+def _ruler_path(spark, n: int) -> Graph:
+    """A path whose j-th edge weighs the trailing zeros of j: each
+    Borůvka round merges neighbor pairs, so rounds grow as log n."""
+    return Graph.from_undirected(
+        fixtures.edges_df(
+            spark,
+            [(j - 1, j, float((j & -j).bit_length() - 1))
+             for j in range(1, n + 1)],
+        )
+    )
+
+
+def test_more_boruvka_rounds_run_no_more_actions(graphs, actions, monkeypatch):
+    """msf's stop test reads the contracted spill's footers. The actions
+    of the merge graph's connected_components call are not recorded: its
+    own gate counts that graph's edges."""
+    msf = importlib.import_module("graft.algos.msf")
+    real = msf.connected_components
+
+    def unrecorded(*a, **k):
+        n = len(actions)
+        try:
+            return real(*a, **k)
+        finally:
+            del actions[n:]
+
+    monkeypatch.setattr(msf, "connected_components", unrecorded)
+    (a_short, t_short), (a_long, t_long) = (
+        _run(monkeypatch, actions, "msf",
+             lambda g, n: minimum_spanning_forest(g, sequential_threshold=0),
+             graphs(_ruler_path, size), None)
+        for size in (4, 8)
+    )
+    assert t_long > t_short
+    assert sorted(a_long) == sorted(a_short)
+
+
 def _self_loops(spark, n: int) -> Graph:
     return Graph.from_undirected(
         fixtures.edges_df(spark, [(i, i, 1.0) for i in range(n)])

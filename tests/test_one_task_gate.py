@@ -10,9 +10,11 @@ from __future__ import annotations
 import pytest
 
 from graft import fixtures
+from graft.algos import kcore, ktruss, truss
 from graft.algos.community import one_task
 from graft.algos.components import connected_components
-from graft.algos.kcore import core_number
+from graft.algos.kcore import core_number, k_core
+from graft.algos.ktruss import k_truss
 from graft.algos.msf import minimum_spanning_forest
 from graft.algos.pagerank import pagerank
 from graft.algos.scc import strongly_connected_components
@@ -108,3 +110,24 @@ def test_callers_cache_kept_and_nothing_persisted_left(
         assert leftover_spills(out) == [], path
     g.unpersist()
     assert persisted_rdds() == before
+
+
+@pytest.mark.parametrize(
+    "extract", [lambda g: k_core(g, 2), lambda g: k_truss(g, 3)],
+    ids=["k_core", "k_truss"],
+)
+def test_extractions_below_the_gate_spill_nothing(spark, monkeypatch, extract):
+    """Below the gate k_core and k_truss filter the one-task
+    decomposition: no superstep loop, so no truncate."""
+    spills = []
+    for mod in (kcore, ktruss, truss):
+        def counted(df, real=mod.truncate):
+            spills.append(df)
+            return real(df)
+        monkeypatch.setattr(mod, "truncate", counted)
+    g = _graph(spark, _seeded_edges()).cache()
+    try:
+        assert extract(g).collect()
+    finally:
+        g.unpersist()
+    assert spills == []

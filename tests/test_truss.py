@@ -1,7 +1,8 @@
-"""Full truss decomposition vs repeated k_truss membership.
+"""Full truss decomposition vs repeated sequential k-truss peeling.
 
 Differential oracle: truss_number(u, v) must equal the largest k such
-that (u, v) survives in k_truss(graph, k) — checked edge-for-edge on
+that (u, v) survives in the pure-Python k-truss peel
+(tests.reference_impls.ktruss_ref) — checked edge-for-edge on
 deterministic random graphs, on BOTH execution paths (sequential peel
 and distributed level peeling).
 """
@@ -11,9 +12,9 @@ import random
 import pytest
 
 from graft import fixtures
-from graft.algos.ktruss import k_truss
 from graft.algos.truss import truss_number
 from graft.graph import Graph
+from tests.reference_impls import ktruss_ref
 
 
 def _random_edges(seed, n=24, m=70):
@@ -23,15 +24,12 @@ def _random_edges(seed, n=24, m=70):
     return [(u, v, 1.0) for u, v in sorted(es)]
 
 
-def _truss_by_repeated_ktruss(spark, g):
-    """Clean-room oracle: max k with (u,v) ∈ k_truss(k), probing k
+def _truss_by_repeated_ktruss(edges):
+    """Clean-room oracle: max k with (u,v) in the k-truss, probing k
     upward until the truss is empty."""
     want = {}
     k = 2
-    while True:
-        members = {(r["u"], r["v"]) for r in k_truss(g, k).collect()}
-        if not members:
-            break
+    while members := ktruss_ref(edges, k):
         for e in members:
             want[e] = k
         k += 1
@@ -41,14 +39,12 @@ def _truss_by_repeated_ktruss(spark, g):
 @pytest.mark.parametrize("seed", [11, 12])
 @pytest.mark.parametrize("threshold", [10**9, 0], ids=["seq", "dist"])
 def test_truss_number_matches_repeated_ktruss(spark, seed, threshold):
-    g = Graph.from_undirected(
-        fixtures.edges_df(spark, _random_edges(seed))
-    ).cache()
+    edges = _random_edges(seed)
+    g = Graph.from_undirected(fixtures.edges_df(spark, edges)).cache()
     got = {(r["u"], r["v"]): r["truss"]
            for r in truss_number(g, sequential_threshold=threshold).collect()}
-    want = _truss_by_repeated_ktruss(spark, g)
     g.unpersist()
-    assert got == want
+    assert got == _truss_by_repeated_ktruss(edges)
 
 
 def test_clique_ring_truss(spark):

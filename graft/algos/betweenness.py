@@ -11,7 +11,8 @@ of how many sources are in flight:
 
 - forward: frontier(s, id, sigma) joins the edge table on the vertex
   key; new reach rows are anti-joined against the visited set and
-  groupBy-summed (sigma accumulates shortest-path counts);
+  groupBy-summed (sigma accumulates shortest-path counts) — the one
+  BFS of the closeness family (:func:`graft.algos.closeness._forward_levels`);
 - backward: depths processed descending; delta(v) = Σ over successors
   w one level deeper: sigma_v/sigma_w · (1 + delta_w) — one join of
   adjacent frontier levels per depth.
@@ -25,60 +26,15 @@ n/k exactly as networkx/cugraph do.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graft.algos.closeness import _forward_levels, _sources
 from graft.algos.community import run_one_task, superstep_conf
-from graft.checkpoint import row_count, scratch, truncate
+from graft.checkpoint import scratch, truncate
 from graft.graph import Graph
-
-
-def _forward_levels(adj, sources) -> list[DataFrame]:
-    """Multi-source level-synchronous BFS carrying shortest-path counts
-    sigma: one edge join + anti-join + hash-agg per DEPTH for all
-    sources at once, state keyed (s, id). Returns the per-depth levels
-    (``levels[d]`` = vertices at distance d from their source s)."""
-    frontier = truncate(
-        sources.select("s", F.col("s").alias("id"),
-                       F.lit(1.0).alias("sigma"))
-    )
-    visited = frontier.select("s", "id")
-    levels: list[DataFrame] = [frontier]
-    while True:
-        reached = (
-            levels[-1]
-            .join(adj.withColumnRenamed("src", "id"), "id")
-            .select("s", F.col("dst").alias("id"), "sigma")
-            .join(visited, ["s", "id"], "left_anti")
-            .groupBy("s", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        nxt = truncate(reached)
-        if row_count(nxt) == 0:
-            break
-        levels.append(nxt)
-        visited = truncate(visited.unionAll(nxt.select("s", "id")))
-    return levels
-
-
-def _select_sources(
-    verts: DataFrame,
-    n: int,
-    k: int | None,
-    sources: DataFrame | None,
-    seed: int,
-) -> tuple[DataFrame, int, bool]:
-    """Shared source-selection contract for the Brandes family:
-    explicit ``sources`` win (no rescale), else all vertices, else a
-    deterministic xxhash64-ordered sample of ``k``. Returns the
-    one-column ``(s)`` table, its count, and whether it was explicit."""
-    explicit = sources is not None
-    if sources is None:
-        sources = verts
-        if k is not None and k < n:
-            sources = verts.orderBy(F.xxhash64("id", F.lit(seed))).limit(k)
-    sources = sources.select(F.col("id").alias("s"))
-    return sources, sources.count(), explicit
 
 
 def _brandes_tail_ready(m: int, n_src: int, threshold: int) -> bool:
@@ -106,13 +62,11 @@ def _brandes_tail_ready(m: int, n_src: int, threshold: int) -> bool:
 _SOURCE_PARALLEL_MAX_SOURCES = 4096
 
 
-def _source_parallel_brandes(
+def _source_parallel_partials(
     graph: Graph,
     adj: DataFrame,
     sources: DataFrame,
     per_edge: bool,
-    factor: float,
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Source-parallel Brandes — the middle rung of the dispatch ladder
     (cugraph parallelizes Brandes the same way: one BFS tree per
@@ -120,13 +74,14 @@ def _source_parallel_brandes(
     symmetric edge arrays ship to every task once via a Spark broadcast
     (torrent protocol on a real cluster — E fits one Arrow batch by the
     caller's gate, so this is a bounded, not data-sized, broadcast);
-    the sampled sources round-robin across ``n_parts`` tasks; each task
+    the sampled sources round-robin across one task per core; each task
     runs the SAME vectorized kernel as the one-task tail
     (:func:`_brandes_numpy`) over its source slice, emitting raw
-    per-vertex (or per-edge) dependency partials; one map-side
-    combinable groupBy sums the ≤ n_parts partial vectors, and factor +
-    6-dp round apply after the sum — identical semantics to the tail
-    up to float association order.
+    per-vertex ``(id, b)`` (or per-edge ``(u, v, b)``) dependency
+    partials; :func:`_finish` sums the ≤ n_parts partial vectors in one
+    map-side combinable groupBy and applies factor + 6-dp round after
+    the sum — identical semantics to the tail up to float association
+    order.
 
     Scale shape: zero shuffle proportional to E (the broadcast is
     read-only and shared per worker), perfect source-count parallelism,
@@ -146,6 +101,8 @@ def _source_parallel_brandes(
     # Released by Graph.unpersist().
     bcast = graph._brandes_bcast
     if bcast is None:
+        # bounded by the caller's rung gate: at most sequential_threshold
+        # vertex ids and sequential_threshold adjacency rows
         ids = np.sort(
             graph.vertices().select("id").toPandas()["id"].to_numpy()
         )
@@ -156,8 +113,7 @@ def _source_parallel_brandes(
         bcast = spark.sparkContext.broadcast((ids, esrc, edst))
         graph._brandes_bcast = bcast
 
-    if n_parts is None:
-        n_parts = max(1, spark.sparkContext.defaultParallelism)
+    n_parts = max(1, spark.sparkContext.defaultParallelism)
     # deterministic round-robin over the (tiny, <=4096-row) source set:
     # balanced slices even when k is a small multiple of the core count
     srcs = (
@@ -204,39 +160,7 @@ def _source_parallel_brandes(
             nz = np.nonzero(bc_arr)[0]
             yield pd.DataFrame({"id": ids_b[nz], "b": bc_arr[nz]})
 
-    partials = srcs.mapInPandas(fn, schema=part_schema)
-    if per_edge:
-        und = adj.where(F.col("src") < F.col("dst")).select(
-            F.col("src").alias("u"), F.col("dst").alias("v")
-        )
-        out = (
-            und.join(
-                partials.groupBy("u", "v").agg(F.sum("b").alias("b")),
-                ["u", "v"],
-                "left",
-            )
-            .select(
-                "u",
-                "v",
-                F.round(
-                    F.coalesce("b", F.lit(0.0)) * F.lit(factor), 6
-                ).alias("betweenness"),
-            )
-        )
-    else:
-        out = (
-            graph.vertices()
-            .join(partials.groupBy("id").agg(F.sum("b").alias("b")),
-                  "id", "left")
-            .select(
-                "id",
-                F.round(
-                    F.coalesce("b", F.lit(0.0)) * F.lit(factor), 6
-                ).alias("betweenness"),
-            )
-        )
-    out = truncate(out)
-    return out
+    return srcs.mapInPandas(fn, schema=part_schema)
 
 
 def _brandes_numpy(esrc, edst, nv: int, src_positions, per_edge: bool):
@@ -300,7 +224,7 @@ def _sequential_brandes(
     semantics to the superstep path (same source set, same factor,
     same 6-dp round), without paying O(k · diameter) job rounds on a
     graph that fits one Arrow batch. Only entered when the source set
-    is sampling-sized (the gate in the callers), so per-source work is
+    is sampling-sized (the gate in :func:`_brandes`), so per-source work is
     O(E · diameter) numpy scans — milliseconds at tail scale."""
     import numpy as np
     import pandas as pd
@@ -360,6 +284,158 @@ def _sequential_brandes(
     return run_one_task(fn, out_schema, adj.select("src", "dst"), nodes)
 
 
+def _finish(
+    universe: DataFrame, partials: list[DataFrame], factor: float
+) -> DataFrame:
+    """``universe ⟕ Σ partials → coalesce × factor → round(6)``: the
+    output of the source-parallel and superstep rungs. ``universe``
+    holds the key columns (``id``, or ``u, v``); ``partials`` carry
+    them + the raw dependency ``b``; keys no source reaches score 0."""
+    keys = universe.columns
+    b = F.lit(0.0)
+    if partials:
+        total = (
+            reduce(DataFrame.unionAll, partials)
+            .groupBy(*keys)
+            .agg(F.sum("b").alias("b"))
+        )
+        universe = universe.join(total, keys, "left")
+        b = F.coalesce("b", F.lit(0.0))
+    return truncate(
+        universe.select(
+            *keys, F.round(b * F.lit(factor), 6).alias("betweenness")
+        )
+    )
+
+
+def _superstep_partials(
+    adj: DataFrame, levels: list[DataFrame], per_edge: bool
+) -> list[DataFrame]:
+    """The backward sweep of the superstep rung, depths descending: the
+    tree edges (v, w) from depth d to d + 1 contribute
+    c = σ_v/σ_w · (1 + δ_w), and δ_v = Σ_w c. The per-edge partials are
+    the contributions of every depth (the source's own incident edges
+    too); the per-vertex partials are the δ of every depth below the
+    source (Brandes discards the source's own δ)."""
+    partials: list[DataFrame] = []
+    # delta at the deepest level is 0
+    delta = levels[-1].select("s", "id", F.lit(0.0).alias("delta"))
+    for d in range(len(levels) - 2, -1, -1):
+        below = levels[d + 1].join(delta, ["s", "id"]).select(
+            "s",
+            F.col("id").alias("w"),
+            F.col("sigma").alias("sigma_w"),
+            "delta",
+        )
+        contrib = (
+            levels[d]
+            .join(adj.withColumnRenamed("src", "id"), "id")
+            .select("s", "id", "sigma", F.col("dst").alias("w"))
+            .join(below, ["s", "w"])
+            .select(
+                "s",
+                "id",
+                "w",
+                (
+                    F.col("sigma") / F.col("sigma_w")
+                    * (F.lit(1.0) + F.col("delta"))
+                ).alias("c"),
+            )
+        )
+        if per_edge:
+            contrib = truncate(contrib)
+            partials.append(contrib.select(
+                F.least("id", "w").alias("u"),
+                F.greatest("id", "w").alias("v"),
+                F.col("c").alias("b"),
+            ))
+        if d == 0:
+            break
+        gathered = contrib.groupBy("s", "id").agg(F.sum("c").alias("delta"))
+        delta = truncate(
+            levels[d]
+            .join(gathered, ["s", "id"], "left")
+            .select("s", "id",
+                    F.coalesce("delta", F.lit(0.0)).alias("delta"))
+        )
+        if not per_edge:
+            partials.append(delta.select("id", F.col("delta").alias("b")))
+    return partials
+
+
+def _brandes(
+    graph: Graph,
+    per_edge: bool,
+    k: int | None,
+    sources: DataFrame | None,
+    normalized: bool,
+    seed: int,
+    sequential_threshold: int,
+) -> DataFrame:
+    """Vertex (``per_edge=False``) or edge betweenness through the
+    three-rung dispatch ladder; see :func:`betweenness_centrality`."""
+    verts = graph.vertices_cached()
+    n = graph.num_vertices()
+    if per_edge:
+        # early returns derive from the RAW edge lineage (not the
+        # Graph's memoized adjacency spill) so they outlive
+        # Graph.unpersist()
+        zero = (
+            graph.without_self_loops().select("src", "dst").distinct()
+            .where(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("u"), F.col("dst").alias("v"),
+                    F.lit(0.0).alias("betweenness"))
+        )
+    else:
+        zero = verts.select("id", F.lit(0.0).alias("betweenness"))
+    if n < (2 if per_edge else 3):
+        return zero
+    sources, n_src, rescale = _sources(graph, k, sources, seed)
+    if n_src == 0:
+        return zero
+    # memoized on the Graph (r6): one distinct + write per Graph, shared
+    # by vertex and edge betweenness / WL / sampling — not dropped here
+    adj, m = graph.simple_adjacency()
+
+    # undirected: every (s, t) pair is counted from both endpoints when
+    # sources cover the graph, so halve; normalized, networkx divides
+    # vertex scores by (n−1)(n−2) and edge scores by n(n−1); a sampled
+    # estimator multiplies back by n/k
+    if normalized:
+        factor = 1.0 / (n * (n - 1) if per_edge else (n - 1) * (n - 2))
+    else:
+        factor = 0.5
+    factor *= rescale
+
+    if _brandes_tail_ready(m, n_src, sequential_threshold):
+        return truncate(
+            _sequential_brandes(graph, adj, sources, per_edge, factor)
+        )
+    universe = (
+        adj.where(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        if per_edge else verts
+    )
+    # the source-parallel rung collects every vertex id and every
+    # adjacency row to the driver: both bounded by the threshold here
+    if (
+        sequential_threshold
+        and m <= sequential_threshold
+        and n <= sequential_threshold
+        and n_src <= _SOURCE_PARALLEL_MAX_SOURCES
+    ):
+        partials = _source_parallel_partials(graph, adj, sources, per_edge)
+        return _finish(universe, [partials], factor)
+
+    with superstep_conf(graph.edges.sparkSession, m), scratch() as s:
+        partials = _superstep_partials(
+            adj, _forward_levels(adj, sources), per_edge
+        )
+        out = _finish(universe, partials, factor)
+        s.keep(out)
+    return out
+
+
 def betweenness_centrality(
     graph: Graph,
     k: int | None = None,
@@ -376,114 +452,22 @@ def betweenness_centrality(
     ``k``: sample that many sources (deterministic xxhash64 order by
     ``seed``) and rescale by n/k — the networkx/cugraph estimator.
     ``sources``: explicit one-column ``(id)`` source table (overrides
-    ``k``; no rescaling — partial betweenness from those sources).
+    ``k``; no rescaling — partial betweenness from those sources;
+    repeated ids count once).
 
-    Three-rung dispatch. Graphs whose simple adjacency fits one Arrow
-    batch (≤ ``sequential_threshold`` rows) run the vectorized kernel:
-    as ONE executor task when total work ``n_src · E`` is interactive
-    (_sequential_brandes), else SOURCE-PARALLEL — edge arrays broadcast
-    once, one kernel task per source slice, partials summed in one tiny
-    agg (_source_parallel_brandes, the cugraph parallelization). Only
-    graphs too wide for one Arrow batch pay the O(k · diameter)
-    superstep rounds; ``sequential_threshold=0`` forces that path.
+    Three-rung dispatch. Graphs whose simple adjacency and vertex set
+    fit one Arrow batch (≤ ``sequential_threshold`` rows) run the
+    vectorized kernel: as ONE executor task when total work ``n_src · E``
+    is interactive (_sequential_brandes), else SOURCE-PARALLEL — edge
+    arrays broadcast once, one kernel task per source slice, partials
+    summed in one tiny agg (_source_parallel_partials, the cugraph
+    parallelization). Only graphs too wide for one Arrow batch pay the
+    O(k · diameter) superstep rounds; ``sequential_threshold=0`` forces
+    that path.
     """
-    verts = graph.vertices_cached()
-    n = graph.num_vertices()
-    spark = graph.edges.sparkSession
-    if n < 3:
-        return verts.select("id", F.lit(0.0).alias("betweenness"))
-
-    sources, n_src, explicit_sources = _select_sources(
-        verts, n, k, sources, seed
+    return _brandes(
+        graph, False, k, sources, normalized, seed, sequential_threshold
     )
-    if n_src == 0:
-        return verts.select("id", F.lit(0.0).alias("betweenness"))
-    # memoized on the Graph (r6): one distinct + write per Graph, shared
-    # with edge betweenness / WL / sampling — not dropped here
-    adj, m = graph.simple_adjacency()
-
-    factor = 0.5
-    if normalized:
-        factor = 1.0 / ((n - 1) * (n - 2))
-    if not explicit_sources and n_src < n:
-        factor *= n / n_src
-
-    if _brandes_tail_ready(m, n_src, sequential_threshold):
-        return truncate(
-            _sequential_brandes(graph, adj, sources, False, factor)
-        )
-    if (
-        sequential_threshold
-        and m <= sequential_threshold
-        and n_src <= _SOURCE_PARALLEL_MAX_SOURCES
-    ):
-        return _source_parallel_brandes(
-            graph, adj, sources, False, factor
-        )
-
-    with superstep_conf(spark, m), scratch() as s:
-        levels = _forward_levels(adj, sources)
-
-        # ---- backward: dependency accumulation, depths descending ----
-        # delta at the deepest level is 0; each shallower level gathers
-        # sigma_v/sigma_w * (1 + delta_w) from its successors
-        acc: list[DataFrame] = []
-        delta = levels[-1].select(
-            "s", "id", F.lit(0.0).alias("delta")
-        )
-        for d in range(len(levels) - 2, -1, -1):
-            below = levels[d + 1].join(delta, ["s", "id"]).select(
-                "s",
-                F.col("id").alias("w"),
-                F.col("sigma").alias("sigma_w"),
-                "delta",
-            )
-            gathered = (
-                levels[d]
-                .join(adj.withColumnRenamed("src", "id"), "id")
-                .select("s", "id", "sigma", F.col("dst").alias("w"))
-                .join(below, ["s", "w"])
-                .groupBy("s", "id")
-                .agg(
-                    F.sum(
-                        F.col("sigma") / F.col("sigma_w")
-                        * (F.lit(1.0) + F.col("delta"))
-                    ).alias("delta")
-                )
-            )
-            delta = truncate(
-                levels[d]
-                .join(gathered, ["s", "id"], "left")
-                .select("s", "id", "sigma",
-                        F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            )
-            if d >= 1:  # Brandes: the source's own delta is discarded
-                acc.append(delta.select("s", "id", "delta"))
-            delta = delta.select("s", "id", "delta")
-
-        if acc:
-            total = acc[0]
-            for a in acc[1:]:
-                total = total.unionAll(a)
-            bc = total.groupBy("id").agg(F.sum("delta").alias("b"))
-        else:
-            bc = verts.select("id", F.lit(0.0).alias("b")).limit(0)
-
-        # undirected: every (s, t) pair is counted from both endpoints
-        # when sources cover the graph, so halve; then the networkx
-        # rescale (sampled estimator multiplies back by n/k) — factor
-        # computed above, shared with the sequential tail
-        out = truncate(
-            verts.join(bc, "id", "left")
-            .select(
-                "id",
-                F.round(
-                    F.coalesce("b", F.lit(0.0)) * F.lit(factor), 6
-                ).alias("betweenness"),
-            )
-        )
-        s.keep(out)
-    return out
 
 
 def edge_betweenness_centrality(
@@ -500,124 +484,18 @@ def edge_betweenness_centrality(
     double count, normalized by 1/(n(n−1)) when ``normalized`` (so the
     two conventions compose to 2/(n(n−1)) per unordered pair).
 
-    Same multi-source Brandes supersteps as
-    :func:`betweenness_centrality`; the per-edge dependency is the
-    backward gather's addend BEFORE its vertex groupBy —
-    σ_v/σ_w · (1 + δ_w) for the tree edge (v, w) with w one BFS level
-    deeper — accumulated over every depth INCLUDING the source's own
-    incident edges (vertex Brandes discards the source's delta; edge
-    Brandes keeps every edge on a shortest path). Edges whose endpoints
-    sit at equal depth from a source carry no flow from it and simply
-    never appear in that source's accumulation. ``k``/``sources``
-    sample exactly as in :func:`betweenness_centrality` (Girvan–Newman
-    at 100 TB runs on sampled sources or not at all).
+    Same multi-source Brandes pass as :func:`betweenness_centrality`;
+    the per-edge dependency is the backward gather's addend BEFORE its
+    vertex groupBy — σ_v/σ_w · (1 + δ_w) for the tree edge (v, w) with
+    w one BFS level deeper — accumulated over every depth INCLUDING the
+    source's own incident edges (vertex Brandes discards the source's
+    delta; edge Brandes keeps every edge on a shortest path). Edges
+    whose endpoints sit at equal depth from a source carry no flow from
+    it and simply never appear in that source's accumulation.
+    ``k``/``sources``/``sequential_threshold`` as in
+    :func:`betweenness_centrality` (Girvan–Newman at 100 TB runs on
+    sampled sources or not at all).
     """
-    verts = graph.vertices_cached()
-    n = graph.num_vertices()
-    spark = graph.edges.sparkSession
-    # early returns derive from the RAW edge lineage (not the spill-
-    # backed adj) so they stay readable after the spill cleanup
-    simple = graph.without_self_loops().select("src", "dst").distinct()
-    und_zero = simple.where(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"),
-        F.col("dst").alias("v"),
-        F.lit(0.0).alias("betweenness"),
+    return _brandes(
+        graph, True, k, sources, normalized, seed, sequential_threshold
     )
-    if n < 2:
-        return und_zero
-
-    sources, n_src, explicit_sources = _select_sources(
-        verts, n, k, sources, seed
-    )
-    if n_src == 0:
-        return und_zero
-
-    # memoized on the Graph (r6): shared with vertex betweenness
-    adj, m = graph.simple_adjacency()
-    und = adj.where(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-
-    factor = 0.5
-    if normalized:
-        factor = 1.0 / (n * (n - 1))
-    if not explicit_sources and n_src < n:
-        factor *= n / n_src
-
-    if _brandes_tail_ready(m, n_src, sequential_threshold):
-        return truncate(
-            _sequential_brandes(graph, adj, sources, True, factor)
-        )
-    if (
-        sequential_threshold
-        and m <= sequential_threshold
-        and n_src <= _SOURCE_PARALLEL_MAX_SOURCES
-    ):
-        return _source_parallel_brandes(
-            graph, adj, sources, True, factor
-        )
-
-    with superstep_conf(spark, m), scratch() as s:
-        levels = _forward_levels(adj, sources)
-
-        acc: list[DataFrame] = []
-        delta = levels[-1].select(
-            "s", "id", F.lit(0.0).alias("delta")
-        )
-        for d in range(len(levels) - 2, -1, -1):
-            below = levels[d + 1].join(delta, ["s", "id"]).select(
-                "s",
-                F.col("id").alias("w"),
-                F.col("sigma").alias("sigma_w"),
-                "delta",
-            )
-            contrib = truncate(
-                levels[d]
-                .join(adj.withColumnRenamed("src", "id"), "id")
-                .select("s", "id", "sigma", F.col("dst").alias("w"))
-                .join(below, ["s", "w"])
-                .select(
-                    "s",
-                    "id",
-                    "w",
-                    (
-                        F.col("sigma") / F.col("sigma_w")
-                        * (F.lit(1.0) + F.col("delta"))
-                    ).alias("c"),
-                )
-            )
-            acc.append(contrib.select("id", "w", "c"))
-            gathered = contrib.groupBy("s", "id").agg(
-                F.sum("c").alias("delta")
-            )
-            delta = truncate(
-                levels[d]
-                .join(gathered, ["s", "id"], "left")
-                .select("s", "id",
-                        F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            )
-
-        if acc:
-            total = acc[0]
-            for a in acc[1:]:
-                total = total.unionAll(a)
-            eb = (
-                total.groupBy(
-                    F.least("id", "w").alias("u"),
-                    F.greatest("id", "w").alias("v"),
-                )
-                .agg(F.sum("c").alias("b"))
-            )
-        else:
-            eb = und.select("u", "v", F.lit(0.0).alias("b")).limit(0)
-        out = truncate(
-            und.join(eb, ["u", "v"], "left").select(
-                "u",
-                "v",
-                F.round(
-                    F.coalesce("b", F.lit(0.0)) * F.lit(factor), 6
-                ).alias("betweenness"),
-            )
-        )
-        s.keep(out)
-    return out

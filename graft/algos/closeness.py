@@ -10,8 +10,10 @@ advances ALL sources in the same superstep with ``(s, id)``-keyed
 state, so the round count is the graph diameter, not the source count:
 
 - frontier(s, id) joins the edge table on the vertex key, anti-joins
-  the visited set, dedups — the rows reached at round t are exactly the
-  pairs at hop distance t, so no per-pair min is ever computed;
+  the visited set, groups by (s, id) — the rows reached at round t are
+  exactly the pairs at hop distance t, so no per-pair min is ever
+  computed (the group also sums the shortest-path counts that
+  betweenness reads off the same BFS);
 - the centrality is then one groupBy over the (s, id, depth) table.
 
 State is O(k·V) rows (O(V²) for exact all-sources — inherent to the
@@ -25,6 +27,8 @@ driver data beyond scalars.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,55 +37,71 @@ from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
 
 
+def _forward_levels(adj: DataFrame, sources: DataFrame) -> list[DataFrame]:
+    """Multi-source level-synchronous BFS carrying shortest-path counts
+    sigma: one edge join + anti-join + hash-agg per DEPTH for all
+    sources at once, state keyed (s, id). Returns the per-depth levels
+    (``levels[d]`` = ``(s, id, sigma)`` of the vertices at distance d
+    from their source s). The closeness family reads the depths, the
+    Brandes family (:mod:`graft.algos.betweenness`) the sigmas too."""
+    # distinct: a duplicated source row would double-count every level
+    # it contributes to
+    frontier = truncate(
+        sources.select("s").distinct()
+        .select("s", F.col("s").alias("id"), F.lit(1.0).alias("sigma"))
+    )
+    visited = frontier.select("s", "id")
+    levels: list[DataFrame] = [frontier]
+    while True:
+        reached = (
+            levels[-1]
+            .join(adj.withColumnRenamed("src", "id"), "id")
+            .select("s", F.col("dst").alias("id"), "sigma")
+            .join(visited, ["s", "id"], "left_anti")
+            .groupBy("s", "id")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+        nxt = truncate(reached)
+        if row_count(nxt) == 0:
+            break
+        levels.append(nxt)
+        visited = truncate(visited.unionAll(nxt.select("s", "id")))
+    return levels
+
+
 def multi_source_depths(graph: Graph, sources: DataFrame) -> DataFrame:
     """All hop distances from each source in one superstep loop:
     ``(s, id, depth int)`` — one row per (source, reached vertex),
     including ``(s, s, 0)``. The result is a spill of its own."""
-    spark = graph.edges.sparkSession
-    adj, n_adj = graph.simple_adjacency()
-    with scratch() as s:
-        with superstep_conf(spark, n_adj):
-            # distinct: a duplicated source row would double-count every
-            # depth it contributes downstream
-            frontier = truncate(
-                sources.select("s", F.col("s").alias("id")).distinct()
-            )
-            visited = frontier
-            parts = [frontier.select("s", "id", F.lit(0).alias("depth"))]
-            t = 0
-            while True:
-                t += 1
-                nxt = truncate(
-                    frontier.join(adj.withColumnRenamed("src", "id"), "id")
-                    .select("s", F.col("dst").alias("id"))
-                    .join(visited, ["s", "id"], "left_anti")
-                    .distinct()
-                )
-                if row_count(nxt) == 0:
-                    break
-                parts.append(nxt.select("s", "id", F.lit(t).alias("depth")))
-                visited = truncate(visited.unionAll(nxt))
-                frontier = nxt
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionAll(p)
-            out = truncate(out)
+    adj, m = graph.simple_adjacency()
+    with superstep_conf(graph.edges.sparkSession, m), scratch() as s:
+        levels = _forward_levels(adj, sources)
+        out = truncate(reduce(DataFrame.unionAll, (
+            level.select("s", "id", F.lit(d).alias("depth"))
+            for d, level in enumerate(levels)
+        )))
         s.keep(out)
     return out
 
 
-def _source_pool(
+def _sources(
     graph: Graph, k: int | None, sources: DataFrame | None, seed: int
-) -> tuple[DataFrame, bool]:
-    """(one-column ``(s)`` source table, whether it was sampled)."""
-    verts = graph.vertices_cached()
+) -> tuple[DataFrame, int, float]:
+    """The source set of the BFS family: ``(one-column (s) table of
+    distinct ids, its size, the n/k rescale of a sampled estimator)``.
+    Explicit ``sources`` win (no rescale), else a deterministic
+    xxhash64-ordered sample of ``k`` when ``k < n``, else every vertex.
+    Only an explicit table is counted; the other sizes are known."""
+    n = graph.num_vertices()
     if sources is not None:
-        return sources.select(F.col("id").alias("s")), False
-    pool = verts
-    sampled = k is not None and k < graph.num_vertices()
-    if sampled:
-        pool = verts.orderBy(F.xxhash64("id", F.lit(seed))).limit(k)
-    return pool.select(F.col("id").alias("s")), sampled
+        pool = sources.select(F.col("id").alias("s")).distinct()
+        return pool, pool.count(), 1.0
+    pool = graph.vertices_cached()
+    if k is not None and k < n:
+        pool = pool.orderBy(F.xxhash64("id", F.lit(seed))).limit(k)
+        # k == 0 leaves no source: callers return before the rescale
+        return pool.select(F.col("id").alias("s")), k, n / max(k, 1)
+    return pool.select(F.col("id").alias("s")), n, 1.0
 
 
 def closeness_centrality(
@@ -108,11 +128,9 @@ def closeness_centrality(
     n = graph.num_vertices()
     if n < 2:
         return verts.select("id", F.lit(0.0).alias("closeness"))
-    srcs, sampled = _source_pool(graph, k, sources, seed)
-    n_src = srcs.count()
+    srcs, n_src, scale = _sources(graph, k, sources, seed)
     if n_src == 0:
         return verts.select("id", F.lit(0.0).alias("closeness"))
-    scale = float(n) / n_src if sampled else 1.0
 
     with scratch() as s:
         depths = multi_source_depths(graph, srcs)
@@ -155,11 +173,9 @@ def harmonic_centrality(
     normalization; unreached pairs contribute 0). ``k``/``sources`` as
     in :func:`closeness_centrality` (sampled sums rescale by n/k)."""
     verts = graph.vertices_cached()
-    srcs, sampled = _source_pool(graph, k, sources, seed)
-    n_src = srcs.count()
+    srcs, n_src, scale = _sources(graph, k, sources, seed)
     if n_src == 0:
         return verts.select("id", F.lit(0.0).alias("harmonic"))
-    scale = float(graph.num_vertices()) / n_src if sampled else 1.0
 
     with scratch() as s:
         depths = multi_source_depths(graph, srcs)
@@ -187,7 +203,7 @@ def eccentricity(
     depth table as closeness. ``sources`` restricts to those sources'
     rows (their distances to everything they reach)."""
     verts = graph.vertices_cached()
-    srcs, _ = _source_pool(graph, None, sources, 0)
+    srcs, _, _ = _sources(graph, None, sources, 0)
     with scratch() as s:
         depths = multi_source_depths(graph, srcs)
         agg = depths.groupBy(F.col("s").alias("id")).agg(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.checkpoint import row_count, scratch, truncate
+from graft.quality import _community_internal_weight
 
 
 @dataclass
@@ -253,31 +254,7 @@ def _quality(
     edges: DataFrame, vertices: DataFrame, objective: str, gamma: float, m: float
 ) -> float:
     """Current partition quality from two aggregations (closed forms)."""
-    a_src = vertices.select(
-        F.col("id").alias("src"), F.col("community").alias("cs")
-    )
-    a_dst = vertices.select(
-        F.col("id").alias("dst"), F.col("community").alias("cd")
-    )
-    w_in = (
-        edges.join(a_src, "src")
-        .join(a_dst, "dst")
-        .where(F.col("cs") == F.col("cd"))
-        .groupBy(F.col("cs").alias("community"))
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("src") != F.col("dst"), F.col("weight"))
-                    .otherwise(F.lit(0.0))
-                )
-                / 2.0
-                + F.sum(
-                    F.when(F.col("src") == F.col("dst"), F.col("weight"))
-                    .otherwise(F.lit(0.0))
-                )
-            ).alias("w_in")
-        )
-    )
+    w_in = _community_internal_weight(edges, vertices)
     comm = community_aggregates(vertices).join(w_in, "community", "left")
     if objective == "cpm":
         expr = F.sum(

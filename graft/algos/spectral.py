@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from graft.algos.community import one_task, run_one_task, superstep_conf
 from graft.algos.priority import hash_priority
-from graft.checkpoint import Checkpointer, drop_spill, truncate
+from graft.checkpoint import Checkpointer, drop_spill, scratch, truncate
 from graft.graph import Graph
 
 
@@ -127,8 +127,8 @@ def pic_embedding(
     )
 
     if one_task(graph, sequential_threshold, checkpointer):
-        # truncated like the superstep path's return, so callers can
-        # uniformly drop_spill the embedding when they are done
+        # a spill like the superstep path's return, owned the same way
+        # by the caller's scratch
         return truncate(_sequential_pic(v0, trans, iterations))
 
     start = 0
@@ -138,9 +138,9 @@ def pic_embedding(
         if resumed is not None:
             start, v = resumed
             start += 1
-    if v is None:
-        v = truncate(v0)
-    with superstep_conf(spark, graph.edge_rows()):
+    with superstep_conf(spark, graph.edge_rows()), scratch() as s:
+        if v is None:
+            v = truncate(v0)
         for it in range(start, iterations):
             # v ← W·v (neighbor averaging; see the kernel comment — the
             # PageRank mass-flow direction is a fixed point of v0 ∝ s):
@@ -168,6 +168,7 @@ def pic_embedding(
             drop_spill(prev)
             if checkpointer is not None:
                 v = checkpointer.save(it, v, algo="pic", seed=seed)
+        s.keep(v)
     return v
 
 
@@ -198,6 +199,7 @@ def _kmeans_1d(
         return (F.array_position(dists, F.array_min(dists)) - 1).alias("c")
 
     for _ in range(n_iter):
+        # at most k rows: one (sum, count) per cluster
         stats = (
             emb.select("v", assign_col(cents))
             .groupBy("c")
@@ -239,11 +241,12 @@ def power_iteration_clustering(
         return graph.edges.sparkSession.createDataFrame(
             [], f"id {id_type}, cluster long"
         )
-    emb = pic_embedding(
-        graph, iterations, seed=seed,
-        sequential_threshold=sequential_threshold,
-    )
-    assign, _ = _kmeans_1d(emb, k, n_iter=kmeans_iter)
-    out = truncate(assign)
-    drop_spill(emb)
+    with scratch() as s:
+        emb = pic_embedding(
+            graph, iterations, seed=seed,
+            sequential_threshold=sequential_threshold,
+        )
+        assign, _ = _kmeans_1d(emb, k, n_iter=kmeans_iter)
+        out = truncate(assign)
+        s.keep(out)
     return out

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
-from graft.checkpoint import drop_spill, scratch, truncate
+from graft.checkpoint import scratch, truncate
 from graft.graph import Graph
 
 _LCG_M = 2147483647
@@ -337,78 +337,79 @@ def negative_samples(
         .cast("long")
         .alias("w")
     )
-    weights = truncate(
-        deg.select(
-            "id",
-            (F.col("id").cast("long") % num_buckets).alias("b"),
-            F.greatest(w, F.lit(1)).alias("w"),
+    with scratch() as s:
+        weights = truncate(
+            deg.select(
+                "id",
+                (F.col("id").cast("long") % num_buckets).alias("b"),
+                F.greatest(w, F.lit(1)).alias("w"),
+            )
         )
-    )
-    # per-bucket layout: cum_in = within-bucket exclusive prefix sum
-    win = (
-        Window.partitionBy("b")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    laid = truncate(
-        weights.withColumn(
-            "start", F.coalesce(F.sum("w").over(win), F.lit(0))
+        # per-bucket layout: cum_in = within-bucket exclusive prefix sum
+        win = (
+            Window.partitionBy("b")
+            .orderBy("id")
+            .rowsBetween(Window.unboundedPreceding, -1)
         )
-    )
-    # first-stage CDF: B bucket totals -> python offsets (O(B) driver)
-    totals = {
-        r.b: r.t
-        for r in laid.groupBy("b").agg(F.sum("w").alias("t")).collect()
-    }
-    if not totals:
-        raise ValueError("graph has no simple edges to weight")
-    offsets: dict[int, int] = {}
-    acc = 0
-    for b in sorted(totals):
-        offsets[b] = acc
-        acc += int(totals[b])
-    total = acc
-    bucket_cdf = spark.createDataFrame(
-        [(b, offsets[b], offsets[b] + int(totals[b]))
-         for b in sorted(totals)],
-        "b long, lo long, hi long",
-    )
+        laid = truncate(
+            weights.withColumn(
+                "start", F.coalesce(F.sum("w").over(win), F.lit(0))
+            )
+        )
+        # first-stage CDF: B bucket totals -> python offsets (O(B) driver:
+        # at most num_buckets rows)
+        totals = {
+            r.b: r.t
+            for r in laid.groupBy("b").agg(F.sum("w").alias("t")).collect()
+        }
+        if not totals:
+            raise ValueError("graph has no simple edges to weight")
+        offsets: dict[int, int] = {}
+        acc = 0
+        for b in sorted(totals):
+            offsets[b] = acc
+            acc += int(totals[b])
+        total = acc
+        bucket_cdf = spark.createDataFrame(
+            [(b, offsets[b], offsets[b] + int(totals[b]))
+             for b in sorted(totals)],
+            "b long, lo long, hi long",
+        )
 
-    d1 = _draw(F.col("sample_id"), 1, seed)
-    d2 = _draw(F.col("sample_id"), 2, seed)
-    draws = (
-        spark.range(n_samples)
-        .select(F.col("id").alias("sample_id"))
-        .select(
-            "sample_id",
-            ((d1 * F.lit(2147483648) + d2) % F.lit(total)).alias("x"),
+        d1 = _draw(F.col("sample_id"), 1, seed)
+        d2 = _draw(F.col("sample_id"), 2, seed)
+        draws = (
+            spark.range(n_samples)
+            .select(F.col("id").alias("sample_id"))
+            .select(
+                "sample_id",
+                ((d1 * F.lit(2147483648) + d2) % F.lit(total)).alias("x"),
+            )
         )
-    )
-    in_bucket = draws.join(
-        F.broadcast(bucket_cdf),
-        (F.col("x") >= F.col("lo")) & (F.col("x") < F.col("hi")),
-    ).select("sample_id", "b", (F.col("x") - F.col("lo")).alias("v"))
+        in_bucket = draws.join(
+            F.broadcast(bucket_cdf),
+            (F.col("x") >= F.col("lo")) & (F.col("x") < F.col("hi")),
+        ).select("sample_id", "b", (F.col("x") - F.col("lo")).alias("v"))
 
-    events = laid.select(
-        "b", F.col("start").alias("v"), F.lit(0).alias("t"),
-        "id", F.lit(None).cast("long").alias("sample_id"),
-    ).unionAll(
-        in_bucket.select(
-            "b", "v", F.lit(1).alias("t"),
-            F.lit(None).cast(dict(laid.dtypes)["id"]).alias("id"),
-            "sample_id",
+        events = laid.select(
+            "b", F.col("start").alias("v"), F.lit(0).alias("t"),
+            "id", F.lit(None).cast("long").alias("sample_id"),
+        ).unionAll(
+            in_bucket.select(
+                "b", "v", F.lit(1).alias("t"),
+                F.lit(None).cast(dict(laid.dtypes)["id"]).alias("id"),
+                "sample_id",
+            )
         )
-    )
-    carry = Window.partitionBy("b").orderBy("v", "t").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    out = truncate(
-        events.withColumn(
-            "pick", F.last("id", ignorenulls=True).over(carry)
+        carry = Window.partitionBy("b").orderBy("v", "t").rowsBetween(
+            Window.unboundedPreceding, 0
         )
-        .where(F.col("t") == 1)
-        .select("sample_id", F.col("pick").alias("id"))
-    )
-    drop_spill(weights)
-    drop_spill(laid)
+        out = truncate(
+            events.withColumn(
+                "pick", F.last("id", ignorenulls=True).over(carry)
+            )
+            .where(F.col("t") == 1)
+            .select("sample_id", F.col("pick").alias("id"))
+        )
+        s.keep(out)
     return out

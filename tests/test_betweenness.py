@@ -301,3 +301,35 @@ def test_source_parallel_drops_foreign_sources(spark, monkeypatch):
     want = brandes_betweenness_ref(edges, normalized=False, sources=[0])
     for v, b in want.items():
         assert got[v] == pytest.approx(b, abs=1e-6), v
+
+
+@pytest.mark.parametrize("rung", ["one_task", "source_parallel", "supersteps"])
+def test_repeated_explicit_sources_count_once(spark, monkeypatch, rung):
+    """A source id repeated in the explicit table counts once, on every
+    rung of the dispatch ladder, for vertex and edge betweenness."""
+    import graft.algos.betweenness as btw
+
+    kw = {}
+    if rung == "source_parallel":
+        monkeypatch.setattr(btw, "_brandes_tail_ready", lambda *a: False)
+    elif rung == "supersteps":
+        kw["sequential_threshold"] = 0
+    edges = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0), (1, 3, 1.0)]
+    g = Graph.from_undirected(fixtures.edges_df(spark, edges)).cache()
+    srcs = spark.createDataFrame([(0,), (0,), (2,)], "id long")
+    got = {r.id: r.betweenness
+           for r in betweenness_centrality(
+               g, sources=srcs, normalized=False, **kw).collect()}
+    got_e = {(r.u, r.v): r.betweenness
+             for r in edge_betweenness_centrality(
+                 g, sources=srcs, normalized=False, **kw).collect()}
+    g.unpersist()
+    want = brandes_betweenness_ref(edges, normalized=False, sources=[0, 2])
+    want_e = brandes_edge_betweenness_ref(
+        edges, normalized=False, sources=[0, 2]
+    )
+    assert set(got) == set(want) and set(got_e) == set(want_e)
+    for v, b in want.items():
+        assert got[v] == pytest.approx(b, abs=1e-6), v
+    for e, b in want_e.items():
+        assert got_e[e] == pytest.approx(b, abs=1e-6), e

@@ -27,8 +27,9 @@ from graft.algos.kcore import k_core
 from graft.algos.louvain import louvain
 from graft.algos.lpa import label_propagation
 from graft.algos.mis import maximal_independent_set
+from graft.algos.spectral import pic_embedding, power_iteration_clustering
 from graft.algos.spreading import label_spreading
-from graft.algos.walks import random_walks
+from graft.algos.walks import negative_samples, random_walks
 from graft.algos.wl import wl_colors
 from graft.checkpoint import _is_persisted
 from graft.graph import Graph
@@ -56,6 +57,13 @@ OPS = {
     "label_spreading": lambda g: label_spreading(
         g, g.edges.sparkSession.createDataFrame([(0, "a")], "id long, label string")
     ),
+    "pic_embedding": lambda g: pic_embedding(
+        g, iterations=2, sequential_threshold=0
+    ),
+    "power_iteration_clustering": lambda g: power_iteration_clustering(
+        g, 2, iterations=2, kmeans_iter=2, sequential_threshold=0
+    ),
+    "negative_samples": lambda g: negative_samples(g, 4),
 }
 
 # (module whose third truncate raises, the call)
@@ -130,6 +138,17 @@ def test_failure_part_way_leaves_nothing(
 
     g.unpersist()
     assert persisted_rdds() == persisted
+    root = checkpoint._spill_root
+    assert root is None or os.listdir(root) == []
+
+
+def test_negative_samples_raise_leaves_nothing(spark, spill_dir):
+    """On a graph of self-loops only, negative_samples raises after its
+    weight and layout spills are written; both are gone afterwards."""
+    g = Graph.from_undirected(fixtures.edges_df(spark, [(0, 0, 1.0)]))
+    with pytest.raises(ValueError, match="no simple edges"):
+        negative_samples(g, 4)
+    g.unpersist()
     root = checkpoint._spill_root
     assert root is None or os.listdir(root) == []
 

@@ -84,6 +84,11 @@ def multi_source_depths(graph: Graph, sources: DataFrame) -> DataFrame:
     return out
 
 
+def _distinct_sources(sources: DataFrame) -> DataFrame:
+    """An explicit ``(id)`` source table as the BFS's ``(s)`` pool."""
+    return sources.select(F.col("id").alias("s")).distinct()
+
+
 def _sources(
     graph: Graph, k: int | None, sources: DataFrame | None, seed: int
 ) -> tuple[DataFrame, int, float]:
@@ -94,7 +99,7 @@ def _sources(
     Only an explicit table is counted; the other sizes are known."""
     n = graph.num_vertices()
     if sources is not None:
-        pool = sources.select(F.col("id").alias("s")).distinct()
+        pool = _distinct_sources(sources)
         return pool, pool.count(), 1.0
     pool = graph.vertices_cached()
     if k is not None and k < n:
@@ -203,7 +208,11 @@ def eccentricity(
     depth table as closeness. ``sources`` restricts to those sources'
     rows (their distances to everything they reach)."""
     verts = graph.vertices_cached()
-    srcs, _, _ = _sources(graph, None, sources, 0)
+    # no source count: nothing here reads the pool's size
+    srcs = (
+        verts.select(F.col("id").alias("s")) if sources is None
+        else _distinct_sources(sources)
+    )
     with scratch() as s:
         depths = multi_source_depths(graph, srcs)
         agg = depths.groupBy(F.col("s").alias("id")).agg(

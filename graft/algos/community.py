@@ -407,13 +407,17 @@ def run_one_task(fn, schema: str, edges: DataFrame, nodes=None) -> DataFrame:
     )
 
 
-def level_counts(level: Level) -> tuple[int, int]:
+def level_counts(
+    level: Level, n_rows: int | None = None
+) -> tuple[int, int]:
     """(edge rows, vertices) of a level, the one count a level loop
     takes per level: from the parquet footers when the level's tables
     are graft leaves (every contracted level), otherwise with the
     vertex count's aggregation under AQE off (one job, not one per
-    stage)."""
-    n_rows = row_count(level.edges)
+    stage). ``n_rows``, when the caller knows it, is taken as the edge
+    rows uncounted."""
+    if n_rows is None:
+        n_rows = row_count(level.edges)
     with superstep_conf(level.edges.sparkSession, n_rows):
         n_verts = row_count(level.vertices)
     return n_rows, n_verts

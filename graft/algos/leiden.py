@@ -304,11 +304,12 @@ def _level_loop(
     ``Checkpointer.save`` per sweep), then the algorithm's contraction
     step ``contract(lvl, level, n_rows, n_verts, n_moves)``. It gets
     the moved level, its edge rows and vertex count and the moves
-    committed; it returns the level's ``(child, parent)`` mapping and
-    the contracted level, or None when the level converged, which ends
-    the loop. With a checkpointer each contracted level's mapping,
-    edges and vertices are saved, and a later call resumes after the
-    deepest level saved whole — identical final labels to an
+    committed; it returns the level's mapping (two columns, child then
+    parent, read by position) and the contracted level, or None when
+    the level converged, which ends the loop. With a checkpointer each
+    contracted level's mapping, edges and vertices are saved (a save of
+    a spilled leaf runs no Spark job), and a later call resumes after
+    the deepest level saved whole — identical final labels to an
     uninterrupted run.
 
     ``initial_membership`` seeds level 0's communities (vertices absent
@@ -350,6 +351,7 @@ def _level_loop(
             if done >= 0:
                 mappings = [
                     checkpointer.load_table(f"level={k}/mapping")
+                    .toDF("child", "parent")
                     for k in range(done + 1)
                 ]
                 s.release(level.edges)
@@ -360,7 +362,10 @@ def _level_loop(
                 start_lvl = done + 1
         tail_at_base = False
         for lvl in range(start_lvl, max_levels):
-            n_rows, n_verts = level_counts(level)
+            # level 0 is the Graph's own edge table: its memoized count
+            n_rows, n_verts = level_counts(
+                level, graph.edge_rows() if lvl == 0 else None
+            )
             if _tail_ready(
                 n_rows, n_verts, sequential_tail_edges, tail_max_vertices,
             ):
@@ -398,7 +403,7 @@ def _level_loop(
             if step is None:
                 break
             mapping, nxt = step
-            mappings.append(mapping)
+            mappings.append(mapping.toDF("child", "parent"))
             if checkpointer is not None:
                 checkpointer.save_table(f"level={lvl}/mapping", mapping)
                 nxt = Level(
@@ -508,10 +513,9 @@ def leiden(
         # as vertices means refinement kept every node singleton
         if row_count(new_vertices) == n_verts:
             return None
-        mapping = refined.select(
-            F.col("id").alias("child"), F.col("refined").alias("parent")
-        )
-        return mapping, Level(edges=new_edges, vertices=new_vertices)
+        # the refined leaf is the (child, parent) mapping itself, so a
+        # checkpointed level saves it without a write
+        return refined, Level(edges=new_edges, vertices=new_vertices)
 
     final = _level_loop(
         graph, contract, algo="leiden", objective="cpm", gamma=gamma, m=1.0,

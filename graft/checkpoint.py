@@ -38,7 +38,7 @@ class Checkpointer:
 
         root/<job>/metrics.jsonl             one JSON line per superstep
         root/<job>/step=<i>/...parquet       vertex state at superstep i
-        root/<job>/step=<i>/_SUCCESS         atomicity marker (Spark's)
+        root/<job>/step=<i>/_SUCCESS         atomicity marker, written last
     """
 
     def __init__(self, spark: SparkSession, root: str, job: str):
@@ -53,20 +53,20 @@ class Checkpointer:
     def save(self, step: int, state: DataFrame, **metrics: Any) -> DataFrame:
         """Persist state + metrics; returns the re-read (lineage-free) state.
 
-        The metrics record includes per-partition row counts — the
-        "per-partition lineage" the north rule asks for: it pins which
-        partition held how many rows at each superstep, so a resumed run
-        can be audited against the original. The counts are rows per
-        WRITE task (``[partition id, rows]``, the id taken from each
-        ``part-NNNNN`` file name), read from the parquet footers the
-        write just produced — no Spark job. The Checkpointer root is a
-        local directory (``__init__`` creates it with ``os.makedirs``).
+        The state is written by :func:`_save`: a graft parquet leaf (a
+        :func:`truncate` result, as every superstep's state is) is
+        adopted without a Spark job. The metrics record includes
+        per-partition row counts — the "per-partition lineage" the north
+        rule asks for: it pins which partition held how many rows at
+        each superstep, so a resumed run can be audited against the
+        original. The counts are rows per WRITE task (``[partition id,
+        rows]``, the id taken from each ``part-NNNNN`` file name), read
+        from the parquet footers of the step's files — no Spark job. The
+        Checkpointer root is a local directory (``__init__`` creates it
+        with ``os.makedirs``).
         """
         path = self._step_dir(step)
-        state.write.mode("overwrite").parquet(path)
-        reread = _parquet_leaf(
-            self.spark.read.schema(state.schema).parquet(path), path
-        )
+        reread = _save(self.spark, state, path)
         part_counts: dict[int, int] = {}
         for name, rows in _footer_rows(path):
             pid = int(name.split("-", 2)[1])
@@ -99,7 +99,8 @@ class Checkpointer:
         return best
 
     def load(self, step: int) -> DataFrame:
-        return self.spark.read.parquet(self._step_dir(step))
+        path = self._step_dir(step)
+        return _parquet_leaf(self.spark.read.parquet(path), path)
 
     def resume(self) -> tuple[int, DataFrame] | None:
         """(latest step, its state) or None if nothing checkpointed."""
@@ -115,9 +116,7 @@ class Checkpointer:
         return os.path.join(self.dir, "table", name)
 
     def save_table(self, name: str, df: DataFrame) -> DataFrame:
-        path = self._table_dir(name)
-        df.write.mode("overwrite").parquet(path)
-        return _parquet_leaf(self.spark.read.schema(df.schema).parquet(path), path)
+        return _save(self.spark, df, self._table_dir(name))
 
     def has_table(self, name: str) -> bool:
         return os.path.exists(os.path.join(self._table_dir(name), "_SUCCESS"))
@@ -134,6 +133,34 @@ def _parquet_leaf(df: DataFrame, path: str) -> DataFrame:
     it, so a checkpoint table is never deleted as a spill."""
     df._graft_parquet_path = path  # type: ignore[attr-defined]
     return df
+
+
+def _save(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Make ``path`` a parquet table of ``df``'s rows; returns its
+    re-read leaf. A graft parquet leaf on a local root is adopted with
+    no Spark job: the directory is replaced by hard links to the leaf's
+    data files (same ``part-NNNNN`` names; a copy where linking fails,
+    e.g. across filesystems), ``_SUCCESS`` written last so a reader
+    never takes a half-made directory as complete. The links share no
+    state with the source, so dropping a spill keeps its adopted copy.
+    Any other frame, or a remote path on either side, is written by
+    Spark."""
+    src = getattr(df, "_graft_parquet_path", None)
+    if src is None or "://" in src or "://" in path:
+        df.write.mode("overwrite").parquet(path)
+    elif os.path.abspath(src) != os.path.abspath(path):
+        names = [n for n in os.listdir(src) if not n.startswith(("_", "."))]
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        for name in names:
+            a, b = os.path.join(src, name), os.path.join(path, name)
+            try:
+                os.link(a, b)
+            except OSError:
+                shutil.copyfile(a, b)
+        with open(os.path.join(path, "_SUCCESS"), "w"):
+            pass
+    return _parquet_leaf(spark.read.schema(df.schema).parquet(path), path)
 
 
 # what reading footers raises when pyarrow cannot open a root

@@ -142,3 +142,39 @@ def test_eccentricity_random_matches_ref(spark):
     for (s, t), dd in dist.items():
         want[s] = max(want.get(s, 0), dd)
     assert got == want
+
+
+def test_eccentricity_sources_start_no_job_before_the_bfs(spark, monkeypatch):
+    """An explicit source table is deduplicated but never counted:
+    nothing in eccentricity reads the pool's size."""
+    import uuid
+
+    from graft.algos import closeness
+
+    edges = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)]
+    g = _graph(spark, edges)
+    g.num_vertices()  # the vertex table is memoized before the probe
+    srcs = spark.createDataFrame([(0,), (2,), (2,)], "id long")
+
+    class _AtBfs(Exception):
+        pass
+
+    def stop(graph, pool):
+        raise _AtBfs
+
+    sc = spark.sparkContext
+    group = f"ecc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "eccentricity source pool")
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(closeness, "multi_source_depths", stop)
+            with pytest.raises(_AtBfs):
+                closeness.eccentricity(g, sources=srcs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    got = {r.id: r.ecc for r in closeness.eccentricity(g, sources=srcs).collect()}
+    g.unpersist()
+    assert got == {0: 4, 1: 0, 2: 2, 3: 0, 4: 0}

@@ -142,9 +142,9 @@ def _save(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     data files (same ``part-NNNNN`` names; a copy where linking fails,
     e.g. across filesystems), ``_SUCCESS`` written last so a reader
     never takes a half-made directory as complete. The links share no
-    state with the source, so dropping a spill keeps its adopted copy.
-    Any other frame, or a remote path on either side, is written by
-    Spark."""
+    state with the source, so dropping a spill keeps its adopted copy;
+    a leaf already at ``path`` is left as it is. Any other frame, or a
+    remote path on either side, is written by Spark."""
     src = getattr(df, "_graft_parquet_path", None)
     if src is None or "://" in src or "://" in path:
         df.write.mode("overwrite").parquet(path)

@@ -21,8 +21,11 @@ Design notes (scale-first):
 - Every superstep is a join + partial/final hash aggregation that Catalyst
   plans natively; AQE handles skewed shuffles, and explicit salting is
   available for hub vertices (see graft.skew).
-- Iterative loops checkpoint per superstep (graft.checkpoint) so runs are
-  resumable mid-level with per-partition lineage + metrics.
+- Iterative loops checkpoint per superstep (graft.checkpoint) with
+  per-partition lineage + metrics. pagerank, label_propagation,
+  pic_embedding and minimum_spanning_forest resume from the latest saved
+  superstep, leiden and louvain mid-hierarchy from the latest saved
+  level; connected_components saves but does not resume.
 """
 
 from graft.session import get_spark  # noqa: F401

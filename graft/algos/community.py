@@ -43,16 +43,23 @@ class Level:
     vertices: DataFrame  # (id, community, agg_count, k)
 
 
-def init_level(edges: DataFrame) -> Level:
-    """Singleton communities, agg_count=1, k=strength (C1,
-    custom_leiden.py:525-531)."""
-    verts = edges.groupBy(F.col("src").alias("id")).agg(
+def _strength(edges: DataFrame) -> DataFrame:
+    """``(id, k)``: each vertex's weighted degree over symmetrized
+    ``edges``, self-loops counted twice (the modularity convention,
+    custom_leiden.py:103-111)."""
+    return edges.groupBy(F.col("src").alias("id")).agg(
         F.sum(
             F.when(F.col("src") == F.col("dst"), F.col("weight") * 2).otherwise(
                 F.col("weight")
             )
         ).alias("k")
-    ).select(
+    )
+
+
+def init_level(edges: DataFrame) -> Level:
+    """Singleton communities, agg_count=1, k=strength (C1,
+    custom_leiden.py:525-531)."""
+    verts = _strength(edges).select(
         "id",
         F.col("id").alias("community"),
         F.lit(1).cast("long").alias("agg_count"),
@@ -646,14 +653,7 @@ def aggregate_vertices(vertices: DataFrame, new_edges: DataFrame) -> DataFrame:
     counts = vertices.groupBy(F.col("community").alias("id")).agg(
         F.sum("agg_count").alias("agg_count")
     )
-    k = new_edges.groupBy(F.col("src").alias("id")).agg(
-        F.sum(
-            F.when(F.col("src") == F.col("dst"), F.col("weight") * 2).otherwise(
-                F.col("weight")
-            )
-        ).alias("k")
-    )
-    return counts.join(k, "id", "left").select(
+    return counts.join(_strength(new_edges), "id", "left").select(
         "id",
         F.col("id").alias("community"),
         "agg_count",

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from graft.checkpoint import Checkpointer, row_count, scratch, truncate
 from graft.algos.community import (
     Level,
+    _strength,
     aggregate_graph,
     init_level,
     level_counts,
@@ -214,17 +215,7 @@ def _maintained_vertices(
             F.min("community").alias("community"),
             F.sum("agg_count").alias("agg_count"),
         )
-        .join(
-            new_edges.groupBy(F.col("src").alias("id")).agg(
-                F.sum(
-                    F.when(
-                        F.col("src") == F.col("dst"), F.col("weight") * 2
-                    ).otherwise(F.col("weight"))
-                ).alias("k")
-            ),
-            "id",
-            "left",
-        )
+        .join(_strength(new_edges), "id", "left")
         .select(
             "id", "community", "agg_count", F.coalesce("k", F.lit(0.0)).alias("k")
         )

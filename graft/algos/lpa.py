@@ -42,24 +42,35 @@ def label_propagation(
     warm run is a different (seed-continuous) labeling, not
     bit-identity with a cold one; vertices absent from the seed (new
     actors) start as their own label.
+
+    With a ``checkpointer`` every superstep's labels are saved, and a
+    run resumes after the latest saved step, which takes precedence
+    over ``initial_labels``.
     """
     with scratch() as s:
         edges = s.persist(graph.without_self_loops())
-        labels = graph.vertices().select("id", F.col("id").alias("label"))
-        if initial_labels is not None:
-            labels = (
-                labels.join(
-                    initial_labels.select(
-                        "id", F.col("label").alias("_seed")
-                    ),
-                    "id",
-                    "left",
+        start, labels = 0, None
+        if checkpointer is not None:
+            resumed = checkpointer.resume()
+            if resumed is not None:
+                start, labels = resumed
+                start += 1
+        if labels is None:
+            labels = graph.vertices().select("id", F.col("id").alias("label"))
+            if initial_labels is not None:
+                labels = (
+                    labels.join(
+                        initial_labels.select(
+                            "id", F.col("label").alias("_seed")
+                        ),
+                        "id",
+                        "left",
+                    )
+                    .select("id", F.coalesce("_seed", F.col("label")).alias("label"))
                 )
-                .select("id", F.coalesce("_seed", F.col("label")).alias("label"))
-            )
-        labels = truncate(labels)
+            labels = truncate(labels)
         with superstep_conf(edges.sparkSession, graph.edge_rows()):
-            for it in range(max_iter):
+            for it in range(start, max_iter):
                 step, obs = observed(
                     lpa_round(edges, labels),
                     changed=F.sum((F.col("label") != F.col("old")).cast("long")),

@@ -155,6 +155,11 @@ def pagerank(
     r0 = e. The per-superstep plan only changes by one broadcast join
     against the (tiny, materialized) source table.
 
+    ``checkpointer``: every truncated superstep's ranks are saved (in
+    ``fixed_iterations`` mode each ``truncate_every``-th step and the
+    last), and a run resumes after the latest saved step, which takes
+    precedence over ``initial_ranks``.
+
     ``sequential_threshold``: see :func:`graft.algos.community.one_task`.
     """
     spark = graph.edges.sparkSession
@@ -314,31 +319,34 @@ def pagerank(
                     )
 
                 if fixed_iterations is not None:
+                    # probe-free: a step between truncations stays lazy
+                    # and is neither spilled nor saved
+                    delta = None
                     last = it == max_iter - 1
-                    if last or (it + 1 - start) % truncate_every == 0:
-                        new_ranks = truncate(new_ranks)
-                        drop_spill(ranks)
-                    ranks = new_ranks
-                    continue
-
-                # the L1 delta is observed during the spill write, so
-                # each superstep is ONE job instead of write + join-agg
-                # (prev ranks are a truncated parquet leaf, so referencing
-                # them twice in this one plan is stats-safe)
-                paired, obs = observed(
-                    new_ranks.join(
-                        ranks.select("id", F.col("rank").alias("_old")), "id"
-                    ),
-                    l1=F.sum(F.abs(F.col("rank") - F.col("_old"))),
-                )
-                new_ranks = truncate(paired.select("id", "rank"))
-                delta = obs.get["l1"]
+                    if not last and (it + 1 - start) % truncate_every:
+                        ranks = new_ranks
+                        continue
+                    new_ranks = truncate(new_ranks)
+                else:
+                    # the L1 delta is observed during the spill write, so
+                    # each superstep is ONE job instead of write +
+                    # join-agg (prev ranks are a truncated parquet leaf,
+                    # so referencing them twice in this one plan is
+                    # stats-safe)
+                    paired, obs = observed(
+                        new_ranks.join(
+                            ranks.select("id", F.col("rank").alias("_old")), "id"
+                        ),
+                        l1=F.sum(F.abs(F.col("rank") - F.col("_old"))),
+                    )
+                    new_ranks = truncate(paired.select("id", "rank"))
+                    delta = obs.get["l1"]
                 drop_spill(ranks)
                 ranks = new_ranks
                 if checkpointer is not None:
                     ranks = checkpointer.save(it, ranks, algo="pagerank", l1_delta=delta)
                     drop_spill(new_ranks)
-                if delta < tol:
+                if delta is not None and delta < tol:
                     break
 
         s.keep(ranks)

@@ -35,12 +35,13 @@ PageRank superstep.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graft.algos.community import superstep_conf
 from graft.checkpoint import row_count, scratch, truncate
 from graft.graph import Graph
+from graft.io import actor_col, time_bucket, turn_order
 
 
 _MOD = 2**60
@@ -167,10 +168,9 @@ def conversation_wl_fingerprints(
     Cost = one window shuffle + (rounds+1) keyed joins/aggs, all JVM
     built-ins.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     t = transcripts.select(
-        "conv_id", "turn_idx", _actor_col().alias("actor")
-    ).withColumn("prev", F.lag("actor").over(w))
+        "conv_id", "turn_idx", actor_col().alias("actor")
+    ).withColumn("prev", F.lag("actor").over(turn_order()))
 
     und = t.where(
         F.col("prev").isNotNull() & (F.col("prev") != F.col("actor"))
@@ -199,14 +199,11 @@ def windowed_wl_fingerprints(
     belong to no single bucket). Same keyed-shuffle scale shape as the
     per-conversation variant, with `win` as the group key.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    win = F.date_format(
-        F.date_trunc(granularity, F.col("ts")), "yyyy-MM-dd HH:mm:ss"
-    )
+    w = turn_order()
     t = (
         transcripts.select(
-            "conv_id", "turn_idx", _actor_col().alias("actor"),
-            win.alias("win"),
+            "conv_id", "turn_idx", actor_col().alias("actor"),
+            time_bucket(granularity).alias("win"),
         )
         .withColumn("prev", F.lag("actor").over(w))
         .withColumn("prev_win", F.lag("win").over(w))
@@ -218,14 +215,6 @@ def windowed_wl_fingerprints(
     ).select("win", F.col("prev").alias("a"), F.col("actor").alias("b"))
     verts = t.select("win", F.col("actor").alias("id")).distinct()
     return _grouped_wl_fingerprints(und, verts, "win", rounds)
-
-
-def _actor_col() -> F.Column:
-    """The derivation's actor identity: tool:<tool> if present else
-    role:<role> (graft.io.transcripts_to_edges convention)."""
-    return F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
 
 
 def _grouped_wl_fingerprints(

@@ -14,7 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graft.io import normalize_edges
+from graft.io import symmetrize
 
 
 @dataclass
@@ -39,10 +39,10 @@ class Graph:
 
     @classmethod
     def from_undirected(cls, raw_edges: DataFrame) -> "Graph":
-        # normalize_edges guarantees the symmetrized contract: src and
+        # symmetrize guarantees the symmetrized contract: src and
         # dst vertex sets coincide, so no vertex lacks in- or out-edges
         # — algorithms can skip their structural probes (pagerank)
-        return cls(normalize_edges(raw_edges), symmetric=True)
+        return cls(symmetrize(raw_edges), symmetric=True)
 
     def cache(self) -> "Graph":
         if not self._cached:

@@ -1,23 +1,35 @@
 """Sources: edge-list files, transcript tables, and edge normalization.
 
 Operator coverage (SURVEY.md §2.1):
-- S1/S2  ``read_edge_list``      — `u v [w]` text, `%` comments, weight=1
-- S3/S4  ``normalize_edges``     — symmetrize + dedup + renumber + pad
-- S6     ``transcripts_to_edges``— turn-adjacency edge derivation
-- (new)  ``events_to_transcripts`` — canonical mapping of the driver's
-         ``events`` table onto the transcript schema, so the same engine
-         runs against /root/testdata parquet.
+- S1/S2  ``read_edge_list``  — `u v [w]` text, `%` comments, weight=1
+- S3     ``symmetrize``      — both directions, parallel edges deduped
+- S4     ``renumber``        — dense 0-based ids (``dense_ids``), optional
+         reference-style gap padding; ``actor_edges_to_long`` applies it
+         to string actor edges
+- S6     ``transcripts_to_edges`` — turn-adjacency edge derivation, with
+         windowed, recency-decayed and directed variants
+- (new)  ``events_to_transcripts`` — canonical mapping of the ``events``
+         testdata table onto the transcript schema, so the same engine
+         runs against the testdata parquet.
+
+This module owns the transcript vocabulary every transcript operator
+(here, graft.transcripts, graft.algos.wl, graft.temporal) shares: the
+actor key (:func:`actor_col`), the stable turn ordering
+(:func:`turn_order`) and the time-window label (:func:`time_bucket`).
+The undirected, windowed and decayed derivations are one
+adjacency-pair builder plus their own aggregation; the directed one
+groups the same lagged turns.
 
 Everything here is plain DataFrame ops: the symmetrize/dedup/renumber
 pipeline that the reference does imperatively in its CSR loader
-(csrc/test/main.cpp:45-177) is a union + dropDuplicates + join that
+(csrc/test/main.cpp:45-177) is a union + groupBy + join that
 Catalyst plans as shuffles with AQE coalescing — no driver-side work,
 so it holds at 10^12 input turns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -133,9 +145,68 @@ def renumber(
     return e, mapping
 
 
-def normalize_edges(edges: DataFrame) -> DataFrame:
-    """Full ingest pipeline: symmetrize + dedup (ids assumed long)."""
-    return symmetrize(edges)
+def actor_col() -> Column:
+    """A turn's actor key: ``tool:<tool>`` if the turn called a tool,
+    else ``role:<role>`` (BASELINE.json north_star "vertices =
+    conv_id/tool/role actors"). A function, like :func:`turn_order`,
+    because a Column cannot be built before a session exists."""
+    return F.when(
+        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
+    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
+
+
+def turn_order() -> WindowSpec:
+    """The stable turn ordering every transcript operator lags over."""
+    return Window.partitionBy("conv_id").orderBy("turn_idx")
+
+
+def time_bucket(granularity: str, ts: str = "ts") -> Column:
+    """The engine's time-window label: ``date_trunc(granularity, ts)``
+    formatted ``yyyy-MM-dd HH:mm:ss``, so lexicographic order is
+    chronological order."""
+    return F.date_format(
+        F.date_trunc(granularity, F.col(ts)), "yyyy-MM-dd HH:mm:ss"
+    )
+
+
+def _lagged_actors(
+    transcripts: DataFrame, *carried: str | Column
+) -> DataFrame:
+    """``(conv_id, turn_idx, actor, *carried, prev_actor)``: each turn's
+    actor next to the previous turn's under :func:`turn_order`.
+    ``carried`` are column names or aliased Columns."""
+    return transcripts.select(
+        "conv_id", "turn_idx", actor_col().alias("actor"), *carried
+    ).withColumn("prev_actor", F.lag("actor").over(turn_order()))
+
+
+def _turn_pairs(
+    transcripts: DataFrame, include_conv_edges: bool, *carried: str | Column
+) -> DataFrame:
+    """``(*carried, u, v)``: one canonically oriented (``u <= v``) actor
+    pair per adjacent turn pair, plus with ``include_conv_edges`` one
+    ``conv:<conv_id>`` – actor pair per turn. ``carried`` (column names
+    or aliased Columns) are evaluated per turn, so an adjacency pair
+    carries its LATER turn's value (the turn whose arrival creates the
+    edge) and a conv pair its own turn's. One window shuffle on
+    conv_id."""
+    t = _lagged_actors(transcripts, *carried)
+    keep = t.columns[3:-1]  # the carried names, between actor and prev_actor
+    pairs = t.where(F.col("prev_actor").isNotNull()).select(
+        *keep,
+        F.least("prev_actor", "actor").alias("u"),
+        F.greatest("prev_actor", "actor").alias("v"),
+    )
+    if include_conv_edges:
+        conv = F.concat(F.lit("conv:"), F.col("conv_id"))
+        pairs = pairs.unionAll(
+            t.select(
+                *keep,
+                F.least(conv, F.col("actor")).alias("u"),
+                F.greatest(conv, F.col("actor")).alias("v"),
+            )
+        )
+    return pairs
 
 
 def transcripts_to_edges(
@@ -144,13 +215,10 @@ def transcripts_to_edges(
 ) -> DataFrame:
     """Derive the actor link graph from a transcript table (operator S6).
 
-    Vertices are actor keys: ``conv:<conv_id>``, ``role:<role>``,
-    ``tool:<tool>`` (a turn's actor is its tool if present, else its
-    role — per BASELINE.json north_star "vertices = conv_id/tool/role
-    actors"). Edges:
+    Vertices are actor keys: ``conv:<conv_id>`` and the turn actors of
+    :func:`actor_col` (``tool:<tool>`` else ``role:<role>``). Edges:
     - one edge per *adjacent turn pair* under the stable turn ordering
-      ``Window.partitionBy(conv_id).orderBy(turn_idx)``, between the two
-      turns' actors;
+      :func:`turn_order`, between the two turns' actors;
     - optionally one edge per turn between the conversation actor and the
       turn's actor (links conversations into the graph).
     Weight = number of co-adjacencies, undirected (canonical min/max
@@ -161,32 +229,10 @@ def transcripts_to_edges(
     skew *downstream* in graph algorithms, which is handled there
     (graft.skew), not by pre-aggregating less here.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    actor = F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
-    t = transcripts.select(
-        "conv_id", "turn_idx", actor.alias("actor")
-    ).withColumn("prev_actor", F.lag("actor").over(w))
-
-    adj = t.where(F.col("prev_actor").isNotNull()).select(
-        F.least("prev_actor", "actor").alias("u"),
-        F.greatest("prev_actor", "actor").alias("v"),
-    )
-    parts = [adj]
-    if include_conv_edges:
-        conv = F.concat(F.lit("conv:"), F.col("conv_id"))
-        parts.append(
-            t.select(
-                F.least(conv, F.col("actor")).alias("u"),
-                F.greatest(conv, F.col("actor")).alias("v"),
-            )
-        )
-    pairs = parts[0]
-    for p in parts[1:]:
-        pairs = pairs.unionAll(p)
-    return pairs.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("double").alias("weight")
+    return (
+        _turn_pairs(transcripts, include_conv_edges)
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
 
 
@@ -198,7 +244,8 @@ def transcripts_to_edges_windowed(
     """Temporal variant of :func:`transcripts_to_edges`: the same
     actor-adjacency derivation bucketed by time window, returning
     ``(win string, u, v, weight)`` — one link graph per
-    ``granularity`` bucket (``date_trunc`` grains: hour/day/week/...).
+    ``granularity`` bucket (:func:`time_bucket`; ``date_trunc`` grains:
+    hour/day/week/...).
 
     An adjacency edge belongs to the window of the LATER turn (the turn
     whose arrival creates the edge — consistent with the streaming
@@ -210,37 +257,14 @@ def transcripts_to_edges_windowed(
     + one keyed agg; time-sliced graphs at 10^12 turns are a partition
     column away (`.write.partitionBy("win")`).
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    actor = F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
-    win = F.date_format(
-        F.date_trunc(granularity, F.col("ts")), "yyyy-MM-dd HH:mm:ss"
-    )
-    t = transcripts.select(
-        "conv_id", "turn_idx", actor.alias("actor"), win.alias("win")
-    ).withColumn("prev_actor", F.lag("actor").over(w))
-
-    adj = t.where(F.col("prev_actor").isNotNull()).select(
-        "win",
-        F.least("prev_actor", "actor").alias("u"),
-        F.greatest("prev_actor", "actor").alias("v"),
-    )
-    parts = [adj]
-    if include_conv_edges:
-        conv = F.concat(F.lit("conv:"), F.col("conv_id"))
-        parts.append(
-            t.select(
-                "win",
-                F.least(conv, F.col("actor")).alias("u"),
-                F.greatest(conv, F.col("actor")).alias("v"),
-            )
+    return (
+        _turn_pairs(
+            transcripts,
+            include_conv_edges,
+            time_bucket(granularity).alias("win"),
         )
-    pairs = parts[0]
-    for p in parts[1:]:
-        pairs = pairs.unionAll(p)
-    return pairs.groupBy("win", "u", "v").agg(
-        F.count(F.lit(1)).cast("double").alias("weight")
+        .groupBy("win", "u", "v")
+        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
 
 
@@ -271,32 +295,7 @@ def transcripts_to_decayed_edges(
     shuffle on conv_id + one keyed agg; the scalar max adds one
     map-side-combinable agg and a 1-row broadcast. Nothing new shuffles.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    actor = F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
-    t = transcripts.select(
-        "conv_id", "turn_idx", actor.alias("actor"), "ts"
-    ).withColumn("prev_actor", F.lag("actor").over(w))
-
-    adj = t.where(F.col("prev_actor").isNotNull()).select(
-        F.least("prev_actor", "actor").alias("u"),
-        F.greatest("prev_actor", "actor").alias("v"),
-        "ts",
-    )
-    parts = [adj]
-    if include_conv_edges:
-        conv = F.concat(F.lit("conv:"), F.col("conv_id"))
-        parts.append(
-            t.select(
-                F.least(conv, F.col("actor")).alias("u"),
-                F.greatest(conv, F.col("actor")).alias("v"),
-                "ts",
-            )
-        )
-    pairs = parts[0]
-    for p in parts[1:]:
-        pairs = pairs.unionAll(p)
+    pairs = _turn_pairs(transcripts, include_conv_edges, "ts")
     ref = transcripts.agg(F.max("ts").alias("ref_ts"))
     # timestamp_diff works for both TIMESTAMP and TIMESTAMP_NTZ inputs
     # (a double cast does not), and an interval difference is immune to
@@ -328,15 +327,9 @@ def transcripts_to_directed_edges(transcripts: DataFrame) -> DataFrame:
     Scale: identical to the undirected derivation — one window shuffle
     on conv_id + one keyed groupBy, both AQE-coalesced.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    actor = F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
-    t = transcripts.select(
-        "conv_id", "turn_idx", actor.alias("actor")
-    ).withColumn("prev_actor", F.lag("actor").over(w))
     return (
-        t.where(F.col("prev_actor").isNotNull())
+        _lagged_actors(transcripts)
+        .where(F.col("prev_actor").isNotNull())
         .groupBy(
             F.col("prev_actor").alias("src"), F.col("actor").alias("dst")
         )
@@ -345,26 +338,13 @@ def transcripts_to_directed_edges(transcripts: DataFrame) -> DataFrame:
 
 
 def actor_edges_to_long(edges_uv: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """String actor edges → long-id edges + mapping(actor, id)."""
-    e = edges_uv.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), "weight"
+    """String actor edges ``(u, v, weight)`` → long-id edges + mapping
+    ``(vid, id)`` from actor key to dense id (:func:`renumber`)."""
+    return renumber(
+        edges_uv.select(
+            F.col("u").alias("src"), F.col("v").alias("dst"), "weight"
+        )
     )
-    ids = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    mapping = dense_ids(ids)
-    out = (
-        e.join(mapping.withColumnRenamed("vid", "src"), "src")
-        .drop("src")
-        .withColumnRenamed("id", "src")
-        .join(mapping.withColumnRenamed("vid", "dst"), "dst")
-        .drop("dst")
-        .withColumnRenamed("id", "dst")
-        .select("src", "dst", "weight")
-    )
-    return out, mapping
 
 
 def events_to_transcripts(events: DataFrame) -> DataFrame:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graft.io import time_bucket
+
 
 def edge_diff(
     e_old: DataFrame,
@@ -146,8 +148,8 @@ def rate_anomalies(
     ("did role:error spike today?").
 
     Returns ``(key, win string, n long, base_mean, base_std, z)`` —
-    ``win`` uses the engine's bucket convention (date_trunc formatted
-    ``yyyy-MM-dd HH:mm:ss``, lexicographic == chronological);
+    ``win`` uses the engine's bucket convention
+    (:func:`graft.io.time_bucket`, lexicographic == chronological);
     ``base_mean``/``base_std`` are the mean / sample-stddev of the
     trailing ``trailing`` OBSERVED buckets (empty buckets don't emit
     rows and don't enter the baseline — document-able semantics that
@@ -161,11 +163,9 @@ def rate_anomalies(
     the operator holds at 10^12 events with bounded (keys × buckets)
     state.
     """
-    win = F.date_format(
-        F.date_trunc(granularity, F.col(ts_col)), "yyyy-MM-dd HH:mm:ss"
-    )
     counts = events.groupBy(
-        F.col(key_col).alias("key"), win.alias("win")
+        F.col(key_col).alias("key"),
+        time_bucket(granularity, ts_col).alias("win"),
     ).agg(F.count(F.lit(1)).alias("n"))
     w = (
         Window.partitionBy("key")

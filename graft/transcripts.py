@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graft.io import actor_col, turn_order
+
 
 def sessionize(
     transcripts: DataFrame, gap_seconds: int = 3600
@@ -39,7 +41,7 @@ def sessionize(
     ``gap_seconds`` under the stable (conv_id, turn_idx) ordering.
     One window shuffle; the running sum of break flags is the standard
     gaps-and-islands sessionizer."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    w = turn_order()
     # unix_timestamp floors to whole seconds and accepts both timestamp
     # and timestamp_ntz (parquet transcript tables are NTZ); the session
     # runs UTC so it equals DuckDB's floor(epoch(ts))
@@ -62,12 +64,9 @@ def conversation_stats(transcripts: DataFrame) -> DataFrame:
     tool_rate, avg_text_len, duration_s)``. Actor identity follows the
     derivation convention (tool:<tool> if present else role:<role>).
     Floats rounded to 6 dp so aggregation order never shows."""
-    actor = F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
     return transcripts.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
-        F.countDistinct(actor).alias("n_actors"),
+        F.countDistinct(actor_col()).alias("n_actors"),
         F.round(
             F.avg(F.when(F.col("tool").isNotNull(), 1.0).otherwise(0.0)), 6
         ).alias("tool_rate"),
@@ -97,11 +96,10 @@ def turn_gap_stats(transcripts: DataFrame) -> DataFrame:
     derivation already pays. Floats rounded to 6 dp so aggregation
     order never shows.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     ts_s = F.unix_timestamp(F.col("ts"))
     gaps = (
         transcripts.select(
-            "conv_id", (ts_s - F.lag(ts_s).over(w)).alias("gap")
+            "conv_id", (ts_s - F.lag(ts_s).over(turn_order())).alias("gap")
         )
         .where(F.col("gap").isNotNull())
     )
@@ -149,10 +147,7 @@ def actor_pmi(transcripts: DataFrame) -> DataFrame:
     pair groupBy, two broadcast-able marginal joins, and the scalar N
     rides in as a broadcast one-row cross join — no driver collect.
     """
-    actor = F.when(
-        F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))
-    ).otherwise(F.concat(F.lit("role:"), F.col("role")))
-    ca = transcripts.select("conv_id", actor.alias("actor")).distinct()
+    ca = transcripts.select("conv_id", actor_col().alias("actor")).distinct()
     marg = ca.groupBy("actor").agg(F.count(F.lit(1)).alias("n"))
     n_total = ca.select("conv_id").distinct().agg(
         F.count(F.lit(1)).alias("n_conv")
@@ -197,13 +192,12 @@ def role_transitions(transcripts: DataFrame) -> DataFrame:
     conversational protocol. One window shuffle + one groupBy on the
     (tiny) role-pair key; p via a broadcastable per-prev_role totals
     join."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = (
         transcripts.select(
             "conv_id",
             "turn_idx",
             "role",
-            F.lag("role").over(w).alias("prev_role"),
+            F.lag("role").over(turn_order()).alias("prev_role"),
         )
         .where(F.col("prev_role").isNotNull())
         .groupBy("prev_role", "role")
@@ -234,12 +228,11 @@ def conversation_entropy(transcripts: DataFrame) -> DataFrame:
     Plan: the same conv_id window shuffle the edge derivation pays +
     two conv-keyed hash aggs; nothing corpus-sized leaves the executors.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = (
         transcripts.select(
             "conv_id",
             "role",
-            F.lag("role").over(w).alias("prev_role"),
+            F.lag("role").over(turn_order()).alias("prev_role"),
         )
         .where(F.col("prev_role").isNotNull())
         .groupBy("conv_id", "prev_role", "role")

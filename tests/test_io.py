@@ -249,6 +249,43 @@ def test_transcripts_to_decayed_edges_infinite_halflife_is_counts(spark, transcr
         assert decayed[k] == pytest.approx(w, abs=1e-5)
 
 
+def test_transcripts_to_edges_windowed_day_boundary(spark):
+    """An adjacency edge lands in its LATER turn's window, a conv edge in
+    its own turn's window, and the windows' weights sum to the static
+    derivation's."""
+    import datetime as dt
+
+    from graft.io import transcripts_to_edges_windowed
+
+    late = dt.datetime(2026, 1, 5, 23, 50)
+    rows = [
+        ("c1", 0, "user", "t0", None, late),
+        ("c1", 1, "assistant", "t1", None, late + dt.timedelta(minutes=8)),
+        ("c1", 2, "tool", "t2", "search", late + dt.timedelta(minutes=15)),
+        ("c1", 3, "assistant", "t3", None, late + dt.timedelta(minutes=20)),
+    ]
+    t = spark.createDataFrame(rows, schema=fixtures.TRANSCRIPT_SCHEMA)
+    got = {
+        (r.win, r.u, r.v): r.weight
+        for r in transcripts_to_edges_windowed(t, "day").collect()
+    }
+    d5, d6 = "2026-01-05 00:00:00", "2026-01-06 00:00:00"
+    assert got == {
+        # turns 0→1 inside day 5; 1→2 crosses midnight into day 6
+        (d5, "role:assistant", "role:user"): 1.0,
+        (d6, "role:assistant", "tool:search"): 2.0,
+        (d5, "conv:c1", "role:user"): 1.0,
+        (d5, "conv:c1", "role:assistant"): 1.0,
+        (d6, "conv:c1", "role:assistant"): 1.0,
+        (d6, "conv:c1", "tool:search"): 1.0,
+    }
+    summed: dict = {}
+    for (_, u, v), w in got.items():
+        summed[(u, v)] = summed.get((u, v), 0.0) + w
+    static = {(r.u, r.v): r.weight for r in transcripts_to_edges(t).collect()}
+    assert summed == static
+
+
 def test_graph_summary(spark):
     from graft import fixtures
     from graft.graph import Graph

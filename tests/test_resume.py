@@ -89,6 +89,52 @@ def test_pic_embedding_resume_equivalence(spark, tmp_path):
     g.unpersist()
 
 
+def test_pagerank_fixed_iterations_resume_equivalence(spark, tmp_path):
+    from graft.algos.pagerank import pagerank
+
+    edges = fixtures.clique_ring_weighted_edges()
+    g = Graph.from_undirected(fixtures.edges_df(spark, edges)).cache()
+    full = {r.id: round(r.rank, 12) for r in pagerank(
+        g, fixed_iterations=6, sequential_threshold=0).collect()}
+
+    # interrupted run: only 3 of the 6 supersteps, each one saved
+    ck1 = Checkpointer(spark, str(tmp_path), "pr")
+    pagerank(g, fixed_iterations=3, checkpointer=ck1).count()
+    assert [m["step"] for m in ck1.metrics()] == [0, 1, 2]
+
+    ck2 = Checkpointer(spark, str(tmp_path), "pr")
+    resumed = {r.id: round(r.rank, 12) for r in pagerank(
+        g, fixed_iterations=6, checkpointer=ck2).collect()}
+    assert resumed == full
+    assert [m["step"] for m in ck2.metrics()] == [0, 1, 2, 3, 4, 5]
+    g.unpersist()
+
+
+def test_lpa_resume_equivalence(spark, tmp_path):
+    from graft.algos.lpa import label_propagation
+
+    g = Graph.from_undirected(
+        fixtures.edges_df(spark, _powerlaw_edges(60, 150))
+    ).cache()
+    full = {r.id: r.label for r in label_propagation(g, max_iter=6).collect()}
+
+    ck1 = Checkpointer(spark, str(tmp_path), "lpa")
+    label_propagation(g, max_iter=2, checkpointer=ck1).count()
+    assert [m["step"] for m in ck1.metrics()] == [0, 1]
+    assert ck1.metrics()[-1]["changed"] > 0  # stopped mid-propagation
+
+    # the resumed run starts after step 1 and ignores initial_labels
+    ck2 = Checkpointer(spark, str(tmp_path), "lpa")
+    seed = g.vertices().selectExpr("id", "0L AS label")
+    resumed = label_propagation(
+        g, max_iter=6, checkpointer=ck2, initial_labels=seed
+    )
+    assert {r.id: r.label for r in resumed.collect()} == full
+    # the uninterrupted run converges at step 4
+    assert [m["step"] for m in ck2.metrics()] == [0, 1, 2, 3, 4]
+    g.unpersist()
+
+
 def test_msf_resume_equivalence(spark, tmp_path):
     from graft.algos.msf import minimum_spanning_forest
 

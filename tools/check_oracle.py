@@ -3,16 +3,19 @@
 Runs every __spark_entry__.queries() entry at the given sf dir, runs the
 matching oracle_sql() through DuckDB on the same parquet, and compares
 row counts + order-insensitive values (floats rounded to 6 dp).
+
+Usage: python tools/check_oracle.py [sf_dir] [name[,name...]]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from graft.session import get_spark  # noqa: E402
@@ -64,9 +67,13 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None):
     spark = get_spark("oracle-check", master="local[8]")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    wanted = set(only.split(",")) if only else None
     failures = 0
+    for name in sorted((wanted or set()) - set(qs)):
+        failures += 1
+        print(f"{name}: UNKNOWN query")
     for name, fn in qs.items():
-        if only and only != name:
+        if wanted and name not in wanted:
             continue
         if name == "msf_total_weight":
             con = _fresh_con(sf_dir)
